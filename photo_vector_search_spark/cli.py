@@ -542,6 +542,17 @@ def cmd_vector_index(args) -> int:
     return 0
 
 
+def _check_docs(docs) -> bool:
+    """The --docs parquet must carry doc_id and text; prints why not."""
+    if "doc_id" not in docs.columns or "text" not in docs.columns:
+        print(
+            f"--docs must have doc_id and text columns, got {docs.columns}",
+            file=sys.stderr,
+        )
+        return False
+    return True
+
+
 def cmd_colbert_index(args) -> int:
     """Late-interaction (ColBERT MaxSim) index lifecycle over a documents
     parquet — build persists the per-token embedding matrices once
@@ -560,16 +571,6 @@ def cmd_colbert_index(args) -> int:
         live_maxsim_search,
         upsert_maxsim_store,
     )
-
-    def _check_docs(docs):
-        if "doc_id" not in docs.columns or "text" not in docs.columns:
-            print(
-                f"--docs must have doc_id and text columns, got "
-                f"{docs.columns}",
-                file=sys.stderr,
-            )
-            return False
-        return True
 
     spark = _spark()
     try:
@@ -627,16 +628,6 @@ def cmd_bm25_index(args) -> int:
         live_bm25_topk,
         upsert_bm25_store,
     )
-
-    def _check_docs(docs):
-        if "doc_id" not in docs.columns or "text" not in docs.columns:
-            print(
-                f"--docs must have doc_id and text columns, got "
-                f"{docs.columns}",
-                file=sys.stderr,
-            )
-            return False
-        return True
 
     spark = _spark()
     try:
@@ -700,16 +691,6 @@ def cmd_cv2_index(args) -> int:
         build_colbertv2_store,
         colbertv2_store_search,
     )
-
-    def _check_docs(docs):
-        if "doc_id" not in docs.columns or "text" not in docs.columns:
-            print(
-                f"--docs must have doc_id and text columns, got "
-                f"{docs.columns}",
-                file=sys.stderr,
-            )
-            return False
-        return True
 
     spark = _spark()
     try:

@@ -39,17 +39,18 @@ writes postings → doclens → meta LAST; a crash anywhere leaves a store the
 loader refuses (missing meta, or store_sig mismatch), never a silently
 inconsistent one.
 
-Incremental maintenance (the `index_maintenance` delta-segment + tombstone
-pattern): ``path + '.delta'`` (postings, bucket-partitioned so the term
-filter prunes it too), ``path + '.dldelta'`` (doclens), and
-``path + '.tombstones'``. The DOC-LEVEL membership authority is the dldelta
-id set: live postings = (base anti dldelta-ids) ∪ (delta semi dldelta-ids)
-− tombstones, so upsert can write the postings delta FIRST — orphan
-postings rows from a crash before the dldelta swap are ignored (the old
-doc version keeps serving) until the upsert is replayed. Unlike the MaxSim
-store (which must refuse empty docs), a doc that tokenizes to zero terms is
-fully representable here: a dl=0 doclen row and no postings — it counts
-toward N/avgdl and matches nothing, exactly the on-the-fly semantics.
+Incremental maintenance (the delta/tombstone protocol of
+``operators/store.py``, which states its write order and crash windows):
+``path + '.delta'`` (postings, bucket-partitioned so the term filter prunes
+it too), ``path + '.dldelta'`` (doclens), and ``path + '.tombstones'``. The
+DOC-LEVEL membership authority is the dldelta id set: live postings =
+(base anti dldelta-ids) ∪ (delta semi dldelta-ids) − tombstones, so upsert
+can write the postings delta FIRST — orphan postings rows from a crash
+before the dldelta swap are ignored (the old doc version keeps serving)
+until the upsert is replayed. Unlike the MaxSim store (which must refuse
+empty docs), a doc that tokenizes to zero terms is fully representable
+here: a dl=0 doclen row and no postings — it counts toward N/avgdl and
+matches nothing, exactly the on-the-fly semantics.
 
 Scale shape (100 TB): serving reads ≤ q postings-list partitions of a store
 that is a small multiple of the corpus's TOKEN count in fixed-width rows —
@@ -61,13 +62,25 @@ or one narrow-column agg (live). The final top-k is TakeOrderedAndProject.
 from __future__ import annotations
 
 import hashlib
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.functions.text import tokens
 from photo_vector_search_spark.operators.bm25 import BM25_B, BM25_K1, query_terms
+from photo_vector_search_spark.operators.store import (
+    TOMBSTONES,
+    clear_side_tables,
+    delete_ids,
+    live_overlay,
+    read_meta,
+    recover_store,
+    side_tables,
+    snapshot_overwrite,
+    upsert_ids,
+    upsert_side_tables,
+    write_meta,
+)
 
 N_BUCKETS = 64
 
@@ -137,16 +150,10 @@ def build_bm25_store(
     rest."""
     if n_buckets < 1:
         raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     spark = docs.sparkSession
     base = _tokenized(docs, id_col, text_col)
     doclens = base.select(id_col, F.size("_toks").alias("dl"))
-    stats = doclens.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    n_docs = int(stats["n"])
-    sum_dl = int(stats["s"]) if stats["s"] is not None else 0
+    n_docs, sum_dl = _doc_stats(doclens)
     if n_docs == 0:
         raise ValueError(
             "build_bm25_store: no document has non-NULL text — nothing to "
@@ -189,10 +196,7 @@ def build_bm25_store(
         "n_docs": n_docs,
         "sum_dl": sum_dl,
     }
-    snapshot_overwrite(
-        spark.createDataFrame([tuple(meta.values())], _META_SCHEMA),
-        path + ".meta",
-    )
+    write_meta(spark, path, meta, _META_SCHEMA)
     return meta
 
 
@@ -222,8 +226,6 @@ def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     rewrites are refused, not served)."""
     import os
 
-    from photo_vector_search_spark.operators.store import recover_store
-
     for suffix in ("", ".doclens", ".meta"):
         recover_store(path + suffix)
     missing = [
@@ -236,13 +238,7 @@ def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
             f"no BM25 store at {path!r} (missing: {missing}) — run "
             "build_bm25_store first"
         )
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"BM25 store sidecar at {path + '.meta'!r} has {len(meta_rows)} "
-            "rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0].asDict()
+    meta = read_meta(spark, path, "BM25 store").asDict()
     sig = _postings_sig(path)
     if sig != meta["store_sig"]:
         raise ValueError(
@@ -556,7 +552,7 @@ def rm3_store_batch_topk(
 
 
 # ---------------------------------------------------------------------------
-# incremental maintenance — the index_maintenance delta/tombstone pattern
+# incremental maintenance — the operators/store.py delta/tombstone protocol
 # ---------------------------------------------------------------------------
 
 
@@ -574,20 +570,11 @@ def upsert_bm25_store(spark, path: str, new_docs: DataFrame) -> int:
     are refused (unindexable — delete those ids instead); EMPTY-text docs
     are fine (a dl=0 doclen row, no postings — they count toward avgdl and
     match nothing, the on-the-fly semantics)."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _, _, meta = load_bm25_store(spark, path)
     id_col, text_col = meta["id_col"], meta["text_col"]
-    n_new = new_docs.count()
+    n_new, ids = upsert_ids(new_docs, id_col)
     if n_new == 0:
         return 0
-    ids = new_docs.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
 
     base = _tokenized(new_docs, id_col, text_col)
     new_dl = base.select(
@@ -603,132 +590,66 @@ def upsert_bm25_store(spark, path: str, new_docs: DataFrame) -> int:
     new_post = _postings_of(base, id_col, meta["n_buckets"]).withColumn(
         "build_id", F.lit(meta["build_id"])
     )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, meta["build_id"], "postings delta")
-    if old_delta is not None:
-        new_post = new_post.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # materialize BEFORE the swap — a lazy plan reading the old delta dir
-    # would race its own overwrite (the maxsim_maintenance rule)
-    new_post = new_post.localCheckpoint(eager=True)
-    snapshot_overwrite(new_post, delta_path, partition_by=["term_bucket"])
-
-    dl_path = path + ".dldelta"
-    old_dl = _read_side_table(spark, dl_path)
-    _check_build(dl_path, old_dl, meta["build_id"], "doclens delta")
-    if old_dl is not None:
-        new_dl = new_dl.unionByName(
-            old_dl.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    new_dl = new_dl.localCheckpoint(eager=True)
-    snapshot_overwrite(new_dl, dl_path)
-
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, meta["build_id"], "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    upsert_side_tables(
+        spark, path, meta["build_id"], id_col, ids,
+        [(".delta", new_post, ["term_bucket"]), (".dldelta", new_dl, None)],
+    )
     return n_new
 
 
 def delete_from_bm25_store(spark, path: str, doc_ids) -> int:
     """Tombstone ``doc_ids`` (a list or a one-column DataFrame) and drop
     them from both delta segments. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _, _, meta = load_bm25_store(spark, path)
+    return delete_ids(
+        spark, path, meta["build_id"], meta["id_col"], doc_ids,
+        [(".delta", ["term_bucket"]), (".dldelta", None)],
+    )
+
+
+def _live_tables(spark, path, postings, doclens, meta):
+    """(live postings, live doclens) under BM25's doc-level membership rule:
+    the dldelta ids shadow the base, and postings delta rows count only
+    through a semi-join on those ids (an orphan from an upsert crash before
+    the dldelta swap is ignored). With NO postings delta, a dldelta row
+    with dl > 0 shadows nothing: every doc with terms has postings, so its
+    postings are in the base — the state an interrupted compaction cleanup
+    leaves (the stale dldelta's rows equal the folded doclens)."""
     id_col = meta["id_col"]
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in doc_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
-    if n == 0:
-        return 0
+    delta, dldelta, ts = side_tables(
+        spark, path, meta["build_id"], (".delta", ".dldelta", TOMBSTONES)
+    )
+    post_delta = shadow = None
+    if dldelta is not None:
+        shadow = dldelta.select(id_col)
+        if delta is None:
+            shadow = dldelta.filter(F.col("dl") == 0).select(id_col)
+        else:
+            post_delta = delta.join(F.broadcast(shadow), id_col, "left_semi")
+    return (
+        live_overlay(postings, post_delta, ts, id_col, shadow=shadow),
+        live_overlay(doclens, dldelta, ts, id_col),
+    )
 
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, meta["build_id"], "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(meta["build_id"]))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
 
-    for side, part in ((".delta", ["term_bucket"]), (".dldelta", None)):
-        seg = _read_side_table(spark, path + side)
-        _check_build(path + side, seg, meta["build_id"], f"{side} segment")
-        if seg is not None:
-            kept = seg.join(
-                F.broadcast(ids), id_col, "left_anti"
-            ).localCheckpoint(eager=True)
-            snapshot_overwrite(kept, path + side, partition_by=part)
-    return n
+def _doc_stats(doclens: DataFrame) -> tuple[int, int]:
+    """(n_docs, sum_dl) of a doclens frame — one narrow agg."""
+    stats = doclens.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
+    ).first()
+    return int(stats["n"]), int(stats["s"]) if stats["s"] is not None else 0
 
 
 def load_live_bm25(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """(live postings, live doclens, meta with LIVE n_docs/sum_dl): delta ∪
-    (base anti dldelta-ids) − tombstones, every side table build-checked.
-    Postings delta rows whose id is NOT in the dldelta are crash orphans
-    and are ignored (module docstring). The bucket/term filters push
-    through the union, so the base scan keeps its partition pruning; live
-    stats are ONE agg over the narrow doclens view."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-
+    (base anti dldelta-ids) − tombstones, every side table build-checked,
+    under the membership rule of ``_live_tables``. The bucket/term filters
+    push through the union, so the base scan keeps its partition pruning;
+    live stats are ONE agg over the narrow doclens view."""
     postings, doclens, meta = load_bm25_store(spark, path)
-    id_col = meta["id_col"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "postings delta")
-    dldelta = _read_side_table(spark, path + ".dldelta")
-    _check_build(path + ".dldelta", dldelta, meta["build_id"], "doclens delta")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live_post, live_dl = postings, doclens
-    if dldelta is not None:
-        delta_ids = dldelta.select(id_col)
-        live_dl = doclens.join(
-            F.broadcast(delta_ids), id_col, "left_anti"
-        ).unionByName(dldelta.select(*doclens.columns))
-        live_post = postings.join(
-            F.broadcast(delta_ids), id_col, "left_anti"
-        )
-        if delta is not None:
-            live_post = live_post.unionByName(
-                delta.join(F.broadcast(delta_ids), id_col, "left_semi").select(
-                    *postings.columns
-                )
-            )
-    if ts is not None:
-        live_post = live_post.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-        live_dl = live_dl.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-
-    stats = live_dl.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
+    live_post, live_dl = _live_tables(spark, path, postings, doclens, meta)
     live_meta = dict(meta)
-    live_meta["n_docs"] = int(stats["n"])
-    live_meta["sum_dl"] = int(stats["s"]) if stats["s"] is not None else 0
+    live_meta["n_docs"], live_meta["sum_dl"] = _doc_stats(live_dl)
     return live_post, live_dl, live_meta
 
 
@@ -755,69 +676,27 @@ def live_bm25_topk(
 def compact_bm25_store(spark, path: str) -> int:
     """Fold the deltas and tombstones into the base postings/doclens,
     refresh the meta stats, and clear the side tables. ``build_id`` stays
-    STABLE (a stale side table restored after compaction overlays
-    idempotently — its rows are already folded; the anti-join + union
-    reproduces the identical view); ``store_sig`` and the base (n_docs,
-    sum_dl) are restamped. Reads the RAW tables — side tables checked
-    against the META build id, the signature deliberately NOT verified —
-    so it converges when re-run from any crash point; `load_bm25_store`
-    refuses to SERVE any intermediate state. Returns the live doc count."""
-    from photo_vector_search_spark.operators.index_maintenance import (
-        _check_build,
-        _read_side_table,
-    )
-    from photo_vector_search_spark.operators.store import (
-        recover_store,
-        snapshot_overwrite,
-    )
-
+    STABLE; ``store_sig`` and the base (n_docs, sum_dl) are restamped.
+    Reads the RAW tables — side tables checked against the META build id,
+    the signature deliberately NOT verified — so it converges when re-run
+    from any crash point; `load_bm25_store` refuses to SERVE any
+    intermediate state. Side tables are cleared tombstones → dldelta →
+    delta, so a crash during the cleanup leaves either a consistent
+    dldelta + delta pair whose rows the new base already holds, or a
+    postings delta without its membership table, which the live view
+    ignores; a dldelta left without its delta (the state the opposite
+    order leaves) shadows no doc with terms (``_live_tables``). Returns the
+    live doc count."""
     for suffix in ("", ".doclens", ".meta"):
         recover_store(path + suffix)
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"BM25 store sidecar at {path + '.meta'!r} has {len(meta_rows)} "
-            "rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0].asDict()
-    id_col = meta["id_col"]
-    postings = spark.read.parquet(path)
-    doclens = spark.read.parquet(path + ".doclens")
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "postings delta")
-    dldelta = _read_side_table(spark, path + ".dldelta")
-    _check_build(path + ".dldelta", dldelta, meta["build_id"], "doclens delta")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live_post, live_dl = postings, doclens
-    if dldelta is not None:
-        delta_ids = dldelta.select(id_col)
-        live_dl = doclens.join(
-            F.broadcast(delta_ids), id_col, "left_anti"
-        ).unionByName(dldelta.select(*doclens.columns))
-        live_post = postings.join(F.broadcast(delta_ids), id_col, "left_anti")
-        if delta is not None:
-            live_post = live_post.unionByName(
-                delta.join(F.broadcast(delta_ids), id_col, "left_semi").select(
-                    *postings.columns
-                )
-            )
-    if ts is not None:
-        live_post = live_post.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-        live_dl = live_dl.join(
-            F.broadcast(ts.select(id_col)), id_col, "left_anti"
-        )
-
+    meta = read_meta(spark, path, "BM25 store").asDict()
+    live_post, live_dl = _live_tables(
+        spark, path, spark.read.parquet(path),
+        spark.read.parquet(path + ".doclens"), meta,
+    )
     live_post = live_post.localCheckpoint(eager=True)
     live_dl = live_dl.localCheckpoint(eager=True)
-    stats = live_dl.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-    ).first()
-    n_docs = int(stats["n"])
-    sum_dl = int(stats["s"]) if stats["s"] is not None else 0
+    n_docs, sum_dl = _doc_stats(live_dl)
     if sum_dl == 0:
         # n_docs == 0 (all tombstoned) or only zero-token docs remain:
         # either way the compacted postings table has ZERO rows, and a
@@ -837,24 +716,11 @@ def compact_bm25_store(spark, path: str) -> int:
         partition_by=["term_bucket"],
     )
     snapshot_overwrite(live_dl, path + ".doclens")
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    meta["build_id"],
-                    _postings_sig(path),
-                    id_col,
-                    meta["text_col"],
-                    meta["n_buckets"],
-                    n_docs,
-                    sum_dl,
-                )
-            ],
-            _META_SCHEMA,
-        ),
-        path + ".meta",
+    write_meta(
+        spark, path,
+        {**meta, "store_sig": _postings_sig(path), "n_docs": n_docs,
+         "sum_dl": sum_dl},
+        _META_SCHEMA,
     )
-    for side in (".tombstones", ".delta", ".dldelta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    clear_side_tables(path, (TOMBSTONES, ".dldelta", ".delta"))
     return n_docs

@@ -1,9 +1,9 @@
 """Incremental maintenance for the ColBERTv2 residual-compressed token
 store — upsert/delete/live-serve/compact WITHOUT re-fitting the quantizer
-or rewriting the corpus codes (the `index_maintenance` delta-segment +
-tombstone pattern, applied to the compressed late-interaction rung so that
-EVERY persisted serving index — IVF, SQ8, IVF,SQ8, PQ, BQ, MaxSim, BM25,
-and now the compressed token store — grows incrementally).
+or rewriting the corpus codes. The delta/tombstone protocol, its write
+order and crash windows live in ``operators/store.py``; this module keeps
+what is particular to ColBERTv2: encoding new docs against the frozen
+quantizer, the base write layout, and serving.
 
 Layout around a `token_compression.build_colbertv2_store` store at ``path``:
 - ``path``                 base codes (id, pooled, tok_cids, tok_codes) —
@@ -15,79 +15,43 @@ Layout around a `token_compression.build_colbertv2_store` store at ``path``:
                            clip to the edges; geometry drifts only until
                            the next full rebuild). O(delta) rewrite.
 - ``path + '.tombstones'`` deleted ids.
-Both side tables carry the base ``build_id`` (a content hash over params +
-quantizer bytes, so a side table encoded under a different codebook is
-refused — serving foreign codes would decode garbage silently).
+``build_id`` is a content hash over params + quantizer bytes, so a side
+table encoded under a different codebook is refused — serving foreign codes
+would decode garbage silently.
 
-Live view = delta ∪ (base anti delta-ids) − tombstones; side tables are
-broadcast-sized joins; the pooled-prefilter and candidate IN-filters push
-through the union so the base scan keeps its id-sorted row-group pruning.
-
-Crash windows (the `maxsim_maintenance` contract, verbatim semantics):
-- upsert writes the delta BEFORE reviving tombstones — a crash between the
-  two swaps leaves a re-upserted, previously-tombstoned id invisible until
-  the upsert is replayed.
-- compact rewrites the base (directory signature changes), so it rewrites
-  the meta sidecar with the new ``store_sig``; ``build_id`` is STABLE, so
-  side tables and the quantizer sidecar need no restamp. compact reads the
-  RAW tables and is convergent from any crash point;
-  `load_colbertv2_store` refuses to SERVE any intermediate state.
-- like the MaxSim store (and unlike the BM25 store), a doc that tokenizes
-  to ZERO tokens has no code rows and cannot shadow its old version — the
-  upsert refuses it; delete explicitly.
+Compaction restamps the meta ``store_sig`` like `maxsim_maintenance` and,
+like it, reads the RAW tables so it converges from any crash point;
+`load_colbertv2_store` refuses to SERVE any intermediate state. Like the
+MaxSim store (and unlike the BM25 store), a doc that tokenizes to ZERO
+tokens has no code rows and cannot shadow its old version — the upsert
+refuses it; delete explicitly.
 """
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.operators.index_maintenance import (
-    _check_build,
-    _read_side_table,
+from photo_vector_search_spark.operators.maxsim_maintenance import (
+    _restamp_meta,
+    _token_rows,
+)
+from photo_vector_search_spark.operators.store import (
+    clear_side_tables,
+    delete_ids,
+    live_view,
+    read_meta,
+    recover_store,
+    snapshot_overwrite,
+    upsert_ids,
+    upsert_side_tables,
 )
 from photo_vector_search_spark.operators.token_compression import (
+    _META_SCHEMA,
+    _serve_colbertv2,
     encode_token_matrices,
     load_colbertv2_store,
-    maxsim_topk_compressed,
 )
-
-
-def _encode_against_build(meta, quant, new_docs: DataFrame, text_col: str):
-    """Embed and encode ONLY the new docs under the build's frozen
-    parameters (max_tokens, dim, codebook, residual range) — the O(delta)
-    half of the contract. Output matches the base store's columns: a
-    keep_cols store requires the same metadata columns on the batch."""
-    from photo_vector_search_spark.operators.late_interaction import (
-        doc_token_embeddings,
-        with_pooled_column,
-    )
-    from photo_vector_search_spark.operators.maxsim_maintenance import (
-        _meta_keep_cols,
-    )
-
-    keep = _meta_keep_cols(meta)
-    missing = [c for c in keep if c not in new_docs.columns]
-    if missing:
-        raise ValueError(
-            f"store was built with keep_cols={keep} but the upsert batch "
-            f"lacks {missing} — supply the metadata columns"
-        )
-    toks = with_pooled_column(
-        doc_token_embeddings(
-            new_docs,
-            text_col=text_col,
-            id_col=meta["id_col"],
-            max_tokens=meta["max_tokens"],
-            dim=meta["dim"],
-        ),
-        id_col=meta["id_col"],
-    )
-    if keep:
-        toks = toks.join(new_docs.select(meta["id_col"], *keep), meta["id_col"])
-    return encode_token_matrices(toks, quant, id_col=meta["id_col"])
 
 
 def upsert_colbertv2_store(
@@ -97,19 +61,14 @@ def upsert_colbertv2_store(
     them into the delta segment (same-id delta rows replaced, tombstones
     revived). Returns the number of upserted docs. O(new + delta) — the
     base codes are never rewritten."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _base, quant, meta = load_colbertv2_store(spark, path)
-    id_col = meta["id_col"]
-    n_new = new_docs.count()
+    n_new, ids = upsert_ids(new_docs, meta["id_col"])
     if n_new == 0:
         return 0
-    ids = new_docs.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
-    coded = _encode_against_build(meta, quant, new_docs, text_col).withColumn(
-        "build_id", F.lit(meta["build_id"])
-    )
+    # embed and encode ONLY the new docs under the frozen quantizer
+    coded = encode_token_matrices(
+        _token_rows(meta, new_docs, text_col), quant, id_col=meta["id_col"]
+    ).withColumn("build_id", F.lit(meta["build_id"]))
     n_coded = coded.count()
     if n_coded != n_new:
         raise ValueError(
@@ -117,66 +76,21 @@ def upsert_colbertv2_store(
             "produce no token codes — an empty doc cannot shadow its old "
             "version; delete those ids instead (delete_from_colbertv2_store)"
         )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, meta["build_id"], "delta segment")
-    if old_delta is not None:
-        coded = coded.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # materialize BEFORE the swap — a lazy plan reading the old delta dir
-    # would race its own overwrite (the maxsim_maintenance rule)
-    coded = coded.localCheckpoint(eager=True)
-    snapshot_overwrite(coded, delta_path)
-
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, meta["build_id"], "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    upsert_side_tables(
+        spark, path, meta["build_id"], meta["id_col"], ids,
+        [(".delta", coded, None)],
+    )
     return n_new
 
 
 def delete_from_colbertv2_store(spark, path: str, doc_ids) -> int:
     """Tombstone ``doc_ids`` (a list or a one-column DataFrame) and drop
     them from the delta. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _base, _quant, meta = load_colbertv2_store(spark, path)
-    id_col = meta["id_col"]
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in doc_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
-    if n == 0:
-        return 0
-
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, meta["build_id"], "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(meta["build_id"]))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
-
-    delta_path = path + ".delta"
-    delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, delta, meta["build_id"], "delta segment")
-    if delta is not None:
-        kept = delta.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, delta_path)
-    return n
+    return delete_ids(
+        spark, path, meta["build_id"], meta["id_col"], doc_ids,
+        [(".delta", None)],
+    )
 
 
 def load_live_colbertv2(spark, path: str):
@@ -184,19 +98,7 @@ def load_live_colbertv2(spark, path: str):
     − tombstones, every side table build-checked. Prefilter/candidate
     filters push through the union, so the base keeps its pruning."""
     base, quant, meta = load_colbertv2_store(spark, path)
-    id_col = meta["id_col"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
+    live = live_view(spark, path, base, meta["build_id"], meta["id_col"])
     return live, quant, meta
 
 
@@ -214,107 +116,40 @@ def live_colbertv2_search(
     between compactions. ≡ composing the corpora in memory, pinned in
     tests. ``filter`` (keep_cols stores): metadata predicate applied
     before the prefilter, pushed through the union to both scans."""
-    import numpy as np
-
     from photo_vector_search_spark.operators.late_interaction import (
         MAX_QUERY_TOKENS,
-        _pooled_flat_candidate_ids,
-        _query_token_vecs,
     )
 
-    mqt = MAX_QUERY_TOKENS if max_query_tokens is None else max_query_tokens
     live, quant, meta = load_live_colbertv2(spark, path)
-    id_col, dim = meta["id_col"], meta["dim"]
-    if filter is not None:
-        live = live.filter(filter)
-    if prefilter_n is not None:
-        if prefilter_n < k:
-            raise ValueError(
-                f"prefilter_n ({prefilter_n}) must be >= k ({k})"
-            )
-        qvecs = np.asarray(
-            _query_token_vecs(query, mqt, dim), dtype=np.float64
-        )
-        cand = _pooled_flat_candidate_ids(
-            live, qvecs.mean(axis=0), prefilter_n, id_col
-        )
-        live = live.filter(F.col(id_col).isin(cand))
-    return maxsim_topk_compressed(
-        live, quant, query, k=k, id_col=id_col,
-        max_query_tokens=mqt, dim=dim,
+    return _serve_colbertv2(
+        live, quant, meta, query, k=k, prefilter_n=prefilter_n,
+        max_query_tokens=(
+            MAX_QUERY_TOKENS if max_query_tokens is None else max_query_tokens
+        ),
+        filter=filter,
     )
 
 
 def compact_colbertv2_store(spark, path: str) -> int:
     """Fold delta and tombstones into the base and clear them. ``build_id``
-    stays STABLE (params + quantizer hash — a stale side table restored
-    after compaction overlays idempotently); ``store_sig`` and ``n_docs``
+    stays STABLE (params + quantizer hash); ``store_sig`` and ``n_docs``
     are restamped. Reads the RAW tables — side tables checked against the
     META build id, the signature deliberately NOT verified — so it
     converges when re-run from any crash point; `load_colbertv2_store`
     refuses to SERVE any intermediate state. Returns the live doc count."""
-    from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import (
-        recover_store,
-        snapshot_overwrite,
-    )
-
     for suffix in ("", ".quant", ".meta"):
         recover_store(path + suffix)
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"ColBERTv2 store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
+    meta = read_meta(spark, path, "ColBERTv2 store")
     id_col = meta["id_col"]
-    base = spark.read.parquet(path)
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-
-    live = live.localCheckpoint(eager=True)
+    live = live_view(
+        spark, path, spark.read.parquet(path), meta["build_id"], id_col
+    ).localCheckpoint(eager=True)
     n = live.count()
     # the build layout: range-partitioned + id-sorted for row-group pruning
     snapshot_overwrite(
         live.repartitionByRange(F.col(id_col)).sortWithinPartitions(id_col),
         path,
     )
-    from photo_vector_search_spark.operators.maxsim_maintenance import (
-        _meta_keep_cols,
-    )
-
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    meta["build_id"],
-                    _store_signature(path),
-                    id_col,
-                    meta["max_tokens"],
-                    meta["dim"],
-                    n,
-                    meta["n_centroids"],
-                    ",".join(_meta_keep_cols(meta)),
-                )
-            ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_centroids int, "
-            "keep_cols string",
-        ),
-        path + ".meta",
-    )
-    for side in (".tombstones", ".delta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    _restamp_meta(spark, path, meta, n, _META_SCHEMA)
+    clear_side_tables(path)
     return n

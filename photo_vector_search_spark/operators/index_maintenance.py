@@ -1,78 +1,46 @@
 """Incremental maintenance for the persisted IVF,SQ8 store — upsert,
-delete, live serving, and compaction WITHOUT a full rebuild (the
-delta-segment + tombstone pattern every LSM-backed index uses; cf. the
-reference's own workflow, which adds photos to its ChromaDB index
-one directory at a time — photo_vector_search.py:84-117 — rather than
-rebuilding it).
+delete, live serving, and compaction WITHOUT a full rebuild (cf. the
+reference's own workflow, which adds photos to its ChromaDB index one
+directory at a time — photo_vector_search.py:84-117 — rather than
+rebuilding it). The delta/tombstone protocol, its write order and crash
+windows live in ``operators/store.py``; this module keeps what is
+particular to IVF,SQ8: encoding new vectors against the frozen build.
 
-Layout (all three tables stamped with the SAME content-hash ``build_id``
-as the base, so a delta written against different centroids/ranges is
-refused at load — the crash-consistency contract extended sideways):
+Layout (every table stamped with the SAME content-hash ``build_id`` as the
+base, so a delta written against different centroids/ranges is refused):
 
     <path>              base codes, hive-partitioned by cluster_id
     <path>.ivfsqmeta    centroids + (vmin, vmax) sidecar   (build-time)
     <path>.delta        upserted codes, same schema/partitioning
     <path>.tombstones   deleted ids
 
-Semantics:
-- ``upsert``: assign new vectors to the EXISTING centroids and encode
-  with the EXISTING SQ8 model (out-of-range values clip — the documented
-  encode_sq8/FAISS convention; re-fit when drift warrants a rebuild).
-  Rows replace same-id rows anywhere (delta wins over base), and revive
-  tombstoned ids. Each upsert snapshot-rewrites the delta (O(delta), not
-  O(base) — the delta stays small between compactions by design).
-- ``delete``: ids enter the tombstone set and leave the delta.
-- live view = delta ∪ (base ⟕anti delta-ids) ⟖anti tombstones. The
-  anti-joins are AQE-broadcastable (delta/tombstones are recent changes,
-  never corpus-scale); the base scan keeps its cluster_id PARTITION
-  pruning because the probe filter pushes through the union.
-- ``compact``: snapshot-rewrite the base as the live view (same build —
-  centroids/model unchanged, sidecar untouched), then clear delta and
-  tombstones. Crash ANYWHERE between those steps leaves a correct live
-  view: compacted rows still present in a stale delta override their
-  identical base copies, and stale tombstones re-delete rows the new
-  base already dropped — the cleanup is idempotent by construction.
+``upsert`` assigns new vectors to the EXISTING centroids and encodes them
+with the EXISTING SQ8 model (out-of-range values clip — the documented
+encode_sq8/FAISS convention; re-fit when drift warrants a rebuild).
+``compact`` folds the VERIFIED live view into the base (same build —
+centroids/model unchanged, sidecar untouched).
 """
 
 from __future__ import annotations
-
-import glob
-import os
-import shutil
 
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .sq import SQ8Model, encode_sq8, ivf_sq8_topk, load_ivf_sq8_store
-
-
-def _read_side_table(spark, path: str) -> DataFrame | None:
-    """Read a delta/tombstone dir; missing or file-less dirs are empty
-    (a crashed cleanup may leave either — both are valid empty states)."""
-    from photo_vector_search_spark.operators.store import recover_store
-
-    recover_store(path)
-    if not os.path.isdir(path):
-        return None
-    if not glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True):
-        return None
-    return spark.read.parquet(path)
-
-
-def _check_build(path: str, df: DataFrame | None, base_build: str, kind: str):
-    if df is None:
-        return
-    from photo_vector_search_spark.operators.ann import _file_build_ids
-
-    builds = _file_build_ids(path)  # footer stats, no table scan (r13)
-    if builds and builds != {base_build}:
-        raise ValueError(
-            f"{kind} at {path!r} is from build {sorted(builds)} but the base "
-            f"store is build {base_build!r} — it was written against "
-            "different centroids/ranges; compact or rebuild before serving"
-        )
-
+from photo_vector_search_spark.operators.sq import (
+    SQ8Model,
+    encode_sq8,
+    ivf_sq8_topk,
+    load_ivf_sq8_store,
+)
+from photo_vector_search_spark.operators.store import (
+    clear_side_tables,
+    delete_ids,
+    live_view,
+    snapshot_overwrite,
+    upsert_ids,
+    upsert_side_tables,
+)
 
 def upsert_ivf_sq8_store(
     spark,
@@ -85,22 +53,9 @@ def upsert_ivf_sq8_store(
     """Encode ``new_embeddings`` against the store's existing centroids +
     SQ8 model and merge them into the delta segment (same-id delta rows
     replaced, tombstones revived). Returns the number of upserted rows.
-    O(new + delta) — the base is never rewritten.
-
-    Crash window (ADVICE r11): the delta snapshot is swapped BEFORE the
-    tombstone revive. A crash between the two swaps leaves a re-upserted,
-    previously-tombstoned id temporarily invisible in the live view (the
-    anti-tombstone join suppresses its fresh delta row). This is a
-    BOUNDED, self-healing inconsistency — replaying the same upsert (the
-    caller's natural retry) rewrites the delta idempotently and completes
-    the revive; no other id is affected and no torn/mixed-build state is
-    ever served (the build-id check still refuses cross-build sides).
-    The swap order is deliberate: revive-first would have the opposite
-    window (a crash could revive a tombstone whose replacement row never
-    landed, resurrecting a DELETED vector) — losing availability of a row
-    being re-added beats serving a row the caller deleted."""
+    O(new + delta) — the base is never rewritten. Crash windows:
+    ``operators/store.py``."""
     from photo_vector_search_spark.operators.ann import assign_clusters
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
 
     base, centroids, model = load_ivf_sq8_store(spark, path)
     base_build = base.select("build_id").first()["build_id"]
@@ -108,12 +63,9 @@ def upsert_ivf_sq8_store(
     emb = new_embeddings
     if vec_col != "embedding":
         emb = emb.withColumnRenamed(vec_col, "embedding")
-    n_new = emb.count()
+    n_new, ids = upsert_ids(emb, id_col)
     if n_new == 0:
         return 0
-    ids = emb.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
     coded = encode_sq8(assign_clusters(emb, centroids), model).select(
         id_col,
         *keep_cols,
@@ -127,67 +79,21 @@ def upsert_ivf_sq8_store(
             f"store's {sorted(base.columns)} — pass the keep_cols the store "
             "was built with"
         )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, base_build, "delta segment")
-    if old_delta is not None:
-        coded = coded.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # localCheckpoint: the new delta must be MATERIALIZED before the swap —
-    # a lazy plan reading the old delta dir would race its own overwrite
-    coded = coded.localCheckpoint(eager=True)
-    snapshot_overwrite(coded, delta_path, partition_by=["cluster_id"])
-
-    # revive tombstoned ids
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, base_build, "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    upsert_side_tables(
+        spark, path, base_build, id_col, ids,
+        [(".delta", coded, ["cluster_id"])],
+    )
     return n_new
 
 
 def delete_from_ivf_sq8_store(spark, path: str, vec_ids, id_col: str = "vec_id") -> int:
     """Tombstone ``vec_ids`` (a list or a one-column DataFrame) and drop
     them from the delta. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     base, _, _ = load_ivf_sq8_store(spark, path)
     base_build = base.select("build_id").first()["build_id"]
-    if isinstance(vec_ids, DataFrame):
-        ids = vec_ids.select(F.col(vec_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in vec_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
-    if n == 0:
-        return 0
-
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, base_build, "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(base_build))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
-
-    delta_path = path + ".delta"
-    delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, delta, base_build, "delta segment")
-    if delta is not None:
-        kept = delta.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, delta_path, partition_by=["cluster_id"])
-    return n
+    return delete_ids(
+        spark, path, base_build, id_col, vec_ids, [(".delta", ["cluster_id"])]
+    )
 
 
 def load_live_ivf_sq8(
@@ -198,19 +104,7 @@ def load_live_ivf_sq8(
     push through the union, so base partition pruning is preserved."""
     base, centroids, model = load_ivf_sq8_store(spark, path)
     base_build = base.select("build_id").first()["build_id"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, base_build, "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, base_build, "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-    return live, centroids, model
+    return live_view(spark, path, base, base_build, id_col), centroids, model
 
 
 def live_ivf_sq8_topk(
@@ -244,16 +138,11 @@ def live_ivf_sq8_topk(
 def compact_ivf_sq8_store(spark, path: str) -> int:
     """Fold delta and tombstones into the base (same build — the sidecar
     is untouched) and clear them. Returns the compacted base row count.
-    Step order makes every crash point recoverable: (1) base snapshot
-    swap, (2) clear tombstones, (3) clear delta — see module docstring
-    for why stale leftovers at any point leave a correct live view."""
+    Folds the verified live view; every crash point is recoverable
+    (``operators/store.py``)."""
     live, _, _ = load_live_ivf_sq8(spark, path)
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     live = live.localCheckpoint(eager=True)
     n = live.count()
     snapshot_overwrite(live, path, partition_by=["cluster_id"])
-    for side in (".tombstones", ".delta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    clear_side_tables(path)
     return n

@@ -634,7 +634,10 @@ def build_maxsim_store(
     (P2: filter before distance, `knn.knn_topk(label=...)`). Upserts into
     a keep_cols store must supply the same columns."""
     from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
+    from photo_vector_search_spark.operators.store import (
+        snapshot_overwrite,
+        write_meta,
+    )
 
     toks = with_pooled_column(
         doc_token_embeddings(
@@ -675,25 +678,19 @@ def build_maxsim_store(
         snapshot_overwrite(toks, path)
     n_docs = spark.read.parquet(path).count()
     build_id = _maxsim_build_id(id_col, max_tokens, dim, n_clusters, centroids)
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    build_id,
-                    _store_signature(path),
-                    id_col,
-                    max_tokens,
-                    dim,
-                    n_docs,
-                    n_clusters or 0,
-                    ",".join(keep_cols),
-                )
-            ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_clusters int, "
-            "keep_cols string",
-        ),
-        path + ".meta",
+    write_meta(
+        spark, path,
+        {
+            "build_id": build_id,
+            "store_sig": _store_signature(path),
+            "id_col": id_col,
+            "max_tokens": max_tokens,
+            "dim": dim,
+            "n_docs": n_docs,
+            "n_clusters": n_clusters or 0,
+            "keep_cols": ",".join(keep_cols),
+        },
+        _META_SCHEMA,
     )
     if centroids is not None:
         snapshot_overwrite(
@@ -707,6 +704,12 @@ def build_maxsim_store(
             path + ".centroids",
         )
     return build_id
+
+
+_META_SCHEMA = (
+    "build_id string, store_sig string, id_col string, max_tokens int, "
+    "dim int, n_docs long, n_clusters int, keep_cols string"
+)
 
 
 def _maxsim_build_id(id_col, max_tokens, dim, n_clusters, centroids) -> str:
@@ -765,14 +768,9 @@ def load_maxsim_store(spark, path: str):
     any out-of-band rewrite, fails here instead of silently serving token
     matrices that don't match the recorded build)."""
     from photo_vector_search_spark.operators.ann import _store_signature
+    from photo_vector_search_spark.operators.store import read_meta
 
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"maxsim store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
+    meta = read_meta(spark, path, "maxsim store")
     sig = _store_signature(path)
     if sig != meta["store_sig"]:
         raise ValueError(

@@ -1,66 +1,55 @@
 """Incremental maintenance for the persisted MaxSim token store —
 upsert/delete/live-serve/compact WITHOUT re-embedding or rewriting the
-corpus (the delta-segment + tombstone pattern `index_maintenance` applies
-to the IVF,SQ8 store, extended to the late-interaction family so EVERY
-persisted serving index can grow incrementally; cf. the reference's
-incremental per-file upsert loop, photo_vector_search.py:84-117).
+corpus, so the late-interaction family grows incrementally like every
+other persisted serving index (cf. the reference's incremental per-file
+upsert loop, photo_vector_search.py:84-117). The delta/tombstone protocol,
+its write order and crash windows live in ``operators/store.py``; this
+module keeps what is particular to MaxSim: embedding new docs against the
+frozen build, the base write layout, and serving.
 
 Layout around a `late_interaction.build_maxsim_store` store at ``path``:
 - ``path``            base (id, tok_embs, pooled[, cluster_id]) — FROZEN
                       between compactions; its content signature is the
-                      build id the meta sidecar records.
+                      ``store_sig`` the meta sidecar records.
 - ``path + '.delta'`` upserted rows, re-embedded against the build's
                       (max_tokens, dim) and — for clustered stores —
                       assigned to the build's FROZEN centroids (the clip
                       convention: probes stay valid, geometry drifts only
                       until the next compaction). O(delta) rewrite.
-- ``path + '.tombstones'`` deleted ids. Both side tables carry the base
-                      ``build_id``; a side table from a different build is
-                      refused (serving stale-geometry rows silently would
-                      collapse recall).
+- ``path + '.tombstones'`` deleted ids.
 
-Live view = delta ∪ (base anti delta-ids) − tombstones. The cluster-probe
-filter pushes THROUGH the union, so the base scan keeps its hive-partition
-pruning; the side tables are broadcast-sized joins.
-
-Crash windows (all bounded, all heal on retry):
-- upsert writes the delta BEFORE reviving tombstones — a crash between the
-  two swaps leaves a re-upserted, previously-tombstoned id invisible until
-  the upsert is replayed (same window, same reasoning as
-  `index_maintenance.upsert_ivf_sq8_store`).
-- compact rewrites the base, which changes the store's directory
-  signature, so it rewrites the meta sidecar with the new ``store_sig``
-  (the ``build_id`` is STABLE — a params+centroids hash — so side tables
-  and the centroid sidecar need no restamp). A crash between the base
-  swap and the meta rewrite leaves a store `load_maxsim_store` refuses as
-  torn; compact reads the RAW tables (meta for params, side tables
-  checked against the META build id) and is convergent — re-running it
-  from any crash point folds the same live view and completes the
-  rewrite. A stale side table restored AFTER a successful compaction
-  carries the same stable build id and overlays idempotently (its rows
-  are already folded into the base; the anti-join + union reproduces the
-  identical view — the `index_maintenance` crash-sim semantics, pinned in
-  tests). Nothing is ever SERVED from a half-compacted state — the sig
-  check guarantees that.
+Compaction rewrites the base, which changes its directory signature, so it
+rewrites the meta sidecar with the new ``store_sig`` (``build_id`` is a
+STABLE params+centroids hash: side tables and the centroid sidecar need no
+restamp). A crash between the base swap and the meta rewrite leaves a store
+`load_maxsim_store` refuses as torn; compaction therefore reads the RAW
+tables (meta for params, side tables checked against the META build id)
+and converges when re-run. Nothing is ever SERVED from a half-compacted
+state — the signature check guarantees that.
 """
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.operators.index_maintenance import (
-    _check_build,
-    _read_side_table,
-)
 from photo_vector_search_spark.operators.late_interaction import (
+    _META_SCHEMA,
     _load_maxsim_centroids,
     _serve_maxsim,
     doc_token_embeddings,
     load_maxsim_store,
     with_pooled_column,
+)
+from photo_vector_search_spark.operators.store import (
+    clear_side_tables,
+    delete_ids,
+    live_view,
+    read_meta,
+    snapshot_overwrite,
+    upsert_ids,
+    upsert_side_tables,
+    write_meta,
 )
 
 
@@ -78,11 +67,28 @@ def _meta_keep_cols(meta) -> list[str]:
     return [c for c in (raw or "").split(",") if c]
 
 
-def _embed_against_build(spark, path, meta, new_docs: DataFrame, text_col: str):
-    """Re-embed ONLY the new docs under the build's frozen parameters
-    (max_tokens, dim, centroids) — the O(delta) half of the contract. A
-    keep_cols store requires the same metadata columns on the upsert batch
-    (delta rows must union with the base schema)."""
+def _restamp_meta(spark, path, meta, n_docs: int, schema: str) -> None:
+    """Rewrite a token store's meta sidecar after its base was compacted:
+    the new directory signature and doc count under the SAME build."""
+    from photo_vector_search_spark.operators.ann import _store_signature
+
+    write_meta(
+        spark, path,
+        {
+            **meta.asDict(),
+            "store_sig": _store_signature(path),
+            "n_docs": n_docs,
+            "keep_cols": ",".join(_meta_keep_cols(meta)),
+        },
+        schema,
+    )
+
+
+def _token_rows(meta, new_docs: DataFrame, text_col: str) -> DataFrame:
+    """Re-embed ONLY the new docs under the build's frozen (max_tokens,
+    dim) — the O(delta) half of the contract, shared with the ColBERTv2
+    store. A keep_cols store requires the same metadata columns on the
+    upsert batch (delta rows must union with the base schema)."""
     keep = _meta_keep_cols(meta)
     missing = [c for c in keep if c not in new_docs.columns]
     if missing:
@@ -102,6 +108,13 @@ def _embed_against_build(spark, path, meta, new_docs: DataFrame, text_col: str):
     )
     if keep:
         toks = toks.join(new_docs.select(meta["id_col"], *keep), meta["id_col"])
+    return toks
+
+
+def _embed_against_build(spark, path, meta, new_docs: DataFrame, text_col: str):
+    """``_token_rows``, assigned to the build's FROZEN centroids for a
+    clustered store."""
+    toks = _token_rows(meta, new_docs, text_col)
     if meta["n_clusters"] >= 1:
         from photo_vector_search_spark.operators.ann import assign_clusters
 
@@ -119,16 +132,10 @@ def upsert_maxsim_store(
     into the delta segment (same-id delta rows replaced, tombstones
     revived). Returns the number of upserted docs. O(new + delta) — the
     base is never rewritten; the embed pass runs over the NEW docs only."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
-    base, meta = load_maxsim_store(spark, path)
-    id_col = meta["id_col"]
-    n_new = new_docs.count()
+    _, meta = load_maxsim_store(spark, path)
+    n_new, ids = upsert_ids(new_docs, meta["id_col"])
     if n_new == 0:
         return 0
-    ids = new_docs.select(F.col(id_col)).distinct()
-    if ids.count() != n_new:
-        raise ValueError("duplicate ids in the upsert batch — one row per id")
     coded = _embed_against_build(spark, path, meta, new_docs, text_col).withColumn(
         "build_id", F.lit(meta["build_id"])
     )
@@ -143,67 +150,21 @@ def upsert_maxsim_store(
             "produce no token matrix — an empty doc cannot shadow its old "
             "version; delete those ids instead (delete_from_maxsim_store)"
         )
-
-    delta_path = path + ".delta"
-    old_delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, old_delta, meta["build_id"], "delta segment")
-    if old_delta is not None:
-        coded = coded.unionByName(
-            old_delta.join(F.broadcast(ids), id_col, "left_anti")
-        )
-    # the new delta must be MATERIALIZED before the swap — a lazy plan
-    # reading the old delta dir would race its own overwrite
-    coded = coded.localCheckpoint(eager=True)
-    snapshot_overwrite(coded, delta_path, partition_by=_base_partitioning(meta))
-
-    # revive tombstoned ids (see module docstring for the crash window)
-    ts_path = path + ".tombstones"
-    ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, ts, meta["build_id"], "tombstone set")
-    if ts is not None:
-        kept = ts.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, ts_path)
+    upsert_side_tables(
+        spark, path, meta["build_id"], meta["id_col"], ids,
+        [(".delta", coded, _base_partitioning(meta))],
+    )
     return n_new
 
 
 def delete_from_maxsim_store(spark, path: str, doc_ids) -> int:
     """Tombstone ``doc_ids`` (a list or a one-column DataFrame) and drop
     them from the delta. Returns the number of ids tombstoned."""
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
     _, meta = load_maxsim_store(spark, path)
-    id_col = meta["id_col"]
-    if isinstance(doc_ids, DataFrame):
-        ids = doc_ids.select(F.col(doc_ids.columns[0]).alias(id_col)).distinct()
-    else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in doc_ids], f"`{id_col}` long"
-        ).distinct()
-    n = ids.count()
-    if n == 0:
-        return 0
-
-    ts_path = path + ".tombstones"
-    old_ts = _read_side_table(spark, ts_path)
-    _check_build(ts_path, old_ts, meta["build_id"], "tombstone set")
-    new_ts = ids.withColumn("build_id", F.lit(meta["build_id"]))
-    if old_ts is not None:
-        new_ts = new_ts.unionByName(
-            old_ts.join(F.broadcast(ids), id_col, "left_anti")
-        ).distinct()
-    snapshot_overwrite(new_ts.localCheckpoint(eager=True), ts_path)
-
-    delta_path = path + ".delta"
-    delta = _read_side_table(spark, delta_path)
-    _check_build(delta_path, delta, meta["build_id"], "delta segment")
-    if delta is not None:
-        kept = delta.join(F.broadcast(ids), id_col, "left_anti").localCheckpoint(
-            eager=True
-        )
-        snapshot_overwrite(kept, delta_path, partition_by=_base_partitioning(meta))
-    return n
+    return delete_ids(
+        spark, path, meta["build_id"], meta["id_col"], doc_ids,
+        [(".delta", _base_partitioning(meta))],
+    )
 
 
 def load_live_maxsim(spark, path: str):
@@ -211,20 +172,7 @@ def load_live_maxsim(spark, path: str):
     every side table build-checked. Cluster/pool filters push through the
     union, so the base scan keeps its partition pruning."""
     base, meta = load_maxsim_store(spark, path)
-    id_col = meta["id_col"]
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-    return live, meta
+    return live_view(spark, path, base, meta["build_id"], meta["id_col"]), meta
 
 
 def live_maxsim_search(
@@ -271,55 +219,12 @@ def compact_maxsim_store(spark, path: str) -> int:
     NOT verified — so it converges when re-run from any crash point
     (module docstring); `load_maxsim_store` refuses to SERVE any
     intermediate state. Returns the compacted base row count."""
-    from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
-
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"maxsim store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
-    id_col = meta["id_col"]
-    base = spark.read.parquet(path)
-    delta = _read_side_table(spark, path + ".delta")
-    _check_build(path + ".delta", delta, meta["build_id"], "delta segment")
-    ts = _read_side_table(spark, path + ".tombstones")
-    _check_build(path + ".tombstones", ts, meta["build_id"], "tombstone set")
-
-    live = base
-    if delta is not None:
-        live = base.join(
-            F.broadcast(delta.select(id_col)), id_col, "left_anti"
-        ).unionByName(delta.select(*base.columns))
-    if ts is not None:
-        live = live.join(F.broadcast(ts.select(id_col)), id_col, "left_anti")
-
-    live = live.localCheckpoint(eager=True)
+    meta = read_meta(spark, path, "maxsim store")
+    live = live_view(
+        spark, path, spark.read.parquet(path), meta["build_id"], meta["id_col"]
+    ).localCheckpoint(eager=True)
     n = live.count()
     snapshot_overwrite(live, path, partition_by=_base_partitioning(meta))
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    meta["build_id"],
-                    _store_signature(path),
-                    id_col,
-                    meta["max_tokens"],
-                    meta["dim"],
-                    n,
-                    meta["n_clusters"],
-                    ",".join(_meta_keep_cols(meta)),
-                )
-            ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_clusters int, "
-            "keep_cols string",
-        ),
-        path + ".meta",
-    )
-    for side in (".tombstones", ".delta"):
-        shutil.rmtree(path + side, ignore_errors=True)
-        shutil.rmtree(path + side + ".old", ignore_errors=True)
+    _restamp_meta(spark, path, meta, n, _META_SCHEMA)
+    clear_side_tables(path)
     return n

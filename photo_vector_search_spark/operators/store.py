@@ -14,15 +14,52 @@ Scale notes:
 - deletes are filters — map-side only, no shuffle, pushed to the scan where possible.
 - ``group_photos`` (A3) is the only shuffling op here (groupBy photo_path); partial
   aggregation applies since collect_list is map-side combinable per group.
+
+Incremental maintenance (the delta-segment + tombstone pattern of LSM-backed
+indexes; cf. the reference upserting its index one directory at a time,
+photo_vector_search.py:84-117, and deleting by key, :195-215). The four
+incrementally maintained stores (IVF,SQ8 ``index_maintenance``, MaxSim
+``maxsim_maintenance``, ColBERTv2 ``cv2_maintenance``, BM25 ``bm25_store``)
+share one protocol, implemented once below:
+
+- Layout: a base at ``path``, FROZEN between compactions, plus side tables
+  ``path.delta`` (upserted rows in the base's schema and partitioning; BM25
+  also keeps ``path.dldelta``, its doc-level membership table) and
+  ``path.tombstones`` (deleted ids). Every side-table row carries the base's
+  STABLE ``build_id``; a side table from another build is refused at read
+  (its rows were encoded against different centroids, ranges or codebooks).
+- Live view = delta ∪ (base ⟕anti delta-ids) ⟕anti tombstones. The side
+  tables are broadcast (recent changes, never corpus-scale); probe filters
+  push through the union, so the base scan keeps its partition pruning.
+- Upsert merges each delta in order (payload first, membership table last),
+  then revives the ids (drops them from the tombstones). A crash between the
+  delta swap and the revive leaves a re-upserted, previously tombstoned id
+  invisible until the caller replays the upsert — bounded and self-healing.
+  Revive-first would have the opposite window: a crash could resurrect a
+  DELETED row whose replacement never landed.
+- Delete tombstones the ids first, then drops them from each delta; a crash
+  in between leaves ids that are already invisible.
+- Every rewritten side table is MATERIALIZED (``localCheckpoint``) before
+  its snapshot swap: a lazy plan reading the old directory would race its
+  own overwrite.
+- Compaction snapshot-swaps the live view in as the new base (plus, for
+  stores that sign their base directory, a meta restamp), then clears the
+  side tables membership-first: tombstones, then the membership table
+  (BM25 ``.dldelta``), then ``.delta``. ``build_id`` is stable across
+  compaction, so every state a crash leaves overlays to the same live view:
+  stale delta rows override identical base copies, stale tombstones
+  re-delete rows the base already dropped, and a postings delta without its
+  membership table is ignored. Re-running compaction converges.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 
@@ -152,3 +189,161 @@ def snapshot_overwrite(df: DataFrame, path: str, partition_by: list[str] | None 
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
+
+
+# ---------------------------------------------------------------------------
+# incremental maintenance — the delta/tombstone protocol (module docstring)
+# ---------------------------------------------------------------------------
+
+TOMBSTONES = ".tombstones"
+_SIDE_KINDS = {
+    ".delta": "delta segment",
+    ".dldelta": "doclens delta",
+    TOMBSTONES: "tombstone set",
+}
+
+
+def side_table(spark, path: str, suffix: str, build_id: str) -> DataFrame | None:
+    """Read side table ``path + suffix``, refusing one from another build.
+    A missing or file-less dir is an empty table (a crashed cleanup may
+    leave either — both are valid empty states)."""
+    from photo_vector_search_spark.operators.ann import _file_build_ids
+
+    side = path + suffix
+    recover_store(side)
+    if not glob.glob(os.path.join(side, "**", "*.parquet"), recursive=True):
+        return None
+    df = spark.read.parquet(side)
+    builds = _file_build_ids(side)  # footer stats, no table scan
+    if builds and builds != {build_id}:
+        raise ValueError(
+            f"{_SIDE_KINDS[suffix]} at {side!r} is from build "
+            f"{sorted(builds, key=str)} but the base store is build "
+            f"{build_id!r} — it was written against different "
+            "centroids/ranges; compact or rebuild before serving"
+        )
+    return df
+
+
+def side_tables(spark, path: str, build_id: str, suffixes=(".delta", TOMBSTONES)):
+    """``side_table`` for each suffix, in order."""
+    return [side_table(spark, path, s, build_id) for s in suffixes]
+
+
+def upsert_ids(batch: DataFrame, id_col: str) -> tuple[int, DataFrame]:
+    """(row count, distinct ids) of an upsert batch; refuses a batch that
+    holds an id twice — an upsert writes exactly one row per id."""
+    n = batch.count()
+    ids = batch.select(F.col(id_col)).distinct()
+    if n and ids.count() != n:
+        raise ValueError("duplicate ids in the upsert batch — one row per id")
+    return n, ids
+
+
+def _rewrite_side_table(
+    spark, path, suffix, build_id, id_col, ids, rows=None, partition_by=None
+) -> None:
+    """Swap in ``path + suffix`` with ``ids`` removed and ``rows`` (if any)
+    added; a no-op when the table is empty and nothing is added."""
+    old = side_table(spark, path, suffix, build_id)
+    if old is not None:
+        kept = old.join(F.broadcast(ids), id_col, "left_anti")
+        rows = kept if rows is None else rows.unionByName(kept)
+    if rows is not None:
+        snapshot_overwrite(
+            rows.localCheckpoint(eager=True), path + suffix,
+            partition_by=partition_by,
+        )
+
+
+def upsert_side_tables(spark, path, build_id, id_col, ids, deltas) -> None:
+    """Merge ``deltas`` — ``(suffix, rows, partition_by)`` triples, in write
+    order — replacing the ``ids``' earlier rows, then revive the ``ids``."""
+    for suffix, rows, partition_by in deltas:
+        _rewrite_side_table(
+            spark, path, suffix, build_id, id_col, ids, rows, partition_by
+        )
+    _rewrite_side_table(spark, path, TOMBSTONES, build_id, id_col, ids)
+
+
+def delete_ids(spark, path, build_id, id_col, ids, deltas) -> int:
+    """Tombstone ``ids`` (a list or a one-column DataFrame), then drop them
+    from each ``(suffix, partition_by)`` delta. Returns the number of ids
+    tombstoned."""
+    if isinstance(ids, DataFrame):
+        ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
+    else:
+        ids = spark.createDataFrame(
+            [(int(v),) for v in ids], f"`{id_col}` long"
+        ).distinct()
+    n = ids.count()
+    if n == 0:
+        return 0
+    old = side_table(spark, path, TOMBSTONES, build_id)
+    new = ids.withColumn("build_id", F.lit(build_id))
+    if old is not None:
+        new = new.unionByName(
+            old.join(F.broadcast(ids), id_col, "left_anti")
+        ).distinct()
+    snapshot_overwrite(new.localCheckpoint(eager=True), path + TOMBSTONES)
+    for suffix, partition_by in deltas:
+        _rewrite_side_table(
+            spark, path, suffix, build_id, id_col, ids,
+            partition_by=partition_by,
+        )
+    return n
+
+
+def live_overlay(
+    base: DataFrame,
+    delta: DataFrame | None,
+    tombstones: DataFrame | None,
+    id_col: str,
+    shadow: DataFrame | None = None,
+) -> DataFrame:
+    """delta ∪ (base ⟕anti shadow) ⟕anti tombstones, where ``shadow`` (one
+    id column) defaults to the delta's ids."""
+    if shadow is None and delta is not None:
+        shadow = delta.select(id_col)
+    live = base
+    if shadow is not None:
+        live = live.join(F.broadcast(shadow), id_col, "left_anti")
+    if delta is not None:
+        live = live.unionByName(delta.select(*base.columns))
+    if tombstones is not None:
+        live = live.join(
+            F.broadcast(tombstones.select(id_col)), id_col, "left_anti"
+        )
+    return live
+
+
+def live_view(spark, path: str, base: DataFrame, build_id: str, id_col: str):
+    """``live_overlay`` of ``base`` with its build-checked ``.delta`` and
+    ``.tombstones``."""
+    delta, ts = side_tables(spark, path, build_id)
+    return live_overlay(base, delta, ts, id_col)
+
+
+def clear_side_tables(path: str, suffixes=(TOMBSTONES, ".delta")) -> None:
+    """Compaction's last step: remove the side tables in the given order —
+    membership authorities first (module docstring)."""
+    for suffix in suffixes:
+        shutil.rmtree(path + suffix, ignore_errors=True)
+        shutil.rmtree(path + suffix + ".old", ignore_errors=True)
+
+
+def read_meta(spark, path: str, what: str) -> Row:
+    """The single row of a store's ``.meta`` sidecar."""
+    rows = spark.read.parquet(path + ".meta").collect()
+    if len(rows) != 1:
+        raise ValueError(
+            f"{what} sidecar at {path + '.meta'!r} has {len(rows)} rows, "
+            "want exactly 1 — rebuild the store"
+        )
+    return rows[0]
+
+
+def write_meta(spark, path: str, values: dict, schema: str) -> None:
+    """Snapshot-swap the single-row ``.meta`` sidecar; ``values`` maps the
+    ``schema`` field names (extra keys are ignored)."""
+    snapshot_overwrite(spark.createDataFrame([values], schema), path + ".meta")

@@ -489,6 +489,12 @@ def maxsim_batch_topk_compressed(
 # ---------------------------------------------------------------------------
 
 
+_META_SCHEMA = (
+    "build_id string, store_sig string, id_col string, max_tokens int, "
+    "dim int, n_docs long, n_centroids int, keep_cols string"
+)
+
+
 def _cv2_build_id(id_col, max_tokens, dim, quant: TokenQuantizer) -> str:
     """Content-hash build identity: params + the codebook and range bytes
     (two stores sharing params but trained on different corpora cannot
@@ -533,7 +539,10 @@ def build_colbertv2_store(
         doc_token_embeddings,
         with_pooled_column,
     )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
+    from photo_vector_search_spark.operators.store import (
+        snapshot_overwrite,
+        write_meta,
+    )
 
     spark = docs.sparkSession
     toks = with_pooled_column(
@@ -568,25 +577,19 @@ def build_colbertv2_store(
         ),
         path + ".quant",
     )
-    snapshot_overwrite(
-        spark.createDataFrame(
-            [
-                (
-                    build_id,
-                    _store_signature(path),
-                    id_col,
-                    max_tokens,
-                    dim,
-                    n_docs,
-                    len(quant.centroids),
-                    ",".join(keep_cols),
-                )
-            ],
-            "build_id string, store_sig string, id_col string, "
-            "max_tokens int, dim int, n_docs long, n_centroids int, "
-            "keep_cols string",
-        ),
-        path + ".meta",
+    write_meta(
+        spark, path,
+        {
+            "build_id": build_id,
+            "store_sig": _store_signature(path),
+            "id_col": id_col,
+            "max_tokens": max_tokens,
+            "dim": dim,
+            "n_docs": n_docs,
+            "n_centroids": len(quant.centroids),
+            "keep_cols": ",".join(keep_cols),
+        },
+        _META_SCHEMA,
     )
     return build_id
 
@@ -600,7 +603,7 @@ def load_colbertv2_store(spark, path: str):
     import os
 
     from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import recover_store
+    from photo_vector_search_spark.operators.store import read_meta, recover_store
 
     for suffix in ("", ".quant", ".meta"):
         recover_store(path + suffix)
@@ -614,13 +617,7 @@ def load_colbertv2_store(spark, path: str):
             f"no ColBERTv2 store at {path!r} (missing: {missing}) — run "
             "build_colbertv2_store first"
         )
-    meta_rows = spark.read.parquet(path + ".meta").collect()
-    if len(meta_rows) != 1:
-        raise ValueError(
-            f"ColBERTv2 store sidecar at {path + '.meta'!r} has "
-            f"{len(meta_rows)} rows, want exactly 1 — rebuild the store"
-        )
-    meta = meta_rows[0]
+    meta = read_meta(spark, path, "ColBERTv2 store")
     sig = _store_signature(path)
     if sig != meta["store_sig"]:
         raise ValueError(
@@ -694,6 +691,27 @@ def colbertv2_store_search(
     source. The store read is ~1/7.5 the raw token-store bytes; with
     ``prefilter_n`` it is the pooled column + candidate row groups only."""
     coded, quant, meta = load_colbertv2_store(spark, path)
+    return _serve_colbertv2(
+        coded, quant, meta, query, k=k, prefilter_n=prefilter_n,
+        max_query_tokens=max_query_tokens, rerank=rerank,
+        rerank_source=rerank_source, filter=filter,
+    )
+
+
+def _serve_colbertv2(
+    coded: DataFrame,
+    quant: TokenQuantizer,
+    meta,
+    query: str,
+    k: int,
+    prefilter_n: int | None,
+    max_query_tokens: int,
+    rerank: int | None = None,
+    rerank_source: DataFrame | None = None,
+    filter=None,
+) -> DataFrame:
+    """The serving path shared by the base store and its live view:
+    ``filter``, pooled prefilter, compressed rescore."""
     id_col, dim = meta["id_col"], meta["dim"]
     if filter is not None:
         coded = coded.filter(filter)

@@ -313,6 +313,40 @@ def incremental_ivfpq_index(
     return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
+def _delta_upsert_stream(
+    spark, schema, id_col, keep, upsert, input_dir, store_path,
+    checkpoint_dir, available_now,
+):
+    """Stream ``schema`` rows into an existing store through its delta
+    segment: each micro-batch is de-duplicated on ``id_col``, filtered by
+    ``keep`` (a Column, or None), materialized, and — when non-empty —
+    handed to ``upsert(spark, store_path, batch)``."""
+    stream = spark.readStream.schema(schema).format("parquet").load(input_dir)
+
+    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch = batch_df.dropDuplicates([id_col])
+        if keep is not None:
+            batch = batch.filter(keep)
+        batch = batch.localCheckpoint(eager=True)
+        if batch.count() == 0:
+            return
+        upsert(batch.sparkSession, store_path, batch)
+
+    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
+
+
+def _has_tokens():
+    """Rows whose text tokenizes to at least one token — the only docs a
+    token store can represent."""
+    from pyspark.sql import functions as F
+
+    from photo_vector_search_spark.functions.text import tokens
+
+    return F.col("text").isNotNull() & (
+        F.size(F.array_remove(tokens(F.col("text")), "")) > 0
+    )
+
+
 def incremental_ivf_sq8_index(
     spark: SparkSession,
     input_dir: str,
@@ -338,17 +372,10 @@ def incremental_ivf_sq8_index(
         upsert_ivf_sq8_store,
     )
 
-    stream = (
-        spark.readStream.schema(VECTORS_SCHEMA).format("parquet").load(input_dir)
+    return _delta_upsert_stream(
+        spark, VECTORS_SCHEMA, "vec_id", None, upsert_ivf_sq8_store,
+        input_dir, store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.dropDuplicates(["vec_id"]).localCheckpoint(eager=True)
-        if batch.count() == 0:
-            return
-        upsert_ivf_sq8_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 def incremental_maxsim_index(
@@ -373,29 +400,14 @@ def incremental_maxsim_index(
     NULL/empty text are dropped BEFORE the upsert (the upsert refuses
     them — an empty doc cannot shadow its old version; a streaming
     pipeline deletes explicitly via ``delete_from_maxsim_store``)."""
-    from pyspark.sql import functions as F
-
-    from photo_vector_search_spark.functions.text import tokens as _tokens
     from photo_vector_search_spark.operators.maxsim_maintenance import (
         upsert_maxsim_store,
     )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(input_dir)
+    return _delta_upsert_stream(
+        spark, DOCS_SCHEMA, "doc_id", _has_tokens(), upsert_maxsim_store,
+        input_dir, store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates(["doc_id"])
-            .filter(F.col("text").isNotNull())
-            .filter(F.size(F.array_remove(_tokens(F.col("text")), "")) > 0)
-            .localCheckpoint(eager=True)
-        )
-        if batch.count() == 0:
-            return
-        upsert_maxsim_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 DOCS_SCHEMA = "doc_id long, text string"
@@ -421,29 +433,14 @@ def incremental_cv2_index(
     has no code rows and cannot shadow its old version (the MaxSim rule,
     unlike the BM25 store); delete explicitly via
     ``delete_from_colbertv2_store``."""
-    from pyspark.sql import functions as F
-
-    from photo_vector_search_spark.functions.text import tokens as _tokens
     from photo_vector_search_spark.operators.cv2_maintenance import (
         upsert_colbertv2_store,
     )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(input_dir)
+    return _delta_upsert_stream(
+        spark, DOCS_SCHEMA, "doc_id", _has_tokens(), upsert_colbertv2_store,
+        input_dir, store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates(["doc_id"])
-            .filter(F.col("text").isNotNull())
-            .filter(F.size(F.array_remove(_tokens(F.col("text")), "")) > 0)
-            .localCheckpoint(eager=True)
-        )
-        if batch.count() == 0:
-            return
-        upsert_colbertv2_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 def incremental_bm25_index(
@@ -476,21 +473,10 @@ def incremental_bm25_index(
         upsert_bm25_store,
     )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA).format("parquet").load(input_dir)
+    return _delta_upsert_stream(
+        spark, DOCS_SCHEMA, "doc_id", F.col("text").isNotNull(),
+        upsert_bm25_store, input_dir, store_path, checkpoint_dir, available_now,
     )
-
-    def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch_df.dropDuplicates(["doc_id"])
-            .filter(F.col("text").isNotNull())
-            .localCheckpoint(eager=True)
-        )
-        if batch.count() == 0:
-            return
-        upsert_bm25_store(batch.sparkSession, store_path, batch)
-
-    return _start_merge_stream(stream, _merge_batch, checkpoint_dir, available_now)
 
 
 def incremental_lsh_dedup(

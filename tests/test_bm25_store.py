@@ -268,6 +268,33 @@ def test_crash_orphan_postings_ignored_and_replay_heals(
     )
 
 
+def test_dldelta_left_by_compaction_crash_keeps_upserted_docs(spark, tmp_path):
+    """A dldelta left behind without its postings delta — what a compaction
+    that crashes between clearing the two leaves when the postings delta
+    goes first — must not shadow the folded postings: live serving and a
+    re-run compaction still find the upserted docs."""
+    docs = spark.createDataFrame(
+        [(i, f"common words for doc {i}") for i in range(20)],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "bm25")
+    build_bm25_store(docs, path, n_buckets=8)
+    new = spark.createDataFrame(
+        [(2, "zebra crossing"), (9000, "zebra stripes everywhere")],
+        "doc_id long, text string",
+    )
+    upsert_bm25_store(spark, path, new)
+    keep = str(tmp_path / "dldelta")
+    shutil.copytree(path + ".dldelta", keep)
+    compact_bm25_store(spark, path)
+    shutil.copytree(keep, path + ".dldelta")
+
+    live = _rows(live_bm25_topk(spark, path, "zebra", k=5))
+    assert {r[0] for r in live} == {2, 9000}
+    assert compact_bm25_store(spark, path) == 21
+    assert _rows(bm25_store_topk(spark, path, "zebra", k=5)) == live
+
+
 def test_parameter_validation(spark, sf_correct, tmp_path):
     docs = load_table(spark, sf_correct, "documents")
     path = str(tmp_path / "bm25")

@@ -1,0 +1,303 @@
+"""The delta/tombstone maintenance contract (`operators/store.py`), checked
+the same way on each of the four incrementally maintained stores — IVF,SQ8,
+MaxSim, ColBERTv2 and BM25 — over tiny stores: upsert of new and replaced
+ids, delete, revive, live view ≡ the composed corpus encoded under the
+frozen build, foreign-build refusal, compaction identity, stale side tables
+restored after compaction, and the Spark job count of every operation."""
+
+from __future__ import annotations
+
+import itertools
+import os
+import shutil
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+N_BASE = 30
+DIM = 16
+WORDS = (
+    "quick brown fox jumps over lazy dog river stone cloud rain forest "
+    "light shadow mountain valley ocean wind fire earth metal glass paper "
+    "silver golden bright quiet early late north south"
+).split()
+
+_GROUPS = itertools.count()
+
+
+def _jobs(spark, fn, *args):
+    """(result, number of Spark jobs ``fn`` launched) via a job group."""
+    sc = spark.sparkContext
+    group = f"store-maintenance-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _payloads(spark, kind):
+    """Every generated payload, numbered by ``n``: a unit vector with label
+    n % 3, or a text. One materialized partition, so the store calls read
+    no Python-side rows and run one task per input stage."""
+    rng = np.random.default_rng(7)
+    if kind == "ivf_sq8":
+        vecs = rng.normal(size=(N_BASE + 10, DIM))
+        vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+        df = spark.createDataFrame(
+            [(n, [float(x) for x in v], n % 3) for n, v in enumerate(vecs)],
+            "n long, embedding array<float>, label int",
+        )
+    else:
+        df = spark.createDataFrame(
+            [
+                (n, " ".join(rng.choice(WORDS, size=int(rng.integers(5, 12)))))
+                for n in range(N_BASE + 10)
+            ],
+            "n long, text string",
+        )
+    return df.coalesce(1).localCheckpoint()
+
+
+def _frame(payloads, id_col, rows):
+    """Store input for ``rows``, a {id: payload number} dict."""
+    ids = F.create_map(*[F.lit(x) for i, n in rows.items() for x in (n, i)])
+    return payloads.filter(F.col("n").isin(list(rows.values()))).select(
+        ids[F.col("n")].cast("long").alias(id_col),
+        *[c for c in payloads.columns if c != "n"],
+    )
+
+
+def _ivf_sq8():
+    from photo_vector_search_spark.operators.ann import assign_clusters
+    from photo_vector_search_spark.operators.index_maintenance import (
+        compact_ivf_sq8_store,
+        delete_from_ivf_sq8_store,
+        load_live_ivf_sq8,
+        upsert_ivf_sq8_store,
+    )
+    from photo_vector_search_spark.operators.sq import (
+        build_ivf_sq8_store,
+        encode_sq8,
+        load_ivf_sq8_store,
+    )
+
+    def expected(spark, path, corpus):
+        _, centroids, model = load_ivf_sq8_store(spark, path)
+        coded = encode_sq8(assign_clusters(corpus, centroids), model)
+        return [coded.select("vec_id", "label", "cluster_id", "sq8")]
+
+    return dict(
+        id_col="vec_id",
+        build=lambda df, path: build_ivf_sq8_store(df, path, n_clusters=4),
+        upsert=upsert_ivf_sq8_store,
+        delete=delete_from_ivf_sq8_store,
+        live=lambda spark, path: [load_live_ivf_sq8(spark, path)[0]],
+        base=lambda spark, path: [load_ivf_sq8_store(spark, path)[0]],
+        expected=expected,
+        compact=compact_ivf_sq8_store,
+        sides=(".delta", ".tombstones"),
+    )
+
+
+def _token_rows(corpus, meta):
+    from photo_vector_search_spark.operators.late_interaction import (
+        doc_token_embeddings,
+        with_pooled_column,
+    )
+
+    return with_pooled_column(
+        doc_token_embeddings(
+            corpus, max_tokens=meta["max_tokens"], dim=meta["dim"]
+        )
+    )
+
+
+def _maxsim():
+    from photo_vector_search_spark.operators.late_interaction import (
+        build_maxsim_store,
+        load_maxsim_store,
+    )
+    from photo_vector_search_spark.operators.maxsim_maintenance import (
+        compact_maxsim_store,
+        delete_from_maxsim_store,
+        load_live_maxsim,
+        upsert_maxsim_store,
+    )
+
+    def expected(spark, path, corpus):
+        _, meta = load_maxsim_store(spark, path)
+        return [_token_rows(corpus, meta)]
+
+    return dict(
+        id_col="doc_id",
+        build=lambda df, path: build_maxsim_store(df, path),
+        upsert=upsert_maxsim_store,
+        delete=delete_from_maxsim_store,
+        live=lambda spark, path: [load_live_maxsim(spark, path)[0]],
+        base=lambda spark, path: [load_maxsim_store(spark, path)[0]],
+        expected=expected,
+        compact=compact_maxsim_store,
+        sides=(".delta", ".tombstones"),
+    )
+
+
+def _colbertv2():
+    from photo_vector_search_spark.operators.cv2_maintenance import (
+        compact_colbertv2_store,
+        delete_from_colbertv2_store,
+        load_live_colbertv2,
+        upsert_colbertv2_store,
+    )
+    from photo_vector_search_spark.operators.token_compression import (
+        build_colbertv2_store,
+        encode_token_matrices,
+        load_colbertv2_store,
+    )
+
+    def expected(spark, path, corpus):
+        _, quant, meta = load_colbertv2_store(spark, path)
+        return [encode_token_matrices(_token_rows(corpus, meta), quant)]
+
+    return dict(
+        id_col="doc_id",
+        build=lambda df, path: build_colbertv2_store(df, path, n_centroids=8),
+        upsert=upsert_colbertv2_store,
+        delete=delete_from_colbertv2_store,
+        live=lambda spark, path: [load_live_colbertv2(spark, path)[0]],
+        base=lambda spark, path: [load_colbertv2_store(spark, path)[0]],
+        expected=expected,
+        compact=compact_colbertv2_store,
+        sides=(".delta", ".tombstones"),
+    )
+
+
+def _bm25():
+    from photo_vector_search_spark.operators.bm25_store import (
+        _postings_of,
+        _tokenized,
+        build_bm25_store,
+        compact_bm25_store,
+        delete_from_bm25_store,
+        load_bm25_store,
+        load_live_bm25,
+        upsert_bm25_store,
+    )
+
+    def expected(spark, path, corpus):
+        toks = _tokenized(corpus, "doc_id", "text")
+        return [
+            _postings_of(toks, "doc_id", 8),
+            toks.select("doc_id", F.size("_toks").alias("dl")),
+        ]
+
+    return dict(
+        id_col="doc_id",
+        build=lambda df, path: build_bm25_store(df, path, n_buckets=8),
+        upsert=upsert_bm25_store,
+        delete=delete_from_bm25_store,
+        live=lambda spark, path: list(load_live_bm25(spark, path)[:2]),
+        base=lambda spark, path: list(load_bm25_store(spark, path)[:2]),
+        expected=expected,
+        compact=compact_bm25_store,
+        sides=(".delta", ".dldelta", ".tombstones"),
+    )
+
+
+KINDS = {
+    "ivf_sq8": _ivf_sq8,
+    "maxsim": _maxsim,
+    "colbertv2": _colbertv2,
+    "bm25": _bm25,
+}
+
+# Spark jobs per call on these tiny stores: upsert (2 new + 2 replaced ids),
+# delete (2 ids), revive (1 id), live-view load, compaction.
+JOBS = {
+    "bm25": dict(upsert=11, delete=20, revive=19, live=11, compact=19),
+    "colbertv2": dict(upsert=10, delete=16, revive=16, live=7, compact=14),
+    "ivf_sq8": dict(upsert=8, delete=15, revive=14, live=6, compact=12),
+    "maxsim": dict(upsert=8, delete=14, revive=14, live=5, compact=12),
+}
+
+
+def _rows(frames, like=None):
+    """Sorted rows of each frame, on the columns of the matching ``like``
+    frame when given."""
+    like = like or frames
+    return [
+        sorted(map(str, f.select(*w.columns).collect()))
+        for f, w in zip(frames, like)
+    ]
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_maintenance_contract(spark, tmp_path, kind):
+    k = KINDS[kind]()
+    payloads = _payloads(spark, kind)
+
+    def frame(rows):
+        return _frame(payloads, k["id_col"], rows)
+
+    corpus = {i: i for i in range(N_BASE)}
+    path = str(tmp_path / kind)
+    k["build"](frame(corpus), path)
+    jobs = {}
+
+    # upsert: replace ids 0 and 1, add 9000 and 9001
+    batch = {0: N_BASE, 1: N_BASE + 1, 9000: N_BASE + 2, 9001: N_BASE + 3}
+    n, jobs["upsert"] = _jobs(spark, k["upsert"], spark, path, frame(batch))
+    assert n == 4
+    corpus.update(batch)
+    # delete one base id and one upserted id
+    gone = spark.range(1).select(F.explode(F.array(F.lit(2), F.lit(9000))))
+    n, jobs["delete"] = _jobs(spark, k["delete"], spark, path, gone)
+    assert n == 2
+    del corpus[2], corpus[9000]
+    # revive a deleted id with new content
+    revive = {9000: N_BASE + 4}
+    n, jobs["revive"] = _jobs(spark, k["upsert"], spark, path, frame(revive))
+    assert n == 1
+    corpus.update(revive)
+    expected = k["expected"](spark, path, frame(corpus))
+    want = _rows(expected)
+    live, jobs["live"] = _jobs(spark, k["live"], spark, path)
+    assert _rows(live, expected) == want
+
+    # a side table stamped by another build is refused, not served
+    aside = str(tmp_path / "aside")
+    shutil.move(path + ".tombstones", aside)
+    os.makedirs(path + ".tombstones")
+    pq.write_table(
+        pa.table({k["id_col"]: [7], "build_id": ["feedfacefeedface"]}),
+        path + ".tombstones/part-0.parquet",
+    )
+    with pytest.raises(ValueError, match="different centroids"):
+        k["live"](spark, path)
+    shutil.rmtree(path + ".tombstones")
+    shutil.move(aside, path + ".tombstones")
+
+    # compaction: the verified base alone is the live view; side tables gone
+    stale = str(tmp_path / "stale")
+    for side in k["sides"]:
+        if os.path.isdir(path + side):
+            shutil.copytree(path + side, stale + side)
+    n, jobs["compact"] = _jobs(spark, k["compact"], spark, path)
+    assert n == len(corpus)
+    assert not any(os.path.exists(path + side) for side in k["sides"])
+    assert _rows(k["base"](spark, path), expected) == want
+
+    # stale side tables restored after compaction (a crash before the
+    # cleanup finished) leave the same live view
+    for side in k["sides"]:
+        if os.path.isdir(stale + side):
+            shutil.copytree(stale + side, path + side)
+    assert _rows(k["live"](spark, path), expected) == want
+
+    assert jobs == JOBS[kind]
