@@ -25,6 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.operators.knn import knn_topk
+from photo_vector_search_spark.operators.store import (
+    _store_signature,
+    open_store,
+    recover_store,
+    snapshot_overwrite,
+)
 
 
 def train_centroids(
@@ -100,23 +106,19 @@ def build_ivf_store(
 ) -> np.ndarray:
     """Write-path half of IVF: train centroids, assign, and persist the store
     hive-partitioned by ``cluster_id`` (snapshot-swap like every store write).
-    A centroid sidecar table lands at ``path + '.centroids'`` so later sessions
-    can probe without retraining. Returns the centroid matrix.
+    A centroid sidecar table lands at ``path + '.centroids'`` (``write_centroids``)
+    so later sessions can probe without retraining. Returns the centroid
+    matrix.
 
     This is the layout ``ivf_topk`` assumes at scale: the probe IN-filter prunes
     whole cluster directories at file-listing time (PartitionFilters — asserted
     on runtime scan metrics in tests/test_scale_design.py).
 
-    Crash consistency: the store and the sidecar are two snapshot swaps, which
-    cannot be made atomic together with renames — so both carry a ``build_id``
-    (md5 of the centroid bytes) and ``load_ivf_store`` refuses a mismatched
-    pair. Without the check, a crash between the swaps would silently pair NEW
-    cluster assignments with OLD centroids and collapse probe recall."""
+    Written and opened by the store protocol (``operators/store.py`` module
+    docstring); ``build_id`` is the md5 of the centroid bytes. Served, a torn
+    pair would pair NEW cluster assignments with OLD centroids and collapse
+    probe recall."""
     import hashlib
-
-    from pyspark.sql import functions as F
-
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
 
     centroids = train_centroids(embeddings, n_clusters, sample, iters, seed)
     build_id = hashlib.md5(centroids.tobytes()).hexdigest()[:16]
@@ -135,126 +137,46 @@ def build_ivf_store(
     # radius UNDER-covers and would let the adaptive probe prune wrongly.
     written = spark.read.parquet(path)
     radii, built_rows = cluster_stats(written, centroids)
-    # store_sig: content marker of the just-written store (see _store_signature)
-    # — lets the radii loader detect ANY later rewrite, not just count changes.
-    # n_assign: the build's multi-probe knob, persisted so streamed increments
-    # and rebalances reproduce it instead of silently dropping to 1.
+    write_centroids(spark, path, centroids, radii, built_rows, build_id, n_assign)
+    return centroids
+
+
+def write_centroids(
+    spark, path: str, centroids, radii, built_rows: int, build_id: str, n_assign: int
+) -> None:
+    """Snapshot-swap the IVF centroid sidecar ``path + '.centroids'``, one
+    row per centroid, for the base just written at ``path``. Besides the
+    centroid and the build's ``build_id``, each row carries the
+    ``ivf_topk_adaptive`` radius bound and what ``load_cluster_radii``
+    needs to tell when that bound went stale: ``built_rows`` and
+    ``store_sig``, the base's content signature as written now (any later
+    rewrite changes it, not just count changes). ``n_assign`` is the
+    build's multi-probe knob, so streamed increments and rebalances
+    reproduce it instead of silently dropping to 1."""
     sig = _store_signature(path)
-    cent_rows = [
+    rows = [
         (i, [float(x) for x in c], float(radii[i]), built_rows, build_id, sig, n_assign)
         for i, c in enumerate(centroids)
     ]
     snapshot_overwrite(
         spark.createDataFrame(
-            cent_rows,
+            rows,
             "centroid_id int, centroid array<double>, radius double, "
             "built_rows long, build_id string, store_sig string, n_assign int",
         ),
         path + ".centroids",
     )
-    return centroids
-
-
-def _store_signature(path: str) -> str:
-    """Content marker for the store DIRECTORY: md5 over the sorted
-    (relative path, size) of every data file. Every snapshot swap writes
-    fresh uniquely-named part files, so ANY store rewrite — including
-    count-preserving pure upserts — changes the signature. This is what lets
-    ``load_cluster_radii`` detect staleness that a row-count check cannot
-    (a replaced vector can land farther from its centroid than the recorded
-    radius and silently break the adaptive probe's exactness bound).
-    Driver-side listing, O(files); same POSIX-path assumption as the
-    snapshot-swap store itself."""
-    import hashlib
-    import os
-
-    entries = []
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            if f.startswith((".", "_")):
-                continue
-            full = os.path.join(root, f)
-            entries.append(f"{os.path.relpath(full, path)}:{os.path.getsize(full)}")
-    return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
-
-
-def _file_build_ids(path: str) -> set:
-    """Every distinct ``build_id`` under ``path`` — from parquet FOOTER
-    statistics, driver-side, O(files) metadata reads, no Spark job (r13:
-    the per-row ``distinct().collect()`` this replaces was a full scan of
-    the store PER LOAD — per serving call — exactly the
-    O(rows)-work-per-query shape a persisted store exists to avoid; at
-    100 TB the torn-build check must be metadata-sized). ``build_id`` is
-    written as a constant column, so a row group's min == max == the id,
-    and the writer's footer stats are exact for a short hex string (far
-    under stat truncation). A footer without usable stats falls back to
-    reading that ONE file's build_id column (bounded, never store-sized);
-    a NULL or a missing column surfaces as ``None`` in the set, which can
-    never equal any expected id. An empty set means zero data files /
-    zero row groups — the never-built case, same verdict as the old
-    distinct over zero rows."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    builds: set = set()
-    for root, _dirs, files in os.walk(path):
-        for fname in files:
-            if fname.startswith((".", "_")) or not fname.endswith(".parquet"):
-                continue
-            full = os.path.join(root, fname)
-            md = pq.ParquetFile(full).metadata
-            try:
-                col_idx = md.schema.names.index("build_id")
-            except ValueError:
-                builds.add(None)  # schema without build_id: torn by definition
-                continue
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                if st is None or not st.has_min_max:
-                    col = pq.read_table(full, columns=["build_id"])
-                    builds.update(col.column(0).to_pylist())
-                    break
-                if st.null_count not in (0, None):
-                    builds.add(None)
-                vmin, vmax = st.min, st.max
-                if isinstance(vmin, bytes):
-                    vmin = vmin.decode("utf-8", "replace")
-                if isinstance(vmax, bytes):
-                    vmax = vmax.decode("utf-8", "replace")
-                builds.add(vmin)
-                builds.add(vmax)
-    return builds
 
 
 def load_ivf_store(spark, path: str) -> tuple[DataFrame, np.ndarray]:
-    """(store DataFrame with cluster_id partition column, centroid matrix).
-
-    Recovers either half from a crashed snapshot swap, then verifies the two
-    halves come from the SAME build (see ``build_ivf_store``)."""
-    from photo_vector_search_spark.operators.store import recover_store
-
-    recover_store(path)
-    recover_store(path + ".centroids")
-    store = spark.read.parquet(path)
-    cent = spark.read.parquet(path + ".centroids").orderBy("centroid_id").collect()
-    cent_build = {r["build_id"] for r in cent}
-    store_build = _file_build_ids(path)  # footer stats, no store scan (r13)
-    if not store_build or not cent_build:
-        # distinct from the torn-pair case below: zero rows means the store was
-        # never (successfully) built, and "crashed between swaps" would mislead
-        raise ValueError(
-            f"IVF store at {path!r} is empty "
-            f"(store rows: {'yes' if store_build else 'no'}, centroid sidecar: "
-            f"{'yes' if cent_build else 'no'}) — run build_ivf_store first"
-        )
-    if cent_build != store_build:
-        raise ValueError(
-            f"IVF store {path!r} is from build {sorted(store_build)} but its "
-            f"centroid sidecar is from build {sorted(cent_build)} — a rebuild "
-            "crashed between the two snapshot swaps; re-run build_ivf_store"
-        )
-    return store, np.vstack([np.asarray(r["centroid"], dtype=np.float64) for r in cent])
+    """(store DataFrame with cluster_id partition column, centroid matrix),
+    opened by ``store.open_store``."""
+    opened = open_store(
+        spark, path, "IVF", "build_ivf_store",
+        sidecar=".centroids", order_by=("centroid_id",),
+    )
+    cents = [np.asarray(r["centroid"], dtype=np.float64) for r in opened.rows]
+    return opened.tables[0], np.vstack(cents)
 
 
 def load_cluster_radii(
@@ -301,8 +223,6 @@ def stored_n_assign(spark, path: str) -> int:
     """The build-time multi-assign knob the centroid sidecar recorded
     (1 for sidecars predating the column). Streamed increments and default
     rebalances read it so the store's recall contract survives both."""
-    from photo_vector_search_spark.operators.store import recover_store
-
     recover_store(path + ".centroids")  # heal a half-swap before reading
     side = spark.read.parquet(path + ".centroids")
     if "n_assign" not in side.columns:

@@ -2,9 +2,9 @@
 lexical-retrieval family (`operators/bm25` computes postings on the fly
 from the corpus; this persists them once so serving never re-tokenizes).
 
-Every other serving family already has its store (IVF `ann.py:92`, SQ8
-`sq.py:213`, IVF,SQ8 `sq.py:491`, PQ `pq.py:569`, BQ `bq.py:341`, MaxSim
-`late_interaction.build_maxsim_store`); this is the same discipline for the
+Every other serving family already has its store (IVF `ann.build_ivf_store`,
+SQ8 and IVF,SQ8 `sq`, PQ `pq.build_ivfpq_store`, BQ `bq.build_bq_store`,
+MaxSim `late_interaction.build_maxsim_store`); this is the same discipline for the
 keyword half, the Lucene/Elasticsearch architecture re-expressed at rest as
 Parquet (cf. reference scope: the reference's whole value is a PERSISTENT
 index, photo_vector_search.py:16-20 — its ChromaDB store holds embeddings;
@@ -33,10 +33,10 @@ discipline; parity with the Spark column form is pinned in tests.
 ``build_id`` is a content hash (params + corpus stats + a bit_xor checksum
 over the postings rows), so torn cross-build pairs cannot collide even when
 two corpora share (N, sum_dl); postings, doclens, meta, and every
-maintenance side table carry it, and ``load_bm25_store`` refuses any
-mismatch (the `build_ivf_sq8_store` crash-consistency contract). Build
-writes postings → doclens → meta LAST; a crash anywhere leaves a store the
-loader refuses (missing meta, or store_sig mismatch), never a silently
+maintenance side table carry it. Build writes postings → doclens → meta
+LAST and ``load_bm25_store`` opens by the store protocol of
+``operators/store.py``: a crash anywhere leaves a store it refuses
+(missing meta, build mismatch, or store_sig mismatch), never a silently
 inconsistent one.
 
 Incremental maintenance (the delta/tombstone protocol of
@@ -73,6 +73,7 @@ from photo_vector_search_spark.operators.store import (
     clear_side_tables,
     delete_ids,
     live_overlay,
+    open_store,
     read_meta,
     recover_store,
     side_tables,
@@ -189,15 +190,13 @@ def build_bm25_store(
     )
     meta = {
         "build_id": build_id,
-        "store_sig": _postings_sig(path),
         "id_col": id_col,
         "text_col": text_col,
         "n_buckets": n_buckets,
         "n_docs": n_docs,
         "sum_dl": sum_dl,
     }
-    write_meta(spark, path, meta, _META_SCHEMA)
-    return meta
+    return write_meta(spark, path, meta, _META_SCHEMA)
 
 
 _META_SCHEMA = (
@@ -206,59 +205,15 @@ _META_SCHEMA = (
 )
 
 
-def _postings_sig(path: str) -> str:
-    from photo_vector_search_spark.operators.ann import _store_signature
-
-    return _store_signature(path)
-
-
-def _file_build_ids(path: str) -> set:
-    from photo_vector_search_spark.operators.ann import _file_build_ids as f
-
-    return f(path)
-
-
 def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
-    """(postings, doclens, meta) — recovers any half-finished snapshot
-    swap, then verifies all three tables share ONE build and the postings
-    directory still matches the recorded content signature before returning
-    anything a query could consume (torn builds/compactions and post-hoc
-    rewrites are refused, not served)."""
-    import os
-
-    for suffix in ("", ".doclens", ".meta"):
-        recover_store(path + suffix)
-    missing = [
-        s or "postings"
-        for s in ("", ".doclens", ".meta")
-        if not os.path.isdir(path + s)
-    ]
-    if missing:
-        raise ValueError(
-            f"no BM25 store at {path!r} (missing: {missing}) — run "
-            "build_bm25_store first"
-        )
-    meta = read_meta(spark, path, "BM25 store").asDict()
-    sig = _postings_sig(path)
-    if sig != meta["store_sig"]:
-        raise ValueError(
-            f"BM25 store at {path!r} does not match its recorded content "
-            "signature — a rebuild/compaction crashed between the postings "
-            "swap and the meta rewrite (or the store was rewritten outside "
-            "the engine); re-run build_bm25_store or compact_bm25_store"
-        )
-    postings = spark.read.parquet(path)
-    doclens = spark.read.parquet(path + ".doclens")
-    for sub, name in ((path, "postings"), (path + ".doclens", "doclens")):
-        builds = _file_build_ids(sub)
-        if builds != {meta["build_id"]}:
-            raise ValueError(
-                f"BM25 {name} at {path!r} is from build "
-                f"{sorted(builds, key=str)} but the sidecar records "
-                f"{meta['build_id']!r} — a rebuild crashed between snapshot "
-                "swaps; re-run build_bm25_store"
-            )
-    return postings, doclens, meta
+    """(postings, doclens, meta), opened by ``store.open_store``: all three
+    tables of ONE build, the postings signed by the ``.meta``."""
+    opened = open_store(
+        spark, path, "BM25", "build_bm25_store", tables=("", ".doclens"),
+        meta=True,
+    )
+    postings, doclens = opened.tables
+    return postings, doclens, opened.meta.asDict()
 
 
 def _pruned_postings(
@@ -718,8 +673,7 @@ def compact_bm25_store(spark, path: str) -> int:
     snapshot_overwrite(live_dl, path + ".doclens")
     write_meta(
         spark, path,
-        {**meta, "store_sig": _postings_sig(path), "n_docs": n_docs,
-         "sum_dl": sum_dl},
+        {**meta, "n_docs": n_docs, "sum_dl": sum_dl},
         _META_SCHEMA,
     )
     clear_side_tables(path, (TOMBSTONES, ".dldelta", ".delta"))

@@ -40,6 +40,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.operators.store import (
+    kind_vectors,
+    open_store,
+    snapshot_overwrite,
+    write_kind_vectors,
+)
+
 # byte-wise popcount lookup (numpy < 2.0 has no bitwise_count)
 _POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 
@@ -338,7 +345,7 @@ def hamming_batch_topk(
 
 
 # ---------------------------------------------------------------------------
-# persisted store (the build_sq8_store crash-consistency contract)
+# persisted store (the store protocol of operators/store.py)
 
 
 def build_bq_store(
@@ -353,11 +360,9 @@ def build_bq_store(
     bit/component at rest is the point; rerank reads the SOURCE embeddings
     via ``rerank_source``) — plus a ``.bqmeta`` sidecar carrying the
     thresholds stamped with the same content-hash ``build_id`` as every
-    row. Two snapshot swaps; ``load_bq_store`` refuses a torn pair (the
-    build_ivf_store crash-consistency contract, `operators/ann.py:110`)."""
+    row. Written and opened by the store protocol (``operators/store.py``
+    module docstring)."""
     import hashlib
-
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
 
     model = fit_bq(embeddings, vec_col=vec_col)
     build_id = hashlib.md5(model.thresholds.tobytes()).hexdigest()[:16]
@@ -366,45 +371,17 @@ def build_bq_store(
     )
     snapshot_overwrite(coded, path)
     spark = embeddings.sparkSession
-    meta = [("thresholds", [float(x) for x in model.thresholds], build_id)]
-    snapshot_overwrite(
-        spark.createDataFrame(
-            meta, "kind string, vec array<double>, build_id string"
-        ),
-        path + ".bqmeta",
+    write_kind_vectors(
+        spark, path + ".bqmeta", {"thresholds": model.thresholds}, build_id
     )
     return model
 
 
 def load_bq_store(spark, path: str) -> tuple[DataFrame, BQModel]:
-    """(codes frame, model) — recovers either half of a crashed snapshot
-    swap, then verifies store rows and sidecar share one build."""
-    from photo_vector_search_spark.operators.store import recover_store
-
-    recover_store(path)
-    recover_store(path + ".bqmeta")
-    store = spark.read.parquet(path)
-    meta = {r["kind"]: r for r in spark.read.parquet(path + ".bqmeta").collect()}
-    from photo_vector_search_spark.operators.ann import _file_build_ids
-
-    store_build = _file_build_ids(path)  # footer stats, no store scan (r13)
-    meta_build = {r["build_id"] for r in meta.values()}
-    if not store_build or not meta_build:
-        raise ValueError(
-            f"BQ store at {path!r} is empty (store rows: "
-            f"{'yes' if store_build else 'no'}, sidecar: "
-            f"{'yes' if meta_build else 'no'}) — run build_bq_store first"
-        )
-    if store_build != meta_build:
-        raise ValueError(
-            f"BQ store {path!r} is from build {sorted(store_build)} but its "
-            f"sidecar is from build {sorted(meta_build)} — a rebuild crashed "
-            "between the two snapshot swaps; re-run build_bq_store"
-        )
-    model = BQModel(
-        thresholds=np.asarray(meta["thresholds"]["vec"], dtype=np.float64)
-    )
-    return store, model
+    """(codes frame, model), opened by ``store.open_store``."""
+    opened = open_store(spark, path, "BQ", "build_bq_store", sidecar=".bqmeta")
+    vecs = kind_vectors(opened.rows, ("thresholds",))
+    return opened.tables[0], BQModel(vecs["thresholds"][0])
 
 
 def bq_store_topk(

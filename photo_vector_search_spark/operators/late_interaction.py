@@ -607,16 +607,13 @@ def build_maxsim_store(
 
     Layout: `path` holds (id, tok_embs, pooled) parquet; `path + '.meta'`
     holds one sidecar row (build_id, store_sig, id_col, max_tokens, dim,
-    n_docs, n_clusters). Two ids, the `ann.build_ivf_store` discipline:
-    ``build_id`` is a STABLE content hash of the build's parameters (+
-    centroid bytes when clustered) — it stamps side tables (delta/
-    tombstones/centroids) and survives compaction, so a geometry-
-    compatible side table is never refused; ``store_sig`` is the
-    directory CONTENT SIGNATURE of the written store
-    (`ann._store_signature`) which `load_maxsim_store` recomputes +
-    compares — any torn pair (crash between swaps, manual rewrite) is
-    refused at load, the shared crash-consistency contract. Returns the
-    stable build id.
+    n_docs, n_clusters), written LAST, as the store protocol
+    (``operators/store.py`` module docstring) has it. ``build_id`` is a
+    STABLE content hash of the build's parameters (+ centroid bytes when
+    clustered) — it stamps side tables (delta/tombstones/centroids) and
+    survives compaction, so a geometry-compatible side table is never
+    refused; ``store_sig`` is the content signature of the written store,
+    checked at every open. Returns the stable build id.
 
     ``n_clusters`` turns on the PLAID-style clustered layout: k-means
     over the POOLED vectors, store hive-partitioned by ``cluster_id``
@@ -633,7 +630,6 @@ def build_maxsim_store(
     the store scan BEFORE the prefilter — the filtered-search discipline
     (P2: filter before distance, `knn.knn_topk(label=...)`). Upserts into
     a keep_cols store must supply the same columns."""
-    from photo_vector_search_spark.operators.ann import _store_signature
     from photo_vector_search_spark.operators.store import (
         snapshot_overwrite,
         write_meta,
@@ -682,7 +678,6 @@ def build_maxsim_store(
         spark, path,
         {
             "build_id": build_id,
-            "store_sig": _store_signature(path),
             "id_col": id_col,
             "max_tokens": max_tokens,
             "dim": dim,
@@ -762,40 +757,28 @@ def with_pooled_column(doc_toks: DataFrame, id_col: str = "doc_id") -> DataFrame
 
 
 def load_maxsim_store(spark, path: str):
-    """(token frame, meta row) for a `build_maxsim_store` store. Refuses a
-    torn pair: the store directory's recomputed content signature must equal
-    the sidecar's ``build_id`` (a crash between the two snapshot swaps, or
-    any out-of-band rewrite, fails here instead of silently serving token
-    matrices that don't match the recorded build)."""
-    from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import read_meta
+    """(token frame, meta row) for a `build_maxsim_store` store, opened by
+    ``store.open_store`` (the base signed by its ``.meta``)."""
+    from photo_vector_search_spark.operators.store import open_store
 
-    meta = read_meta(spark, path, "maxsim store")
-    sig = _store_signature(path)
-    if sig != meta["store_sig"]:
-        raise ValueError(
-            f"maxsim store at {path!r} is torn: directory signature {sig} "
-            f"!= sidecar store_sig {meta['store_sig']} — the store was "
-            "rewritten without its sidecar (or vice versa); rebuild or "
-            "re-run the interrupted compaction"
-        )
-    return spark.read.parquet(path), meta
+    opened = open_store(
+        spark, path, "MaxSim", "build_maxsim_store", meta=True, footer=False
+    )
+    return opened.tables[0], opened.meta
 
 
 def _load_maxsim_centroids(spark, path: str, meta):
-    """Centroid matrix for a CLUSTERED maxsim store, build-checked: a
-    centroids sidecar from a different build (crash between swaps) is
-    refused — probing with stale centroids silently collapses recall."""
+    """Centroid matrix for a CLUSTERED maxsim store, opened by
+    ``store.open_store`` against the build of the store's ``meta`` —
+    probing with stale centroids silently collapses recall."""
     import numpy as np
 
-    rows = spark.read.parquet(path + ".centroids").collect()
-    builds = {r["build_id"] for r in rows}
-    if builds != {meta["build_id"]}:
-        raise ValueError(
-            f"maxsim store centroids at {path + '.centroids'!r} are from "
-            f"build {sorted(builds)} but the store is build "
-            f"{meta['build_id']!r} — torn pair; rebuild"
-        )
+    from photo_vector_search_spark.operators.store import open_store
+
+    rows = open_store(
+        spark, path, "MaxSim", "build_maxsim_store", tables=(),
+        sidecar=".centroids", build_id=meta["build_id"],
+    ).rows
     rows = sorted(rows, key=lambda r: r["centroid_id"])
     return np.vstack(
         [np.asarray(r["centroid"], dtype=np.float64) for r in rows]

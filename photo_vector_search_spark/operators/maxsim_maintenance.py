@@ -46,6 +46,7 @@ from photo_vector_search_spark.operators.store import (
     delete_ids,
     live_view,
     read_meta,
+    recover_store,
     snapshot_overwrite,
     upsert_ids,
     upsert_side_tables,
@@ -70,13 +71,10 @@ def _meta_keep_cols(meta) -> list[str]:
 def _restamp_meta(spark, path, meta, n_docs: int, schema: str) -> None:
     """Rewrite a token store's meta sidecar after its base was compacted:
     the new directory signature and doc count under the SAME build."""
-    from photo_vector_search_spark.operators.ann import _store_signature
-
     write_meta(
         spark, path,
         {
             **meta.asDict(),
-            "store_sig": _store_signature(path),
             "n_docs": n_docs,
             "keep_cols": ",".join(_meta_keep_cols(meta)),
         },
@@ -219,7 +217,9 @@ def compact_maxsim_store(spark, path: str) -> int:
     NOT verified — so it converges when re-run from any crash point
     (module docstring); `load_maxsim_store` refuses to SERVE any
     intermediate state. Returns the compacted base row count."""
-    meta = read_meta(spark, path, "maxsim store")
+    for suffix in ("", ".meta"):
+        recover_store(path + suffix)
+    meta = read_meta(spark, path, "MaxSim store")
     live = live_view(
         spark, path, spark.read.parquet(path), meta["build_id"], meta["id_col"]
     ).localCheckpoint(eager=True)

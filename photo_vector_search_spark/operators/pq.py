@@ -40,6 +40,12 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.operators.store import (
+    kind_vectors,
+    open_store,
+    snapshot_overwrite,
+)
+
 
 def _normalize(x: np.ndarray) -> np.ndarray:
     return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
@@ -489,16 +495,14 @@ def build_ivfpq_store(
     the operator's point: the scan path reads m bytes/row; rerank reads the
     SOURCE embeddings table by id). One ``.pqmeta`` sidecar carries both the
     coarse centroids and the sub-codebooks, stamped with the same
-    ``build_id`` as every store row — ``load_ivfpq_store`` refuses a torn
-    pair, the ``build_ivf_store`` crash-consistency contract
-    (`operators/ann.py`)."""
+    ``build_id`` as every store row — written and opened by the store
+    protocol (``operators/store.py`` module docstring)."""
     import hashlib
 
     from photo_vector_search_spark.operators.ann import (
         assign_clusters,
         train_centroids,
     )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
 
     centroids = train_centroids(embeddings, n_clusters, sample, seed=seed)
     if opq:
@@ -557,53 +561,18 @@ def build_ivfpq_store(
 def load_ivfpq_store(
     spark, path: str
 ) -> tuple[DataFrame, np.ndarray, np.ndarray, np.ndarray | None]:
-    """(codes store, centroids, codebooks, rotation-or-None) — recovers
-    either half of a crashed snapshot swap, then verifies both halves share
-    one build. ``rotation`` is None for stores built without ``opq=True``;
-    pass it straight to ``ivf_pq_topk(rotation=...)``."""
-    from photo_vector_search_spark.operators.store import recover_store
-
-    recover_store(path)
-    recover_store(path + ".pqmeta")
-    store = spark.read.parquet(path)
-    meta = spark.read.parquet(path + ".pqmeta").orderBy("kind", "i", "j").collect()
-    meta_build = {r["build_id"] for r in meta}
-    from photo_vector_search_spark.operators.ann import _file_build_ids
-
-    store_build = _file_build_ids(path)  # footer stats, no store scan (r13)
-    if not store_build or not meta_build:
-        raise ValueError(
-            f"IVF-PQ store at {path!r} is empty "
-            f"(store rows: {'yes' if store_build else 'no'}, sidecar: "
-            f"{'yes' if meta_build else 'no'}) — run build_ivfpq_store first"
-        )
-    if meta_build != store_build:
-        raise ValueError(
-            f"IVF-PQ store {path!r} is from build {sorted(store_build)} but "
-            f"its sidecar is from build {sorted(meta_build)} — a rebuild "
-            "crashed between the two snapshot swaps; re-run build_ivfpq_store"
-        )
-    cents = np.vstack(
-        [
-            np.asarray(r["vec"], dtype=np.float64)
-            for r in meta
-            if r["kind"] == "cent"
-        ]
+    """(codes store, centroids, codebooks, rotation-or-None), opened by
+    ``store.open_store``. ``rotation`` is None for stores built without
+    ``opq=True``; pass it straight to ``ivf_pq_topk(rotation=...)``."""
+    opened = open_store(
+        spark, path, "IVF-PQ", "build_ivfpq_store",
+        sidecar=".pqmeta", order_by=("kind", "i", "j"),
     )
-    code_rows = [r for r in meta if r["kind"] == "code"]
-    m = max(r["i"] for r in code_rows) + 1
-    k_eff = max(r["j"] for r in code_rows) + 1
-    sub = len(code_rows[0]["vec"])
-    books = np.empty((m, k_eff, sub), dtype=np.float64)
-    for r in code_rows:
-        books[r["i"], r["j"]] = np.asarray(r["vec"], dtype=np.float64)
-    rot_rows = [r for r in meta if r["kind"] == "rot"]
-    rot = (
-        np.vstack([np.asarray(r["vec"], dtype=np.float64) for r in rot_rows])
-        if rot_rows
-        else None
-    )
-    return store, cents, books, rot
+    vecs = kind_vectors(opened.rows, ("cent", "code"))
+    # code rows arrive in (subspace i, codeword j) order
+    m = 1 + max(r["i"] for r in opened.rows if r["kind"] == "code")
+    books = vecs["code"].reshape(m, -1, vecs["code"].shape[1])
+    return opened.tables[0], vecs["cent"], books, vecs.get("rot")
 
 
 def ivf_pq_topk(

@@ -222,13 +222,11 @@ def prune_ivf_store(
 
     Returns (vec_id, cluster_id, difficulty, rank) for the SURVIVORS,
     where cluster_id is the primary prototype."""
-    import hashlib as _hashlib  # noqa: F401  (parity with ann's imports)
-
     from photo_vector_search_spark.operators.ann import (
-        _store_signature,
         cluster_stats,
         load_ivf_store,
         stored_n_assign,
+        write_centroids,
     )
     from photo_vector_search_spark.operators.store import snapshot_overwrite
 
@@ -292,26 +290,5 @@ def prune_ivf_store(
     # the swap itself is safe: snapshot_overwrite writes a tmp dir (reads
     # still serve the old snapshot) and renames at the end
     snapshot_overwrite(pruned, path, partition_by=["cluster_id"])
-    sig = _store_signature(path)
-    cent_rows = [
-        (
-            i,
-            [float(x) for x in c],
-            float(radii[i]),
-            built_rows,
-            build_id,
-            sig,
-            n_assign,
-        )
-        for i, c in enumerate(centroids)
-    ]
-    snapshot_overwrite(
-        spark.createDataFrame(
-            cent_rows,
-            "centroid_id int, centroid array<double>, radius double, "
-            "built_rows long, build_id string, store_sig string, "
-            "n_assign int",
-        ),
-        path + ".centroids",
-    )
+    write_centroids(spark, path, centroids, radii, built_rows, build_id, n_assign)
     return survivors

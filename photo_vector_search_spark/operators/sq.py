@@ -35,6 +35,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.operators.store import (
+    kind_vectors,
+    open_store,
+    snapshot_overwrite,
+    write_kind_vectors,
+)
+
 
 class SQ8Model(NamedTuple):
     vmin: np.ndarray  # per-component minima, float64 (d,)
@@ -222,12 +229,9 @@ def build_sq8_store(
     store (codes at rest are the point: 1 byte/component; rerank reads the
     SOURCE embeddings by id via ``rerank_source``) — plus a ``.sqmeta``
     sidecar carrying (vmin, vmax) stamped with the same content-hash
-    ``build_id`` as every row. Two snapshot swaps; ``load_sq8_store``
-    refuses a torn pair (the build_ivf_store crash-consistency contract,
-    `operators/ann.py:110`)."""
+    ``build_id`` as every row. Written and opened by the store protocol
+    (``operators/store.py`` module docstring)."""
     import hashlib
-
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
 
     model = fit_sq8(embeddings, vec_col=vec_col)
     build_id = hashlib.md5(
@@ -238,49 +242,18 @@ def build_sq8_store(
     )
     snapshot_overwrite(coded, path)
     spark = embeddings.sparkSession
-    meta = [
-        ("vmin", [float(x) for x in model.vmin], build_id),
-        ("vmax", [float(x) for x in model.vmax], build_id),
-    ]
-    snapshot_overwrite(
-        spark.createDataFrame(meta, "kind string, vec array<double>, build_id string"),
-        path + ".sqmeta",
+    write_kind_vectors(
+        spark, path + ".sqmeta", {"vmin": model.vmin, "vmax": model.vmax},
+        build_id,
     )
     return model
 
 
 def load_sq8_store(spark, path: str) -> tuple[DataFrame, SQ8Model]:
-    """(codes frame, model) — recovers either half of a crashed snapshot
-    swap, then verifies store rows and sidecar share one build."""
-    import numpy as _np
-
-    from photo_vector_search_spark.operators.store import recover_store
-
-    recover_store(path)
-    recover_store(path + ".sqmeta")
-    store = spark.read.parquet(path)
-    meta = {r["kind"]: r for r in spark.read.parquet(path + ".sqmeta").collect()}
-    from photo_vector_search_spark.operators.ann import _file_build_ids
-
-    store_build = _file_build_ids(path)  # footer stats, no store scan (r13)
-    meta_build = {r["build_id"] for r in meta.values()}
-    if not store_build or not meta_build:
-        raise ValueError(
-            f"SQ8 store at {path!r} is empty (store rows: "
-            f"{'yes' if store_build else 'no'}, sidecar: "
-            f"{'yes' if meta_build else 'no'}) — run build_sq8_store first"
-        )
-    if store_build != meta_build:
-        raise ValueError(
-            f"SQ8 store {path!r} is from build {sorted(store_build)} but its "
-            f"sidecar is from build {sorted(meta_build)} — a rebuild crashed "
-            "between the two snapshot swaps; re-run build_sq8_store"
-        )
-    model = SQ8Model(
-        vmin=_np.asarray(meta["vmin"]["vec"], dtype=_np.float64),
-        vmax=_np.asarray(meta["vmax"]["vec"], dtype=_np.float64),
-    )
-    return store, model
+    """(codes frame, model), opened by ``store.open_store``."""
+    opened = open_store(spark, path, "SQ8", "build_sq8_store", sidecar=".sqmeta")
+    vecs = kind_vectors(opened.rows, ("vmin", "vmax"))
+    return opened.tables[0], SQ8Model(vecs["vmin"][0], vecs["vmax"][0])
 
 
 def sq8_store_topk(
@@ -510,12 +483,10 @@ def build_ivf_sq8_store(
     One sidecar table at ``path + '.ivfsqmeta'`` carries the centroid
     matrix AND the (vmin, vmax) quantization range, all stamped with one
     content-hash ``build_id`` (md5 over centroid+range bytes) that every
-    store row also carries. Store and sidecar are two snapshot swaps that
-    cannot be made atomic together, so ``load_ivf_sq8_store`` refuses a
-    torn pair — the `build_ivf_store` crash-consistency contract
-    (`operators/ann.py:92`); without it a crash between the swaps would
-    silently pair NEW cluster assignments with OLD centroids/ranges and
-    collapse probe recall (or decode garbage).
+    store row also carries. Written and opened by the store protocol
+    (``operators/store.py`` module docstring): served, a torn pair would
+    pair NEW cluster assignments with OLD centroids/ranges and collapse
+    probe recall (or decode garbage).
 
     Cf. reference scope: the reference's whole value is a PERSISTENT index
     (photo_vector_search.py:16-20, ChromaDB's on-disk store); this is that
@@ -527,7 +498,6 @@ def build_ivf_sq8_store(
         assign_clusters,
         train_centroids,
     )
-    from photo_vector_search_spark.operators.store import snapshot_overwrite
 
     emb = embeddings
     if vec_col != "embedding":  # assign_clusters reads the canonical name
@@ -546,77 +516,25 @@ def build_ivf_sq8_store(
     )
     snapshot_overwrite(coded, path, partition_by=["cluster_id"])
     spark = embeddings.sparkSession
-    meta = [
-        ("centroid", i, [float(x) for x in c], build_id)
-        for i, c in enumerate(centroids)
-    ] + [
-        ("vmin", None, [float(x) for x in model.vmin], build_id),
-        ("vmax", None, [float(x) for x in model.vmax], build_id),
-    ]
-    snapshot_overwrite(
-        spark.createDataFrame(
-            meta,
-            "kind string, centroid_id int, vec array<double>, build_id string",
-        ),
-        path + ".ivfsqmeta",
+    write_kind_vectors(
+        spark, path + ".ivfsqmeta",
+        {"centroid": centroids, "vmin": model.vmin, "vmax": model.vmax},
+        build_id, order="centroid_id",
     )
     return centroids, model
 
 
 def load_ivf_sq8_store(spark, path: str) -> tuple[DataFrame, np.ndarray, SQ8Model]:
-    """(codes frame partitioned by cluster_id, centroid matrix, SQ8Model) —
-    recovers either half of a crashed snapshot swap, then verifies store
-    rows and sidecar share ONE build before returning anything a query
-    could consume."""
-    import os
-
-    from photo_vector_search_spark.operators.store import recover_store
-
-    recover_store(path)
-    recover_store(path + ".ivfsqmeta")
-    if not os.path.isdir(path) or not os.path.isdir(path + ".ivfsqmeta"):
-        raise ValueError(
-            f"no IVF,SQ8 store at {path!r} (store dir: "
-            f"{'yes' if os.path.isdir(path) else 'no'}, sidecar: "
-            f"{'yes' if os.path.isdir(path + '.ivfsqmeta') else 'no'}) — "
-            "run build_ivf_sq8_store first"
-        )
-    store = spark.read.parquet(path)
-    side = spark.read.parquet(path + ".ivfsqmeta").collect()
-    from photo_vector_search_spark.operators.ann import _file_build_ids
-
-    store_build = _file_build_ids(path)  # footer stats, no store scan (r13)
-    meta_build = {r["build_id"] for r in side}
-    if not store_build or not meta_build:
-        raise ValueError(
-            f"IVF,SQ8 store at {path!r} is empty (store rows: "
-            f"{'yes' if store_build else 'no'}, sidecar: "
-            f"{'yes' if meta_build else 'no'}) — run build_ivf_sq8_store first"
-        )
-    if store_build != meta_build:
-        raise ValueError(
-            f"IVF,SQ8 store {path!r} is from build {sorted(store_build)} but "
-            f"its sidecar is from build {sorted(meta_build)} — a rebuild "
-            "crashed between the two snapshot swaps; re-run build_ivf_sq8_store"
-        )
-    by_kind: dict[str, list] = {}
-    for r in side:
-        by_kind.setdefault(r["kind"], []).append(r)
-    cents = sorted(by_kind.get("centroid", []), key=lambda r: r["centroid_id"])
-    if not cents or "vmin" not in by_kind or "vmax" not in by_kind:
-        raise ValueError(
-            f"IVF,SQ8 sidecar at {path!r}.ivfsqmeta is missing "
-            f"{'centroids' if not cents else 'the quantization range'} — "
-            "not a build_ivf_sq8_store sidecar"
-        )
-    centroids = np.vstack(
-        [np.asarray(r["vec"], dtype=np.float64) for r in cents]
+    """(codes frame partitioned by cluster_id, centroid matrix, SQ8Model),
+    opened by ``store.open_store``."""
+    opened = open_store(
+        spark, path, "IVF,SQ8", "build_ivf_sq8_store", sidecar=".ivfsqmeta"
     )
-    model = SQ8Model(
-        vmin=np.asarray(by_kind["vmin"][0]["vec"], dtype=np.float64),
-        vmax=np.asarray(by_kind["vmax"][0]["vec"], dtype=np.float64),
+    vecs = kind_vectors(opened.rows, ("centroid", "vmin", "vmax"), "centroid_id")
+    return (
+        opened.tables[0], vecs["centroid"],
+        SQ8Model(vecs["vmin"][0], vecs["vmax"][0]),
     )
-    return store, centroids, model
 
 
 def ivf_sq8_store_topk(

@@ -15,6 +15,29 @@ Scale notes:
 - ``group_photos`` (A3) is the only shuffling op here (groupBy photo_path); partial
   aggregation applies since collect_list is map-side combinable per group.
 
+Persisted stores — IVF (``ann``), SQ8 and IVF,SQ8 (``sq``), IVF-PQ (``pq``),
+BQ (``bq``), MaxSim (``late_interaction``), ColBERTv2 (``token_compression``)
+and BM25 (``bm25_store``) — share one build and open protocol (the reference
+reopens its one persistent index per call, photo_vector_search.py:16-20):
+
+- Build writes each part with its own ``snapshot_overwrite``: the base at
+  ``path`` first, then its sidecars (``path + '.centroids'``, ``'.sqmeta'``,
+  ...), and the one-row ``path + '.meta'`` LAST where the store keeps one.
+  Separate swaps cannot commit together, so the parts are tied by a
+  ``build_id`` (a content hash of the trained model or the build's
+  parameters) stamped on every sidecar row — and on every base row where
+  the store checks base footers — and a ``.meta`` also records
+  ``store_sig``, the content signature of the base as written
+  (``_store_signature``).
+- ``open_store`` opens every store in one order: recover each part from a
+  crash between the two renames of its swap (``recover_store``); refuse
+  missing parts; read the sidecar rows once; refuse an empty store; refuse
+  a torn one — parts whose ``build_id``s differ (``_file_build_ids`` reads
+  base footers, never rows) or a base whose signature is not the
+  ``.meta``'s. Every refusal names the builder to re-run, so a crash
+  anywhere in a build leaves a store that is either served whole or
+  refused, never served torn.
+
 Incremental maintenance (the delta-segment + tombstone pattern of LSM-backed
 indexes; cf. the reference upserting its index one directory at a time,
 photo_vector_search.py:84-117, and deleting by key, :195-215). The four
@@ -55,10 +78,13 @@ share one protocol, implemented once below:
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 import tempfile
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
@@ -145,6 +171,73 @@ def drop_store(path: str) -> None:
     shutil.rmtree(path, ignore_errors=True)
 
 
+def _data_files(path: str) -> list[str]:
+    """Every data file under ``path`` (hidden and ``_``-prefixed files such
+    as ``_SUCCESS`` and ``.crc`` skipped) — one directory walk."""
+    return [
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(path)
+        for f in files
+        if not f.startswith((".", "_"))
+    ]
+
+
+def _store_signature(path: str, files: list[str] | None = None) -> str:
+    """Content marker for the store DIRECTORY: md5 over the sorted
+    (relative path, size) of every data file. Every snapshot swap writes
+    fresh uniquely-named part files, so ANY store rewrite — including
+    count-preserving pure upserts — changes the signature. This is what lets
+    ``ann.load_cluster_radii`` detect staleness that a row-count check cannot
+    (a replaced vector can land farther from its centroid than the recorded
+    radius and silently break the adaptive probe's exactness bound).
+    Driver-side listing, O(files); same POSIX-path assumption as the
+    snapshot-swap store itself. ``files``: ``_data_files(path)`` when the
+    caller already walked the directory."""
+    entries = [
+        f"{os.path.relpath(full, path)}:{os.path.getsize(full)}"
+        for full in (_data_files(path) if files is None else files)
+    ]
+    return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
+
+
+def _file_build_ids(path: str, files: list[str] | None = None) -> set:
+    """Every distinct ``build_id`` under ``path`` — from parquet FOOTER
+    statistics, driver-side, O(files) metadata reads, no Spark job (a
+    per-row ``distinct().collect()`` would scan the whole store per load —
+    per serving call; at 100 TB the torn-build check must be
+    metadata-sized). ``build_id`` is written as a constant column, so a row
+    group's min == max == the id, and the writer's footer stats are exact
+    for a short hex string (far under stat truncation). A footer without
+    usable stats falls back to reading that ONE file's build_id column
+    (bounded, never store-sized); a NULL or a missing column surfaces as
+    ``None`` in the set, which can never equal any expected id. An empty set
+    means zero data files / zero row groups — the never-built case.
+    ``files``: as in ``_store_signature``."""
+    import pyarrow.parquet as pq
+
+    builds: set = set()
+    for full in _data_files(path) if files is None else files:
+        if not full.endswith(".parquet"):
+            continue
+        md = pq.ParquetFile(full).metadata
+        try:
+            col_idx = md.schema.names.index("build_id")
+        except ValueError:
+            builds.add(None)  # schema without build_id: torn by definition
+            continue
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(col_idx).statistics
+            if st is None or not st.has_min_max:
+                col = pq.read_table(full, columns=["build_id"])
+                builds.update(col.column(0).to_pylist())
+                break
+            if st.null_count not in (0, None):
+                builds.add(None)
+            for v in (st.min, st.max):
+                builds.add(v.decode("utf-8", "replace") if isinstance(v, bytes) else v)
+    return builds
+
+
 def recover_store(path: str) -> None:
     """Crash recovery for the snapshot swap: if a previous run died between the
     two renames, `path` is absent but `path + '.old'` holds the last complete
@@ -191,6 +284,124 @@ def snapshot_overwrite(df: DataFrame, path: str, partition_by: list[str] | None 
         raise
 
 
+class OpenStore(NamedTuple):
+    """``open_store``'s result: ``tables`` as lazy frames, in the order
+    asked, the collected ``sidecar`` rows and the ``.meta`` row."""
+
+    tables: list
+    rows: list
+    meta: Row | None
+
+
+def open_store(
+    spark,
+    path: str,
+    kind: str,
+    builder: str,
+    tables=("",),
+    sidecar: str | None = None,
+    order_by=(),
+    meta: bool = False,
+    footer: bool = True,
+    build_id: str | None = None,
+) -> OpenStore:
+    """Open a persisted store by the open protocol (module docstring).
+
+    ``tables``: suffixes of the parquet tables returned as lazy frames
+    (``""`` is the base). ``sidecar``: suffix of the table whose rows are
+    collected, sorted by ``order_by``. ``meta``: the store keeps a one-row
+    ``.meta`` whose ``build_id`` is the store's build and whose
+    ``store_sig`` signs the base. Without it the build is ``build_id`` (a
+    part opened after its store's meta), else the sidecar rows' own.
+    ``footer``: the tables' parquet footers carry that build too. ``kind``
+    and ``builder`` name the store in refusals."""
+    parts = [*tables, *[p for p in (sidecar, meta and ".meta") if p]]
+    for part in parts:
+        recover_store(path + part)
+    missing = [p or "base" for p in parts if not os.path.isdir(path + p)]
+    if missing:
+        raise ValueError(
+            f"no {kind} store at {path!r} (missing: {missing}) — run "
+            f"{builder} first"
+        )
+    meta_row = read_meta(spark, path, f"{kind} store") if meta else None
+    rows = []
+    if sidecar:
+        side = spark.read.parquet(path + sidecar)
+        rows = (side.orderBy(*order_by) if order_by else side).collect()
+    files = {t: _data_files(path + t) for t in tables}  # one walk per table
+    builds = {
+        t or "base": _file_build_ids(path + t, files[t]) for t in tables if footer
+    }
+    if sidecar:
+        builds[sidecar] = {r["build_id"] for r in rows}
+    empty = [p for p, b in builds.items() if not b]
+    if empty:
+        raise ValueError(
+            f"{kind} store at {path!r} is empty (no rows in: {empty}) — run "
+            f"{builder} first"
+        )
+    if meta_row is not None:
+        build_id = meta_row["build_id"]
+    want = builds[sidecar] if build_id is None else {build_id}
+    torn = [
+        f"{p} is from build {sorted(b, key=str)}"
+        for p, b in builds.items()
+        if b != want
+    ]
+    if meta and _store_signature(path, files[""]) != meta_row["store_sig"]:
+        torn.append("the base does not match the .meta content signature")
+    if torn:
+        raise ValueError(
+            f"{kind} store at {path!r} is a torn pair ({'; '.join(torn)}; the "
+            f"build on record is {sorted(want, key=str)}) — a write crashed "
+            "between snapshot swaps or a part was rewritten outside the "
+            f"engine; re-run {builder}"
+        )
+    return OpenStore([spark.read.parquet(path + t) for t in tables], rows, meta_row)
+
+
+def write_kind_vectors(
+    spark, path: str, vectors: dict, build_id: str, order: str | None = None
+) -> None:
+    """Snapshot-swap the kind-tagged sidecar ``kind_vectors`` decodes: for
+    each ``kind`` in ``vectors``, a row per row of a 2-D matrix (at its
+    position in column ``order``, when given) or one row for a 1-D vector
+    (NULL position), every row stamped with ``build_id``."""
+    rows = []
+    for kind, v in vectors.items():
+        v = np.asarray(v)
+        for i, vec in enumerate(v if v.ndim == 2 else [v]):
+            pos = (i if v.ndim == 2 else None,) if order else ()
+            rows.append((kind, *pos, [float(x) for x in vec], build_id))
+    schema = "kind string, vec array<double>, build_id string"
+    if order:
+        schema = f"kind string, {order} int, vec array<double>, build_id string"
+    snapshot_overwrite(spark.createDataFrame(rows, schema), path)
+
+
+def kind_vectors(rows, kinds, order: str | None = None) -> dict:
+    """Decode the rows of a kind-tagged sidecar (``write_kind_vectors``):
+    one float64 matrix per kind, its rows in ``order`` when given. Refuses
+    a sidecar without rows of each of ``kinds``."""
+    by_kind: dict[str, list] = {}
+    for r in rows:
+        by_kind.setdefault(r["kind"], []).append(r)
+    lacking = [k for k in kinds if k not in by_kind]
+    if lacking:
+        raise ValueError(
+            f"store sidecar has no {lacking} rows — not written by the "
+            "store's builder; rebuild the store"
+        )
+    return {
+        kind: np.vstack([
+            np.asarray(r["vec"], dtype=np.float64)
+            for r in (sorted(rs, key=lambda r: r[order]) if order else rs)
+        ])
+        for kind, rs in by_kind.items()
+    }
+
+
 # ---------------------------------------------------------------------------
 # incremental maintenance — the delta/tombstone protocol (module docstring)
 # ---------------------------------------------------------------------------
@@ -207,8 +418,6 @@ def side_table(spark, path: str, suffix: str, build_id: str) -> DataFrame | None
     """Read side table ``path + suffix``, refusing one from another build.
     A missing or file-less dir is an empty table (a crashed cleanup may
     leave either — both are valid empty states)."""
-    from photo_vector_search_spark.operators.ann import _file_build_ids
-
     side = path + suffix
     recover_store(side)
     if not glob.glob(os.path.join(side, "**", "*.parquet"), recursive=True):
@@ -343,7 +552,11 @@ def read_meta(spark, path: str, what: str) -> Row:
     return rows[0]
 
 
-def write_meta(spark, path: str, values: dict, schema: str) -> None:
-    """Snapshot-swap the single-row ``.meta`` sidecar; ``values`` maps the
-    ``schema`` field names (extra keys are ignored)."""
+def write_meta(spark, path: str, values: dict, schema: str) -> dict:
+    """Snapshot-swap the single-row ``.meta`` sidecar — the last write of a
+    build or compaction — with ``store_sig`` the content signature of the
+    base as it stands now; ``values`` maps the other ``schema`` field names
+    (extra keys are ignored). Returns the values written."""
+    values = {**values, "store_sig": _store_signature(path)}
     snapshot_overwrite(spark.createDataFrame([values], schema), path + ".meta")
+    return values

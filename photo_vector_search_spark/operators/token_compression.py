@@ -27,11 +27,11 @@ The pieces are the engine's own conventions composed:
 
 Persisted form (`build_colbertv2_store`): codes-only rows
 (id, tok_cids, tok_codes, pooled) — `pooled` stays the EXACT float mean
-(64 doubles/doc, the prefilter's whole read) — under the shared
-crash-consistency contract: content-hash ``build_id`` stamped on store +
-both sidecars (`.meta` single row with the directory ``store_sig``,
+(64 doubles/doc, the prefilter's whole read) — under the store
+protocol of ``operators/store.py``: content-hash ``build_id`` stamped on
+store + both sidecars (`.meta` single row with the directory ``store_sig``,
 `.quant` kind-rows holding centroids/vmin/vmax), torn pairs refused at
-load (`sq.build_ivf_sq8_store` discipline).
+open.
 
 Scale shape (100 TB): fit is one sample + one map-side minmax pass; encode
 is map-only; serving reads ~1/7.5 of the raw-store bytes with the same
@@ -526,21 +526,21 @@ def build_colbertv2_store(
     IN-filter, the `build_maxsim_store` layout). Sidecars: ``.meta`` one
     row (build_id, store_sig, id_col, max_tokens, dim, n_docs,
     n_centroids), ``.quant`` kind-rows (centroid i / vmin / vmax), all
-    stamped with the content-hash build id; meta written LAST so a crash
-    anywhere leaves a store `load_colbertv2_store` refuses. Returns the
-    build id.
+    stamped with the content-hash build id; meta written LAST (the store
+    protocol, ``operators/store.py`` module docstring). Returns the build
+    id.
 
     ``keep_cols``: metadata columns from ``docs`` carried onto the code
     rows (recorded in meta) so `colbertv2_store_search(filter=...)` can
     push an equality predicate into the scan BEFORE the prefilter — the
     filtered-search discipline."""
-    from photo_vector_search_spark.operators.ann import _store_signature
     from photo_vector_search_spark.operators.late_interaction import (
         doc_token_embeddings,
         with_pooled_column,
     )
     from photo_vector_search_spark.operators.store import (
         snapshot_overwrite,
+        write_kind_vectors,
         write_meta,
     )
 
@@ -564,24 +564,15 @@ def build_colbertv2_store(
     )
     snapshot_overwrite(coded, path)
     n_docs = spark.read.parquet(path).count()
-    side = [
-        ("centroid", i, [float(x) for x in c], build_id)
-        for i, c in enumerate(quant.centroids)
-    ] + [
-        ("vmin", None, [float(x) for x in quant.vmin], build_id),
-        ("vmax", None, [float(x) for x in quant.vmax], build_id),
-    ]
-    snapshot_overwrite(
-        spark.createDataFrame(
-            side, "kind string, idx int, vec array<double>, build_id string"
-        ),
-        path + ".quant",
+    write_kind_vectors(
+        spark, path + ".quant",
+        {"centroid": quant.centroids, "vmin": quant.vmin, "vmax": quant.vmax},
+        build_id, order="idx",
     )
     write_meta(
         spark, path,
         {
             "build_id": build_id,
-            "store_sig": _store_signature(path),
             "id_col": id_col,
             "max_tokens": max_tokens,
             "dim": dim,
@@ -595,61 +586,18 @@ def build_colbertv2_store(
 
 
 def load_colbertv2_store(spark, path: str):
-    """(coded frame, TokenQuantizer, meta row) — refuses torn pairs: the
-    postings directory's recomputed content signature must equal the meta's
-    ``store_sig``, and store rows + quant sidecar must carry the meta's
-    build id (serving codes against a different build's codebook decodes
-    garbage silently — exactly what this check exists to prevent)."""
-    import os
+    """(coded frame, TokenQuantizer, meta row), opened by
+    ``store.open_store``: the base signed by its ``.meta``, the quant rows
+    of the meta's build (a different build's codebook decodes garbage)."""
+    from photo_vector_search_spark.operators.store import kind_vectors, open_store
 
-    from photo_vector_search_spark.operators.ann import _store_signature
-    from photo_vector_search_spark.operators.store import read_meta, recover_store
-
-    for suffix in ("", ".quant", ".meta"):
-        recover_store(path + suffix)
-    missing = [
-        s or "store"
-        for s in ("", ".quant", ".meta")
-        if not os.path.isdir(path + s)
-    ]
-    if missing:
-        raise ValueError(
-            f"no ColBERTv2 store at {path!r} (missing: {missing}) — run "
-            "build_colbertv2_store first"
-        )
-    meta = read_meta(spark, path, "ColBERTv2 store")
-    sig = _store_signature(path)
-    if sig != meta["store_sig"]:
-        raise ValueError(
-            f"ColBERTv2 store at {path!r} is torn: directory signature "
-            f"{sig} != sidecar store_sig {meta['store_sig']} — rebuild"
-        )
-    side = spark.read.parquet(path + ".quant").collect()
-    builds = {r["build_id"] for r in side}
-    if builds != {meta["build_id"]}:
-        raise ValueError(
-            f"ColBERTv2 quantizer sidecar at {path + '.quant'!r} is from "
-            f"build {sorted(builds)} but the store is build "
-            f"{meta['build_id']!r} — torn pair; rebuild"
-        )
-    by_kind: dict[str, list] = {}
-    for r in side:
-        by_kind.setdefault(r["kind"], []).append(r)
-    cents = sorted(by_kind.get("centroid", []), key=lambda r: r["idx"])
-    if not cents or "vmin" not in by_kind or "vmax" not in by_kind:
-        raise ValueError(
-            f"ColBERTv2 sidecar at {path + '.quant'!r} is missing "
-            f"{'centroids' if not cents else 'the residual range'} — not a "
-            "build_colbertv2_store sidecar"
-        )
-    quant = TokenQuantizer(
-        centroids=np.vstack(
-            [np.asarray(r["vec"], dtype=np.float64) for r in cents]
-        ),
-        vmin=np.asarray(by_kind["vmin"][0]["vec"], dtype=np.float64),
-        vmax=np.asarray(by_kind["vmax"][0]["vec"], dtype=np.float64),
+    opened = open_store(
+        spark, path, "ColBERTv2", "build_colbertv2_store",
+        sidecar=".quant", meta=True, footer=False,
     )
-    return spark.read.parquet(path), quant, meta
+    vecs = kind_vectors(opened.rows, ("centroid", "vmin", "vmax"), "idx")
+    quant = TokenQuantizer(vecs["centroid"], vecs["vmin"][0], vecs["vmax"][0])
+    return opened.tables[0], quant, opened.meta
 
 
 def colbertv2_store_batch_search(

@@ -145,8 +145,7 @@ def _maintain_radius_sidecar(spark, store_path, assigned: DataFrame, centroids) 
     ``ivf_topk_adaptive``'s exactness proof needs. O(batch) compute + a k-row
     sidecar rewrite; sidecars from pre-radius builds are left untouched
     (``load_cluster_radii`` recomputes for those)."""
-    from photo_vector_search_spark.operators.ann import _store_signature, cluster_radii
-    from photo_vector_search_spark.operators.store import recover_store
+    from photo_vector_search_spark.operators.ann import cluster_radii, write_centroids
 
     sidecar_path = store_path + ".centroids"
     recover_store(sidecar_path)  # heal a half-swapped sidecar before reading it
@@ -155,30 +154,15 @@ def _maintain_radius_sidecar(spark, store_path, assigned: DataFrame, centroids) 
         return
     batch_radii = cluster_radii(assigned, centroids)
     n_now = spark.read.parquet(store_path).count()
-    # signature of the store AS JUST WRITTEN: a crash between the store swap
+    rows = sidecar.orderBy("centroid_id").collect()
+    n_assign = rows[0]["n_assign"] if "n_assign" in sidecar.columns else None
+    # signed with the store AS JUST WRITTEN: a crash between the store swap
     # and this sidecar rewrite leaves a sig mismatch, so load_cluster_radii
     # recomputes instead of trusting radii that may under-cover replaced rows
-    sig = _store_signature(store_path)
-    rows = sidecar.orderBy("centroid_id").collect()
-    merged = [
-        (
-            r["centroid_id"],
-            r["centroid"],
-            float(max(r["radius"], batch_radii[r["centroid_id"]])),
-            n_now,
-            r["build_id"],
-            sig,
-            int(r["n_assign"]) if "n_assign" in sidecar.columns and r["n_assign"] is not None else 1,
-        )
-        for r in rows
-    ]
-    snapshot_overwrite(
-        spark.createDataFrame(
-            merged,
-            "centroid_id int, centroid array<double>, radius double, "
-            "built_rows long, build_id string, store_sig string, n_assign int",
-        ),
-        sidecar_path,
+    write_centroids(
+        spark, store_path, [r["centroid"] for r in rows],
+        [max(r["radius"], batch_radii[r["centroid_id"]]) for r in rows],
+        n_now, rows[0]["build_id"], 1 if n_assign is None else int(n_assign),
     )
 
 
@@ -218,13 +202,7 @@ def incremental_ivf_index(
     # stamp — passing the torn-pair check while probes are silently wrong. With
     # the frozen stamp, a rebuild mid-stream yields mixed build_ids in the store
     # and load_ivf_store fails loudly.
-    first = store0.select("build_id").first()
-    if first is None:
-        raise ValueError(
-            f"IVF store at {store_path!r} is empty — run build_ivf_store before "
-            "streaming increments into it"
-        )
-    build_id = first["build_id"]
+    build_id = store0.select("build_id").first()["build_id"]
     store_cols = store0.columns
 
     stream = spark.readStream.schema(VECTORS_SCHEMA).format("parquet").load(input_dir)

@@ -435,7 +435,7 @@ def test_file_build_ids_footer_check(spark, sf_correct, tmp_path):
     files from two builds yields both (and would be refused)."""
     import os
 
-    from photo_vector_search_spark.operators.bm25_store import _file_build_ids
+    from photo_vector_search_spark.operators.store import _file_build_ids
 
     docs = load_table(spark, sf_correct, "documents")
     path = str(tmp_path / "bm25")

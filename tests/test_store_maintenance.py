@@ -3,12 +3,16 @@ the same way on each of the four incrementally maintained stores — IVF,SQ8,
 MaxSim, ColBERTv2 and BM25 — over tiny stores: upsert of new and replaced
 ids, delete, revive, live view ≡ the composed corpus encoded under the
 frozen build, foreign-build refusal, compaction identity, stale side tables
-restored after compaction, and the Spark job count of every operation."""
+restored after compaction, and the Spark job count of every operation.
+The open contract (`store.open_store`) is checked on all eight persisted
+stores: a never-built store, a fresh load, every part recovered from a
+crashed snapshot swap, and every part from another build refused."""
 
 from __future__ import annotations
 
 import itertools
 import os
+import re
 import shutil
 
 import numpy as np
@@ -301,3 +305,146 @@ def test_maintenance_contract(spark, tmp_path, kind):
     assert _rows(k["live"](spark, path), expected) == want
 
     assert jobs == JOBS[kind]
+
+
+# ---------------------------------------------------------------------------
+# the open contract (`store.open_store`), on every persisted store
+
+
+def _open_kinds():
+    """name → (label, payload kind, id column, build, load, parts); each
+    store's builder is its loader's ``build_`` twin."""
+    from photo_vector_search_spark.operators import (
+        ann, bm25_store, bq, late_interaction, pq, sq, token_compression,
+    )
+
+    vec, text = ("ivf_sq8", "vec_id"), ("text", "doc_id")
+    return {
+        "ivf": (
+            "IVF", *vec, lambda df, p: ann.build_ivf_store(df, p, n_clusters=4),
+            ann.load_ivf_store, ("", ".centroids"),
+        ),
+        "sq8": ("SQ8", *vec, sq.build_sq8_store, sq.load_sq8_store, ("", ".sqmeta")),
+        "ivf_sq8": (
+            "IVF,SQ8", *vec,
+            lambda df, p: sq.build_ivf_sq8_store(df, p, n_clusters=4),
+            sq.load_ivf_sq8_store, ("", ".ivfsqmeta"),
+        ),
+        "ivfpq": (
+            "IVF-PQ", *vec,
+            lambda df, p: pq.build_ivfpq_store(df, p, n_clusters=4, m=4, k=8),
+            pq.load_ivfpq_store, ("", ".pqmeta"),
+        ),
+        "bq": ("BQ", *vec, bq.build_bq_store, bq.load_bq_store, ("", ".bqmeta")),
+        "maxsim": (
+            "MaxSim", *text, late_interaction.build_maxsim_store,
+            late_interaction.load_maxsim_store, ("", ".meta"),
+        ),
+        "colbertv2": (
+            "ColBERTv2", *text,
+            lambda df, p: token_compression.build_colbertv2_store(
+                df, p, n_centroids=8
+            ),
+            token_compression.load_colbertv2_store, ("", ".quant", ".meta"),
+        ),
+        "bm25": (
+            "BM25", *text,
+            lambda df, p: bm25_store.build_bm25_store(df, p, n_buckets=8),
+            bm25_store.load_bm25_store, ("", ".doclens", ".meta"),
+        ),
+    }
+
+
+# Spark jobs of one load: the first after the build, or one that first
+# recovers a part from its `.old` snapshot.
+OPEN_JOBS = {
+    "bm25": 4, "bq": 3, "colbertv2": 5, "ivf": 5, "ivf_sq8": 3, "ivfpq": 5,
+    "maxsim": 3, "sq8": 3,
+}
+
+
+def _plain(x):
+    """A loader's result as plain comparable values: frames as sorted row
+    strings, arrays as lists."""
+    from pyspark.sql import DataFrame
+
+    if isinstance(x, DataFrame):
+        return sorted(map(str, x.collect()))
+    if isinstance(x, np.ndarray):
+        return x.tolist()
+    if isinstance(x, dict):
+        return {k: _plain(v) for k, v in x.items()}
+    if isinstance(x, (tuple, list)):
+        return [_plain(v) for v in x]
+    return x
+
+
+@pytest.mark.parametrize("name", sorted(OPEN_JOBS))
+def test_open_contract(spark, tmp_path, name):
+    label, payload, id_col, build, load, parts = _open_kinds()[name]
+    builder = load.__name__.replace("load_", "build_")
+    payloads = _payloads(spark, payload)
+    path = str(tmp_path / name)
+
+    # never built: refused with the builder to run, not a Spark error
+    never = f"no {re.escape(label)} store at .* run {builder} first"
+    with pytest.raises(ValueError, match=never):
+        load(spark, path)
+
+    build(_frame(payloads, id_col, {i: i for i in range(N_BASE)}), path)
+    fresh, jobs = _jobs(spark, load, spark, path)
+    assert jobs == OPEN_JOBS[name]
+    assert fresh[0].select(id_col).distinct().count() == N_BASE
+    want = _plain(fresh)
+
+    # a crash between the two renames of a snapshot swap leaves only
+    # `.old`: every part is recovered and the store serves as before
+    for part in parts:
+        os.rename(path + part, path + part + ".old")
+        out, jobs = _jobs(spark, load, spark, path)
+        assert not os.path.exists(path + part + ".old")
+        assert _plain(out) == want, part
+        assert jobs == OPEN_JOBS[name], part
+
+    # any part taken from another build is refused as torn
+    other = str(tmp_path / "other")
+    build(_frame(payloads, id_col, {i: i + 10 for i in range(N_BASE)}), other)
+    aside = str(tmp_path / "aside")
+    for part in parts[1:]:
+        shutil.move(path + part, aside)
+        shutil.copytree(other + part, path + part)
+        with pytest.raises(ValueError, match=f"torn pair.*{builder}"):
+            load(spark, path)
+        shutil.rmtree(path + part)
+        shutil.move(aside, path + part)
+    assert _plain(load(spark, path)) == want
+
+
+def test_maxsim_heals_crashed_swaps(spark, tmp_path):
+    """A MaxSim store whose base, `.meta` or `.centroids` survives only as
+    `.old` serves the same top-k, and compaction heals it too."""
+    from photo_vector_search_spark.operators.late_interaction import (
+        build_maxsim_store,
+        maxsim_store_search,
+    )
+    from photo_vector_search_spark.operators.maxsim_maintenance import (
+        compact_maxsim_store,
+    )
+
+    docs = _frame(_payloads(spark, "text"), "doc_id", {i: i for i in range(N_BASE)})
+    path = str(tmp_path / "maxsim")
+    build_maxsim_store(docs, path, n_clusters=2)
+
+    def top():
+        return maxsim_store_search(
+            spark, path, "quick fox over the river", k=5, nprobe=1
+        ).collect()
+
+    want = top()
+    assert len(want) == 5
+    for part in ("", ".centroids"):
+        os.rename(path + part, path + part + ".old")
+    assert top() == want
+    os.rename(path + ".meta", path + ".meta.old")
+    assert compact_maxsim_store(spark, path) == N_BASE
+    assert top() == want

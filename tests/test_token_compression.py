@@ -165,34 +165,6 @@ def test_store_roundtrip_compression_and_serving(spark, sf_correct, tmp_path):
     assert [tuple(r) for r in rer] == [tuple(r) for r in exact]
 
 
-def test_torn_pair_and_missing_store_refused(spark, sf_correct, tmp_path):
-    import shutil
-
-    docs = load_table(spark, sf_correct, "documents")
-    path = str(tmp_path / "cv2")
-    with pytest.raises(ValueError, match="no ColBERTv2 store"):
-        load_colbertv2_store(spark, path)
-
-    build_colbertv2_store(docs, path, n_centroids=8)
-    other = str(tmp_path / "cv2b")
-    build_colbertv2_store(docs.limit(100), other, n_centroids=8)
-
-    # meta from ANOTHER build → content-signature refusal
-    shutil.rmtree(path + ".meta")
-    shutil.copytree(other + ".meta", path + ".meta")
-    with pytest.raises(ValueError, match="torn"):
-        load_colbertv2_store(spark, path)
-
-    # quant sidecar from another build (same store+meta) → build refusal
-    shutil.rmtree(path + ".meta")
-    shutil.copytree(other + ".quant", path + ".quant", dirs_exist_ok=True)
-    build_colbertv2_store(docs, path)  # heal, then tamper only .quant
-    shutil.rmtree(path + ".quant")
-    shutil.copytree(other + ".quant", path + ".quant")
-    with pytest.raises(ValueError, match="torn pair"):
-        load_colbertv2_store(spark, path)
-
-
 def test_parameter_validation(spark, sf_correct):
     toks = _doc_toks(spark, sf_correct, n=20)
     quant = fit_token_quantizer(toks, n_centroids=4)
