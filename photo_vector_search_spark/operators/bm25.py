@@ -23,17 +23,40 @@ Scale shape (100 TB):
 - per-term df is an agg over the tf frame (≤ q rows out), broadcast-joined
   back; the final score is one per-doc sum + a global TakeOrdered top-k.
 - NULL-text docs never match (no tokens, no rows) — the knn NULL rule.
+- batched calls read the caller's query frame once, in one bounded job
+  (`arrowkit.bounded_rows`), and the fan-out frames they build on the
+  driver are Arrow-backed local relations (`arrowkit.local_frame`): their
+  broadcasts are JVM-only jobs, never Python-worker ones.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows, local_frame
 from photo_vector_search_spark.functions.text import tokens
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+
+
+def _check_kb(k1: float, b: float) -> None:
+    if k1 < 0:
+        raise ValueError(f"k1 must be >= 0, got {k1}")
+    if not 0.0 <= b <= 1.0:
+        raise ValueError(f"b must be in [0, 1], got {b}")
+
+
+def _num_den(k1: float, b: float, avgdl: float):
+    """The tf-saturation numerator and length-normalized denominator of a
+    BM25 term score, ``_idf * num / den``."""
+    num = F.col("_tf") * F.lit(k1 + 1.0)
+    den = F.col("_tf") + F.lit(k1) * (
+        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
+    )
+    return num, den
 
 
 def _tf_and_stats(
@@ -226,10 +249,7 @@ def bm25_scores(
     postings (bounded by matching docs × query terms, never corpus-sized).
     ``stage=False`` keeps the pure plan for audits/composition.
     ``store``: preloaded postings store — see `_tf_and_stats`."""
-    if k1 < 0:
-        raise ValueError(f"k1 must be >= 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"b must be in [0, 1], got {b}")
+    _check_kb(k1, b)
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no terms after tokenization")
@@ -239,15 +259,12 @@ def bm25_scores(
     )
     if n_docs == 0 or avgdl == 0.0:
         # empty / all-empty corpus: nothing can match
-        return docs.sparkSession.createDataFrame(
-            [], f"`{id_col}` long, bm25 double, n_terms long"
+        return local_frame(
+            docs.sparkSession, [], f"`{id_col}` long, bm25 double, n_terms long"
         )
 
     scored = _scored_with_idf(tf, n_docs, fold=stage or store is not None)
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
+    num, den = _num_den(k1, b, avgdl)
     return scored.groupBy(id_col).agg(
         F.round(F.sum(F.col("_idf") * num / den), 6).alias("bm25"),
         F.count(F.lit(1)).alias("n_terms"),
@@ -279,85 +296,95 @@ def bm25_batch_topk(
     term set), tf/df aggregate ONCE over that union, and a broadcast
     (query_id, term) fan-out join assembles per-query sums — per-query work
     rides on shared postings instead of Q corpus scans. The final top-k is
-    one per-QUERY window over ≤ matched-docs rows per query."""
+    one per-QUERY window over ≤ matched-docs rows per query. The query
+    frame is read once, in one bounded job; the fan-out frame is a local
+    relation (`arrowkit.local_frame`), so no job runs a Python worker."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if k1 < 0:
-        raise ValueError(f"k1 must be >= 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"b must be in [0, 1], got {b}")
-    qrows = queries.select(query_id_col, query_col).limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"bm25_batch_topk: >{max_queries} queries — split the query set "
-            "or raise max_queries"
-        )
-    ids = [r[query_id_col] for r in qrows]
-    if len(set(ids)) != len(ids):
-        raise ValueError(
-            "duplicate query_id values in queries — each id must be unique "
-            "(a duplicate would double its term contributions and corrupt "
-            "scores)"
-        )
-    pairs = []
-    for r in qrows:
-        for t in query_terms(r[query_col] or ""):
-            pairs.append((r[query_id_col], t))
+    _check_kb(k1, b)
+    qrows = bounded_rows(
+        queries, (query_id_col, query_col), max_queries,
+        f"bm25_batch_topk: >{max_queries} queries — split the query set or "
+        "raise max_queries",
+        duplicate="duplicate query_id values in queries — each id must be "
+        "unique (a duplicate would double its term contributions and corrupt "
+        "scores)",
+    )
+    return _batch_bm25(
+        docs.sparkSession, docs, qrows, queries.schema[query_id_col].dataType,
+        k, k1, b, id_col, text_col, query_id_col, query_col, stage, store,
+    )
+
+
+def _batch_bm25(
+    spark, docs, qrows, qid_type, k, k1, b, id_col, text_col, query_id_col,
+    query_col, stage, store,
+) -> DataFrame:
+    """``bm25_batch_topk`` over already-read query rows: every query term
+    weighs 1, so the ``_fanout_topk`` score is the plain BM25 sum."""
+    pairs = [
+        (r[query_id_col], t, 1.0)
+        for r in qrows
+        for t in query_terms(r[query_col] or "")
+    ]
     if not pairs:
         raise ValueError("no query has any terms after tokenization")
-    all_terms = sorted({t for _, t in pairs})
+    return _fanout_topk(
+        spark, docs, pairs, qid_type, k, k1, b, id_col, text_col,
+        query_id_col, stage, store, "pvs_bm25_batch_tf",
+    ).select(query_id_col, id_col, F.col("score").alias("bm25"), "rank")
 
-    spark = docs.sparkSession
-    from pyspark.sql import types as T
 
-    qid_field = queries.schema[query_id_col]
-    qterms = spark.createDataFrame(
-        pairs,
-        T.StructType(
-            [
-                T.StructField(query_id_col, qid_field.dataType),
-                T.StructField("_term", T.StringType()),
-            ]
-        ),
+def _fanout_topk(
+    spark, docs, weighted, qid_type, k, k1, b, id_col, text_col,
+    query_id_col, stage, store, prefix,
+) -> DataFrame:
+    """Per-query top-k of Σ weight · bm25_term over ONE shared postings pass
+    of the union of all queries' terms — (query_id, id, score, n_terms,
+    rank). ``weighted``: (query_id, term, weight) triples, broadcast as a
+    local relation in the fan-out join."""
+    wq = local_frame(
+        spark, weighted,
+        T.StructType([
+            T.StructField(query_id_col, qid_type),
+            T.StructField("_term", T.StringType()),
+            T.StructField("_w", T.DoubleType()),
+        ]),
     )
-
     tf, n_docs, avgdl = _tf_and_stats(
-        docs, all_terms, id_col, text_col, stage, "pvs_bm25_batch_tf",
-        store=store,
+        docs, sorted({t for _, t, _ in weighted}), id_col, text_col, stage,
+        prefix, store=store,
     )
     if n_docs == 0 or avgdl == 0.0:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, qid_field.dataType),
-                    T.StructField(id_col, T.LongType()),
-                    T.StructField("bm25", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
+        return local_frame(
+            spark, [],
+            T.StructType([
+                T.StructField(query_id_col, qid_type),
+                T.StructField(id_col, T.LongType()),
+                T.StructField("score", T.DoubleType()),
+                T.StructField("n_terms", T.LongType()),
+                T.StructField("rank", T.IntegerType()),
+            ]),
         )
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
+    num, den = _num_den(k1, b, avgdl)
     postings = _scored_with_idf(
         tf, n_docs, fold=stage or store is not None
     ).select(id_col, "_term", (F.col("_idf") * num / den).alias("_s"))
     per_query = (
-        postings.join(F.broadcast(qterms), "_term")
+        postings.join(F.broadcast(wq), "_term")
         .groupBy(query_id_col, id_col)
-        .agg(F.round(F.sum("_s"), 6).alias("bm25"))
+        .agg(
+            F.round(F.sum(F.col("_w") * F.col("_s")), 6).alias("score"),
+            F.count(F.lit(1)).alias("n_terms"),
+        )
     )
     w = Window.partitionBy(query_id_col).orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
+        F.col("score").desc(), F.col(id_col).asc()
     )
     return (
         per_query.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "bm25", "rank")
+        .select(query_id_col, id_col, "score", "n_terms", "rank")
     )
 
 
@@ -378,10 +405,7 @@ def bm25_scores_weighted(
     as a codegen map literal, so the plan is the bm25_scores plan with one
     extra multiply — same one-explode/one-agg shape, nothing new shuffles.
     Non-positive weights are rejected (a zero term is a term to omit)."""
-    if k1 < 0:
-        raise ValueError(f"k1 must be >= 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"b must be in [0, 1], got {b}")
+    _check_kb(k1, b)
     if not term_weights:
         raise ValueError("term_weights is empty")
     terms = [t for t, _ in term_weights]
@@ -395,17 +419,14 @@ def bm25_scores_weighted(
         docs, terms, id_col, text_col, stage, "pvs_bm25_wtf", store=store
     )
     if n_docs == 0 or avgdl == 0.0:
-        return docs.sparkSession.createDataFrame(
-            [], f"`{id_col}` long, score double, n_terms long"
+        return local_frame(
+            docs.sparkSession, [], f"`{id_col}` long, score double, n_terms long"
         )
     wmap = F.create_map(
         *[x for t, w in term_weights for x in (F.lit(t), F.lit(float(w)))]
     )
     scored = _scored_with_idf(tf, n_docs, fold=stage or store is not None)
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
+    num, den = _num_den(k1, b, avgdl)
     return scored.groupBy(id_col).agg(
         F.round(
             F.sum(wmap[F.col("_term")] * F.col("_idf") * num / den), 6
@@ -570,14 +591,17 @@ def rm3_batch_topk(
     per query (pinned in tests; idf/avgdl/N are corpus statistics, so
     shared-pass scoring changes nothing).
 
-    Shape: stage 1 is ONE ``bm25_batch_topk`` (all queries' terms share the
-    postings pass); the relevance models come from ONE explode over the
-    UNION of all queries' feedback docs (≤ Q·fb_docs docs, broadcast id
+    Shape: the query frame is read once, in one bounded job, and stage 1
+    is ONE ``bm25_batch_topk`` scoring over those rows (all queries' terms
+    share the postings pass); the relevance models come from ONE explode
+    over the UNION of all queries' feedback docs (≤ Q·fb_docs docs, broadcast id
     filter) joined to a broadcast (query_id, doc_id, P(D)) frame and
     aggregated per (query, term) with a bounded per-query top-fb_terms
     window; stage 2 is ONE shared postings pass over the union of all
     expanded terms with a broadcast (query_id, term, weight) fan-out —
-    the ``bm25_batch_topk`` scoring shape with one extra multiply.
+    the ``bm25_batch_topk`` scoring shape. The three fan-out frames are
+    local relations (`arrowkit.local_frame`), so no job runs a Python
+    worker.
 
     With ``store`` (a preloaded postings store) both stage-1 and stage-2
     postings passes read pruned store buckets — zero corpus tokenize
@@ -591,21 +615,17 @@ def rm3_batch_topk(
         raise ValueError(f"fb_terms must be >= 0, got {fb_terms}")
     if not 0.0 <= alpha <= 1.0:
         raise ValueError(f"alpha must be in [0, 1], got {alpha}")
-    qrows = queries.select(query_id_col, query_col).limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries — split the batch or raise max_queries"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
+    _check_kb(k1, b)
+    qrows = bounded_rows(
+        queries, (query_id_col, query_col), max_queries,
+        f">{max_queries} queries — split the batch or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query feedback is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qids = [r[query_id_col] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query feedback is "
-            "ill-defined; de-duplicate the query frame first"
-        )
+    spark = docs.sparkSession
+    qid_type = queries.schema[query_id_col].dataType
     p_orig: dict = {}
     for r in qrows:
         orig = query_terms(r[query_col] or "")
@@ -616,10 +636,9 @@ def rm3_batch_topk(
         p_orig[r[query_id_col]] = {t: 1.0 / len(orig) for t in orig}
 
     # ---- stage 1: shared feedback retrieval, then P(D) ∝ bm25 per query
-    fb = bm25_batch_topk(
-        docs, queries, k=fb_docs, k1=k1, b=b, id_col=id_col,
-        text_col=text_col, query_id_col=query_id_col, query_col=query_col,
-        stage=stage, max_queries=max_queries, store=store,
+    fb = _batch_bm25(
+        spark, docs, qrows, qid_type, fb_docs, k1, b, id_col, text_col,
+        query_id_col, query_col, stage, store,
     ).select(query_id_col, id_col, "bm25").collect()
     p_doc: dict = {}
     for r in fb:
@@ -634,24 +653,18 @@ def rm3_batch_topk(
     # ---- relevance models: ONE explode over the union of feedback docs
     p_rm: dict = {qid: {} for qid in qids}
     if fb_terms > 0 and p_doc:
-        spark = docs.sparkSession
-        from pyspark.sql import types as T
-
-        qid_field = queries.schema[query_id_col]
-        pd_rows = [
-            (qid, doc, p)
-            for qid, d in sorted(p_doc.items())
-            for doc, p in sorted(d.items())
-        ]
-        pd_df = spark.createDataFrame(
-            pd_rows,
-            T.StructType(
-                [
-                    T.StructField(query_id_col, qid_field.dataType),
-                    T.StructField(id_col, T.LongType()),
-                    T.StructField("_pd", T.DoubleType()),
-                ]
-            ),
+        pd_df = local_frame(
+            spark,
+            [
+                (qid, doc, p)
+                for qid, d in sorted(p_doc.items())
+                for doc, p in sorted(d.items())
+            ],
+            T.StructType([
+                T.StructField(query_id_col, qid_type),
+                T.StructField(id_col, T.LongType()),
+                T.StructField("_pd", T.DoubleType()),
+            ]),
         )
         fb_union = sorted({doc for d in p_doc.values() for doc in d})
         rm = (
@@ -703,66 +716,11 @@ def rm3_batch_topk(
         weights[qid] = out if qid in p_doc and fb_terms > 0 else dict(po)
 
     # ---- stage 2: ONE shared postings pass over the union of all terms
-    spark = docs.sparkSession
-    from pyspark.sql import types as T
-
-    qid_field = queries.schema[query_id_col]
-    wq_rows = [
-        (qid, t, w)
-        for qid in qids
-        for t, w in sorted(weights[qid].items())
-    ]
-    wq = spark.createDataFrame(
-        wq_rows,
-        T.StructType(
-            [
-                T.StructField(query_id_col, qid_field.dataType),
-                T.StructField("_term", T.StringType()),
-                T.StructField("_w", T.DoubleType()),
-            ]
-        ),
-    )
-    all_terms = sorted({t for _, t, _ in wq_rows})
-
-    tf, n_docs, avgdl = _tf_and_stats(
-        docs, all_terms, id_col, text_col, stage, "pvs_rm3_batch_tf",
-        store=store,
-    )
-    if n_docs == 0 or avgdl == 0.0:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, qid_field.dataType),
-                    T.StructField(id_col, T.LongType()),
-                    T.StructField("score", T.DoubleType()),
-                    T.StructField("n_terms", T.LongType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
-        )
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
-    postings = _scored_with_idf(
-        tf, n_docs, fold=stage or store is not None
-    ).select(id_col, "_term", (F.col("_idf") * num / den).alias("_s"))
-    per_query = (
-        postings.join(F.broadcast(wq), "_term")
-        .groupBy(query_id_col, id_col)
-        .agg(
-            F.round(F.sum(F.col("_w") * F.col("_s")), 6).alias("score"),
-            F.count(F.lit(1)).alias("n_terms"),
-        )
-    )
-    w2 = Window.partitionBy(query_id_col).orderBy(
-        F.col("score").desc(), F.col(id_col).asc()
-    )
-    return (
-        per_query.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "score", "n_terms", "rank")
+    return _fanout_topk(
+        spark, docs,
+        [(qid, t, w) for qid in qids for t, w in sorted(weights[qid].items())],
+        qid_type, k, k1, b, id_col, text_col, query_id_col, stage, store,
+        "pvs_rm3_batch_tf",
     )
 
 

@@ -66,8 +66,17 @@ import hashlib
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows, local_frame
 from photo_vector_search_spark.functions.text import tokens
-from photo_vector_search_spark.operators.bm25 import BM25_B, BM25_K1, query_terms
+from photo_vector_search_spark.operators.bm25 import (
+    BM25_B,
+    BM25_K1,
+    _batch_bm25,
+    _check_kb,
+    _num_den,
+    _scored_with_idf,
+    query_terms,
+)
 from photo_vector_search_spark.operators.store import (
     TOMBSTONES,
     clear_side_tables,
@@ -75,6 +84,7 @@ from photo_vector_search_spark.operators.store import (
     live_overlay,
     open_store,
     read_meta,
+    read_table,
     recover_store,
     side_tables,
     snapshot_overwrite,
@@ -241,15 +251,10 @@ def _score_postings(
     and folded into constant idf literals — no df subtree, no broadcast
     join in the scoring plan (r13, the `bm25._scored_with_idf` discipline;
     values bit-identical to the join shape, pinned in tests)."""
-    from photo_vector_search_spark.operators.bm25 import _scored_with_idf
-
     scored = _scored_with_idf(
         pruned.select(id_col, "_term", "_tf", "_dl"), n_docs, fold=True
     )
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
+    num, den = _num_den(k1, b, avgdl)
     return scored.groupBy(id_col).agg(
         F.round(F.sum(F.col("_idf") * num / den), 6).alias("bm25"),
         F.count(F.lit(1)).alias("n_terms"),
@@ -277,17 +282,14 @@ def _serve_topk(
 ) -> DataFrame:
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if k1 < 0:
-        raise ValueError(f"k1 must be >= 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"b must be in [0, 1], got {b}")
+    _check_kb(k1, b)
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no terms after tokenization")
     id_col = meta["id_col"]
     if meta["sum_dl"] == 0:  # every indexed doc is empty: nothing can match
-        return spark.createDataFrame(
-            [], f"`{id_col}` long, bm25 double, n_terms long, rank int"
+        return local_frame(
+            spark, [], f"`{id_col}` long, bm25 double, n_terms long, rank int"
         )
     avgdl = meta["sum_dl"] / meta["n_docs"]
     pruned = _pruned_postings(postings, terms, meta["n_buckets"])
@@ -309,18 +311,15 @@ def bm25_store_scores(
     `bm25_scores` over the indexed corpus (and therefore its DuckDB twin)
     value-for-value, pinned in tests; one row per doc matching ≥1 query
     term, (id, bm25, n_terms)."""
-    if k1 < 0:
-        raise ValueError(f"k1 must be >= 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"b must be in [0, 1], got {b}")
+    _check_kb(k1, b)
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no terms after tokenization")
     postings, _doclens, meta = load_bm25_store(spark, path)
     id_col = meta["id_col"]
     if meta["sum_dl"] == 0:
-        return spark.createDataFrame(
-            [], f"`{id_col}` long, bm25 double, n_terms long"
+        return local_frame(
+            spark, [], f"`{id_col}` long, bm25 double, n_terms long"
         )
     pruned = _pruned_postings(postings, terms, meta["n_buckets"])
     return _score_postings(
@@ -359,87 +358,25 @@ def bm25_store_batch_topk(
     """Batched store serving: Q queries share ONE pruned postings scan over
     the union of their terms' buckets — (query_id, id, bm25, rank), ≡ a
     Python loop of `bm25_store_topk` per query (idf/N/avgdl are corpus
-    statistics, so shared scoring agrees exactly; pinned in tests). The
-    `bm25_batch_topk` shape with the corpus explode replaced by the pruned
-    store read."""
+    statistics, so shared scoring agrees exactly; pinned in tests). It is
+    `bm25_batch_topk`'s scoring with the corpus explode replaced by the
+    pruned store read: the query frame is read once, in one bounded job,
+    and the fan-out frame is a local relation."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    if k1 < 0:
-        raise ValueError(f"k1 must be >= 0, got {k1}")
-    if not 0.0 <= b <= 1.0:
-        raise ValueError(f"b must be in [0, 1], got {b}")
+    _check_kb(k1, b)
     postings, _doclens, meta = load_bm25_store(spark, path)
-    id_col = meta["id_col"]
-
-    qrows = queries.select(query_id_col, query_col).limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"bm25_store_batch_topk: >{max_queries} queries — split the "
-            "query set or raise max_queries"
-        )
-    ids = [r[query_id_col] for r in qrows]
-    if len(set(ids)) != len(ids):
-        raise ValueError(
-            "duplicate query_id values in queries — each id must be unique"
-        )
-    pairs = []
-    for r in qrows:
-        for t in query_terms(r[query_col] or ""):
-            pairs.append((r[query_id_col], t))
-    if not pairs:
-        raise ValueError("no query has any terms after tokenization")
-    all_terms = sorted({t for _, t in pairs})
-
-    from pyspark.sql import types as T
-
-    qid_field = queries.schema[query_id_col]
-    if meta["sum_dl"] == 0:
-        return spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField(query_id_col, qid_field.dataType),
-                    T.StructField(id_col, T.LongType()),
-                    T.StructField("bm25", T.DoubleType()),
-                    T.StructField("rank", T.IntegerType()),
-                ]
-            ),
-        )
-    qterms = spark.createDataFrame(
-        pairs,
-        T.StructType(
-            [
-                T.StructField(query_id_col, qid_field.dataType),
-                T.StructField("_term", T.StringType()),
-            ]
-        ),
+    qrows = bounded_rows(
+        queries, (query_id_col, query_col), max_queries,
+        f"bm25_store_batch_topk: >{max_queries} queries — split the query set "
+        "or raise max_queries",
+        duplicate="duplicate query_id values in queries — each id must be "
+        "unique",
     )
-    avgdl = meta["sum_dl"] / meta["n_docs"]
-    pruned = _pruned_postings(postings, all_terms, meta["n_buckets"])
-    from photo_vector_search_spark.operators.bm25 import _scored_with_idf
-
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
-    scored = _scored_with_idf(
-        pruned.select(id_col, "_term", "_tf", "_dl"), meta["n_docs"],
-        fold=True,
-    ).select(id_col, "_term", (F.col("_idf") * num / den).alias("_s"))
-    per_query = (
-        scored.join(F.broadcast(qterms), "_term")
-        .groupBy(query_id_col, id_col)
-        .agg(F.round(F.sum("_s"), 6).alias("bm25"))
-    )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
-    )
-    return (
-        per_query.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "bm25", "rank")
+    return _batch_bm25(
+        spark, None, qrows, queries.schema[query_id_col].dataType, k, k1, b,
+        meta["id_col"], meta["text_col"], query_id_col, query_col, True,
+        (postings, meta),
     )
 
 
@@ -622,8 +559,8 @@ def live_bm25_topk(
     live_post, _live_dl, live_meta = load_live_bm25(spark, path)
     if live_meta["n_docs"] == 0:
         id_col = live_meta["id_col"]
-        return spark.createDataFrame(
-            [], f"`{id_col}` long, bm25 double, n_terms long, rank int"
+        return local_frame(
+            spark, [], f"`{id_col}` long, bm25 double, n_terms long, rank int"
         )
     return _serve_topk(spark, live_post, live_meta, query, k=k, k1=k1, b=b)
 
@@ -646,8 +583,8 @@ def compact_bm25_store(spark, path: str) -> int:
         recover_store(path + suffix)
     meta = read_meta(spark, path, "BM25 store").asDict()
     live_post, live_dl = _live_tables(
-        spark, path, spark.read.parquet(path),
-        spark.read.parquet(path + ".doclens"), meta,
+        spark, path, read_table(spark, path),
+        read_table(spark, path + ".doclens"), meta,
     )
     live_post = live_post.localCheckpoint(eager=True)
     live_dl = live_dl.localCheckpoint(eager=True)

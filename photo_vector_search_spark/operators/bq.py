@@ -40,6 +40,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
 from photo_vector_search_spark.operators.store import (
     kind_vectors,
     open_store,
@@ -281,20 +282,15 @@ def hamming_batch_topk(
     # limit BEFORE collect (ADVICE r11): an oversized query frame must trip
     # the guard without first landing whole on the driver (the
     # cascade_batch_topk discipline)
-    qrows = queries.select("query_id", "query_vec").limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries exceed max_queries={max_queries}; "
-            "split the batch or raise the cap"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), max_queries,
+        f">{max_queries} queries exceed max_queries={max_queries}; "
+        "split the batch or raise the cap",
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qids = [r["query_id"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query top-k is "
-            "ill-defined; de-duplicate the query frame first"
-        )
     qmat = np.vstack(
         [np.asarray(r["query_vec"], dtype=np.float64) for r in qrows]
     )

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
+
 from .bq import BQModel, hamming_expr, encode_query, load_bq_store
 from .sq import SQ8Model, load_sq8_store, sq8_topk
 
@@ -147,14 +149,11 @@ def cascade_batch_topk(
         raise ValueError(f"k must be >= 1, got {k}")
     if not k <= c2 <= c1:
         raise ValueError(f"pools must nest: k={k} <= c2={c2} <= c1={c1}")
-    qrows = queries.select("query_id", "query_vec").limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"cascade_batch_topk: >{max_queries} queries — split the query "
-            "set or raise max_queries"
-        )
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), max_queries,
+        f"cascade_batch_topk: >{max_queries} queries — split the query "
+        "set or raise max_queries",
+    )
     # stage 1: shared-pass Hamming shortlist per query (dup ids rejected
     # inside hamming_batch_topk)
     shortlist = hamming_batch_topk(

@@ -41,6 +41,7 @@ from photo_vector_search_spark.operators.store import (
     delete_ids,
     live_view,
     read_meta,
+    read_table,
     recover_store,
     snapshot_overwrite,
     upsert_ids,
@@ -142,7 +143,7 @@ def compact_colbertv2_store(spark, path: str) -> int:
     meta = read_meta(spark, path, "ColBERTv2 store")
     id_col = meta["id_col"]
     live = live_view(
-        spark, path, spark.read.parquet(path), meta["build_id"], id_col
+        spark, path, read_table(spark, path), meta["build_id"], id_col
     ).localCheckpoint(eager=True)
     n = live.count()
     # the build layout: range-partitioned + id-sorted for row-group pruning

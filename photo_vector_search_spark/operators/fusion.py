@@ -32,6 +32,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
+
 RRF_K = 60  # the paper's (and Elasticsearch's) default rank constant
 
 
@@ -204,19 +206,13 @@ def hybrid_batch_search(
     c = pool if pool is not None else 3 * k
     if c < k:
         raise ValueError(f"pool ({c}) must be >= k ({k})")
-    qrows = queries.select("query_id", "query").limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries — split the batch or raise max_queries"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
-    qids = [r["query_id"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query fusion is "
-            "ill-defined; de-duplicate the query frame first"
-        )
+    qrows = bounded_rows(
+        queries, ("query_id", "query"), max_queries,
+        f">{max_queries} queries — split the batch or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query fusion is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     from photo_vector_search_spark.operators.bm25 import query_terms
 
     for r in qrows:

@@ -34,6 +34,7 @@ from photo_vector_search_spark.operators.sq import (
     load_ivf_sq8_store,
 )
 from photo_vector_search_spark.operators.store import (
+    _file_build_ids,
     clear_side_tables,
     delete_ids,
     live_view,
@@ -41,6 +42,15 @@ from photo_vector_search_spark.operators.store import (
     upsert_ids,
     upsert_side_tables,
 )
+
+
+def _open(spark, path: str):
+    """``load_ivf_sq8_store`` plus the base's build id, read from the
+    footers the load has just checked (one build), not by a Spark job."""
+    base, centroids, model = load_ivf_sq8_store(spark, path)
+    (build,) = _file_build_ids(path)
+    return base, centroids, model, build
+
 
 def upsert_ivf_sq8_store(
     spark,
@@ -57,8 +67,7 @@ def upsert_ivf_sq8_store(
     ``operators/store.py``."""
     from photo_vector_search_spark.operators.ann import assign_clusters
 
-    base, centroids, model = load_ivf_sq8_store(spark, path)
-    base_build = base.select("build_id").first()["build_id"]
+    base, centroids, model, base_build = _open(spark, path)
 
     emb = new_embeddings
     if vec_col != "embedding":
@@ -89,8 +98,7 @@ def upsert_ivf_sq8_store(
 def delete_from_ivf_sq8_store(spark, path: str, vec_ids, id_col: str = "vec_id") -> int:
     """Tombstone ``vec_ids`` (a list or a one-column DataFrame) and drop
     them from the delta. Returns the number of ids tombstoned."""
-    base, _, _ = load_ivf_sq8_store(spark, path)
-    base_build = base.select("build_id").first()["build_id"]
+    base_build = _open(spark, path)[3]
     return delete_ids(
         spark, path, base_build, id_col, vec_ids, [(".delta", ["cluster_id"])]
     )
@@ -102,8 +110,7 @@ def load_live_ivf_sq8(
     """The serving view: delta ∪ (base anti delta-ids) anti tombstones,
     with every side-table verified against the base build. Probe filters
     push through the union, so base partition pruning is preserved."""
-    base, centroids, model = load_ivf_sq8_store(spark, path)
-    base_build = base.select("build_id").first()["build_id"]
+    base, centroids, model, base_build = _open(spark, path)
     return live_view(spark, path, base, base_build, id_col), centroids, model
 
 

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
 from photo_vector_search_spark.functions.vector import (
     cosine_distance,
     cosine_distance_to_query,
@@ -369,21 +370,14 @@ def rocchio_batch_topk(
         raise ValueError(f"neg_k must be >= 0, got {neg_k}")
     if gamma != 0.0 and neg_k == 0:
         raise ValueError("gamma != 0 needs neg_k > 0 (a negative set)")
-    qrows = queries.select("query_id", "query_vec").limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries — split the batch or raise max_queries"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), max_queries,
+        f">{max_queries} queries — split the batch or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query feedback is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qids = [r["query_id"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query feedback is "
-            "ill-defined; de-duplicate the query frame first"
-        )
     qmat = {
         r["query_id"]: np.asarray(r["query_vec"], dtype=np.float64)
         for r in qrows

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
+
 MAX_DOC_TOKENS = 16
 MAX_QUERY_TOKENS = 8
 
@@ -498,19 +500,14 @@ def maxsim_batch_topk(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    qrows = queries.select("query_id", "query").limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries — split the batch or raise max_queries"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
+    qrows = bounded_rows(
+        queries, ("query_id", "query"), max_queries,
+        f">{max_queries} queries — split the batch or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qids = [r["query_id"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query top-k is "
-            "ill-defined; de-duplicate the query frame first"
-        )
     qmats = [
         np.asarray(
             _query_token_vecs(r["query"], max_query_tokens, dim),
@@ -952,19 +949,14 @@ def maxsim_store_batch_search(
         raise ValueError(f"k must be >= 1, got {k}")
     toks, meta = load_maxsim_store(spark, path)
     id_col, dim = meta["id_col"], meta["dim"]
-    qrows = queries.select("query_id", "query").limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries — split the batch or raise max_queries"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
+    qrows = bounded_rows(
+        queries, ("query_id", "query"), max_queries,
+        f">{max_queries} queries — split the batch or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qids = [r["query_id"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query top-k is "
-            "ill-defined; de-duplicate the query frame first"
-        )
     qmats = {
         r["query_id"]: np.asarray(
             _query_token_vecs(r["query"], max_query_tokens, dim),

@@ -46,6 +46,7 @@ from photo_vector_search_spark.operators.store import (
     delete_ids,
     live_view,
     read_meta,
+    read_table,
     recover_store,
     snapshot_overwrite,
     upsert_ids,
@@ -221,7 +222,7 @@ def compact_maxsim_store(spark, path: str) -> int:
         recover_store(path + suffix)
     meta = read_meta(spark, path, "MaxSim store")
     live = live_view(
-        spark, path, spark.read.parquet(path), meta["build_id"], meta["id_col"]
+        spark, path, read_table(spark, path), meta["build_id"], meta["id_col"]
     ).localCheckpoint(eager=True)
     n = live.count()
     snapshot_overwrite(live, path, partition_by=_base_partitioning(meta))

@@ -40,6 +40,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
 from photo_vector_search_spark.operators.store import (
     kind_vectors,
     open_store,
@@ -367,20 +368,21 @@ def pq_batch_topk(
     ``ann.ivf_topk`` discipline."""
     import pandas as pd
 
+    too_many = (
+        f"pq_batch_topk: >{max_queries} queries — the LUT broadcast is "
+        "Q·m·k doubles; split the query set or raise max_queries"
+    )
     if qrows is None:
         # ``qrows`` lets a caller that already collected the query set (the
         # ivf_pq_batch_search probe pass) hand it down — re-collecting here
         # would run a second driver job AND could disagree with the first
         # collect on a nondeterministic source, leaving query_ids with an
         # empty probe mask that silently return zero rows (review finding)
-        qrows = queries.select("query_id", "query_vec").limit(
-            max_queries + 1
-        ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_batch_topk: >{max_queries} queries — the LUT broadcast is "
-            "Q·m·k doubles; split the query set or raise max_queries"
+        qrows = bounded_rows(
+            queries, ("query_id", "query_vec"), max_queries, too_many
         )
+    elif len(qrows) > max_queries:
+        raise ValueError(too_many)
     if (allowed is None) != (cluster_col is None):
         raise ValueError(
             "pq_batch_topk: allowed and cluster_col must be given together"
@@ -729,14 +731,11 @@ def ivf_pq_batch_search(
     same contract as ``pq_batch_topk``."""
     store, cents, books, rot = load_ivfpq_store(spark, path)
     n_assign = stored_pq_n_assign(spark, path)
-    qrows = queries.select("query_id", "query_vec").limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_pq_batch_search: >{max_queries} queries — split the "
-            "query set or raise max_queries"
-        )
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), max_queries,
+        f"ivf_pq_batch_search: >{max_queries} queries — split the "
+        "query set or raise max_queries",
+    )
     np_probe = min(nprobe, len(cents))
     allowed: dict[int, list[int]] = {}
     for r in qrows:

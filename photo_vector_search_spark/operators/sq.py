@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
 from photo_vector_search_spark.operators.store import (
     kind_vectors,
     open_store,
@@ -310,15 +311,16 @@ def sq8_batch_topk(
     Zero-norm/NULL queries raise; NULL code rows never rank."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
+    too_many = (
+        f"sq8_batch_topk: >{max_queries} queries — split the query set "
+        "or raise max_queries"
+    )
     if qrows is None:
-        qrows = queries.select("query_id", "query_vec").limit(
-            max_queries + 1
-        ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"sq8_batch_topk: >{max_queries} queries — split the query set "
-            "or raise max_queries"
+        qrows = bounded_rows(
+            queries, ("query_id", "query_vec"), max_queries, too_many
         )
+    elif len(qrows) > max_queries:
+        raise ValueError(too_many)
     if not qrows:
         return coded.sparkSession.createDataFrame(
             [], "query_id long, vec_id long, label int, dist double, rank int"
@@ -426,14 +428,11 @@ def ivf_sq8_batch_topk(
         raise ValueError(
             f"nprobe must be in [1, {len(centroids)}], got {nprobe}"
         )
-    qrows = queries.select("query_id", "query_vec").limit(
-        max_queries + 1
-    ).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_sq8_batch_topk: >{max_queries} queries — split the query "
-            "set or raise max_queries"
-        )
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), max_queries,
+        f"ivf_sq8_batch_topk: >{max_queries} queries — split the query "
+        "set or raise max_queries",
+    )
     cn = np.linalg.norm(centroids, axis=1)
     allowed: dict[int, list[int]] = {}
     for r in qrows:

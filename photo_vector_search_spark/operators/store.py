@@ -37,6 +37,11 @@ reopens its one persistent index per call, photo_vector_search.py:16-20):
   ``.meta``'s. Every refusal names the builder to re-run, so a crash
   anywhere in a build leaves a store that is either served whole or
   refused, never served torn.
+- An open launches no Spark job. The KB-sized ``.meta`` and sidecar rows
+  are read on the driver with pyarrow (``read_rows``), and every table is
+  opened with the Spark schema stored in its own parquet footer
+  (``read_table``), so Spark infers nothing; partition columns are still
+  discovered from the paths. Side tables open the same way.
 
 Incremental maintenance (the delta-segment + tombstone pattern of LSM-backed
 indexes; cf. the reference upserting its index one directory at a time,
@@ -77,8 +82,8 @@ share one protocol, implemented once below:
 
 from __future__ import annotations
 
-import glob
 import hashlib
+import json
 import os
 import shutil
 import tempfile
@@ -87,6 +92,9 @@ from typing import NamedTuple
 import numpy as np
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from photo_vector_search_spark.functions.arrowkit import local_frame
 
 
 def point_lookup(store: DataFrame, photo_path: str, aspect_name: str | None = None) -> DataFrame:
@@ -238,6 +246,56 @@ def _file_build_ids(path: str, files: list[str] | None = None) -> set:
     return builds
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(file: str) -> StructType | None:
+    """The Spark schema Spark's parquet writer stored in ``file``'s footer
+    (partition columns are not in it), or None for a file written outside
+    Spark."""
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_metadata(file).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def read_table(spark, path: str, files: list[str] | None = None) -> DataFrame:
+    """The parquet table at ``path`` as a lazy frame, with no Spark job:
+    the schema is the one Spark stored in the footer of the first of its
+    data files (``files``, when the caller already walked the directory),
+    so Spark infers nothing; partition columns are still discovered from
+    the paths. A table whose footer lacks Spark's schema (written outside
+    Spark) or that has no file is left to ``spark.read.parquet``'s own
+    inference. Past 32 partition directories Spark lists them with a
+    parallel job of its own."""
+    if files is None:
+        files = _data_files(path)
+    parts = sorted(f for f in files if f.endswith(".parquet"))
+    schema = _footer_schema(parts[0]) if parts else None
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(
+        path
+    )
+
+
+def read_rows(path: str, order_by=()) -> list[Row]:
+    """Every row of the KB-sized sidecar table at ``path``, read on the
+    driver with pyarrow (no Spark job), as ``Row``s of the table's fields,
+    sorted by ``order_by`` ascending with NULLs first (Spark's default
+    order). Sidecars hold flat columns (atomic values and arrays of them),
+    whose pyarrow values are the ones a Spark ``collect`` returns."""
+    import pyarrow.parquet as pq
+
+    rows = []
+    for f in sorted(_data_files(path)):
+        if f.endswith(".parquet"):
+            table = pq.ParquetFile(f).read()
+            make = Row(*table.column_names)
+            rows += [make(*r.values()) for r in table.to_pylist()]
+    return sorted(
+        rows, key=lambda r: [(r[c] is not None, r[c]) for c in order_by]
+    )
+
+
 def recover_store(path: str) -> None:
     """Crash recovery for the snapshot swap: if a previous run died between the
     two renames, `path` is absent but `path + '.old'` holds the last complete
@@ -286,7 +344,7 @@ def snapshot_overwrite(df: DataFrame, path: str, partition_by: list[str] | None 
 
 class OpenStore(NamedTuple):
     """``open_store``'s result: ``tables`` as lazy frames, in the order
-    asked, the collected ``sidecar`` rows and the ``.meta`` row."""
+    asked, the ``sidecar`` rows and the ``.meta`` row, read on the driver."""
 
     tables: list
     rows: list
@@ -305,11 +363,12 @@ def open_store(
     footer: bool = True,
     build_id: str | None = None,
 ) -> OpenStore:
-    """Open a persisted store by the open protocol (module docstring).
+    """Open a persisted store by the open protocol (module docstring),
+    launching no Spark job.
 
     ``tables``: suffixes of the parquet tables returned as lazy frames
     (``""`` is the base). ``sidecar``: suffix of the table whose rows are
-    collected, sorted by ``order_by``. ``meta``: the store keeps a one-row
+    read, sorted by ``order_by``. ``meta``: the store keeps a one-row
     ``.meta`` whose ``build_id`` is the store's build and whose
     ``store_sig`` signs the base. Without it the build is ``build_id`` (a
     part opened after its store's meta), else the sidecar rows' own.
@@ -325,10 +384,7 @@ def open_store(
             f"{builder} first"
         )
     meta_row = read_meta(spark, path, f"{kind} store") if meta else None
-    rows = []
-    if sidecar:
-        side = spark.read.parquet(path + sidecar)
-        rows = (side.orderBy(*order_by) if order_by else side).collect()
+    rows = read_rows(path + sidecar, order_by) if sidecar else []
     files = {t: _data_files(path + t) for t in tables}  # one walk per table
     builds = {
         t or "base": _file_build_ids(path + t, files[t]) for t in tables if footer
@@ -358,7 +414,9 @@ def open_store(
             "between snapshot swaps or a part was rewritten outside the "
             f"engine; re-run {builder}"
         )
-    return OpenStore([spark.read.parquet(path + t) for t in tables], rows, meta_row)
+    return OpenStore(
+        [read_table(spark, path + t, files[t]) for t in tables], rows, meta_row
+    )
 
 
 def write_kind_vectors(
@@ -417,13 +475,14 @@ _SIDE_KINDS = {
 def side_table(spark, path: str, suffix: str, build_id: str) -> DataFrame | None:
     """Read side table ``path + suffix``, refusing one from another build.
     A missing or file-less dir is an empty table (a crashed cleanup may
-    leave either — both are valid empty states)."""
+    leave either — both are valid empty states). One directory walk serves
+    the footer build check and the schema."""
     side = path + suffix
     recover_store(side)
-    if not glob.glob(os.path.join(side, "**", "*.parquet"), recursive=True):
+    files = [f for f in _data_files(side) if f.endswith(".parquet")]
+    if not files:
         return None
-    df = spark.read.parquet(side)
-    builds = _file_build_ids(side)  # footer stats, no table scan
+    builds = _file_build_ids(side, files)  # footer stats, no table scan
     if builds and builds != {build_id}:
         raise ValueError(
             f"{_SIDE_KINDS[suffix]} at {side!r} is from build "
@@ -431,7 +490,7 @@ def side_table(spark, path: str, suffix: str, build_id: str) -> DataFrame | None
             f"{build_id!r} — it was written against different "
             "centroids/ranges; compact or rebuild before serving"
         )
-    return df
+    return read_table(spark, side, files)
 
 
 def side_tables(spark, path: str, build_id: str, suffixes=(".delta", TOMBSTONES)):
@@ -482,8 +541,8 @@ def delete_ids(spark, path, build_id, id_col, ids, deltas) -> int:
     if isinstance(ids, DataFrame):
         ids = ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
     else:
-        ids = spark.createDataFrame(
-            [(int(v),) for v in ids], f"`{id_col}` long"
+        ids = local_frame(
+            spark, [(int(v),) for v in ids], f"`{id_col}` long"
         ).distinct()
     n = ids.count()
     if n == 0:
@@ -542,8 +601,8 @@ def clear_side_tables(path: str, suffixes=(TOMBSTONES, ".delta")) -> None:
 
 
 def read_meta(spark, path: str, what: str) -> Row:
-    """The single row of a store's ``.meta`` sidecar."""
-    rows = spark.read.parquet(path + ".meta").collect()
+    """The single row of a store's ``.meta`` sidecar, read on the driver."""
+    rows = read_rows(path + ".meta")
     if len(rows) != 1:
         raise ValueError(
             f"{what} sidecar at {path + '.meta'!r} has {len(rows)} rows, "

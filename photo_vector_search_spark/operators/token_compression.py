@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from photo_vector_search_spark.functions.arrowkit import bounded_rows
 from photo_vector_search_spark.operators.late_interaction import (
     MAX_DOC_TOKENS,
     MAX_QUERY_TOKENS,
@@ -382,19 +383,14 @@ def maxsim_batch_topk_compressed(
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    qrows = queries.select("query_id", "query").limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f">{max_queries} queries — split the batch or raise max_queries"
-        )
-    if not qrows:
-        raise ValueError("empty query frame")
+    qrows = bounded_rows(
+        queries, ("query_id", "query"), max_queries,
+        f">{max_queries} queries — split the batch or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qids = [r["query_id"] for r in qrows]
-    if len(set(qids)) != len(qids):
-        raise ValueError(
-            "duplicate query_id in the batch — per-query top-k is "
-            "ill-defined; de-duplicate the query frame first"
-        )
     qmats = [
         np.asarray(
             _query_token_vecs(r["query"], max_query_tokens, dim),

@@ -224,10 +224,10 @@ KINDS = {
 # Spark jobs per call on these tiny stores: upsert (2 new + 2 replaced ids),
 # delete (2 ids), revive (1 id), live-view load, compaction.
 JOBS = {
-    "bm25": dict(upsert=11, delete=20, revive=19, live=11, compact=19),
-    "colbertv2": dict(upsert=10, delete=16, revive=16, live=7, compact=14),
-    "ivf_sq8": dict(upsert=8, delete=15, revive=14, live=6, compact=12),
-    "maxsim": dict(upsert=8, delete=14, revive=14, live=5, compact=12),
+    "bm25": dict(upsert=7, delete=14, revive=12, live=4, compact=12),
+    "colbertv2": dict(upsert=5, delete=10, revive=9, live=0, compact=9),
+    "ivf_sq8": dict(upsert=4, delete=10, revive=8, live=0, compact=6),
+    "maxsim": dict(upsert=5, delete=10, revive=9, live=0, compact=7),
 }
 
 
@@ -356,11 +356,12 @@ def _open_kinds():
 
 
 # Spark jobs of one load: the first after the build, or one that first
-# recovers a part from its `.old` snapshot.
-OPEN_JOBS = {
-    "bm25": 4, "bq": 3, "colbertv2": 5, "ivf": 5, "ivf_sq8": 3, "ivfpq": 5,
-    "maxsim": 3, "sq8": 3,
-}
+# recovers a part from its `.old` snapshot. The `.meta` and sidecar rows
+# are read on the driver and every table's schema comes from its parquet
+# footer, so none launches a job.
+OPEN_JOBS = dict.fromkeys(
+    ("bm25", "bq", "colbertv2", "ivf", "ivf_sq8", "ivfpq", "maxsim", "sq8"), 0
+)
 
 
 def _plain(x):
@@ -381,6 +382,8 @@ def _plain(x):
 
 @pytest.mark.parametrize("name", sorted(OPEN_JOBS))
 def test_open_contract(spark, tmp_path, name):
+    from photo_vector_search_spark.operators.store import read_rows
+
     label, payload, id_col, build, load, parts = _open_kinds()[name]
     builder = load.__name__.replace("load_", "build_")
     payloads = _payloads(spark, payload)
@@ -396,6 +399,19 @@ def test_open_contract(spark, tmp_path, name):
     assert jobs == OPEN_JOBS[name]
     assert fresh[0].select(id_col).distinct().count() == N_BASE
     want = _plain(fresh)
+
+    # the opened tables have the schema Spark infers, partition columns
+    # included; the driver-read rows are the ones Spark collects, in its
+    # ascending NULLs-first order
+    tables = ("", ".doclens") if name == "bm25" else ("",)
+    for part, table in zip(tables, fresh):
+        assert table.schema == spark.read.parquet(path + part).schema, part
+    for part in parts[1:]:
+        side = spark.read.parquet(path + part)
+        order = [f.name for f in side.schema if f.dataType.typeName() != "array"]
+        assert read_rows(path + part, order) == (
+            side.orderBy(*order).collect()
+        ), part
 
     # a crash between the two renames of a snapshot swap leaves only
     # `.old`: every part is recovered and the store serves as before
@@ -448,3 +464,88 @@ def test_maxsim_heals_crashed_swaps(spark, tmp_path):
     os.rename(path + ".meta", path + ".meta.old")
     assert compact_maxsim_store(spark, path) == N_BASE
     assert top() == want
+
+
+# ---------------------------------------------------------------------------
+# the serving job budget, on tiny BM25 and IVF,SQ8 stores over one corpus
+
+# Spark jobs of one call plus the collect of its result. Store opens launch
+# none; the batch calls read the caller's query frame in one job and build
+# every other driver-side frame as a local relation.
+SERVE_JOBS = {
+    "bm25_store_topk": 4,
+    "bm25_store_batch_topk": 7,
+    "rm3_store_batch_topk": 18,
+    "ivf_sq8_store_topk": 1,
+    "hybrid_store_search": 5,
+}
+
+
+def test_serving_job_budget(spark, tmp_path):
+    from photo_vector_search_spark.operators.bm25_store import (
+        bm25_store_batch_topk,
+        bm25_store_topk,
+        build_bm25_store,
+        rm3_store_batch_topk,
+    )
+    from photo_vector_search_spark.operators.fusion import hybrid_store_search
+    from photo_vector_search_spark.operators.sq import (
+        build_ivf_sq8_store,
+        ivf_sq8_store_topk,
+    )
+    from photo_vector_search_spark.pipelines.embed import stub_embedding_expr
+
+    # the corpus arrives as parquet, the way a served corpus does
+    corpus = str(tmp_path / "docs")
+    _frame(
+        _payloads(spark, "text"), "doc_id", {i: i for i in range(N_BASE)}
+    ).write.parquet(corpus)
+    docs = spark.read.parquet(corpus)
+    bm25, ivf = str(tmp_path / "bm25"), str(tmp_path / "ivf")
+    build_bm25_store(docs, bm25, n_buckets=8)
+    build_ivf_sq8_store(
+        docs.select(
+            F.col("doc_id").alias("vec_id"),
+            (F.col("doc_id") % 3).cast("int").alias("label"),
+            stub_embedding_expr(F.col("text")).alias("embedding"),
+        ),
+        ivf,
+        n_clusters=4,
+    )
+    # a list-built query frame: a Python RDD, scanned once per batch call
+    queries = spark.createDataFrame(
+        [(i, " ".join(WORDS[3 * i:3 * i + 3])) for i in range(4)],
+        "query_id long, query string",
+    )
+    vec = docs.limit(1).select(stub_embedding_expr(F.col("text"))).first()[0]
+    calls = {
+        "bm25_store_topk": lambda: bm25_store_topk(spark, bm25, "quick fox", k=5),
+        "bm25_store_batch_topk": lambda: bm25_store_batch_topk(
+            spark, bm25, queries, k=5
+        ),
+        "rm3_store_batch_topk": lambda: rm3_store_batch_topk(
+            spark, bm25, docs, queries, k=5, fb_docs=3, fb_terms=4
+        ),
+        "ivf_sq8_store_topk": lambda: ivf_sq8_store_topk(
+            spark, ivf, vec, k=5, nprobe=2
+        ),
+        "hybrid_store_search": lambda: hybrid_store_search(
+            spark, bm25, ivf, "quick fox", k=5, nprobe=2
+        ),
+    }
+    def served(call):
+        out = call()
+        assert out.collect()
+        return out
+
+    jobs, results = {}, {}
+    for name, call in calls.items():
+        served(call)  # warm: the budget is the steady per-call cost
+        results[name], jobs[name] = _jobs(spark, served, call)
+
+    # the fan-out frames are local relations, never a Python-backed scan
+    for name in ("bm25_store_batch_topk", "rm3_store_batch_topk"):
+        plan = results[name]._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, name
+        assert "ExistingRDD" not in plan, name
+    assert jobs == SERVE_JOBS
