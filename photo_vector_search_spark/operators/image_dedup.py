@@ -110,7 +110,15 @@ def phash_images(
 ) -> DataFrame:
     """Add the 64-bit pHash to decoded image rows (``decode_images`` output
     or any (…, content binary) frame). Error/empty/undecodable rows get
-    NULL. Map-only Arrow pass."""
+    NULL. Map-only Arrow pass.
+
+    The ``out_col`` column is the exact signed ``long`` that ``phash_bytes``
+    returns, whatever else the Arrow batch holds: NULL only for undecodable
+    or empty rows, never a rounded value. A batch mixing hashes and NULLs
+    would otherwise be typed float64 by pandas, rounding every hash of
+    magnitude >= 2^53 to 53 bits (the same fault, and the same nullable
+    ``Int64`` mend, as ``afp`` in ``audio_dedup.audio_fingerprints``)."""
+    import pandas as pd
     from pyspark.sql.types import LongType, StructField, StructType
 
     out_schema = StructType(
@@ -122,10 +130,15 @@ def phash_images(
     def run(batches):
         for pdf in batches:
             pdf = pdf[in_cols].copy()
-            pdf[out_col] = pdf[content_col].map(
-                lambda c: phash_bytes(bytes(c)) if c is not None and len(c) else None
+            # nullable Int64, never .map(): a None beside the ints would
+            # make the column float64 and round the hashes before Arrow
+            pdf[out_col] = pd.array(
+                [
+                    phash_bytes(bytes(c)) if c is not None and len(c) else None
+                    for c in pdf[content_col]
+                ],
+                dtype="Int64",
             )
-            pdf[out_col] = pdf[out_col].astype("object")
             yield pdf
 
     return decoded.mapInPandas(run, schema=out_schema)

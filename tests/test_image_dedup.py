@@ -118,6 +118,33 @@ def test_spark_pipeline_and_band_join_parity(spark):
     assert e2e == got_pairs and len(e2e) > 0
 
 
+def test_phash_exact_long_beside_null_rows_in_one_arrow_batch(spark):
+    """Hashes stay exact ``long`` when NULL-hash rows share their Arrow
+    batch. Pins the layout instead of leaving it to how many cores split
+    the input: one partition (one batch) and 3-row batches, each holding an
+    empty/NULL-content row beside hashes of magnitude >= 2^53 (a float64
+    column would round their low bits)."""
+    rows = []
+    for k in range(4):  # every 3-row batch: two real hashes + one empty row
+        rows.append((f"img{2 * k}", _fake(320, 240, _rand_payload(600, 100 + 2 * k))))
+        rows.append((f"img{2 * k + 1}", _fake(320, 240, _rand_payload(600, 101 + 2 * k))))
+        rows.append((f"bad{k}", None if k % 2 else b""))
+    want = {p: phash_bytes(bytes(c)) if c else None for p, c in rows}
+    # the case only bites if some hash is not exactly representable in float64
+    assert any(h is not None and float(h) != h for h in want.values())
+
+    df = spark.createDataFrame(rows, "path string, content binary").coalesce(1)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch in (old, "3"):
+            spark.conf.set(key, batch)
+            got = {r["path"]: r["phash"] for r in phash_images(df).collect()}
+            assert got == want, batch
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_band_guard():
     with pytest.raises(ValueError, match="divide"):
         hamming_pairs(None, n_bands=7)
