@@ -5,9 +5,10 @@ landed or the roster in tools/plan_report.py was never extended. These tests
 make that class of drift a LOCAL failure — the same mechanism that killed the
 non-scalar-schema class in r8 (tests/test_entry_contract.py):
 
-1. every name in the plan-audit roster (AUDIT + EXTRA_OPS) must have a
-   ``## name`` section in the committed PLANS.md — a roster entry without a
-   regenerated audit is stale evidence;
+1. every name in the plan-audit roster (AUDIT, the audited registry CASES,
+   and the plan-only EXTRA_OPS) must have a ``## name`` section in the
+   committed PLANS.md — a roster entry without a regenerated audit is stale
+   evidence;
 2. every bench case (per-round bench + scale-bench extras) must have a row in
    the NEWEST committed SCALE_TABLE_r*.md — a kernel without a 10x row is an
    unmeasured scale claim;
@@ -19,7 +20,12 @@ non-scalar-schema class in r8 (tests/test_entry_contract.py):
    operator commits before HEAD, so the two newest cases had no isolated
    record and nothing failed locally; this rule makes that drift a LOCAL
    failure (the recording workflow: `python tools/bench_record.py --out
-   BENCH_r{N}.json` as the round's last source-touching step).
+   BENCH_r{N}.json` as the round's last source-touching step);
+5. every audited name is built in ONE place: the plan-only builders name no
+   registry case, every audited case resolves to a registry builder, and
+   the scale bench re-defines only its documented OVERRIDES of bench cases;
+6. every NOTES key names an audited section — a mis-keyed note is
+   otherwise silently dropped from PLANS.md.
 """
 
 from __future__ import annotations
@@ -52,7 +58,9 @@ def test_every_audited_query_has_a_plans_section():
 
     plans = open(os.path.join(REPO, "PLANS.md")).read()
     sections = set(re.findall(r"^## (\S+)", plans, re.M))
-    roster = set(plan_report.AUDIT) | set(plan_report.EXTRA_OPS)
+    roster = (
+        set(plan_report.AUDIT) | set(plan_report.CASES) | set(plan_report.EXTRA_OPS)
+    )
     missing = roster - sections
     assert not missing, (
         f"PLANS.md is stale — missing sections for {sorted(missing)}; "
@@ -134,16 +142,16 @@ def test_every_bench_case_has_a_canonical_bench_row(spark):
 # module -> audited names that carry its evidence; each must appear in the
 # audited surface (plan roster + declared queries + scale-table rows).
 _REPRESENTATIVES = {
-    "alignment": ["filter_aligned"],
+    "alignment": ["align_filter"],
     "ann": ["ivf_topk_exact", "ivf_near_dup_pairs"],
-    "bm25": ["bm25_topk", "rm3_topk", "rm3_batch_topk"],
+    "bm25": ["bm25_topk", "rm3_topk", "rm3_batch8"],
     "bm25_store": [
         "bm25_store_search",
         "bm25_store_batch8",
         "live_bm25_search",
     ],
-    "bq": ["hamming_topk", "hamming_batch_topk"],
-    "cascade": ["cascade_topk", "cascade_batch_topk"],
+    "bq": ["hamming_topk", "hamming_batch64"],
+    "cascade": ["cascade_topk", "cascade_batch16"],
     "cross_dedup": ["cross_dedup", "cross_dedup_store"],
     "fusion": ["rrf_fuse"],
     "audio_dedup": ["audio_near_dup"],
@@ -153,22 +161,22 @@ _REPRESENTATIVES = {
     "corruption": ["corrupt_spans"],
     "decontamination": ["decontaminate", "decontaminate_spans"],
     "dedup": ["dedup_minhash_lsh", "embedding_near_dup", "srp_lsh_near_dup"],
-    "domains": ["domain_cap", "filter_urls"],
+    "domains": ["domain_cap", "url_filter"],
     "dsir": ["dsir_weights"],
     "embeddings": ["pca_whiten", "pool_embeddings"],
     "evaluation": ["retrieval_eval"],
     "fim": ["fim_transform"],
     "heavy_hitters": ["heavy_hitter_tokens"],
-    "index_maintenance": ["live_ivf_sq8_topk", "ivf_sq8_live_topk"],
-    "image_dedup": ["hamming_pairs", "image_near_dup"],
+    "index_maintenance": ["ivf_sq8_live_topk"],
+    "image_dedup": ["image_near_dup"],
     "joins": ["events_asof"],
     "kneser_ney": ["kn_score"],
     "late_interaction": ["maxsim_search", "maxsim_store_search"],
     "maxsim_maintenance": ["live_maxsim_search"],
-    "knn": ["knn_topk", "knn_batch", "rocchio_topk", "rocchio_batch_topk"],
+    "knn": ["knn_topk", "knn_batch", "rocchio_topk", "rocchio_batch8"],
     "mixing": ["mix_corpus"],
     "packing": ["pack_sequences", "pack_windows"],
-    "pq": ["pq_topk", "ivf_pq_batch_search"],
+    "pq": ["pq_topk_rerank", "ivf_pq_batch_topk"],
     "pruning": ["prune_prototypes", "prune_ivf_store"],
     "sampling": ["sample_weighted"],
     "selection": ["budget_select"],
@@ -179,7 +187,7 @@ _REPRESENTATIVES = {
     "semdedup": ["semdedup"],
     "shuffle": ["shuffle_corpus", "curriculum_order"],
     "store": ["upsert_merge", "store_partition_pruned"],
-    "substring": ["remove_repeated_ngrams"],
+    "substring": ["substring_dedup"],
     "unigram": ["encode_unigram", "unigram_train"],
     "zorder": ["zorder_key", "zorder_write"],
 }
@@ -226,8 +234,7 @@ def test_every_operator_module_is_audit_represented(spark):
     assert not stale, f"_REPRESENTATIVES maps missing modules: {sorted(stale)}"
 
     audited = (
-        set(plan_report.AUDIT)
-        | set(plan_report.EXTRA_OPS)
+        set(plan_report.sections())
         | set(entry.queries())
         | {n for n, *_ in scale_bench._parse_table_rows(_newest_scale_table())}
     )
@@ -237,3 +244,44 @@ def test_every_operator_module_is_audit_represented(spark):
             f"operators/{mod}: representatives {missing} are not in the "
             "audited surface (plan roster / declared queries / scale table)"
         )
+
+
+def test_every_audited_name_has_one_builder(spark, sf_dir):
+    """Rule #5: the bench registry is the one place a case is built. A
+    plan-only builder named after a registry case, an audited case with no
+    registry builder, or a scale case silently shadowing a bench case is a
+    second copy that drifts from the frame the bench times."""
+    from bench import _build_cases
+    from tools import plan_report, scale_bench
+
+    bench_cases = set(_build_cases(spark, sf_dir))
+    scale_cases = set(scale_bench.extra_cases(spark, sf_dir))
+    registry = bench_cases | scale_cases
+    dup = set(plan_report.EXTRA_OPS) & registry
+    assert not dup, f"plan-only builders duplicate registry cases: {sorted(dup)}"
+    unbuilt = {
+        n
+        for n in plan_report.CASES
+        if plan_report.CASE_ALIASES.get(n, n) not in registry
+    }
+    assert not unbuilt, f"audited CASES with no registry builder: {sorted(unbuilt)}"
+    stray = set(plan_report.UNSTAGED) - set(plan_report.AUDIT) - set(plan_report.CASES)
+    assert not stray, f"UNSTAGED forms of names nobody audits: {sorted(stray)}"
+    shadowed = scale_cases & bench_cases
+    assert shadowed == set(scale_bench.OVERRIDES), (
+        "scale_bench re-defines bench cases outside its documented OVERRIDES: "
+        f"undocumented {sorted(shadowed - scale_bench.OVERRIDES)}, "
+        f"stale {sorted(scale_bench.OVERRIDES - shadowed)}"
+    )
+    sections = plan_report.sections()
+    assert len(sections) == len(set(sections)), "an audited name appears twice"
+
+
+def test_every_note_names_an_audited_section():
+    """Rule #6: plan_report writes a NOTES entry only under the section of
+    the same name, so a note keyed to a renamed or removed section vanishes
+    from PLANS.md without an error."""
+    from tools import plan_report
+
+    orphans = set(plan_report.NOTES) - set(plan_report.sections())
+    assert not orphans, f"NOTES keyed to no audited section: {sorted(orphans)}"

@@ -1,26 +1,26 @@
 """Dump `.explain("formatted")` for named bench cases into files — the
-round-12 optimization evidence trail (plans/r12/<case>_{before,after}.txt).
+optimization evidence trail (plans/$PVS_PLAN_ROUND/<case>_<suffix>.txt,
+round default r13, e.g. a ``before`` and an ``after`` dump around a change).
 
-Reuses `bench._build_cases` so the dumped plan is EXACTLY the bench-shaped
-query, captured by intercepting the noop-sink `_force` call. Cases whose
-builder performs driver-side work before the final frame (store builds,
-collects) execute that work; the dumped plan is the final forced frame's.
+Reads frames from the case registry (`bench._build_cases`), so the dumped
+plan is EXACTLY the frame the bench times. Cases whose builder performs
+driver-side work before the final frame (store builds, collects) execute
+that work; fit/write cases return no frame and are skipped.
 
 Run: python tools/plan_dump.py <suffix> <case> [<case> ...]
-  -> plans/r12/<case>_<suffix>.txt
+  -> plans/$PVS_PLAN_ROUND/<case>_<suffix>.txt
 """
 
 from __future__ import annotations
 
-import io
 import os
 import sys
-from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from photo_vector_search_spark.session import get_spark
+from tools.plan_report import formatted_plan
 
 OUT_DIR = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -35,27 +35,18 @@ def main() -> None:
     os.makedirs(OUT_DIR, exist_ok=True)
     spark = get_spark("pvs-plan-dump")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    captured: dict = {}
-    real_force = bench._force
-    bench._force = lambda df: captured.__setitem__("df", df)
     try:
         cases = bench._build_cases(spark, sf_dir)
         for name in names:
-            captured.clear()
-            cases[name]()
-            if "df" not in captured:
-                print(f"{name}: builder never called _force — skipped")
+            df = cases[name]()
+            if df is None:
+                print(f"{name}: fit/write case, no frame — skipped")
                 continue
-            buf = io.StringIO()
-            with redirect_stdout(buf):
-                captured["df"].explain("formatted")
             path = os.path.join(OUT_DIR, f"{name}_{suffix}.txt")
             with open(path, "w") as f:
-                f.write(buf.getvalue())
+                f.write(formatted_plan(df))
             print(f"wrote {path}")
     finally:
-        bench._force = real_force
         spark.stop()
 
 
