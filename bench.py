@@ -51,7 +51,14 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
+# Python workers import the package too, and they inherit the JVM's
+# environment: export the repo root before any session starts, so a run
+# launched outside the repo root finds it.
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    filter(None, [ROOT, os.environ.get("PYTHONPATH")])
+)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 RUNS_PER_QUERY = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))

@@ -14,13 +14,14 @@ order, counts and keep-mask as the pandas-era ``_tok_matrices`` loop —
 the arithmetic downstream is untouched, so scores are bit-identical
 (parity-pinned in the operators' tests).
 
-Two driver-side helpers for the serving calls sit here too: ``local_frame``
-builds the small frames a call assembles on the driver as Arrow-backed
-``LocalRelation``s, and ``bounded_rows`` reads a caller's query frame in
-one bounded job. A ``spark.createDataFrame(<Python list>)`` is a
-parallelized Python RDD: every job that scans or broadcasts it runs
-Python-worker tasks, 250-400 ms a job on a 4-core host against 65-90 ms
-for a JVM-only job.
+Three driver-side helpers for the serving calls sit here too:
+``local_frame`` builds the small frames a call assembles on the driver as
+Arrow-backed ``LocalRelation``s, ``bounded_rows`` reads a caller's query
+frame in one bounded job, and ``spark_round6`` is Spark's ``round(x, 6)``
+for the scores the driver tier computes. A
+``spark.createDataFrame(<Python list>)`` is a parallelized Python RDD:
+every job that scans or broadcasts it runs Python-worker tasks, 250-400 ms
+a job on a 4-core host against 65-90 ms for a JVM-only job.
 """
 
 from __future__ import annotations
@@ -136,3 +137,40 @@ def bounded_rows(
         if len(set(ids)) != len(ids):
             raise ValueError(duplicate)
     return rows
+
+
+def _round6_exact(x: float) -> float:
+    """Spark's ``round(x, 6)`` of one double: ``BigDecimal(x)`` — parsed
+    from ``Double.toString(x)``, asked of the JVM because JDK 17's digits
+    are not always the shortest ones Python's ``repr`` gives — set to scale
+    6 HALF_UP and converted back; a zero result is +0.0 (BigDecimal has no
+    negative zero)."""
+    from decimal import ROUND_HALF_UP, Context, Decimal
+
+    from pyspark import SparkContext
+
+    digits = Decimal(SparkContext._jvm.java.lang.Double.toString(x))
+    return float(
+        digits.quantize(Decimal("1e-6"), ROUND_HALF_UP, Context(prec=400))
+    ) + 0.0
+
+
+def spark_round6(x) -> np.ndarray:
+    """Spark's ``round(x, 6)`` on a float64 array, value for value (pinned
+    against ``F.round`` in tests). Spark rounds the decimal digits of
+    ``Double.toString(x)`` HALF_UP. Away from a half-way point those digits
+    and ``x`` round alike, so the result is ``n / 1e6`` with ``n`` the
+    rounded ``|x| · 1e6`` — the double nearest ``n · 10⁻⁶``, as Spark's
+    ``BigDecimal.toDouble`` gives. Values within a few ulps of a half-way
+    point, or too large for an exact ``n``, go through ``_round6_exact``;
+    NaN and infinities pass through, as in Spark."""
+    x = np.asarray(x, dtype=np.float64)
+    y = np.abs(x) * 1e6
+    out = np.copysign(np.floor(y + 0.5) / 1e6, x) + 0.0
+    with np.errstate(invalid="ignore"):
+        near = np.abs(y - np.floor(y) - 0.5) <= 8 * np.spacing(y) + 1e-9
+        exact = np.isfinite(x) & (near | (y >= 2.0**52))
+    out[~np.isfinite(x)] = x[~np.isfinite(x)]
+    for i in np.flatnonzero(exact):
+        out[i] = _round6_exact(float(x[i]))
+    return out

@@ -27,15 +27,29 @@ Scale shape (100 TB):
   (`arrowkit.bounded_rows`), and the fan-out frames they build on the
   driver are Arrow-backed local relations (`arrowkit.local_frame`): their
   broadcasts are JVM-only jobs, never Python-worker ones.
+- a read of a persisted postings store small enough for the driver tier
+  (``operators/store.py`` states the rule and the bound) is scored on the
+  driver by ``_local_fanout_topk``, the one numpy twin of the formulas
+  below, and returned as a local relation.
 """
 
 from __future__ import annotations
 
+import functools
+from collections import Counter
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows, local_frame
+from photo_vector_search_spark.functions.arrowkit import (
+    bounded_rows,
+    local_frame,
+    spark_round6,
+)
 from photo_vector_search_spark.functions.text import tokens
 
 BM25_K1 = 1.2
@@ -49,13 +63,16 @@ def _check_kb(k1: float, b: float) -> None:
         raise ValueError(f"b must be in [0, 1], got {b}")
 
 
-def _num_den(k1: float, b: float, avgdl: float):
+def _num_den(k1: float, b: float, avgdl: float, tf=None, dl=None):
     """The tf-saturation numerator and length-normalized denominator of a
-    BM25 term score, ``_idf * num / den``."""
-    num = F.col("_tf") * F.lit(k1 + 1.0)
-    den = F.col("_tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("_dl") / F.lit(avgdl)
-    )
+    BM25 term score, ``_idf * num / den`` — over the ``_tf``/``_dl``
+    columns, or over float64 arrays ``tf``/``dl`` for the driver tier, in
+    the same IEEE operations in the same order (bit-identical doubles)."""
+    lit = F.lit if tf is None else float
+    if tf is None:
+        tf, dl = F.col("_tf"), F.col("_dl")
+    num = tf * lit(k1 + 1.0)
+    den = tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgdl))
     return num, den
 
 
@@ -78,26 +95,23 @@ def _tf_and_stats(
     plan and the classic two-pass shape (the tf frame must then not fan out).
 
     ``store`` (r13): a preloaded BM25 postings store ``(postings, meta)``
-    from `bm25_store.load_bm25_store` — the tf frame then comes from the
-    bucket-pruned, term-filtered PERSISTED postings (≤ q partition
+    from `bm25_store.load_bm25_store` — or ``(postings, meta, footers)``
+    with the postings footers the open read, which lets a small read run
+    on the driver tier (``_local_fanout_topk``). The tf frame then comes
+    from the bucket-pruned, term-filtered PERSISTED postings (≤ q partition
     directories of fixed-width rows; no corpus tokenize at all) and the
     stats from the store meta. The store rows are exactly this function's
     corpus-mode output — ``(id, _term, _tf, _dl)`` per (doc, term) — so
     every downstream scoring expression is shared verbatim between the two
     sources (value parity pinned in tests). ``stage`` is ignored with a
     store: both consumers re-scan the pruned parquet, which IS the staged
-    read (`bm25_store._score_postings` discipline).
+    read.
 
     dl rides with every exploded row (computed once per doc in the same
     projection) — scoring needs no corpus-sized join back for lengths."""
     if store is not None:
-        postings, meta = store
-        if meta["id_col"] != id_col or meta["text_col"] != text_col:
-            raise ValueError(
-                f"store indexes ({meta['id_col']!r}, {meta['text_col']!r}) "
-                f"but the call asks for ({id_col!r}, {text_col!r}) — wrong "
-                "store for this corpus"
-            )
+        postings, meta = store[:2]
+        _check_store(meta, id_col, text_col)
         from photo_vector_search_spark.operators.bm25_store import (
             _pruned_postings,
         )
@@ -163,16 +177,35 @@ def _tf_and_stats(
     return tf, n_docs, avgdl
 
 
-def _idf_expr(n_docs: float, df):
+def _check_store(meta: dict, id_col: str, text_col: str) -> None:
+    if meta["id_col"] != id_col or meta["text_col"] != text_col:
+        raise ValueError(
+            f"store indexes ({meta['id_col']!r}, {meta['text_col']!r}) "
+            f"but the call asks for ({id_col!r}, {text_col!r}) — wrong "
+            "store for this corpus"
+        )
+
+
+def _idf_expr(n_docs: float, df, lit=F.lit, log=F.log):
     """Lucene idf as a Catalyst expression — ONE definition so the
-    broadcast-join path and the folded-literal path share the exact
-    expression shape (same IEEE ops in the same order → bit-identical
-    doubles either way). ``df`` is either F.col("_df") (join path) or a
-    float literal (folded path; Catalyst constant-folds through the same
-    StrictMath.log the codegen path calls)."""
-    return F.log(
-        F.lit(1.0) + (F.lit(float(n_docs)) - df + F.lit(0.5)) / (df + F.lit(0.5))
-    )
+    broadcast-join path, the folded-literal path and the driver tier share
+    the exact expression shape (same IEEE ops in the same order →
+    bit-identical doubles every way). ``df`` is either F.col("_df") (join
+    path) or a float literal (folded path; Catalyst constant-folds through
+    the same StrictMath.log the codegen path calls); the driver tier passes
+    a float with ``lit=float`` and ``log=_strict_log``."""
+    return log(lit(1.0) + (lit(float(n_docs)) - df + lit(0.5)) / (df + lit(0.5)))
+
+
+@functools.lru_cache(maxsize=1 << 16)
+def _strict_log(x: float) -> float:
+    """``java.lang.StrictMath.log``, the log ``_idf_expr`` folds with. C's
+    ``math.log`` differs from it in the last bit for about 8 % of idf
+    arguments (1,123 of the 14,569 (N, df) pairs tried), so the driver tier
+    asks the JVM, once per distinct argument."""
+    from pyspark import SparkContext
+
+    return SparkContext._jvm.java.lang.StrictMath.log(x)
 
 
 def _scored_with_idf(tf, n_docs: int, fold: bool):
@@ -253,6 +286,11 @@ def bm25_scores(
     terms = query_terms(query)
     if not terms:
         raise ValueError("query has no terms after tokenization")
+    local = _single_store_query(
+        store, [(t, 1.0) for t in terms], None, k1, b, id_col, text_col
+    )
+    if local is not None:
+        return local.select(id_col, F.col("score").alias("bm25"), "n_terms")
 
     tf, n_docs, avgdl = _tf_and_stats(
         docs, terms, id_col, text_col, stage, "pvs_bm25_tf", store=store
@@ -260,7 +298,7 @@ def bm25_scores(
     if n_docs == 0 or avgdl == 0.0:
         # empty / all-empty corpus: nothing can match
         return local_frame(
-            docs.sparkSession, [], f"`{id_col}` long, bm25 double, n_terms long"
+            tf.sparkSession, [], f"`{id_col}` long, bm25 double, n_terms long"
         )
 
     scored = _scored_with_idf(tf, n_docs, fold=stage or store is not None)
@@ -335,6 +373,129 @@ def _batch_bm25(
     ).select(query_id_col, id_col, F.col("score").alias("bm25"), "rank")
 
 
+def _fanout_schema(qid_type, id_col, query_id_col) -> T.StructType:
+    return T.StructType([
+        T.StructField(query_id_col, qid_type),
+        T.StructField(id_col, T.LongType()),
+        T.StructField("score", T.DoubleType()),
+        T.StructField("n_terms", T.LongType()),
+        T.StructField("rank", T.IntegerType()),
+    ])
+
+
+def _local_fanout_topk(
+    spark, weighted, qid_type, k, k1, b, id_col, text_col, query_id_col, store
+) -> DataFrame | None:
+    """The driver tier of every store-served BM25 read (``operators/store.py``
+    states the tier rule): ``_fanout_topk``'s result, computed on the driver
+    from the pruned postings row groups read with pyarrow and returned as a
+    local relation, so collecting it runs no Spark job. ``k`` None keeps
+    every matching doc. None when ``store`` carries no postings footers (a
+    live view with side tables) or its pruned read, each row counted once
+    per query holding its term (the fan-out join below), is over
+    ``store.LOCAL_READ_ROWS``: the caller then runs its Spark plan.
+
+    The arithmetic is the Spark tier's: df counts the pruned rows per term,
+    idf is ``_idf_expr`` under StrictMath's log, a term score is
+    ``_idf * num / den`` (``_num_den``), a query's score is
+    ``round(Σ weight · term score, 6)`` (``spark_round6``), and each query
+    ranks by score descending, then id ascending."""
+    from photo_vector_search_spark.operators.bm25_store import term_bucket_py
+    from photo_vector_search_spark.operators.store import local_read
+
+    if store is None or len(store) < 3 or store[2] is None:
+        return None
+    _, meta, footers = store
+    _check_store(meta, id_col, text_col)
+    fanout = Counter(t for _, t, _ in weighted)
+    terms = sorted(fanout)
+    batches = local_read(
+        footers, "term_bucket",
+        {term_bucket_py(t, meta["n_buckets"]) for t in terms},
+        (id_col, "_term", "_tf", "_dl"), "_term", fanout,
+    )
+    if batches is None:
+        return None
+    schema = _fanout_schema(qid_type, id_col, query_id_col)
+    n_docs, sum_dl = int(meta["n_docs"]), meta["sum_dl"]
+    batches = list(batches)
+    if not (n_docs and sum_dl and batches):
+        return local_frame(spark, [], schema)
+    rows = pa.Table.from_batches(batches)
+    t_of = pc.fill_null(
+        pc.index_in(rows["_term"], value_set=pa.array(terms, pa.string())), -1
+    ).to_numpy()
+    hit = t_of >= 0
+    if not hit.any():
+        return local_frame(spark, [], schema)
+    t_of = t_of[hit]
+    ids = rows[id_col].to_numpy()[hit]
+    num, den = _num_den(
+        k1, b, sum_dl / n_docs,
+        rows["_tf"].to_numpy()[hit].astype(np.float64),
+        rows["_dl"].to_numpy()[hit].astype(np.float64),
+    )
+    df = np.bincount(t_of, minlength=len(terms))
+    idf = np.array([
+        _idf_expr(n_docs, float(d), float, _strict_log) if d else 0.0 for d in df
+    ])
+    term_score = idf[t_of] * num / den
+
+    # the fan-out join: each posting row once per query holding its term
+    qids = list(dict.fromkeys(q for q, _, _ in weighted))
+    pos = {t: i for i, t in enumerate(terms)}
+    qpos = {q: i for i, q in enumerate(qids)}
+    p_t, p_q, p_w = (
+        np.array(c) for c in zip(*sorted(
+            ((pos[t], qpos[q], float(w)) for q, t, w in weighted),
+            key=lambda p: p[0],
+        ))
+    )
+    per_term = np.bincount(p_t, minlength=len(terms))
+    reps = per_term[t_of]
+    row = np.repeat(np.arange(len(t_of)), reps)
+    within = np.arange(len(row)) - np.repeat(np.cumsum(reps) - reps, reps)
+    pair = (np.cumsum(per_term) - per_term)[t_of[row]] + within
+    q, doc, contrib = p_q[pair], ids[row], p_w[pair] * term_score[row]
+
+    # per (query, doc): Σ in row order, then per query: score desc, id asc
+    order = np.lexsort((doc, q))
+    q, doc, contrib = q[order], doc[order], contrib[order]
+    new = np.r_[True, (q[1:] != q[:-1]) | (doc[1:] != doc[:-1])]
+    group = np.cumsum(new) - 1
+    score = spark_round6(np.bincount(group, weights=contrib))
+    n_terms = np.bincount(group)
+    q, doc = q[new], doc[new]
+    order = np.lexsort((doc, -score, q))
+    q, doc, score, n_terms = q[order], doc[order], score[order], n_terms[order]
+    first = np.r_[True, q[1:] != q[:-1]]
+    rank = np.arange(len(q)) - np.maximum.accumulate(
+        np.where(first, np.arange(len(q)), 0)
+    ) + 1
+    keep = slice(None) if k is None else rank <= k
+    return local_frame(
+        spark,
+        list(zip(
+            [qids[i] for i in q[keep]], doc[keep].tolist(), score[keep].tolist(),
+            n_terms[keep].tolist(), rank[keep].tolist(),
+        )),
+        schema,
+    )
+
+
+def _single_store_query(store, term_weights, k, k1, b, id_col, text_col):
+    """A single-query read of a store on the driver tier — a one-query
+    fan-out (exact: a query's score is its own Σ weight · term score) —
+    as (id, score, n_terms, rank), or None for the Spark tier."""
+    if store is None:
+        return None
+    out = _local_fanout_topk(
+        store[0].sparkSession, [(0, t, w) for t, w in term_weights],
+        T.LongType(), k, k1, b, id_col, text_col, "query_id", store,
+    )
+    return None if out is None else out.drop("query_id")
+
+
 def _fanout_topk(
     spark, docs, weighted, qid_type, k, k1, b, id_col, text_col,
     query_id_col, stage, store, prefix,
@@ -342,7 +503,14 @@ def _fanout_topk(
     """Per-query top-k of Σ weight · bm25_term over ONE shared postings pass
     of the union of all queries' terms — (query_id, id, score, n_terms,
     rank). ``weighted``: (query_id, term, weight) triples, broadcast as a
-    local relation in the fan-out join."""
+    local relation in the fan-out join. A store read small enough runs on
+    the driver tier instead (``_local_fanout_topk``)."""
+    local = _local_fanout_topk(
+        spark, weighted, qid_type, k, k1, b, id_col, text_col, query_id_col,
+        store,
+    )
+    if local is not None:
+        return local
     wq = local_frame(
         spark, weighted,
         T.StructType([
@@ -357,14 +525,7 @@ def _fanout_topk(
     )
     if n_docs == 0 or avgdl == 0.0:
         return local_frame(
-            spark, [],
-            T.StructType([
-                T.StructField(query_id_col, qid_type),
-                T.StructField(id_col, T.LongType()),
-                T.StructField("score", T.DoubleType()),
-                T.StructField("n_terms", T.LongType()),
-                T.StructField("rank", T.IntegerType()),
-            ]),
+            spark, [], _fanout_schema(qid_type, id_col, query_id_col)
         )
     num, den = _num_den(k1, b, avgdl)
     postings = _scored_with_idf(
@@ -429,7 +590,7 @@ def bm25_scores_weighted(
     num, den = _num_den(k1, b, avgdl)
     return scored.groupBy(id_col).agg(
         F.round(
-            F.sum(wmap[F.col("_term")] * F.col("_idf") * num / den), 6
+            F.sum(wmap[F.col("_term")] * (F.col("_idf") * num / den)), 6
         ).alias("score"),
         F.count(F.lit(1)).alias("n_terms"),
     )
@@ -556,6 +717,9 @@ def rm3_topk(
         k1=k1, b=b, id_col=id_col, text_col=text_col, stage=stage,
         store=store,
     )
+    local = _single_store_query(store, weights, k, k1, b, id_col, text_col)
+    if local is not None:
+        return local
     scores = bm25_scores_weighted(
         docs, weights, k1=k1, b=b, id_col=id_col, text_col=text_col,
         stage=stage, store=store,
@@ -741,6 +905,18 @@ def bm25_topk(
     global sort, no window over the corpus."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
+    if store is not None:
+        _check_kb(k1, b)
+        terms = query_terms(query)
+        if not terms:
+            raise ValueError("query has no terms after tokenization")
+        local = _single_store_query(
+            store, [(t, 1.0) for t in terms], k, k1, b, id_col, text_col
+        )
+        if local is not None:
+            return local.select(
+                id_col, F.col("score").alias("bm25"), "n_terms", "rank"
+            )
     scores = bm25_scores(
         docs, query, k1=k1, b=b, id_col=id_col, text_col=text_col,
         stage=stage, store=store,

@@ -57,13 +57,16 @@ that is a small multiple of the corpus's TOKEN count in fixed-width rows —
 never the corpus text; df/idf is an agg over the already-pruned rows (they
 are read for scoring anyway); doclens stats ride from the meta row (base)
 or one narrow-column agg (live). The final top-k is TakeOrderedAndProject.
+A read whose pruned postings fit the driver tier (``operators/store.py``)
+runs no Spark job: ``bm25._local_fanout_topk`` scores the row groups on the
+driver, for every store read here and for a live view without side tables.
 """
 
 from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.functions.arrowkit import bounded_rows, local_frame
@@ -73,12 +76,12 @@ from photo_vector_search_spark.operators.bm25 import (
     BM25_K1,
     _batch_bm25,
     _check_kb,
-    _num_den,
-    _scored_with_idf,
-    query_terms,
+    bm25_scores,
+    bm25_topk,
 )
 from photo_vector_search_spark.operators.store import (
     TOMBSTONES,
+    OpenStore,
     clear_side_tables,
     delete_ids,
     live_overlay,
@@ -215,15 +218,27 @@ _META_SCHEMA = (
 )
 
 
-def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
-    """(postings, doclens, meta), opened by ``store.open_store``: all three
-    tables of ONE build, the postings signed by the ``.meta``."""
-    opened = open_store(
+def _open_bm25(spark, path: str) -> OpenStore:
+    return open_store(
         spark, path, "BM25", "build_bm25_store", tables=("", ".doclens"),
         meta=True,
     )
+
+
+def load_bm25_store(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
+    """(postings, doclens, meta), opened by ``store.open_store``: all three
+    tables of ONE build, the postings signed by the ``.meta``."""
+    opened = _open_bm25(spark, path)
     postings, doclens = opened.tables
     return postings, doclens, opened.meta.asDict()
+
+
+def _served(spark, path: str) -> tuple[DataFrame, dict, dict]:
+    """The ``store`` argument of the ``bm25.py`` scorers for the base
+    snapshot: (postings, meta, the postings footers the open read), which
+    lets a small read run on the driver tier."""
+    opened = _open_bm25(spark, path)
+    return opened.tables[0], opened.meta.asDict(), opened.footers[""]
 
 
 def _pruned_postings(
@@ -234,69 +249,6 @@ def _pruned_postings(
     buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     return postings.filter(F.col("term_bucket").isin(buckets)).filter(
         F.col("_term").isin(terms)
-    )
-
-
-def _score_postings(
-    pruned: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k1: float,
-    b: float,
-    id_col: str,
-) -> DataFrame:
-    """(id, bm25, n_terms) over an already-pruned postings frame — the
-    `bm25_scores` formula (Lucene idf), df collected from the same pruned
-    rows scoring reads anyway (a ≤|terms|-row job over the pruned parquet)
-    and folded into constant idf literals — no df subtree, no broadcast
-    join in the scoring plan (r13, the `bm25._scored_with_idf` discipline;
-    values bit-identical to the join shape, pinned in tests)."""
-    scored = _scored_with_idf(
-        pruned.select(id_col, "_term", "_tf", "_dl"), n_docs, fold=True
-    )
-    num, den = _num_den(k1, b, avgdl)
-    return scored.groupBy(id_col).agg(
-        F.round(F.sum(F.col("_idf") * num / den), 6).alias("bm25"),
-        F.count(F.lit(1)).alias("n_terms"),
-    )
-
-
-def _topk(scores: DataFrame, k: int, id_col: str) -> DataFrame:
-    top = scores.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(k)
-    return top.withColumn(
-        "rank",
-        F.row_number().over(
-            Window.orderBy(F.col("bm25").desc(), F.col(id_col).asc())
-        ),
-    ).select(id_col, "bm25", "n_terms", "rank")
-
-
-def _serve_topk(
-    spark,
-    postings: DataFrame,
-    meta: dict,
-    query: str,
-    k: int,
-    k1: float,
-    b: float,
-) -> DataFrame:
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    _check_kb(k1, b)
-    terms = query_terms(query)
-    if not terms:
-        raise ValueError("query has no terms after tokenization")
-    id_col = meta["id_col"]
-    if meta["sum_dl"] == 0:  # every indexed doc is empty: nothing can match
-        return local_frame(
-            spark, [], f"`{id_col}` long, bm25 double, n_terms long, rank int"
-        )
-    avgdl = meta["sum_dl"] / meta["n_docs"]
-    pruned = _pruned_postings(postings, terms, meta["n_buckets"])
-    return _topk(
-        _score_postings(pruned, meta["n_docs"], avgdl, k1, b, id_col),
-        k,
-        id_col,
     )
 
 
@@ -311,19 +263,11 @@ def bm25_store_scores(
     `bm25_scores` over the indexed corpus (and therefore its DuckDB twin)
     value-for-value, pinned in tests; one row per doc matching ≥1 query
     term, (id, bm25, n_terms)."""
-    _check_kb(k1, b)
-    terms = query_terms(query)
-    if not terms:
-        raise ValueError("query has no terms after tokenization")
-    postings, _doclens, meta = load_bm25_store(spark, path)
-    id_col = meta["id_col"]
-    if meta["sum_dl"] == 0:
-        return local_frame(
-            spark, [], f"`{id_col}` long, bm25 double, n_terms long"
-        )
-    pruned = _pruned_postings(postings, terms, meta["n_buckets"])
-    return _score_postings(
-        pruned, meta["n_docs"], meta["sum_dl"] / meta["n_docs"], k1, b, id_col
+    store = _served(spark, path)
+    meta = store[1]
+    return bm25_scores(
+        None, query, k1=k1, b=b, id_col=meta["id_col"],
+        text_col=meta["text_col"], store=store,
     )
 
 
@@ -340,8 +284,12 @@ def bm25_store_topk(
     scan reads ≤ q bucket partitions of fixed-width postings instead of
     tokenizing the corpus. Pending deltas are NOT consulted — that is
     `live_bm25_topk` (the `ivf_sq8_store_topk` convention)."""
-    postings, _doclens, meta = load_bm25_store(spark, path)
-    return _serve_topk(spark, postings, meta, query, k=k, k1=k1, b=b)
+    store = _served(spark, path)
+    meta = store[1]
+    return bm25_topk(
+        None, query, k=k, k1=k1, b=b, id_col=meta["id_col"],
+        text_col=meta["text_col"], store=store,
+    )
 
 
 def bm25_store_batch_topk(
@@ -365,7 +313,8 @@ def bm25_store_batch_topk(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     _check_kb(k1, b)
-    postings, _doclens, meta = load_bm25_store(spark, path)
+    store = _served(spark, path)
+    meta = store[1]
     qrows = bounded_rows(
         queries, (query_id_col, query_col), max_queries,
         f"bm25_store_batch_topk: >{max_queries} queries — split the query set "
@@ -376,7 +325,7 @@ def bm25_store_batch_topk(
     return _batch_bm25(
         spark, None, qrows, queries.schema[query_id_col].dataType, k, k1, b,
         meta["id_col"], meta["text_col"], query_id_col, query_col, True,
-        (postings, meta),
+        store,
     )
 
 
@@ -403,11 +352,12 @@ def rm3_store_topk(
     ONCE for both stages."""
     from photo_vector_search_spark.operators.bm25 import rm3_topk
 
-    postings, _doclens, meta = load_bm25_store(spark, path)
+    store = _served(spark, path)
+    meta = store[1]
     return rm3_topk(
         docs, query, k=k, fb_docs=fb_docs, fb_terms=fb_terms, alpha=alpha,
         k1=k1, b=b, id_col=meta["id_col"], text_col=meta["text_col"],
-        store=(postings, meta),
+        store=store,
     )
 
 
@@ -434,12 +384,13 @@ def rm3_store_batch_topk(
     `rm3_topk`) value-for-value, pinned in tests; store loaded ONCE."""
     from photo_vector_search_spark.operators.bm25 import rm3_batch_topk
 
-    postings, _doclens, meta = load_bm25_store(spark, path)
+    store = _served(spark, path)
+    meta = store[1]
     return rm3_batch_topk(
         docs, queries, k=k, fb_docs=fb_docs, fb_terms=fb_terms, alpha=alpha,
         k1=k1, b=b, id_col=meta["id_col"], text_col=meta["text_col"],
         query_id_col=query_id_col, query_col=query_col,
-        max_queries=max_queries, store=(postings, meta),
+        max_queries=max_queries, store=store,
     )
 
 
@@ -532,17 +483,30 @@ def _doc_stats(doclens: DataFrame) -> tuple[int, int]:
     return int(stats["n"]), int(stats["s"]) if stats["s"] is not None else 0
 
 
+def _open_live(spark, path: str):
+    """(live postings, live doclens, meta with LIVE n_docs/sum_dl, base
+    postings footers or None). Without side tables the base is the live
+    view: its stats are the ``.meta``'s, which the build or compaction
+    stamped from that same doclens table, and its footers let a small read
+    run on the driver tier. With them, live stats are ONE agg over the
+    narrow doclens view and reads stay on Spark."""
+    opened = _open_bm25(spark, path)
+    postings, doclens = opened.tables
+    meta = opened.meta.asDict()
+    live_post, live_dl = _live_tables(spark, path, postings, doclens, meta)
+    if live_post is postings and live_dl is doclens:
+        return postings, doclens, meta, opened.footers[""]
+    live_meta = dict(meta)
+    live_meta["n_docs"], live_meta["sum_dl"] = _doc_stats(live_dl)
+    return live_post, live_dl, live_meta, None
+
+
 def load_live_bm25(spark, path: str) -> tuple[DataFrame, DataFrame, dict]:
     """(live postings, live doclens, meta with LIVE n_docs/sum_dl): delta ∪
     (base anti dldelta-ids) − tombstones, every side table build-checked,
     under the membership rule of ``_live_tables``. The bucket/term filters
-    push through the union, so the base scan keeps its partition pruning;
-    live stats are ONE agg over the narrow doclens view."""
-    postings, doclens, meta = load_bm25_store(spark, path)
-    live_post, live_dl = _live_tables(spark, path, postings, doclens, meta)
-    live_meta = dict(meta)
-    live_meta["n_docs"], live_meta["sum_dl"] = _doc_stats(live_dl)
-    return live_post, live_dl, live_meta
+    push through the union, so the base scan keeps its partition pruning."""
+    return _open_live(spark, path)[:3]
 
 
 def live_bm25_topk(
@@ -556,13 +520,16 @@ def live_bm25_topk(
     """`bm25_store_topk` over the LIVE view (base + deltas − tombstones)
     with exact live (N, avgdl) — ≡ `bm25_topk` over the composed corpus,
     pinned in tests."""
-    live_post, _live_dl, live_meta = load_live_bm25(spark, path)
+    live_post, _live_dl, live_meta, footers = _open_live(spark, path)
+    id_col = live_meta["id_col"]
     if live_meta["n_docs"] == 0:
-        id_col = live_meta["id_col"]
         return local_frame(
             spark, [], f"`{id_col}` long, bm25 double, n_terms long, rank int"
         )
-    return _serve_topk(spark, live_post, live_meta, query, k=k, k1=k1, b=b)
+    return bm25_topk(
+        None, query, k=k, k1=k1, b=b, id_col=id_col,
+        text_col=live_meta["text_col"], store=(live_post, live_meta, footers),
+    )
 
 
 def compact_bm25_store(spark, path: str) -> int:
@@ -582,10 +549,8 @@ def compact_bm25_store(spark, path: str) -> int:
     for suffix in ("", ".doclens", ".meta"):
         recover_store(path + suffix)
     meta = read_meta(spark, path, "BM25 store").asDict()
-    live_post, live_dl = _live_tables(
-        spark, path, read_table(spark, path),
-        read_table(spark, path + ".doclens"), meta,
-    )
+    base = read_table(spark, path), read_table(spark, path + ".doclens")
+    live_post, live_dl = _live_tables(spark, path, *base, meta)
     live_post = live_post.localCheckpoint(eager=True)
     live_dl = live_dl.localCheckpoint(eager=True)
     n_docs, sum_dl = _doc_stats(live_dl)

@@ -32,7 +32,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows
+from photo_vector_search_spark.functions.arrowkit import bounded_rows, local_frame
 
 RRF_K = 60  # the paper's (and Elasticsearch's) default rank constant
 
@@ -141,10 +141,12 @@ def hybrid_store_search(
     c = pool if pool is not None else 3 * k
     if c < k:
         raise ValueError(f"pool ({c}) must be >= k ({k})")
+    # a one-row local relation: the embedding is evaluated on the driver,
+    # with no Spark job
     qv = [
         float(v)
-        for v in spark.range(1)
-        .select(stub_embedding_expr(_F.lit(query)).alias("qv"))
+        for v in local_frame(spark, [(query,)], "q string")
+        .select(stub_embedding_expr(_F.col("q")).alias("qv"))
         .first()["qv"]
     ]
     vec_run = ivf_sq8_store_topk(

@@ -29,12 +29,11 @@ from pyspark.sql import functions as F
 
 from photo_vector_search_spark.operators.sq import (
     SQ8Model,
+    _open_ivf_sq8,
     encode_sq8,
     ivf_sq8_topk,
-    load_ivf_sq8_store,
 )
 from photo_vector_search_spark.operators.store import (
-    _file_build_ids,
     clear_side_tables,
     delete_ids,
     live_view,
@@ -45,11 +44,11 @@ from photo_vector_search_spark.operators.store import (
 
 
 def _open(spark, path: str):
-    """``load_ivf_sq8_store`` plus the base's build id, read from the
-    footers the load has just checked (one build), not by a Spark job."""
-    base, centroids, model = load_ivf_sq8_store(spark, path)
-    (build,) = _file_build_ids(path)
-    return base, centroids, model, build
+    """``load_ivf_sq8_store`` plus the build id the open checked every part
+    against (the footers it read, not a second walk), and the base's
+    footers."""
+    opened, centroids, model = _open_ivf_sq8(spark, path)
+    return opened.tables[0], centroids, model, opened.build_id, opened.footers[""]
 
 
 def upsert_ivf_sq8_store(
@@ -67,7 +66,7 @@ def upsert_ivf_sq8_store(
     ``operators/store.py``."""
     from photo_vector_search_spark.operators.ann import assign_clusters
 
-    base, centroids, model, base_build = _open(spark, path)
+    base, centroids, model, base_build, _ = _open(spark, path)
 
     emb = new_embeddings
     if vec_col != "embedding":
@@ -104,14 +103,22 @@ def delete_from_ivf_sq8_store(spark, path: str, vec_ids, id_col: str = "vec_id")
     )
 
 
+def _open_live(spark, path: str, id_col: str = "vec_id"):
+    """(live view, centroids, model, base footers or None): the footers
+    only when no side table exists, so the live view is the base itself
+    and a small read may run on the driver tier."""
+    base, centroids, model, base_build, footers = _open(spark, path)
+    live = live_view(spark, path, base, base_build, id_col)
+    return live, centroids, model, footers if live is base else None
+
+
 def load_live_ivf_sq8(
     spark, path: str, id_col: str = "vec_id"
 ) -> tuple[DataFrame, np.ndarray, SQ8Model]:
     """The serving view: delta ∪ (base anti delta-ids) anti tombstones,
     with every side-table verified against the base build. Probe filters
     push through the union, so base partition pruning is preserved."""
-    base, centroids, model, base_build = _open(spark, path)
-    return live_view(spark, path, base, base_build, id_col), centroids, model
+    return _open_live(spark, path, id_col)[:3]
 
 
 def live_ivf_sq8_topk(
@@ -123,13 +130,14 @@ def live_ivf_sq8_topk(
     rerank: int | None = None,
     rerank_source: DataFrame | None = None,
 ) -> DataFrame:
-    """ivf_sq8_store_topk over the LIVE view (base + delta − tombstones)."""
+    """ivf_sq8_store_topk over the LIVE view (base + delta − tombstones);
+    without side tables, a small read runs on the driver tier."""
     if rerank is not None and rerank_source is None:
         raise ValueError(
             "rerank over a persisted IVF,SQ8 store needs rerank_source — the "
             "store holds codes only; pass the source embeddings frame"
         )
-    live, centroids, model = load_live_ivf_sq8(spark, path)
+    live, centroids, model, footers = _open_live(spark, path)
     return ivf_sq8_topk(
         live,
         centroids,
@@ -139,6 +147,7 @@ def live_ivf_sq8_topk(
         nprobe=nprobe,
         rerank=rerank,
         rerank_source=rerank_source,
+        footers=footers,
     )
 
 

@@ -21,6 +21,10 @@ re-scores survivors EXACTLY from the float column — with a pool a few
 multiples of k, the result matches exact knn at a fraction of the scan
 bytes (100 TB of float64 embeddings is 12.5 TB of codes).
 
+A single read of a persisted IVF,SQ8 store whose probed clusters fit the
+driver tier (``operators/store.py`` states the rule and the bound) runs
+the same kernel, ``_sq8_topc``, on the driver and returns a local relation.
+
 Cf. reference scope: the reference's ChromaDB/HNSW store
 (photo_vector_search.py:17-20) keeps raw float vectors; this extends the
 mandated similarity-search family's storage/serving axis.
@@ -35,9 +39,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows
+from photo_vector_search_spark.functions.arrowkit import (
+    bounded_rows,
+    fixed_matrix,
+    local_frame,
+    spark_round6,
+)
 from photo_vector_search_spark.operators.store import (
+    OpenStore,
     kind_vectors,
+    local_read,
     open_store,
     snapshot_overwrite,
     write_kind_vectors,
@@ -118,6 +129,57 @@ def encode_sq8(
     return emb.mapInPandas(_encode, schema=out_schema)
 
 
+def _sq8_topc(vec_id, label, codes, vmin, step, q, qnorm, c):
+    """The asymmetric SQ8 cosine kernel of one group of rows: decode
+    ``codes`` (float64, one row per vector), score every row against the
+    float query ``q`` and keep the ``c`` nearest by (distance, vec_id) —
+    (vec_id, label, distance) arrays; zero-norm rows never rank. A row's
+    distance is computed from that row alone (``einsum``'s own loop along
+    the row, not a BLAS matrix-vector product whose blocking depends on
+    the batch), so it is the same double however rows are grouped: the
+    Spark tier calls this once per Arrow batch, the driver tier once per
+    ``store.local_read`` batch, and both merge the survivors by
+    (distance, vec_id)."""
+    order = np.argsort(vec_id, kind="stable")
+    vec_id, label, codes = vec_id[order], label[order], codes[order]
+    x = vmin + codes * step
+    nrm = np.linalg.norm(x, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        dist = 1.0 - np.einsum("ij,j->i", x, q) / (nrm * qnorm)
+    top = np.argsort(dist, kind="stable")[: min(c, len(dist))]
+    top = top[np.isfinite(dist[top])]
+    return vec_id[top], label[top], dist[top]
+
+
+def _local_sq8_topk(spark, batches, model: SQ8Model, q, qn, k) -> DataFrame:
+    """The driver tier of an IVF,SQ8 store read (``operators/store.py``):
+    ``_sq8_topc`` over each batch of probed rows (``store.local_read``),
+    the survivors merged by (distance, vec_id) into the top ``k`` with
+    Spark's rounding (``spark_round6``), as a local relation."""
+    schema = "vec_id long, label int, dist double, rank int"
+    found = []
+    for batch in batches:
+        codes, keep = fixed_matrix(batch.column("sq8"), len(model.vmin))
+        if codes is not None:
+            found.append(_sq8_topc(
+                batch.column("vec_id").to_numpy()[keep],
+                batch.column("label").to_numpy()[keep],
+                codes, model.vmin, model.scale, q, qn, k,
+            ))
+    if not found:
+        return local_frame(spark, [], schema)
+    vec_id, label, dist = (np.concatenate(c) for c in zip(*found))
+    top = np.lexsort((vec_id, dist))[:k]
+    return local_frame(
+        spark,
+        list(zip(
+            vec_id[top].tolist(), label[top].tolist(),
+            spark_round6(dist[top]).tolist(), range(1, len(top) + 1),
+        )),
+        schema,
+    )
+
+
 def sq8_topk(
     coded: DataFrame,
     model: SQ8Model,
@@ -156,21 +218,12 @@ def sq8_topk(
             pdf = pdf.dropna(subset=["_code"])
             if not len(pdf):
                 continue
-            pdf = pdf.sort_values("vec_id", kind="stable").reset_index(drop=True)
-            codes = np.vstack(pdf["_code"].to_numpy()).astype(np.float64)
-            x = vmin + codes * step
-            nrm = np.linalg.norm(x, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                dist = 1.0 - (x @ qv) / (nrm * qnorm)
-            order = np.argsort(dist, kind="stable")[: min(c, len(pdf))]
-            order = order[np.isfinite(dist[order])]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[order],
-                    "label": pdf["label"].to_numpy()[order],
-                    "_dist": dist[order],
-                }
+            vec_id, label, dist = _sq8_topc(
+                pdf["vec_id"].to_numpy(), pdf["label"].to_numpy(),
+                np.vstack(pdf["_code"].to_numpy()).astype(np.float64),
+                vmin, step, qv, qnorm, c,
             )
+            yield pd.DataFrame({"vec_id": vec_id, "label": label, "_dist": dist})
 
     survivors = coded.select(
         "vec_id", "label", F.col(code_col).alias("_code")
@@ -523,17 +576,19 @@ def build_ivf_sq8_store(
     return centroids, model
 
 
-def load_ivf_sq8_store(spark, path: str) -> tuple[DataFrame, np.ndarray, SQ8Model]:
-    """(codes frame partitioned by cluster_id, centroid matrix, SQ8Model),
-    opened by ``store.open_store``."""
+def _open_ivf_sq8(spark, path: str) -> tuple[OpenStore, np.ndarray, SQ8Model]:
     opened = open_store(
         spark, path, "IVF,SQ8", "build_ivf_sq8_store", sidecar=".ivfsqmeta"
     )
     vecs = kind_vectors(opened.rows, ("centroid", "vmin", "vmax"), "centroid_id")
-    return (
-        opened.tables[0], vecs["centroid"],
-        SQ8Model(vecs["vmin"][0], vecs["vmax"][0]),
-    )
+    return opened, vecs["centroid"], SQ8Model(vecs["vmin"][0], vecs["vmax"][0])
+
+
+def load_ivf_sq8_store(spark, path: str) -> tuple[DataFrame, np.ndarray, SQ8Model]:
+    """(codes frame partitioned by cluster_id, centroid matrix, SQ8Model),
+    opened by ``store.open_store``."""
+    opened, centroids, model = _open_ivf_sq8(spark, path)
+    return opened.tables[0], centroids, model
 
 
 def ivf_sq8_store_topk(
@@ -550,16 +605,17 @@ def ivf_sq8_store_topk(
     search. Because the store is hive-partitioned by cluster_id, the probe
     filter prunes Parquet PARTITIONS — the scan reads ~nprobe/n_clusters of
     the already-8×-compressed bytes (both levers audited in
-    tests/test_ivf_sq8_store.py on runtime scan metrics). ``rerank``
-    requires ``rerank_source``: the store holds codes only."""
+    tests/test_ivf_sq8_store.py on runtime scan metrics). A small probed
+    read runs on the driver tier (``ivf_sq8_topk``'s ``footers``).
+    ``rerank`` requires ``rerank_source``: the store holds codes only."""
     if rerank is not None and rerank_source is None:
         raise ValueError(
             "rerank over a persisted IVF,SQ8 store needs rerank_source — the "
             "store holds codes only; pass the source embeddings frame"
         )
-    coded, centroids, model = load_ivf_sq8_store(spark, path)
+    opened, centroids, model = _open_ivf_sq8(spark, path)
     return ivf_sq8_topk(
-        coded,
+        opened.tables[0],
         centroids,
         model,
         query_vec,
@@ -567,6 +623,7 @@ def ivf_sq8_store_topk(
         nprobe=nprobe,
         rerank=rerank,
         rerank_source=rerank_source,
+        footers=opened.footers[""],
     )
 
 
@@ -579,6 +636,7 @@ def ivf_sq8_topk(
     nprobe: int = 4,
     rerank: int | None = None,
     rerank_source: DataFrame | None = None,
+    footers: dict | None = None,
 ) -> DataFrame:
     """IVF-pruned SQ8 search — the FAISS ``IVF,SQ8`` composition: probe the
     ``nprobe`` nearest coarse clusters (driver argsort over the broadcast
@@ -592,7 +650,13 @@ def ivf_sq8_topk(
     clusters degenerates to exactly ``sq8_topk`` (pinned in tests);
     recall at nprobe < n_clusters follows IVF geometry (see
     tools/ivf_recall.py — clustered corpora probe a fraction, uniform is
-    the honest worst case)."""
+    the honest worst case).
+
+    ``footers``: the parquet footers of the store table ``coded`` reads
+    unchanged (``OpenStore.footers``). With them, a read of the probed
+    clusters within ``store.LOCAL_READ_ROWS`` row visits (one per 64 code
+    values) and no ``rerank`` runs on the driver tier
+    (``_local_sq8_topk``), with the same result."""
     if not 1 <= nprobe <= len(centroids):
         raise ValueError(
             f"nprobe must be in [1, {len(centroids)}], got {nprobe}"
@@ -611,6 +675,15 @@ def ivf_sq8_topk(
     with np.errstate(divide="ignore", invalid="ignore"):
         sims = (centroids @ q) / (cn * qn)
     probe = [int(i) for i in np.argsort(-sims)[:nprobe]]
+    if rerank is None and footers is not None:
+        if k < 1:
+            raise ValueError(f"k must be >= 1, got {k}")
+        batches = local_read(
+            footers, "cluster_id", probe, ("vec_id", "label", "sq8"),
+            row_cost=len(model.vmin) / 64,  # a visit per 64 code values
+        )
+        if batches is not None:
+            return _local_sq8_topk(coded.sparkSession, batches, model, q, qn, k)
     pruned = coded.filter(F.col("cluster_id").isin(probe))
     return sq8_topk(
         pruned,

@@ -43,6 +43,40 @@ reopens its one persistent index per call, photo_vector_search.py:16-20):
   (``read_table``), so Spark infers nothing; partition columns are still
   discovered from the paths. Side tables open the same way.
 
+Driver-local read tier. A serving read of the BM25 postings store or the
+IVF,SQ8 store is KB of data, and every Spark job behind it costs 65-400 ms
+on a 4-core host. The open already holds every base footer
+(``OpenStore.footers``), so the tier is chosen from them with no further
+read: ``local_read`` sums the row visits of the row groups the call would
+read — for BM25 the row groups in the query's ``term_bucket=`` directories
+whose ``_term`` min/max covers a query term, a row visited once per query
+of the batch that holds its term; for IVF,SQ8 the files in the probed
+``cluster_id=`` directories, a row visited once per 64 code values it
+decodes. Within ``LOCAL_READ_ROWS`` (2^19 visits) it reads exactly those
+row groups with pyarrow, ``LOCAL_BATCH_ROWS`` rows at a time, the caller
+scores them with numpy by the Spark tier's formulas and returns the
+result as a local relation (``arrowkit.local_frame``), whose collect runs
+no Spark job. Over the bound the caller runs its Spark plan unchanged, so
+a 100 TB store still reads on Spark. Only footer statistics choose the
+tier — no flag, argument or environment variable does. A live view with
+side tables, MaxSim and the batch IVF paths stay on Spark.
+
+The bound is where the tiers cross. Warm median wall, driver tier against
+Spark tier, 4-core host, one read of a whole synthetic store: IVF,SQ8 at
+64-d 0.60/0.87 s at 2^18 rows, 1.44/1.51 s at 2^19 and 2.01/1.69 s at
+2^20; at 512-d 0.89/0.91 s at 2^16 rows, 1.84/2.01 s at 2^17 and
+3.82/2.46 s at 2^18; at 768-d 0.57/0.96 s at 2^15 rows and 1.43/1.29 s
+at 2^16. The driver's cost follows rows × dim: in visits the crossings
+lie near 2^19 at 64-d, between 2^20 and 2^21 at 512-d and between 2^18.6
+and 2^19.6 at 768-d, and the bound takes the low end. BM25, a 3-term
+query: the driver tier won at every size measured, 0.62/1.11 s for one
+query over 1.27M rows, and for 8 queries 0.31/1.18 s at 630k visits and
+0.36/1.46 s at 897k. Peak driver RSS growth near the bound: 15 MB for
+the 64-d IVF read of 2^19 rows and 91 MB for the 768-d one of 2^16 (the
+IVF tier holds a few float64 copies of one batch at a time), 84 MB for
+the 8-query BM25 batch of 897k visits (it holds its read and its
+fan-out).
+
 Incremental maintenance (the delta-segment + tombstone pattern of LSM-backed
 indexes; cf. the reference upserting its index one directory at a time,
 photo_vector_search.py:84-117, and deleting by key, :195-215). The four
@@ -208,7 +242,17 @@ def _store_signature(path: str, files: list[str] | None = None) -> str:
     return hashlib.md5("\n".join(sorted(entries)).encode()).hexdigest()
 
 
-def _file_build_ids(path: str, files: list[str] | None = None) -> set:
+def _footers(files: list[str]) -> dict:
+    """{file: parquet footer} of every ``.parquet`` file in ``files`` — the
+    one footer read of an open; driver-side metadata, no Spark job."""
+    import pyarrow.parquet as pq
+
+    return {f: pq.read_metadata(f) for f in files if f.endswith(".parquet")}
+
+
+def _file_build_ids(
+    path: str, files: list[str] | None = None, footers: dict | None = None
+) -> set:
     """Every distinct ``build_id`` under ``path`` — from parquet FOOTER
     statistics, driver-side, O(files) metadata reads, no Spark job (a
     per-row ``distinct().collect()`` would scan the whole store per load —
@@ -220,14 +264,14 @@ def _file_build_ids(path: str, files: list[str] | None = None) -> set:
     (bounded, never store-sized); a NULL or a missing column surfaces as
     ``None`` in the set, which can never equal any expected id. An empty set
     means zero data files / zero row groups — the never-built case.
-    ``files``: as in ``_store_signature``."""
+    ``files``: as in ``_store_signature``; ``footers``: ``_footers(files)``
+    when the caller already read them."""
     import pyarrow.parquet as pq
 
+    if footers is None:
+        footers = _footers(_data_files(path) if files is None else files)
     builds: set = set()
-    for full in _data_files(path) if files is None else files:
-        if not full.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(full).metadata
+    for full, md in footers.items():
         try:
             col_idx = md.schema.names.index("build_id")
         except ValueError:
@@ -241,37 +285,45 @@ def _file_build_ids(path: str, files: list[str] | None = None) -> set:
                 break
             if st.null_count not in (0, None):
                 builds.add(None)
-            for v in (st.min, st.max):
-                builds.add(v.decode("utf-8", "replace") if isinstance(v, bytes) else v)
+            builds.update(_stat_values(st))
     return builds
+
+
+def _stat_values(stats) -> tuple:
+    """(min, max) of a row group's column statistics, strings decoded."""
+    return tuple(
+        v.decode("utf-8", "replace") if isinstance(v, bytes) else v
+        for v in (stats.min, stats.max)
+    )
 
 
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_schema(file: str) -> StructType | None:
-    """The Spark schema Spark's parquet writer stored in ``file``'s footer
-    (partition columns are not in it), or None for a file written outside
-    Spark."""
-    import pyarrow.parquet as pq
-
-    raw = (pq.read_metadata(file).metadata or {}).get(_SPARK_SCHEMA_KEY)
-    return StructType.fromJson(json.loads(raw)) if raw else None
-
-
-def read_table(spark, path: str, files: list[str] | None = None) -> DataFrame:
+def read_table(
+    spark, path: str, files: list[str] | None = None, footers: dict | None = None
+) -> DataFrame:
     """The parquet table at ``path`` as a lazy frame, with no Spark job:
     the schema is the one Spark stored in the footer of the first of its
-    data files (``files``, when the caller already walked the directory),
-    so Spark infers nothing; partition columns are still discovered from
-    the paths. A table whose footer lacks Spark's schema (written outside
-    Spark) or that has no file is left to ``spark.read.parquet``'s own
-    inference. Past 32 partition directories Spark lists them with a
-    parallel job of its own."""
-    if files is None:
-        files = _data_files(path)
-    parts = sorted(f for f in files if f.endswith(".parquet"))
-    schema = _footer_schema(parts[0]) if parts else None
+    data files (``files``, when the caller already walked the directory;
+    ``footers``, when it already read them), so Spark infers nothing;
+    partition columns are still discovered from the paths. A table whose
+    footer lacks Spark's schema (written outside Spark) or that has no file
+    is left to ``spark.read.parquet``'s own inference. Past 32 partition
+    directories Spark lists them with a parallel job of its own."""
+    import pyarrow.parquet as pq
+
+    if footers is None:
+        if files is None:
+            files = _data_files(path)
+        parts = sorted(f for f in files if f.endswith(".parquet"))
+        footers = {parts[0]: pq.read_metadata(parts[0])} if parts else {}
+    raw = (
+        (footers[min(footers)].metadata or {}).get(_SPARK_SCHEMA_KEY)
+        if footers
+        else None
+    )
+    schema = StructType.fromJson(json.loads(raw)) if raw else None
     return (spark.read if schema is None else spark.read.schema(schema)).parquet(
         path
     )
@@ -344,11 +396,17 @@ def snapshot_overwrite(df: DataFrame, path: str, partition_by: list[str] | None 
 
 class OpenStore(NamedTuple):
     """``open_store``'s result: ``tables`` as lazy frames, in the order
-    asked, the ``sidecar`` rows and the ``.meta`` row, read on the driver."""
+    asked, the ``sidecar`` rows and the ``.meta`` row, read on the driver,
+    the ``build_id`` every part was checked against, and the parquet
+    ``footers`` the build check read, ``{table suffix: {file: footer}}``
+    (empty when the store opens with ``footer=False``) — what the driver
+    tier sizes its reads from (module docstring)."""
 
     tables: list
     rows: list
     meta: Row | None
+    build_id: str | None
+    footers: dict
 
 
 def open_store(
@@ -386,8 +444,10 @@ def open_store(
     meta_row = read_meta(spark, path, f"{kind} store") if meta else None
     rows = read_rows(path + sidecar, order_by) if sidecar else []
     files = {t: _data_files(path + t) for t in tables}  # one walk per table
+    footers = {t: _footers(files[t]) for t in tables} if footer else {}
     builds = {
-        t or "base": _file_build_ids(path + t, files[t]) for t in tables if footer
+        t or "base": _file_build_ids(path + t, footers=f)
+        for t, f in footers.items()
     }
     if sidecar:
         builds[sidecar] = {r["build_id"] for r in rows}
@@ -415,7 +475,81 @@ def open_store(
             f"engine; re-run {builder}"
         )
     return OpenStore(
-        [read_table(spark, path + t, files[t]) for t in tables], rows, meta_row
+        [read_table(spark, path + t, files[t], footers.get(t)) for t in tables],
+        rows,
+        meta_row,
+        next(iter(want)) if len(want) == 1 else None,
+        footers,
+    )
+
+
+# ---------------------------------------------------------------------------
+# the driver-local read tier (module docstring)
+# ---------------------------------------------------------------------------
+
+# The most row visits a serving read may take through the driver tier,
+# counted from the footers of the row groups it would read: where the
+# tiers cross (module docstring).
+LOCAL_READ_ROWS = 1 << 19
+# The rows the driver tier reads at a time. IVF,SQ8 also scores one batch
+# at a time, so its decoded floats peak at one batch, as a Spark task's do
+# at one Arrow batch.
+LOCAL_BATCH_ROWS = 1 << 12
+
+
+def _fanout(stats, keys: dict) -> int:
+    """The most visits one row of a row group may take: the largest
+    ``keys`` fan-out among the keys its column min/max covers (0 when it
+    covers none; without usable statistics, the largest of all)."""
+    if stats is None or not stats.has_min_max:
+        return max(keys.values(), default=0)
+    lo, hi = _stat_values(stats)
+    return max((w for k, w in keys.items() if lo <= k <= hi), default=0)
+
+
+def local_read(
+    footers: dict, partition: str, values, columns, column=None, keys=None,
+    row_cost=1,
+):
+    """The driver tier's read of a hive-partitioned table: the row groups
+    of the files under ``partition=value`` directories for ``values`` —
+    only those whose ``column`` min/max covers one of ``keys``, when
+    ``column`` is given — as pyarrow record batches of ``columns`` of at
+    most ``LOCAL_BATCH_ROWS`` rows, in file order, read lazily.
+
+    A row group costs its rows times the visits each row takes:
+    ``row_cost`` times, when ``column`` is given, the largest fan-out
+    among the keys it may hold — ``keys`` maps each key to its fan-out
+    (for a BM25 batch, the queries holding the term). None, reading
+    nothing, when the cost by the ``footers`` (``OpenStore.footers`` of
+    the table) is over ``LOCAL_READ_ROWS``: the caller then runs its Spark
+    plan."""
+    import pyarrow.parquet as pq
+
+    dirs = {f"{partition}={v}" for v in values}
+    picked, cost = [], 0
+    for file in sorted(footers):
+        if os.path.basename(os.path.dirname(file)) not in dirs:
+            continue
+        md = footers[file]
+        idx = md.schema.names.index(column) if column is not None else None
+        groups = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            fan = 1 if idx is None else _fanout(rg.column(idx).statistics, keys)
+            if fan:
+                groups.append(g)
+                cost += rg.num_rows * fan * row_cost
+        if groups:
+            picked.append((file, groups))
+    if cost > LOCAL_READ_ROWS:
+        return None
+    return (
+        batch
+        for f, groups in picked
+        for batch in pq.ParquetFile(f, metadata=footers[f]).iter_batches(
+            LOCAL_BATCH_ROWS, row_groups=groups, columns=list(columns)
+        )
     )
 
 
@@ -482,7 +616,8 @@ def side_table(spark, path: str, suffix: str, build_id: str) -> DataFrame | None
     files = [f for f in _data_files(side) if f.endswith(".parquet")]
     if not files:
         return None
-    builds = _file_build_ids(side, files)  # footer stats, no table scan
+    footers = _footers(files)
+    builds = _file_build_ids(side, footers=footers)  # no table scan
     if builds and builds != {build_id}:
         raise ValueError(
             f"{_SIDE_KINDS[suffix]} at {side!r} is from build "
@@ -490,7 +625,7 @@ def side_table(spark, path: str, suffix: str, build_id: str) -> DataFrame | None
             f"{build_id!r} — it was written against different "
             "centroids/ranges; compact or rebuild before serving"
         )
-    return read_table(spark, side, files)
+    return read_table(spark, side, footers=footers)
 
 
 def side_tables(spark, path: str, build_id: str, suffixes=(".delta", TOMBSTONES)):

@@ -1434,7 +1434,7 @@ def ccnet_keep(
     columns. ``keep_unscored=True`` also retains < 2-token docs (no LM
     evidence either way); the default drops them, matching the
     every-kept-doc-was-scored invariant downstream stats rely on."""
-    labels = set(keep) | ({"unscored"} if keep_unscored else set())
+    labels = sorted(set(keep) | ({"unscored"} if keep_unscored else set()))
     return bucketed.filter(F.col("bucket").isin(*labels)).drop("nll", "bucket")
 
 

@@ -543,21 +543,28 @@ NOTES = {
         "materialized-index rung of the lexical family, the Lucene "
         "architecture at rest as Parquet: postings (id, term, tf, dl) "
         "hive-partitioned by md5(term) mod n_buckets and term-sorted "
-        "within files, so a q-term query prunes to <= q bucket "
-        "DIRECTORIES at file-listing time and then to matching row "
-        "groups via term min/max; serving never re-tokenizes the corpus. "
-        "One narrow doclens sidecar gives exact live (N, avgdl) after "
-        "upserts; content-hash build_id + store_sig across postings/"
-        "doclens/meta refuse torn builds. Serving == bm25_topk AND its "
-        "DuckDB twin value-for-value; realized directory pruning on "
-        "runtime scan metrics in tests/test_bm25_store.py."
+        "within files, so a q-term query reads <= q bucket DIRECTORIES "
+        "and within them only the row groups whose term min/max covers a "
+        "query term). The plan is a bare LocalTableScan: the footers the "
+        "open reads for its build check size that read, it is under "
+        "store.LOCAL_READ_ROWS, so the driver tier reads those row groups "
+        "with pyarrow, scores them with the Spark tier's formulas in "
+        "numpy and returns a local relation — 0 Spark jobs. Over the "
+        "bound the same call runs the pruned scan + folded-idf agg + "
+        "TakeOrdered plan. Driver tier == Spark tier row for row in "
+        "tests/test_driver_tier.py; serving == bm25_topk and its DuckDB "
+        "twin in tests/test_bm25_store.py."
     ),
     "bm25_store_batch8": (
         "NOTE: library operator (r12 batched store serving — Q queries "
-        "share ONE pruned postings scan over the union of their terms' "
-        "buckets; broadcast (qid, term) fan-out join + per-query bounded "
-        "window; == a per-query loop of bm25_store_topk, pinned in "
-        "tests/test_bm25_store.py)."
+        "share ONE pruned read over the union of their terms' buckets). "
+        "The plan is a bare LocalTableScan: the union read is under "
+        "store.LOCAL_READ_ROWS by the store footers, so the fan-out "
+        "scoring runs on the driver (bm25._local_fanout_topk) and the "
+        "one Spark job left is the read of the caller's query frame. "
+        "Over the bound: broadcast (qid, term) fan-out join + per-query "
+        "window. == a per-query loop of bm25_store_topk, pinned in "
+        "tests/test_bm25_store.py."
     ),
     "live_bm25_search": (
         "NOTE: library operator (r12 incremental maintenance for the "
@@ -641,13 +648,13 @@ NOTES = {
         "composition of three audited batched rungs, no new physical "
         "plan: query texts stub-embed driver-side (Q bounded rows), "
         "knn_batch_fast retrieves the vector pool for ALL queries in one "
-        "map-side-matmul pass (shuffle O(batches*Q*pool)), "
-        "bm25_batch_topk retrieves the lexical pool in one shared "
-        "postings pass, rrf_fuse merges per query over rank lists "
+        "map-side-matmul pass (shuffle O(batches*Q*pool)), the lexical "
+        "pool comes from bm25_store_batch_topk over the persisted BM25 "
+        "store (a LocalTableScan here: its union read is under the driver "
+        "tier's bound), and rrf_fuse merges per query over rank lists "
         "bounded by runs*pool rows/query. Per-query termless inputs are "
-        "refused (the per-query operator raises; a batch silently "
-        "serving vector-only results for them would diverge). Batch == "
-        "per-query hybrid_text_search loop in tests/test_hybrid_search.py."
+        "refused. Batch == per-query hybrid_text_search loop in "
+        "tests/test_hybrid_search.py."
     ),
     "live_maxsim_search": (
         "NOTE: library operator (r12 incremental MaxSim store maintenance "
@@ -715,19 +722,19 @@ NOTES = {
         "tests/test_cross_dedup_store.py."
     ),
     "rm3_batch8": (
-        "NOTE: library operator (r12 batched RM3 — the batched-serving "
-        "contract extended to lexical PRF; the single-query loop pays 2 "
-        "corpus passes per query, so Q queries cost 2Q). Stage 1: ONE "
-        "bm25_batch feedback pass (all queries' terms share the "
-        "postings explode). Relevance models: ONE explode over the UNION "
-        "of all queries' feedback docs joined to a broadcast (query_id, "
-        "doc_id, P(D)) frame, per-(query, term) sum, bounded per-query "
-        "top-fb_terms window. Stage 2: ONE shared postings pass over the "
-        "union of expanded terms with a broadcast (query_id, term, "
-        "weight) fan-out — the bm25_batch_topk scoring shape with one "
-        "extra multiply. Batch == per-query rm3_topk loop and the "
-        "alpha=1 identity in tests/test_prf_batch.py. 5.8 s for 8 "
-        "queries at sf0.1 vs ~29 s looped."
+        "NOTE: library operator (r13 batched RM3 served from the persisted "
+        "BM25 store). The query frame is read once; stage 1 (feedback "
+        "top-fb_docs) and stage 2 (weighted rescore over the union of "
+        "expanded terms) both read the store, and at this size both are "
+        "under store.LOCAL_READ_ROWS, so each is scored on the driver and "
+        "the audited frame is the stage-2 local relation (bare "
+        "LocalTableScan). The Spark work left runs before it: the "
+        "relevance-model explode over the UNION of the queries' feedback "
+        "docs (id-filtered docs scan, broadcast (query_id, doc_id, P(D)) "
+        "join, per-(query, term) sum, bounded per-query top-fb_terms "
+        "window). Batch == per-query rm3_topk loop in "
+        "tests/test_prf_batch.py; store == corpus RM3 in "
+        "tests/test_bm25_store.py."
     ),
     "rocchio_batch8": (
         "NOTE: library operator (r12 batched Rocchio — dense PRF under "
@@ -952,12 +959,15 @@ NOTES = {
         "claim). build trains centroids + fits the SQ8 range, writes the "
         "CODES-ONLY rows partitionBy(cluster_id) plus ONE sidecar "
         "(centroids + vmin/vmax) under a shared content-hash build_id; "
-        "load refuses a torn store/sidecar pair (the build_ivf_store "
-        "crash-consistency contract). The audited plan is the serving "
-        "read: the probe IN-list prunes Parquet PARTITIONS (runtime scan "
-        "metrics asserted in tests/test_ivf_sq8_store.py), so the scan "
-        "reads nprobe/n_clusters of already-8x-compressed bytes before "
-        "the map-only decode-matmul + TakeOrdered."
+        "load refuses a torn store/sidecar pair. The plan is a bare "
+        "LocalTableScan: the probed clusters' files cost fewer row visits "
+        "than store.LOCAL_READ_ROWS by the footers the open read, so the "
+        "driver tier reads just those files with pyarrow and runs the "
+        "same decode kernel (sq._sq8_topc) on the driver — 0 Spark jobs. "
+        "Over the bound: the probe IN-list prunes Parquet PARTITIONS "
+        "(runtime scan metrics in tests/test_ivf_sq8_store.py) before the "
+        "map-only decode + TakeOrdered. Both tiers give the same rows "
+        "(tests/test_driver_tier.py)."
     ),
     "ivf_sq8_topk": (
         "NOTE: library operator (r10 FAISS-style IVF,SQ8 composition). "
@@ -1133,8 +1143,8 @@ NOTES = {
     "video_near_dup": (
         "NOTE: library operator (video rollup of the pHash family). "
         "Frame sampling + pHash are map-only Arrow passes; the corpus-sized "
-        "shuffle is the pair-band hamming join (see hamming_pairs), and the "
-        "rollup exchange moves only verified frame-pair rows."
+        "shuffle is the pair-band hamming join (see image_near_dup), and "
+        "the rollup exchange moves only verified frame-pair rows."
     ),
     "corrupt_spans": (
         "NOTE: library operator (T5 span corruption, shown over an unstaged "
@@ -1149,13 +1159,15 @@ NOTES = {
         "corpus-sized shuffle is the per-doc overlap count."
     ),
     "image_near_dup": (
-        "NOTE: library operator (image near-dup). Hash source here is a "
-        "derived column (the real pHash pass is map-only Arrow); the audited "
-        "shape is the pair-of-bands explode (r7b multi-index: 28 16-bit keys, "
-        "exact for distance ≤ n_bands−2) → key-repartitioned band equi-join "
+        "NOTE: library operator (image near-dup) over FAKEIMG payloads "
+        "synthesized from the doc texts: the real pHash pass runs as a "
+        "map-only Arrow hash pass; the audited shape after it is the "
+        "pair-of-bands explode (r7b multi-index: 28 16-bit keys, exact for "
+        "distance ≤ n_bands−2) → key-repartitioned band equi-join "
         "(explicit count, exempt from AQE's input-byte coalescing, which "
-        "would funnel the output-exploding join through one task) → map-side "
-        "bit_count verify BEFORE the distinct exchange. Never all-pairs."
+        "would funnel the output-exploding join through one task) → "
+        "map-side bit_count verify BEFORE the distinct exchange. Never "
+        "all-pairs."
     ),
     "decontaminate_spans": (
         "NOTE: declared r8 (span-level benchmark decontamination). The "
@@ -1179,10 +1191,11 @@ NOTES = {
     ),
     "pq_topk_rerank": (
         "NOTE: library operator (r8 product quantization, IVF-ADC+R serving "
-        "path shown unstaged — at rest the codes are a written table). ADC "
-        "scoring is a map-only MapInPandas against the broadcast LUT into a "
-        "TakeOrderedAndProject; the rerank is an R-row broadcast join back "
-        "to the float table. No shuffle anywhere on the scan path."
+        "path over codes staged once per session, as a written table is "
+        "at rest). ADC scoring is a map-only MapInPandas against the "
+        "broadcast LUT into a TakeOrderedAndProject; the rerank is an "
+        "R-row broadcast join back to the float table. No shuffle "
+        "anywhere on the scan path."
     ),
     "encode_unigram": (
         "NOTE: library operator (r8 unigram-LM tokenizer, serving path). "
