@@ -14,6 +14,11 @@ order, counts and keep-mask as the pandas-era ``_tok_matrices`` loop —
 the arithmetic downstream is untouched, so scores are bit-identical
 (parity-pinned in the operators' tests).
 
+``batch_topk`` is the one per-batch top-k cut and rank step of the batch
+scorers (knn, SQ8, BQ, PQ, MaxSim and its compressed twin, the pooled
+MaxSim prefilter); its docstring states the presort, the band, the
+row-local key and the tie order.
+
 Three driver-side helpers for the serving calls sit here too:
 ``local_frame`` builds the small frames a call assembles on the driver as
 Arrow-backed ``LocalRelation``s, ``bounded_rows`` reads a caller's query
@@ -39,9 +44,9 @@ def list_lengths(col: pa.Array) -> np.ndarray:
     )
 
 
-def nested_matrix(col: pa.Array, dim: int):
-    """(flat (ΣT, dim) float64, per-KEPT-row token counts, keep mask) for a
-    ``list<list<numeric>>`` column — the Arrow twin of the pandas-era
+def nested_matrix(col: pa.Array, dim: int, dtype=np.float64):
+    """(flat (ΣT, dim) ``dtype``, per-KEPT-row token counts, keep mask) for
+    a ``list<list<numeric>>`` column — the Arrow twin of the pandas-era
     ``_tok_matrices``. NULL/empty rows are dropped from the stack (keep
     False). Raises if any inner vector's length differs from ``dim`` (the
     store contract; the old ``np.vstack`` path errored on ragged input
@@ -66,7 +71,7 @@ def nested_matrix(col: pa.Array, dim: int):
         )
     flat = inner.flatten().to_numpy(zero_copy_only=False)
     return (
-        np.ascontiguousarray(flat, dtype=np.float64).reshape(-1, dim),
+        np.ascontiguousarray(flat, dtype=dtype).reshape(-1, dim),
         counts,
         keep,
     )
@@ -78,10 +83,12 @@ def flat_values(col: pa.Array, dtype=np.int64) -> np.ndarray:
     return col.flatten().to_numpy(zero_copy_only=False).astype(dtype)
 
 
-def fixed_matrix(col: pa.Array, dim: int):
-    """(matrix (kept, dim) float64, keep mask) for a ``list<double>`` column
-    of fixed-width vectors (e.g. the pooled column): NULL/empty rows are
-    dropped; raises on ragged widths."""
+def fixed_matrix(col: pa.Array, dim: int, dtype=np.float64):
+    """(matrix (kept, dim) ``dtype``, keep mask) for a ``list<numeric>``
+    column of fixed-width vectors (e.g. the pooled column): NULL/empty rows
+    are dropped; raises on ragged widths. Integer codes stack exactly when
+    ``dtype`` is an integer type: a packed 64-bit word does not survive a
+    float64 round trip."""
     lens = list_lengths(col)
     keep = lens > 0
     if not keep.any():
@@ -94,7 +101,7 @@ def fixed_matrix(col: pa.Array, dim: int):
         )
     flat = col.flatten().to_numpy(zero_copy_only=False)
     return (
-        np.ascontiguousarray(flat, dtype=np.float64).reshape(-1, dim),
+        np.ascontiguousarray(flat, dtype=dtype).reshape(-1, dim),
         keep,
     )
 
@@ -155,22 +162,185 @@ def _round6_exact(x: float) -> float:
     ) + 0.0
 
 
+def round6(x) -> np.ndarray:
+    """``x`` rounded half away from zero to 6 dp, as ``n / 1e6`` with ``n``
+    the rounded ``|x| · 1e6``: Spark's ``round(x, 6)`` everywhere except
+    within a few ulps of a half-way point (``spark_round6`` settles those
+    through the JVM). Needs no JVM, so a Python worker can use it; NaN and
+    infinities pass through."""
+    x = np.asarray(x, dtype=np.float64)
+    out = np.copysign(np.floor(np.abs(x) * 1e6 + 0.5) / 1e6, x) + 0.0
+    out[~np.isfinite(x)] = x[~np.isfinite(x)]
+    return out
+
+
 def spark_round6(x) -> np.ndarray:
     """Spark's ``round(x, 6)`` on a float64 array, value for value (pinned
     against ``F.round`` in tests). Spark rounds the decimal digits of
     ``Double.toString(x)`` HALF_UP. Away from a half-way point those digits
-    and ``x`` round alike, so the result is ``n / 1e6`` with ``n`` the
-    rounded ``|x| · 1e6`` — the double nearest ``n · 10⁻⁶``, as Spark's
-    ``BigDecimal.toDouble`` gives. Values within a few ulps of a half-way
-    point, or too large for an exact ``n``, go through ``_round6_exact``;
-    NaN and infinities pass through, as in Spark."""
+    and ``x`` round alike, so the result is ``round6(x)`` — the double
+    nearest ``n · 10⁻⁶``, as Spark's ``BigDecimal.toDouble`` gives. Values
+    within a few ulps of a half-way point, or too large for an exact ``n``,
+    go through ``_round6_exact``."""
     x = np.asarray(x, dtype=np.float64)
+    out = round6(x)
     y = np.abs(x) * 1e6
-    out = np.copysign(np.floor(y + 0.5) / 1e6, x) + 0.0
     with np.errstate(invalid="ignore"):
         near = np.abs(y - np.floor(y) - 0.5) <= 8 * np.spacing(y) + 1e-9
         exact = np.isfinite(x) & (near | (y >= 2.0**52))
-    out[~np.isfinite(x)] = x[~np.isfinite(x)]
     for i in np.flatnonzero(exact):
         out[i] = _round6_exact(float(x[i]))
     return out
+
+
+def cosine_screen(x, keep, qm, qn, distance: bool = False):
+    """A ``batch_topk`` screen: the cosine of every kept row ``x`` (norms
+    from the rows) against every query ``qm`` (norms ``qn``) in one BLAS
+    product, and ``exact``, the same ratio pair by pair with ``einsum``
+    (``sq._sq8_topc``'s row-local form, equal to it to the bit).
+    ``distance``: 1 − cosine instead."""
+    nrm = np.linalg.norm(x, axis=1)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cos = (x @ qm.T) / (nrm[:, None] * qn[None, :])
+
+    def exact(ri, qi):
+        dots = np.einsum("ij,ij->i", x[ri], qm[qi])
+        pair = dots / (nrm[ri] * qn[qi])
+        return 1.0 - pair if distance else pair
+
+    return np.flatnonzero(keep), 1.0 - cos if distance else cos, exact
+
+
+def rank_per_query(frame, key, id_col: str, k: int, descending: bool = False):
+    """``frame`` with ``rank``: ``row_number`` over each ``query_id``
+    ordered by ``key`` (a column name or expression), then by ascending
+    ``id_col``; rows past rank ``k`` dropped."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    key = F.col(key) if isinstance(key, str) else key
+    win = Window.partitionBy("query_id").orderBy(
+        key.desc() if descending else key.asc(), F.col(id_col).asc()
+    )
+    return frame.withColumn("rank", F.row_number().over(win)).filter(
+        F.col("rank") <= k
+    )
+
+
+def batch_topk(
+    frame,
+    id_col: str,
+    qids,
+    k: int,
+    screen,
+    value: str = "_dist",
+    value_type: str = "double",
+    carry: tuple = (),
+    query_type: str = "long",
+    descending: bool = False,
+    round6_key: bool = False,
+    allowed: dict | None = None,
+    cluster_col: str = "cluster_id",
+    copies: int = 1,
+):
+    """Per-query top-``k`` of ``frame`` for the Q queries ``qids``, one
+    ``mapInArrow`` pass plus one window: (query_id, ``id_col``,
+    ``*carry``, ``value``, rank).
+
+    Each Arrow batch is sorted by ``id_col`` (a stable sort), then
+    ``screen(batch)`` returns ``(rows, scores, exact)``: the positions of
+    the rows that can score, their (len(rows), Q) scores (lower is better,
+    or higher with ``descending``; NaN and infinities never rank) and
+    ``exact`` — ``None`` when a score is computed from its own row and
+    query alone, else ``exact(ri, qi)``, which scores the pairs
+    ``(rows[ri], qids[qi])`` that way. A BLAS product is not such a score:
+    its rounding depends on the other rows of the batch. So the cut keeps
+    every pair within a band of a query's ``k``-th screened score,
+    re-scores those pairs with ``exact`` and keeps the ``k`` best by the
+    exact score. The band covers twice the screen's error (1e-9 is ample
+    for a cosine), plus, when ``round6_key`` ranks by the score rounded to
+    6 dp, the 1e-6 by which two scores with the same rounded key can
+    differ. The key a survivor is cut and ranked by is then a function of
+    its row and query alone, and ties break by ascending id, in the batch
+    (the presort) as in the window — so the result does not depend on how
+    Spark splits the input into batches and partitions.
+
+    ``allowed``: query id → the clusters (``cluster_col``) it may score,
+    its IVF probes. ``copies > 1``: the same id sits in up to ``copies``
+    rows with the same score (multi-assign stores); each batch keeps
+    ``k · copies`` per query and one copy of each id is ranked."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
+
+    ends = DataType.fromDDL(f"query_id {query_type}, {value} {value_type}")
+    passed = (id_col, *carry)
+    schema = StructType(
+        [ends[0], *(frame.schema[c] for c in passed), ends[1]]
+    )
+    arrow_out = to_arrow_schema(schema)
+    allow = None
+    if allowed is not None:  # (Q, n_clusters): the clusters each query scores
+        n = 1 + max((int(c) for ps in allowed.values() for c in ps), default=0)
+        allow = np.zeros((len(qids), n), dtype=bool)
+        for j, qid in enumerate(qids):
+            allow[j, [int(c) for c in allowed.get(qid, ())]] = True
+    state = frame.sparkSession.sparkContext.broadcast((np.asarray(qids), allow))
+    per_batch = k * copies
+    band = 2e-6 if round6_key else 1e-9
+
+    def _cut(batches):
+        ids, amat = state.value
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            order = pa.compute.sort_indices(batch.column(id_col))
+            if (order.to_numpy() != np.arange(batch.num_rows)).any():
+                batch = batch.take(order)
+            got = screen(batch)
+            if got is None:
+                continue
+            rows, scores, exact = got
+            s = np.array(scores, dtype=np.float64)
+            if descending:
+                s = -s
+            s[~np.isfinite(s)] = np.inf
+            if amat is not None:
+                cid = batch.column(cluster_col).to_numpy()[rows]
+                ok = np.zeros(s.shape, dtype=bool)
+                known = (cid >= 0) & (cid < amat.shape[1])
+                ok[known] = amat[:, cid[known]].T
+                s[~ok] = np.inf
+            kk = min(per_batch, len(rows))
+            t = np.partition(s, kk - 1, axis=0)[kk - 1]
+            ri, qi = np.nonzero((s <= t + band) & np.isfinite(s))
+            if exact is None:
+                val = -s[ri, qi] if descending else s[ri, qi]
+            else:
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    val = exact(ri, qi)
+            if round6_key:
+                val = round6(val)
+            key = -val if descending else val
+            fin = np.isfinite(key)
+            ri, qi, key, val = ri[fin], qi[fin], key[fin], val[fin]
+            by = np.lexsort((ri, key, qi))
+            grouped = qi[by]
+            first = np.searchsorted(grouped, grouped)
+            sel = by[np.arange(len(by)) - first < per_batch]
+            if not len(sel):
+                continue
+            take = pa.array(rows[ri[sel]])
+            cols = (
+                [pa.array(ids[qi[sel]])]
+                + [batch.column(c).take(take) for c in passed]
+                + [pa.array(val[sel])]
+            )
+            yield pa.record_batch(
+                [c.cast(f.type) for c, f in zip(cols, arrow_out)],
+                schema=arrow_out,
+            )
+
+    survivors = frame.mapInArrow(_cut, schema=schema)
+    if copies > 1:
+        survivors = survivors.dropDuplicates(["query_id", id_col])
+    return rank_per_query(survivors, value, id_col, k, descending)

@@ -40,7 +40,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows
+from photo_vector_search_spark.functions.arrowkit import (
+    batch_topk,
+    bounded_rows,
+    fixed_matrix,
+)
 from photo_vector_search_spark.operators.store import (
     kind_vectors,
     open_store,
@@ -274,7 +278,8 @@ def hamming_batch_topk(
     popcounts byte-wise, keeping a per-query local top-k, so the shuffle is
     O(batches · Q · k) survivor rows and the merge one per-QUERY window —
     the knn_batch/sq8_batch two-phase shape on the 64×-compressed codes.
-    Result ≡ a Python loop of ``hamming_topk`` per query (pinned in tests).
+    Result ≡ a Python loop of ``hamming_topk`` per query (pinned in tests);
+    ``arrowkit.batch_topk`` states the cut and the tie order.
     ``queries``: (query_id, query_vec); duplicate query ids are rejected
     (the batched-serving contract, `sq8_batch_topk`)."""
     if k < 1:
@@ -290,54 +295,29 @@ def hamming_batch_topk(
         "ill-defined; de-duplicate the query frame first",
         empty="empty query frame",
     )
-    qids = [r["query_id"] for r in qrows]
     qmat = np.vstack(
         [np.asarray(r["query_vec"], dtype=np.float64) for r in qrows]
     )
     qcodes = np.vstack(_pack_rows(qmat > model.thresholds))  # (Q, W) int64
-    sc = coded.sparkSession.sparkContext
-    b = sc.broadcast((np.asarray(qids, dtype=np.int64), qcodes))
+    b = coded.sparkSession.sparkContext.broadcast(qcodes)
 
-    def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qc = b.value
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["_code"])
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("vec_id", kind="stable").reset_index(drop=True)
-            codes = np.vstack(pdf["_code"].to_numpy()).astype(np.int64)
-            n, w = codes.shape
-            # (N, Q) Hamming: accumulate per word to bound the XOR temp
-            dist = np.zeros((n, len(ids)), dtype=np.int32)
-            for j in range(w):
-                dist += _popcount64(codes[:, j : j + 1] ^ qc[:, j][None, :])
-            kk = min(k, n)
-            # per-query local top-k (stable → vec_id tie-break by presort)
-            order = np.argsort(dist, axis=0, kind="stable")[:kk]
-            rows = order.T.ravel()
-            qidx = np.repeat(np.arange(len(ids)), kk)
-            yield pd.DataFrame(
-                {
-                    "query_id": ids[qidx],
-                    "vec_id": pdf["vec_id"].to_numpy()[rows],
-                    "label": pdf["label"].to_numpy()[rows],
-                    "_h": dist[rows, qidx],
-                }
-            )
+    def _screen(batch):
+        qc = b.value
+        codes, keep = fixed_matrix(batch.column("_code"), qc.shape[1], np.int64)
+        if codes is None:
+            return None
+        # (N, Q) Hamming: accumulate per word to bound the XOR temp
+        dist = np.zeros((len(codes), len(qc)), dtype=np.int32)
+        for j in range(qc.shape[1]):
+            dist += _popcount64(codes[:, j : j + 1] ^ qc[:, j][None, :])
+        return np.flatnonzero(keep), dist, None  # integer: row-local
 
-    survivors = coded.select(
-        "vec_id", "label", F.col(code_col).alias("_code")
-    ).mapInPandas(
-        _local_topk, schema="query_id long, vec_id long, label int, _h int"
+    ranked = batch_topk(
+        coded.select("vec_id", "label", F.col(code_col).alias("_code")),
+        "vec_id", [r["query_id"] for r in qrows], k, _screen,
+        value="hamming", value_type="int", carry=("label",),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_h").asc(), F.col("vec_id").asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "label", F.col("_h").alias("hamming"), "rank")
-    )
+    return ranked.select("query_id", "vec_id", "label", "hamming", "rank")
 
 
 # ---------------------------------------------------------------------------

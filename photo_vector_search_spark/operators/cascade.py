@@ -136,11 +136,9 @@ def cascade_batch_topk(
     in tests). Duplicate query ids are rejected (the batched-serving
     contract)."""
     import numpy as np
-    import pandas as pd
-    from typing import Iterator
+    import pyarrow as pa
 
-    from pyspark.sql import Window
-
+    from ..functions.arrowkit import fixed_matrix, rank_per_query
     from ..functions.vector import cosine_distance
     from ..operators.bq import hamming_batch_topk
     from ..operators.knn import _valid_dist
@@ -178,40 +176,34 @@ def cascade_batch_topk(
         "vec_id",
     )
 
-    def _score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def _score(batches):
         vmin, step, qm, qn, qi = b.value
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["_code"])
-            if not len(pdf):
+        for batch in batches:
+            codes, keep = fixed_matrix(batch.column("_code"), len(vmin))
+            if codes is None:
                 continue
-            codes = np.vstack(pdf["_code"].to_numpy()).astype(np.float64)
+            rows = np.flatnonzero(keep)
+            qid = batch.column("query_id").to_numpy()[rows]
+            rows_q = np.asarray([qi[q] for q in qid.tolist()], dtype=np.int64)
             x = vmin + codes * step
-            nrm = np.linalg.norm(x, axis=1)
-            rows_q = np.asarray(
-                [qi[int(q)] for q in pdf["query_id"].to_numpy()]
-            )
             with np.errstate(divide="ignore", invalid="ignore"):
                 dots = np.einsum("ij,ij->i", x, qm[rows_q])
-                dist = 1.0 - dots / (nrm * qn[rows_q])
-            keep = np.isfinite(dist)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy()[keep],
-                    "vec_id": pdf["vec_id"].to_numpy()[keep],
-                    "_d8": dist[keep],
-                }
+                dist = 1.0 - dots / (np.linalg.norm(x, axis=1) * qn[rows_q])
+            fin = np.isfinite(dist)
+            yield pa.record_batch(
+                [
+                    pa.array(qid[fin]),
+                    batch.column("vec_id").take(pa.array(rows[fin])),
+                    pa.array(dist[fin]),
+                ],
+                names=["query_id", "vec_id", "_d8"],
             )
 
-    scored = cand.mapInPandas(
+    scored = cand.select("query_id", "vec_id", "_code").mapInArrow(
         _score, schema="query_id long, vec_id long, _d8 double"
     )
-    w8 = Window.partitionBy("query_id").orderBy(
-        F.col("_d8").asc(), F.col("vec_id").asc()
-    )
-    pool = (
-        scored.withColumn("_r", F.row_number().over(w8))
-        .filter(F.col("_r") <= c2)
-        .select("query_id", "vec_id")
+    pool = rank_per_query(scored, "_d8", "vec_id", c2).select(
+        "query_id", "vec_id"
     )
 
     # stage 3: exact tail from the float source (<= Q*c2 rows)
@@ -236,14 +228,6 @@ def cascade_batch_topk(
         )
         .filter(_valid_dist(F.col("_dist")))
     )
-    wx = Window.partitionBy("query_id").orderBy(
-        F.col("_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(wx))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "label",
-            F.round("_dist", 6).alias("dist"), "rank",
-        )
+    return rank_per_query(exact, "_dist", "vec_id", k).select(
+        "query_id", "vec_id", "label", F.round("_dist", 6).alias("dist"), "rank"
     )

@@ -18,7 +18,7 @@ Physical plan notes (what .explain should show, and why it scales):
 - ``knn_batch``: broadcast the (small) query side, cross-join, per-query rank via a
   Window on query_id. Pure-SQL, oracle-parity path; the shuffle carries N·Q narrow
   rows, fine for modest Q·N.
-- ``knn_batch_fast``: the scale path — mapInPandas computes a NumPy matmul of each
+- ``knn_batch_fast``: the scale path — mapInArrow computes a NumPy matmul of each
   Arrow batch against the whole query matrix and keeps only that batch's top-k per
   query (map-side reduction, no shuffle of the N·Q pairs), then one tiny window
   over ≤ batches·Q·k survivors. This is the plan that survives 100×: shuffle volume
@@ -27,14 +27,18 @@ Physical plan notes (what .explain should show, and why it scales):
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows
+from photo_vector_search_spark.functions.arrowkit import (
+    batch_topk,
+    bounded_rows,
+    cosine_screen,
+    fixed_matrix,
+)
 from photo_vector_search_spark.functions.vector import (
     cosine_distance,
     cosine_distance_to_query,
@@ -124,59 +128,39 @@ def knn_batch(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFram
     )
 
 
-def knn_batch_fast(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
-    """Per-query exact top-k, scale path: map-side matmul + per-batch top-k.
+MAX_BATCH_QUERIES = 65_536
 
-    Same results as ``knn_batch`` (double-precision matmul, identical tie-break);
-    shuffle volume O(batches·Q·k) instead of O(N·Q).
+
+def knn_batch_fast(embeddings: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
+    """Per-query exact top-k, scale path: map-side matmul + per-batch top-k
+    (``arrowkit.batch_topk``, which states the cut and the tie order).
+
+    Same results as ``knn_batch``; shuffle volume O(batches·Q·k) instead of
+    O(N·Q). ``queries`` (query_id, query_vec) is read in one bounded job;
+    duplicate query ids are rejected.
     """
-    qrows = queries.select("query_id", "query_vec").collect()  # small, broadcast below
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), MAX_BATCH_QUERIES,
+        f">{MAX_BATCH_QUERIES} queries — split the query set",
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+    )
     qmat = np.vstack([np.asarray(r["query_vec"], dtype=np.float64) for r in qrows])
     qnorm = np.linalg.norm(qmat, axis=1)
-    sc = embeddings.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qmat, qnorm))
+    bq = embeddings.sparkSession.sparkContext.broadcast((qmat, qnorm))
 
-    out_schema = "query_id long, vec_id long, label int, _dist double"
+    def _screen(batch):
+        mat, nrm = bq.value
+        m, keep = fixed_matrix(batch.column("embedding"), mat.shape[1])
+        return None if m is None else cosine_screen(m, keep, mat, nrm, True)
 
-    def _topk_per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, mat, nrm = bq.value
-        nq = len(ids)
-        for pdf in batches:
-            # pre-sort the batch by vec_id so the stable per-query argsort breaks
-            # distance ties by ascending vec_id — identical tie-break to the
-            # window in knn_batch even when the tie straddles the kk boundary
-            pdf = pdf.sort_values("vec_id", kind="stable").reset_index(drop=True)
-            m = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64, copy=False)
-            dn = np.linalg.norm(m, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # (rows, nq) distance matrix in one BLAS call — `mat` from the
-                # broadcast, NOT the closure-captured qmat (which would ship the
-                # Q×dim matrix inside every task's pickled closure)
-                dist = 1.0 - (m @ mat.T) / np.outer(dn, nrm)
-            kk = min(k, len(pdf))
-            out = {"query_id": [], "vec_id": [], "label": [], "_dist": []}
-            vid = pdf["vec_id"].to_numpy()
-            lab = pdf["label"].to_numpy()
-            for j in range(nq):
-                col = dist[:, j]
-                order = np.argsort(col, kind="stable")  # NaN (zero-norm) sorts last
-                take = order[:kk]
-                take = take[np.isfinite(col[take])]  # exclude undefined distances
-                out["query_id"].extend([ids[j]] * len(take))
-                out["vec_id"].extend(vid[take])
-                out["label"].extend(lab[take])
-                out["_dist"].extend(col[take])
-            yield pd.DataFrame(out)
-
-    survivors = embeddings.select("vec_id", "label", "embedding").mapInPandas(
-        _topk_per_batch, schema=out_schema
+    ranked = batch_topk(
+        embeddings.select("vec_id", "label", "embedding"), "vec_id",
+        [r["query_id"] for r in qrows], k, _screen, carry=("label",),
     )
-    win = Window.partitionBy("query_id").orderBy(F.col("_dist").asc(), F.col("vec_id").asc())
-    return (
-        survivors.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "label", F.round("_dist", 6).alias("dist"), "rank")
+    return ranked.select(
+        "query_id", "vec_id", "label", F.round("_dist", 6).alias("dist"), "rank"
     )
 
 

@@ -463,6 +463,65 @@ def _pooled_candidates_from_docs(
     )
 
 
+def _maxsim_pairs(allq, qoff, flat, counts):
+    """``exact(ri, qi)``: the raw MaxSim of doc ``ri`` (the docs stacked in
+    ``flat`` with ``counts`` tokens each) against query ``qi`` (the token
+    rows of ``allq`` from ``qoff[qi]``), for each pair from that pair's
+    tokens alone — per-element ``einsum`` dots, a segment-max per doc and
+    the query tokens summed in order (the expression fold's order)."""
+    import numpy as np
+
+    d_off = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    q_end = np.append(qoff[1:], len(allq))
+
+    def exact(ri, qi):
+        out = np.empty(len(ri))
+        for j in np.unique(qi):
+            at = np.flatnonzero(qi == j)
+            n_tok = counts[ri[at]]
+            seg = np.concatenate(([0], np.cumsum(n_tok)[:-1]))
+            tok = np.repeat(d_off[ri[at]] - seg, n_tok) + np.arange(n_tok.sum())
+            sims = np.einsum("ij,kj->ik", allq[qoff[j]:q_end[j]], flat[tok])
+            tot = np.zeros(len(at))
+            for best in np.maximum.reduceat(sims, seg, axis=1):
+                tot = tot + best
+            out[at] = tot
+        return out
+
+    return exact
+
+
+def _maxsim_screen(allq, qoff, flat, counts, keep):
+    """``arrowkit.batch_topk``'s screen for one batch of stacked doc tokens:
+    ONE BLAS matmul against every query's tokens, a ``maximum.reduceat``
+    segment-max over each doc's tokens and an ``add.reduceat`` segment-sum
+    over each query's tokens (strictly sequential — the expression fold's
+    order); ``_maxsim_pairs`` re-scores the survivors."""
+    import numpy as np
+
+    sims = allq @ flat.T  # (sum q tokens, sum doc tokens): one BLAS call
+    d_off = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    best = np.maximum.reduceat(sims, d_off, axis=1)
+    scores = np.add.reduceat(best, qoff, axis=0)  # (Q, docs)
+    return (
+        np.flatnonzero(keep), scores.T, _maxsim_pairs(allq, qoff, flat, counts)
+    )
+
+
+def _query_tokens(qrows, max_query_tokens: int, dim: int):
+    """(all query tokens stacked (ΣT_q, dim), each query's first row)."""
+    import numpy as np
+
+    qmats = [
+        np.asarray(
+            _query_token_vecs(r["query"], max_query_tokens, dim),
+            dtype=np.float64,
+        )
+        for r in qrows
+    ]
+    return np.vstack(qmats), np.cumsum([0] + [len(m) for m in qmats[:-1]])
+
+
 def maxsim_batch_topk(
     doc_toks: DataFrame,
     queries: DataFrame,
@@ -478,25 +537,14 @@ def maxsim_batch_topk(
     (knn/bm25/hamming/sq8/cascade/rm3/rocchio) to late interaction.
 
     Kernel shape: ALL queries' token matrices stack into one broadcast
-    (ΣT_q, dim) matrix; per Arrow batch ONE BLAS matmul against the batch's
-    stacked doc tokens, a ``maximum.reduceat`` segment-max over each doc's
-    tokens, an ``add.reduceat`` segment-sum over each query's tokens
-    (reduceat is strictly sequential — the expression fold's order), then a
-    per-batch LOCAL top-k per query, so the shuffle carries
-    O(batches · Q · k) survivor rows — never N·Q. ``queries``: (query_id,
-    query) text rows; duplicate ids rejected (the shared batch contract).
-
-    The kernel is ``mapInArrow`` over the flat list buffers (r12,
-    `functions.arrowkit`): the batch's stacked token matrix is ONE reshape
-    of the Arrow values buffer instead of per-row nested-object conversion
-    — same stack, same arithmetic, bit-identical scores."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import Window
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions.arrowkit import nested_matrix
+    (ΣT_q, dim) matrix; per Arrow batch ``_maxsim_screen`` scores every
+    query against the batch's stacked doc tokens (the flat list buffer, one
+    reshape — `functions.arrowkit`), then ``arrowkit.batch_topk`` keeps a
+    per-batch LOCAL top-k per query by the 6-dp score, so the shuffle
+    carries O(batches · Q · k) survivor rows — never N·Q. ``queries``:
+    (query_id, query) text rows; duplicate ids rejected (the shared batch
+    contract)."""
+    from ..functions.arrowkit import batch_topk, nested_matrix
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -507,82 +555,24 @@ def maxsim_batch_topk(
         "ill-defined; de-duplicate the query frame first",
         empty="empty query frame",
     )
-    qids = [r["query_id"] for r in qrows]
-    qmats = [
-        np.asarray(
-            _query_token_vecs(r["query"], max_query_tokens, dim),
-            dtype=np.float64,
-        )
-        for r in qrows
-    ]
-    allq = np.vstack(qmats)  # (sum of query token counts, dim)
-    q_offsets = np.concatenate(
-        ([0], np.cumsum([m.shape[0] for m in qmats])[:-1])
-    )
-    sc = doc_toks.sparkSession.sparkContext
-    bq = sc.broadcast(
-        (np.asarray(qids, dtype=np.int64), allq, q_offsets)
-    )
-    id_field = doc_toks.schema[id_col]
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema["query_id"].dataType, True),
-            StructField(id_col, id_field.dataType, True),
-            StructField("_raw", DoubleType(), True),
-        ]
+    bq = doc_toks.sparkSession.sparkContext.broadcast(
+        _query_tokens(qrows, max_query_tokens, dim)
     )
 
-    arrow_out = to_arrow_schema(out_schema)
-    dim_ = dim
+    def _screen(batch):
+        allq, qoff = bq.value
+        flat, counts, keep = nested_matrix(batch.column("tok_embs"), dim)
+        if flat is None:
+            return None
+        return _maxsim_screen(allq, qoff, flat, counts, keep)
 
-    def _score(batches):
-        ids, qm, qoff = bq.value
-        nq = len(ids)
-        for batch in batches:
-            cols = {n: i for i, n in enumerate(batch.schema.names)}
-            ids_np = batch.column(cols[id_col]).to_numpy(zero_copy_only=False)
-            # pre-sort by id so the stable per-query argsort breaks score
-            # ties by ascending id — the knn_batch_fast tie discipline
-            order = np.argsort(ids_np, kind="stable")
-            toks_sorted = batch.column(cols["tok_embs"]).take(pa.array(order))
-            flat, counts, keep = nested_matrix(toks_sorted, dim_)
-            if flat is None:
-                continue
-            doc_ids = ids_np[order][keep]
-            d_offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            sims = qm @ flat.T  # (sum q tokens, sum doc tokens): one BLAS call
-            best = np.maximum.reduceat(sims, d_offsets, axis=1)
-            scores = np.add.reduceat(best, qoff, axis=0)  # (Q, docs)
-            kk = min(k, scores.shape[1])
-            out_q, out_d, out_r = [], [], []
-            for j in range(nq):
-                row = scores[j]
-                take = np.argsort(-row, kind="stable")[:kk]
-                out_q.extend([ids[j]] * len(take))
-                out_d.extend(doc_ids[take])
-                out_r.extend(row[take])
-            yield pa.record_batch(
-                [
-                    pa.array(out_q, type=arrow_out.field(0).type),
-                    pa.array(out_d, type=arrow_out.field(1).type),
-                    pa.array(out_r, type=arrow_out.field(2).type),
-                ],
-                schema=arrow_out,
-            )
-
-    survivors = doc_toks.select(id_col, "tok_embs").mapInArrow(
-        _score, schema=out_schema
+    ranked = batch_topk(
+        doc_toks.select(id_col, "tok_embs"), id_col,
+        [r["query_id"] for r in qrows], k, _screen, value="maxsim",
+        query_type=queries.schema["query_id"].dataType.simpleString(),
+        descending=True, round6_key=True,
     )
-    win = Window.partitionBy("query_id").orderBy(
-        F.round("_raw", 6).desc(), F.col(id_col).asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", id_col, F.round("_raw", 6).alias("maxsim"), "rank"
-        )
-    )
+    return ranked.select("query_id", id_col, "maxsim", "rank")
 
 
 def build_maxsim_store(
@@ -924,15 +914,15 @@ def maxsim_store_batch_search(
     1. per-query cluster probes (clustered stores, ``nprobe``) rank the
        centroid sidecar driver-side; the store scan filters to the UNION
        of probes (partition pruning preserved) and each query masks to
-       ITS probes inside the kernel;
+       ITS probes;
     2. pooled prefilter: one Arrow pass over the flat ``pooled`` column
        scores ALL queries per batch in one matmul and keeps a per-batch
-       LOCAL top-``prefilter_n`` per query — shuffle O(batches·Q·n),
-       never N·Q — then one bounded per-query window picks the global
-       candidates;
+       LOCAL top-``prefilter_n`` per query (``arrowkit.batch_topk``) —
+       shuffle O(batches·Q·n), never N·Q — then one bounded per-query
+       window picks the global candidates;
     3. rescore: the (query_id, id) candidates join the token store once
-       (≤ Q·n matrix rows move) and one Arrow kernel scores each query's
-       candidate group with the shared matmul + segment-max reduction;
+       (≤ Q·n matrix rows move) and one Arrow kernel scores each pair
+       from its own tokens (``_maxsim_pairs``);
     4. one bounded per-query window emits the top-k.
 
     ``prefilter_n=None`` rescores the whole (probed) store per query: the
@@ -941,9 +931,19 @@ def maxsim_store_batch_search(
     per (query, doc) because each query reads a DIFFERENT row subset —
     the exact-parity rung, not the scale path (prefilter is)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from ..functions.arrowkit import (
+        batch_topk,
+        cosine_screen,
+        fixed_matrix,
+        local_frame,
+        nested_matrix,
+        rank_per_query,
+        round6,
+    )
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -957,14 +957,11 @@ def maxsim_store_batch_search(
         empty="empty query frame",
     )
     qids = [r["query_id"] for r in qrows]
-    qmats = {
-        r["query_id"]: np.asarray(
-            _query_token_vecs(r["query"], max_query_tokens, dim),
-            dtype=np.float64,
-        )
-        for r in qrows
-    }
-    qmeans = {qid: m.mean(axis=0) for qid, m in qmats.items()}
+    allq, qoff = _query_tokens(qrows, max_query_tokens, dim)
+    qmeans = np.vstack([
+        allq[a:b].mean(axis=0)
+        for a, b in zip(qoff, np.append(qoff[1:], len(allq)))
+    ])
 
     probes = None
     if nprobe is not None:
@@ -977,84 +974,34 @@ def maxsim_store_batch_search(
             raise ValueError(f"nprobe must be >= 1, got {nprobe}")
         cents = _load_maxsim_centroids(spark, path, meta)
         probes = {
-            qid: _probe_clusters(cents, qmeans[qid], nprobe) for qid in qids
+            qid: _probe_clusters(cents, qm, nprobe)
+            for qid, qm in zip(qids, qmeans)
         }
         union = sorted({c for ps in probes.values() for c in ps})
         toks = toks.filter(F.col("cluster_id").isin(union))
 
     qid_type = queries.schema["query_id"].dataType
-    id_field = toks.schema[id_col]
 
     if prefilter_n is not None:
         if prefilter_n < k:
             raise ValueError(f"prefilter_n ({prefilter_n}) must be >= k ({k})")
-        qm_mat = np.vstack([qmeans[qid] for qid in qids])  # (Q, dim)
-        b = spark.sparkContext.broadcast(
-            (np.asarray(qids, dtype=object), qm_mat, probes)
-        )
-        pool_schema = StructType(
-            [
-                StructField("query_id", qid_type, True),
-                StructField(id_col, id_field.dataType, True),
-                StructField("_pool", DoubleType(), True),
-            ]
-        )
+        b = spark.sparkContext.broadcast(qmeans)
+
+        def _pool_screen(batch):
+            qm = b.value
+            m, keep = fixed_matrix(batch.column("pooled"), dim)
+            if m is None:
+                return None
+            return cosine_screen(m, keep, qm, np.ones(len(qm)))
+
         pool_cols = [id_col, "pooled"] + (
             ["cluster_id"] if probes is not None else []
         )
-
-        def _pool_batch(batches):
-            ids_b, qm, pr = b.value
-            for pdf in batches:
-                # pre-sort by id: stable argsort then breaks pool ties by
-                # ascending id — the single-query TakeOrdered discipline
-                pdf = pdf.sort_values(id_col, kind="stable").reset_index(
-                    drop=True
-                )
-                keep = pdf["pooled"].map(lambda v: v is not None).to_numpy(
-                    dtype=bool
-                )
-                pdf = pdf[keep].reset_index(drop=True)
-                if not len(pdf):
-                    continue
-                m = np.vstack(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["pooled"]]
-                )
-                norms = np.linalg.norm(m, axis=1)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (m @ qm.T) / norms[:, None]  # (rows, Q)
-                doc_ids = pdf[id_col].to_numpy()
-                clus = (
-                    pdf["cluster_id"].to_numpy() if pr is not None else None
-                )
-                out = {"query_id": [], id_col: [], "_pool": []}
-                for j, qid in enumerate(ids_b):
-                    col = cos[:, j]
-                    mask = np.isfinite(col)
-                    if pr is not None:
-                        mask &= np.isin(clus, pr[qid])
-                    idx = np.flatnonzero(mask)
-                    if not len(idx):
-                        continue
-                    order = idx[
-                        np.argsort(-col[idx], kind="stable")[:prefilter_n]
-                    ]
-                    out["query_id"].extend([qid] * len(order))
-                    out[id_col].extend(doc_ids[order])
-                    out["_pool"].extend(col[order])
-                yield pd.DataFrame(out)
-
-        survivors = toks.select(*pool_cols).mapInPandas(
-            _pool_batch, schema=pool_schema
-        )
-        w_pool = Window.partitionBy("query_id").orderBy(
-            F.col("_pool").desc(), F.col(id_col).asc()
-        )
-        cand = (
-            survivors.withColumn("_rn", F.row_number().over(w_pool))
-            .filter(F.col("_rn") <= prefilter_n)
-            .select("query_id", id_col)
-        )
+        cand = batch_topk(
+            toks.select(*pool_cols), id_col, qids, prefilter_n, _pool_screen,
+            value="_pool", query_type=qid_type.simpleString(),
+            descending=True, allowed=probes,
+        ).select("query_id", id_col)
         pairs = cand.join(toks.select(id_col, "tok_embs"), id_col)
     elif probes is None:
         # unprobed brute force: one shared pass, no row duplication
@@ -1066,56 +1013,51 @@ def maxsim_store_batch_search(
     else:
         # probed brute force: each query reads a DIFFERENT row subset, so
         # (query, doc) pairs materialize — bounded by Q × probed rows
-        pair_rows = [(qid,) for qid in qids]
-        from pyspark.sql.types import StructField as _SF, StructType as _ST
-
-        qdf = spark.createDataFrame(
-            pair_rows, _ST([_SF("query_id", qid_type)])
+        probed = local_frame(
+            spark, [(qid, c) for qid in qids for c in probes[qid]],
+            StructType([
+                StructField("query_id", qid_type), toks.schema["cluster_id"]
+            ]),
         )
-        pairs = toks.select(id_col, "tok_embs", "cluster_id").crossJoin(
-            F.broadcast(qdf)
+        pairs = toks.select(id_col, "tok_embs", "cluster_id").join(
+            F.broadcast(probed), "cluster_id"
         )
 
-    bq = spark.sparkContext.broadcast((qmats, probes))
+    bq = spark.sparkContext.broadcast((qids, allq, qoff))
     score_schema = StructType(
         [
             StructField("query_id", qid_type, True),
-            StructField(id_col, id_field.dataType, True),
-            StructField("_raw", DoubleType(), True),
+            toks.schema[id_col],
+            StructField("maxsim", DoubleType(), True),
         ]
     )
+    arrow_out = to_arrow_schema(score_schema)
 
-    def _score_batch(batches):
-        qm_by_id, pr = bq.value
-        for pdf in batches:
-            out = {"query_id": [], id_col: [], "_raw": []}
-            for qid, grp in pdf.groupby("query_id", sort=False):
-                if pr is not None and "cluster_id" in grp.columns:
-                    grp = grp[grp["cluster_id"].isin(pr[qid])]
-                flat, counts, keep = _tok_matrices(grp["tok_embs"])
-                if flat is None:
-                    continue
-                qm = qm_by_id[qid]
-                sims = qm @ flat.T
-                offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                best = np.maximum.reduceat(sims, offsets, axis=1)
-                tot = np.zeros(best.shape[1], dtype=np.float64)
-                for j in range(qm.shape[0]):
-                    tot = tot + best[j]
-                ids_np = grp[id_col].to_numpy()[keep]
-                out["query_id"].extend([qid] * len(ids_np))
-                out[id_col].extend(ids_np)
-                out["_raw"].extend(tot)
-            yield pd.DataFrame(out)
+    def _score_pairs(batches):
+        ids, aq, qo = bq.value
+        slot = {qid: j for j, qid in enumerate(ids)}
+        for batch in batches:
+            flat, counts, keep = nested_matrix(batch.column("tok_embs"), dim)
+            if flat is None:
+                continue
+            kept = pa.array(np.flatnonzero(keep))
+            qcol = batch.column("query_id").take(kept)
+            qi = np.array([slot[q] for q in qcol.to_pylist()], dtype=np.int64)
+            raw = _maxsim_pairs(aq, qo, flat, counts)(np.arange(len(qi)), qi)
+            yield pa.record_batch(
+                [
+                    qcol.cast(arrow_out.field(0).type),
+                    batch.column(id_col).take(kept).cast(
+                        arrow_out.field(1).type
+                    ),
+                    pa.array(round6(raw)),
+                ],
+                schema=arrow_out,
+            )
 
-    scored = pairs.mapInPandas(_score_batch, schema=score_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("_raw", 6).desc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, F.round("_raw", 6).alias("maxsim"), "rank")
+    scored = pairs.mapInArrow(_score_pairs, schema=score_schema)
+    return rank_per_query(scored, "maxsim", id_col, k, descending=True).select(
+        "query_id", id_col, "maxsim", "rank"
     )
 
 

@@ -37,10 +37,14 @@ Scale design (100 TB):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows
+from photo_vector_search_spark.functions.arrowkit import (
+    batch_topk,
+    bounded_rows,
+    fixed_matrix,
+)
 from photo_vector_search_spark.operators.store import (
     kind_vectors,
     open_store,
@@ -365,9 +369,8 @@ def pq_batch_topk(
     duplicate (id, cluster) rows through the scan — a copy in an unprobed
     cluster must not hide the copy in a probed one — so the per-batch cap
     over-fetches ``k*n_assign`` and the final window dedups, the
-    ``ann.ivf_topk`` discipline."""
-    import pandas as pd
-
+    ``ann.ivf_topk`` discipline. ``arrowkit.batch_topk`` states the cut
+    and the tie order."""
     too_many = (
         f"pq_batch_topk: >{max_queries} queries — the LUT broadcast is "
         "Q·m·k doubles; split the query set or raise max_queries"
@@ -387,7 +390,7 @@ def pq_batch_topk(
         raise ValueError(
             "pq_batch_topk: allowed and cluster_col must be given together"
         )
-    qids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
+    qids = [r["query_id"] for r in qrows]
     luts = np.stack(
         [
             adc_table(np.asarray(r["query_vec"], dtype=np.float64),
@@ -395,86 +398,25 @@ def pq_batch_topk(
             for r in qrows
         ]
     )  # (Q, m, k)
-    allow_mat = None
-    if allowed is not None:
-        n_clusters = 1 + max(
-            (int(c) for probes in allowed.values() for c in probes),
-            default=0,
-        )
-        allow_mat = np.zeros((len(qids), n_clusters), dtype=bool)
-        for j, qid in enumerate(qids):
-            for c in allowed.get(int(qid), ()):
-                allow_mat[j, int(c)] = True
-    spark = coded.sparkSession
-    bq = spark.sparkContext.broadcast((qids, luts, allow_mat))
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    bq = coded.sparkSession.sparkContext.broadcast(luts)
 
-    id_field = [f for f in coded.schema.fields if f.name == id_col][0]
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType(), False),
-            id_field,
-            StructField("adc_dist", DoubleType(), True),
-        ]
-    )
-    per_batch_k = k * max(1, n_assign)
-
-    def score(batches):
-        ids, tabs, amat = bq.value
-        nq, m, _kk = tabs.shape
-        cols = np.arange(m)
-        for pdf in batches:
-            pdf = pdf[pdf[code_col].notna()]
-            if not len(pdf):
-                continue
-            # same tie-break discipline as knn_batch_fast: stable sort by id
-            # so per-query argsort ties resolve to the ascending id even when
-            # the tie straddles the top-k boundary
-            pdf = pdf.sort_values(id_col, kind="stable").reset_index(drop=True)
-            codes = np.vstack(pdf[code_col].to_numpy()).astype(np.int64)
-            # (Q, rows): gather each query's m sub-distances, sum — one
-            # vectorized pass, no per-row Python
-            dist = tabs[:, cols[None, :], codes].sum(axis=2)
-            if amat is not None:
-                cid = pdf[cluster_col].to_numpy().astype(np.int64)
-                in_range = cid < amat.shape[1]
-                mask = np.zeros((nq, len(pdf)), dtype=bool)
-                mask[:, in_range] = amat[:, cid[in_range]]
-                dist = np.where(mask, dist, np.inf)
-            kk = min(per_batch_k, len(pdf))
-            vid = pdf[id_col].to_numpy()
-            out = {"query_id": [], id_col: [], "adc_dist": []}
-            for j in range(nq):
-                take = np.argsort(dist[j], kind="stable")[:kk]
-                take = take[np.isfinite(dist[j][take])]
-                out["query_id"].extend([ids[j]] * len(take))
-                out[id_col].extend(vid[take])
-                out["adc_dist"].extend(dist[j][take])
-            yield pd.DataFrame(out)
+    def _screen(batch):
+        tabs = bq.value
+        codes, keep = fixed_matrix(batch.column(code_col), tabs.shape[1], np.int64)
+        if codes is None:
+            return None
+        # (Q, rows): gather each query's m sub-distances, sum — one
+        # vectorized pass, no per-row Python; the sum is row-local
+        dist = tabs[:, np.arange(tabs.shape[1])[None, :], codes].sum(axis=2)
+        return np.flatnonzero(keep), dist.T, None
 
     proj = [id_col, code_col] + ([cluster_col] if cluster_col else [])
-    survivors = coded.select(*proj).mapInPandas(score, schema=out_schema)
-    if n_assign > 1:
-        # multi-assign copies carry identical codes → identical adc_dist;
-        # drop before ranking so the window returns k DISTINCT neighbors
-        survivors = survivors.dropDuplicates(["query_id", id_col])
-    win = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
+    ranked = batch_topk(
+        coded.select(*proj), id_col, qids, k, _screen, value="adc_dist",
+        allowed=allowed, cluster_col=cluster_col, copies=max(1, n_assign),
     )
-    return (
-        survivors.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            id_col,
-            F.round("adc_dist", 6).alias("adc_dist"),
-            "rank",
-        )
+    return ranked.select(
+        "query_id", id_col, F.round("adc_dist", 6).alias("adc_dist"), "rank"
     )
 
 

@@ -40,7 +40,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from photo_vector_search_spark.functions.arrowkit import (
+    batch_topk,
     bounded_rows,
+    cosine_screen,
     fixed_matrix,
     local_frame,
     spark_round6,
@@ -350,10 +352,11 @@ def sq8_batch_topk(
     """Batched asymmetric SQ8 top-k: Q queries share ONE pass over the
     codes — each Arrow batch decodes once and scores ALL queries with a
     single BLAS matmul (codes_batch @ Q_matrix.T), then keeps a per-query
-    local top-k, so the shuffle is O(batches · Q · k) survivor rows and the
-    merge is one per-QUERY window over ≤ batches·k rows — the knn_batch
-    two-phase shape on the 8×-compressed codes. Result ≡ a Python loop of
-    ``sq8_topk`` per query (pinned in tests).
+    local top-k (``arrowkit.batch_topk``, which re-scores the survivors
+    with ``_sq8_topc``'s row-local form), so the shuffle is
+    O(batches · Q · k) survivor rows and the merge is one per-QUERY window
+    over ≤ batches·k rows. Result ≡ a Python loop of ``sq8_topk`` per
+    query (pinned in tests), distances equal to the bit.
 
     ``queries``: (query_id, query_vec). ``allowed``: optional per-query
     cluster restriction {query_id: [cluster_id, ...]} — rows outside a
@@ -378,8 +381,8 @@ def sq8_batch_topk(
         return coded.sparkSession.createDataFrame(
             [], "query_id long, vec_id long, label int, dist double, rank int"
         )
-    qids = np.array([int(r["query_id"]) for r in qrows], dtype=np.int64)
-    if len(set(qids.tolist())) != len(qids):
+    qids = [int(r["query_id"]) for r in qrows]
+    if len(set(qids)) != len(qids):
         raise ValueError(
             "duplicate query_id values in queries — each id must be unique "
             "(a duplicate would double its survivor rows and corrupt ranks)"
@@ -389,73 +392,32 @@ def sq8_batch_topk(
     )
     qnorms = np.linalg.norm(qmat, axis=1)
     if not (qnorms > 0).all():
-        bad = [int(q) for q, n in zip(qids, qnorms) if not n > 0]
+        bad = [q for q, n in zip(qids, qnorms) if not n > 0]
         raise ValueError(f"queries {bad} have non-positive norm")
-    masks = None
     if allowed is not None:
-        missing = [int(q) for q in qids if int(q) not in allowed]
+        missing = [q for q in qids if q not in allowed]
         if missing:
             raise ValueError(f"allowed lacks probe lists for queries {missing}")
-        masks = {int(q): np.asarray(sorted(allowed[int(q)])) for q in qids}
-    sc = coded.sparkSession.sparkContext
-    b = sc.broadcast((model.vmin, model.scale, qmat, qnorms, qids, masks))
+    b = coded.sparkSession.sparkContext.broadcast(
+        (model.vmin, model.scale, qmat, qnorms)
+    )
+
+    def _screen(batch):  # the distances of _sq8_topc, to the bit
+        vmin, step, qm, qn = b.value
+        codes, keep = fixed_matrix(batch.column("_code"), len(vmin))
+        if codes is None:
+            return None
+        return cosine_screen(vmin + codes * step, keep, qm, qn, True)
 
     cols = ["vec_id", "label", F.col(code_col).alias("_code")]
-    if masks is not None:
+    if allowed is not None:
         cols.append("cluster_id")
-
-    def _local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vmin, step, qm, qn, ids, mk = b.value
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["_code"])
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values("vec_id", kind="stable").reset_index(drop=True)
-            codes = np.vstack(pdf["_code"].to_numpy()).astype(np.float64)
-            x = vmin + codes * step
-            nrm = np.linalg.norm(x, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                dist = 1.0 - (x @ qm.T) / (nrm[:, None] * qn[None, :])
-            dist[~np.isfinite(dist)] = np.inf
-            if mk is not None:
-                cl = pdf["cluster_id"].to_numpy()
-                for j, qid in enumerate(ids):
-                    dist[~np.isin(cl, mk[int(qid)]), j] = np.inf
-            vec_ids = pdf["vec_id"].to_numpy()
-            labels = pdf["label"].to_numpy()
-            out_q, out_v, out_l, out_d = [], [], [], []
-            top = min(k, len(pdf))
-            for j, qid in enumerate(ids):
-                col = dist[:, j]
-                order = np.argsort(col, kind="stable")[:top]
-                order = order[np.isfinite(col[order])]
-                out_q.append(np.full(len(order), qid))
-                out_v.append(vec_ids[order])
-                out_l.append(labels[order])
-                out_d.append(col[order])
-            if out_q:
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_q),
-                        "vec_id": np.concatenate(out_v),
-                        "label": np.concatenate(out_l),
-                        "_dist": np.concatenate(out_d),
-                    }
-                )
-
-    survivors = coded.select(*cols).mapInPandas(
-        _local_topk,
-        schema="query_id long, vec_id long, label int, _dist double",
+    ranked = batch_topk(
+        coded.select(*cols), "vec_id", qids, k, _screen, carry=("label",),
+        allowed=allowed,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_dist").asc(), F.col("vec_id").asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "label", F.round("_dist", 6).alias("dist"), "rank"
-        )
+    return ranked.select(
+        "query_id", "vec_id", "label", F.round("_dist", 6).alias("dist"), "rank"
     )
 
 

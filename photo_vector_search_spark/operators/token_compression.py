@@ -53,7 +53,9 @@ from photo_vector_search_spark.functions.arrowkit import bounded_rows
 from photo_vector_search_spark.operators.late_interaction import (
     MAX_DOC_TOKENS,
     MAX_QUERY_TOKENS,
+    _maxsim_screen,
     _query_token_vecs,
+    _query_tokens,
     _tok_matrices,
 )
 
@@ -369,17 +371,12 @@ def maxsim_batch_topk_compressed(
     codes — (query_id, id, maxsim, rank), ≡ a Python loop of
     `maxsim_topk_compressed` per query (pinned in tests) — the
     `maxsim_batch_topk` kernel with the asymmetric decode fused in: per
-    Arrow batch the codes decode ONCE and every query's token matrix scores
-    against the same reconstruction (one stacked BLAS matmul, segment-max
-    per doc, segment-sum per query, per-batch local top-k), so the shuffle
-    carries O(batches · Q · k) survivor rows. ``mapInArrow`` over the flat
-    list buffers (r12, `functions.arrowkit`) — one reshape per batch, no
-    per-row conversion; bit-identical scores."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from ..functions.arrowkit import flat_values, nested_matrix
+    Arrow batch the codes decode ONCE (one reshape of the flat list
+    buffers, `functions.arrowkit`) and every query's token matrix scores
+    against the same reconstruction; ``arrowkit.batch_topk`` keeps the
+    per-batch local top-k, so the shuffle carries O(batches · Q · k)
+    survivor rows."""
+    from ..functions.arrowkit import batch_topk, flat_values, nested_matrix
 
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -390,94 +387,31 @@ def maxsim_batch_topk_compressed(
         "ill-defined; de-duplicate the query frame first",
         empty="empty query frame",
     )
-    qids = [r["query_id"] for r in qrows]
-    qmats = [
-        np.asarray(
-            _query_token_vecs(r["query"], max_query_tokens, dim),
-            dtype=np.float64,
-        )
-        for r in qrows
-    ]
-    allq = np.vstack(qmats)
-    q_offsets = np.concatenate(
-        ([0], np.cumsum([m.shape[0] for m in qmats])[:-1])
-    )
-    sc = coded.sparkSession.sparkContext
-    bq = sc.broadcast(
+    bq = coded.sparkSession.sparkContext.broadcast(
         (
-            np.asarray(qids, dtype=np.int64),
-            allq,
-            q_offsets,
+            _query_tokens(qrows, max_query_tokens, dim),
             quant.centroids,
             quant.vmin,
             quant.scale,
         )
     )
-    id_field = coded.schema[id_col]
-    out_schema = StructType(
-        [
-            StructField("query_id", queries.schema["query_id"].dataType, True),
-            StructField(id_col, id_field.dataType, True),
-            StructField("_raw", DoubleType(), True),
-        ]
-    )
 
-    arrow_out = to_arrow_schema(out_schema)
-    dim_ = dim
+    def _screen(batch):
+        (allq, qoff), cent, vmin, step = bq.value
+        codes, counts, keep = nested_matrix(batch.column("tok_codes"), dim)
+        if codes is None:
+            return None
+        cids = flat_values(batch.column("tok_cids"), np.int64)
+        flat = _decode_flat(cids, codes, cent, vmin, step)  # decode ONCE
+        return _maxsim_screen(allq, qoff, flat, counts, keep)
 
-    def _score(batches):
-        ids, qm, qoff, cent, vmin, step = bq.value
-        nq = len(ids)
-        for batch in batches:
-            cols = {nm: i for i, nm in enumerate(batch.schema.names)}
-            ids_np = batch.column(cols[id_col]).to_numpy(zero_copy_only=False)
-            # pre-sort by id: stable argsort breaks ties by ascending id
-            order = np.argsort(ids_np, kind="stable")
-            order_pa = pa.array(order)
-            codes, counts, keep = nested_matrix(
-                batch.column(cols["tok_codes"]).take(order_pa), dim_
-            )
-            if codes is None:
-                continue
-            cids = flat_values(
-                batch.column(cols["tok_cids"]).take(order_pa), np.int64
-            )
-            flat = _decode_flat(cids, codes, cent, vmin, step)  # decode ONCE
-            doc_ids = ids_np[order][keep]
-            d_offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            sims = qm @ flat.T
-            best = np.maximum.reduceat(sims, d_offsets, axis=1)
-            scores = np.add.reduceat(best, qoff, axis=0)  # (Q, docs)
-            kk = min(k, scores.shape[1])
-            out_q, out_d, out_r = [], [], []
-            for j in range(nq):
-                row = scores[j]
-                take = np.argsort(-row, kind="stable")[:kk]
-                out_q.extend([ids[j]] * len(take))
-                out_d.extend(doc_ids[take])
-                out_r.extend(row[take])
-            yield pa.record_batch(
-                [
-                    pa.array(out_q, type=arrow_out.field(0).type),
-                    pa.array(out_d, type=arrow_out.field(1).type),
-                    pa.array(out_r, type=arrow_out.field(2).type),
-                ],
-                schema=arrow_out,
-            )
-
-    survivors = coded.select(id_col, "tok_cids", "tok_codes").mapInArrow(
-        _score, schema=out_schema
+    ranked = batch_topk(
+        coded.select(id_col, "tok_cids", "tok_codes"), id_col,
+        [r["query_id"] for r in qrows], k, _screen, value="maxsim",
+        query_type=queries.schema["query_id"].dataType.simpleString(),
+        descending=True, round6_key=True,
     )
-    win = Window.partitionBy("query_id").orderBy(
-        F.round("_raw", 6).desc(), F.col(id_col).asc()
-    )
-    return (
-        survivors.withColumn("rank", F.row_number().over(win))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", id_col, F.round("_raw", 6).alias("maxsim"), "rank"
-        )
-    )
+    return ranked.select("query_id", id_col, "maxsim", "rank")
 
 
 # ---------------------------------------------------------------------------

@@ -136,6 +136,41 @@ def test_batch_rejects_duplicate_query_ids(fitted):
         hamming_batch_topk(coded, model, dup, k=2)
 
 
+def test_batch_hamming_exact_on_full_64_bit_words(spark):
+    """Packed words use all 64 bits. Stacked through float64, a word with
+    bit 63 set loses its low bits past 2^53, and these four words would
+    score alike; the batch kernel stacks them as exact int64."""
+    import pyarrow as pa
+
+    from photo_vector_search_spark.functions.arrowkit import (
+        fixed_matrix,
+        local_frame,
+    )
+
+    w = -(2**63) + 2**53 + 1
+    words = [w, w ^ 1, w + 2, w ^ (1 << 62)]
+    col = pa.array([[x] for x in words] + [None], type=pa.list_(pa.int64()))
+    mat, keep = fixed_matrix(col, 1, np.int64)
+    assert mat[:, 0].tolist() == words and keep.tolist() == [True] * 4 + [False]
+
+    coded = local_frame(
+        spark, [(i, 0, [x]) for i, x in enumerate(words)],
+        "vec_id long, label int, bq array<bigint>",
+    )
+    queries = local_frame(
+        spark, [(0, [-1.0] * 64)], "query_id long, query_vec array<double>"
+    )
+    got = {
+        r["vec_id"]: r["hamming"]
+        for r in hamming_batch_topk(
+            coded, BQModel(np.zeros(64)), queries, k=4
+        ).collect()
+    }
+    # the all-negative query packs to word 0: Hamming is the popcount
+    assert got == {i: bin(x % 2**64).count("1") for i, x in enumerate(words)}
+    assert sorted(got.values()) == [2, 3, 4, 4]
+
+
 def test_null_vectors_never_rank(spark, fitted):
     """NULL embedding → NULL code at encode; NULL codes are filtered before
     scoring (the knn/sq8 discipline)."""

@@ -70,6 +70,10 @@ def test_knn_batch_fast_parity(spark, sf_dir, emb):
     a = sorted(map(tuple, knn_batch(emb, queries, k=4).collect()))
     b = sorted(map(tuple, knn_batch_fast(emb, queries, k=4).collect()))
     assert a == b
+    # a repeated query id would put each neighbour twice into its top k
+    dup = queries.withColumn("query_id", F.lit(7).cast("long"))
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        knn_batch_fast(emb, dup, k=4)
 
 
 def test_embedding_near_dup_fast_parity(emb):

@@ -480,6 +480,7 @@ SERVE_JOBS = {
     "rm3_store_batch_topk": 6,
     "ivf_sq8_store_topk": 0,
     "hybrid_store_search": 3,
+    "knn_batch_fast": 3,
 }
 
 
@@ -491,6 +492,7 @@ def test_serving_job_budget(spark, tmp_path):
         rm3_store_batch_topk,
     )
     from photo_vector_search_spark.operators.fusion import hybrid_store_search
+    from photo_vector_search_spark.operators.knn import knn_batch_fast
     from photo_vector_search_spark.operators.sq import (
         build_ivf_sq8_store,
         ivf_sq8_store_topk,
@@ -505,21 +507,24 @@ def test_serving_job_budget(spark, tmp_path):
     docs = spark.read.parquet(corpus)
     bm25, ivf = str(tmp_path / "bm25"), str(tmp_path / "ivf")
     build_bm25_store(docs, bm25, n_buckets=8)
-    build_ivf_sq8_store(
-        docs.select(
-            F.col("doc_id").alias("vec_id"),
-            (F.col("doc_id") % 3).cast("int").alias("label"),
-            stub_embedding_expr(F.col("text")).alias("embedding"),
-        ),
-        ivf,
-        n_clusters=4,
-    )
-    # a list-built query frame: a Python RDD, scanned once per batch call
+    vectors = str(tmp_path / "vectors")
+    docs.select(
+        F.col("doc_id").alias("vec_id"),
+        (F.col("doc_id") % 3).cast("int").alias("label"),
+        stub_embedding_expr(F.col("text")).alias("embedding"),
+    ).write.parquet(vectors)
+    emb = spark.read.parquet(vectors)
+    build_ivf_sq8_store(emb, ivf, n_clusters=4)
+    # list-built query frames: Python RDDs, scanned once per batch call
     queries = spark.createDataFrame(
         [(i, " ".join(WORDS[3 * i:3 * i + 3])) for i in range(4)],
         "query_id long, query string",
     )
-    vec = docs.limit(1).select(stub_embedding_expr(F.col("text"))).first()[0]
+    vec = emb.select("embedding").first()[0]
+    vec_queries = spark.createDataFrame(
+        [(i, [float(x) + 0.01 * i for x in vec]) for i in range(4)],
+        "query_id long, query_vec array<double>",
+    )
     calls = {
         "bm25_store_topk": lambda: bm25_store_topk(spark, bm25, "quick fox", k=5),
         "bm25_store_batch_topk": lambda: bm25_store_batch_topk(
@@ -534,6 +539,7 @@ def test_serving_job_budget(spark, tmp_path):
         "hybrid_store_search": lambda: hybrid_store_search(
             spark, bm25, ivf, "quick fox", k=5, nprobe=2
         ),
+        "knn_batch_fast": lambda: knn_batch_fast(emb, vec_queries, k=5),
     }
     def served(call):
         out = call()

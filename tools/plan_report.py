@@ -627,18 +627,28 @@ NOTES = {
         "identity, torn-pair refusal, and store-served == in-memory in "
         "tests/test_maxsim_store.py."
     ),
+    "knn_batch": (
+        "NOTE: declared through knn_batch_fast. The query frame is read "
+        "once, bounded; arrowkit.batch_topk's MapInArrow screens each "
+        "Arrow batch with one BLAS matmul against the broadcast query "
+        "matrix, re-scores the survivors pair by pair and keeps a "
+        "per-batch top-k per query, so the one Exchange under the rank "
+        "window carries O(batches*Q*k) rows. DuckDB-oracle parity in the "
+        "declared-query tests."
+    ),
     "maxsim_store_batch8": (
         "NOTE: library operator (r12 batched PLAID pipeline — Q text "
         "queries share every stage of the clustered-store serving path). "
         "Per-query centroid probes rank driver-side; the store scan "
         "filters to the UNION of probes (hive-partition pruning "
         "preserved) and each query masks to ITS probes inside the "
-        "kernel. The pooled prefilter scores ALL queries per Arrow batch "
-        "in one matmul over the flat pooled column (column-pruned) and "
-        "keeps a per-batch LOCAL top-prefilter_n per query — shuffle "
-        "O(batches*Q*n), never N*Q — then one bounded per-query window "
-        "picks candidates, ONE join moves <= Q*n token matrices, and the "
-        "shared matmul+segment-max kernel rescores per query group. "
+        "kernel. The pooled prefilter is arrowkit.batch_topk's "
+        "MapInArrow: ALL queries per Arrow batch in one matmul over the "
+        "flat pooled column (column-pruned), a per-batch LOCAL "
+        "top-prefilter_n per query — shuffle O(batches*Q*n), never N*Q — "
+        "then one bounded per-query window picks candidates, ONE join "
+        "moves <= Q*n token matrices, and a MapInArrow rescores each "
+        "(query, doc) pair from its own tokens. "
         "Batch == per-query maxsim_store_search loop across flat/"
         "clustered/brute shapes in tests/test_maxsim_store.py."
     ),
@@ -702,7 +712,8 @@ NOTES = {
         "maximum.reduceat segment-max over each doc's tokens, an "
         "add.reduceat segment-sum over each query's tokens (reduceat is "
         "strictly sequential — the expression fold's accumulation order), "
-        "then a per-batch LOCAL top-k per query: the shuffle carries "
+        "then arrowkit.batch_topk's MapInArrow keeps a per-batch LOCAL "
+        "top-k per query by the pair-local 6-dp score: the shuffle carries "
         "O(batches*Q*k) survivor rows, never N*Q. Batch == per-query "
         "maxsim_topk loop in tests/test_late_interaction.py; 1.4 s for 8 "
         "queries over the persisted store at sf0.1."
@@ -755,7 +766,7 @@ NOTES = {
         "ONE pass per representation). Stage 1 is hamming_batch_topk's "
         "shared codes pass (top-c1 per query); stage 2 joins the "
         "shortlists to the SQ8 codes (<= Q*c1 candidate rows, never the "
-        "corpus) and one Arrow kernel scores each row against its own "
+        "corpus) and one MapInArrow scores each row against its own "
         "query via a broadcast query matrix; stage 3 joins <= Q*c2 "
         "survivors to the float source for the exact tail. Loop-parity "
         "vs cascade_topk pinned in tests/test_cascade.py."
@@ -875,9 +886,10 @@ NOTES = {
     "hamming_batch64": (
         "NOTE: library operator (r11 batched Hamming serving — Q queries "
         "share ONE pass over the 64x-compressed codes). Each Arrow batch "
-        "XORs against the broadcast query-code matrix and popcounts via a "
-        "byte lookup table (numpy<2 portable), keeping per-query local "
-        "top-k, so the shuffle is O(batches*Q*k) survivor rows into one "
+        "of exact int64 words XORs against the broadcast query-code "
+        "matrix and popcounts via a byte lookup table (numpy<2 portable); "
+        "arrowkit.batch_topk's MapInArrow keeps per-query local top-k, so "
+        "the shuffle is O(batches*Q*k) survivor rows into one "
         "per-QUERY window. Loop-parity vs hamming_topk pinned in "
         "tests/test_bq.py."
     ),
@@ -925,9 +937,11 @@ NOTES = {
         "Per-query probe lists come driver-side from the broadcast sidecar "
         "centroids (Q·nprobe ints); the scan prunes to the UNION of probe "
         "sets (IN-list over the cluster partition column → file-level "
-        "pruning); the batch kernel decodes each Arrow batch ONCE and "
-        "scores all queries in one BLAS matmul with per-query probe masks; "
-        "survivors shuffle O(batches·Q·k) into one per-query window. "
+        "pruning); the batch kernel (arrowkit.batch_topk's MapInArrow) "
+        "decodes each Arrow batch ONCE, screens all queries in one BLAS "
+        "matmul with per-query probe masks and re-scores the survivors "
+        "pair by pair (the single-query distances, to the bit); survivors "
+        "shuffle O(batches·Q·k) into one per-query window. "
         "Loop-parity pinned in tests/test_ivf_sq8_store.py."
     ),
     "rrf_fuse": (
@@ -1111,8 +1125,9 @@ NOTES = {
     "ivf_pq_batch_topk": (
         "NOTE: library operator (r9 batched IVF-PQ serving). ONE "
         "union-pruned codes scan (the cluster IN-filter prunes partition "
-        "directories) feeds the masked batch-ADC MapInPandas — the "
-        "broadcast carries Q LUTs + the (Q, n_clusters) probe mask — and "
+        "directories) feeds the masked batch-ADC MapInArrow "
+        "(arrowkit.batch_topk) — the broadcasts carry Q LUTs + the "
+        "(Q, n_clusters) probe mask — and "
         "the only exchange moves O(batches*Q*k*n_assign) survivor rows "
         "into the per-query rank window; per-query probe semantics are "
         "exact (pinned vs the per-query loop)."
@@ -1180,9 +1195,10 @@ NOTES = {
     ),
     "pq_batch_topk": (
         "NOTE: library operator (r8 batched ADC). All Q query LUTs ride one "
-        "broadcast; the MapInPandas emits only per-batch per-query top-k "
-        "rows, so the single Exchange under the rank window carries "
-        "O(batches*Q*k) — the knn_batch_fast discipline over codes."
+        "broadcast; the MapInArrow (arrowkit.batch_topk) emits only "
+        "per-batch per-query top-k rows, so the single Exchange under the "
+        "rank window carries O(batches*Q*k) — the knn_batch_fast "
+        "discipline over codes."
     ),
     "fim_transform": (
         "NOTE: library operator (r8 fill-in-the-middle). One map-only "
