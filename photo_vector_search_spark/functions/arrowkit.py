@@ -125,7 +125,8 @@ def local_frame(spark, rows, schema):
 
 
 def bounded_rows(
-    queries, cols, max_queries: int, too_many: str, duplicate=None, empty=None
+    queries, cols, max_queries: int, too_many: str, duplicate=None, empty=None,
+    rows=None,
 ) -> list[dict]:
     """At most ``max_queries`` rows of ``queries``' ``cols``, as dicts, read
     in ONE bounded job (``limit(max_queries + 1).toArrow()``; a ``collect``
@@ -133,8 +134,11 @@ def bounded_rows(
     scale-up). Refuses with ``too_many`` past ``max_queries``, with
     ``empty`` (when given) on no rows and with ``duplicate`` (when given)
     when the first column repeats a value. The limit comes first, so an
-    oversized frame never lands whole on the driver."""
-    rows = queries.select(*cols).limit(max_queries + 1).toArrow().to_pylist()
+    oversized frame never lands whole on the driver. ``rows``: the rows a
+    caller already read from ``queries`` and hands down, checked the same
+    way and not read again."""
+    if rows is None:
+        rows = queries.select(*cols).limit(max_queries + 1).toArrow().to_pylist()
     if len(rows) > max_queries:
         raise ValueError(too_many)
     if empty is not None and not rows:

@@ -272,6 +272,7 @@ def hamming_batch_topk(
     k: int = 5,
     code_col: str = "bq",
     max_queries: int = 65_536,
+    qrows: list | None = None,
 ) -> DataFrame:
     """Batched Hamming top-k: Q queries share ONE pass over the codes —
     each Arrow batch XORs against the whole broadcast query-code matrix and
@@ -281,7 +282,9 @@ def hamming_batch_topk(
     Result ≡ a Python loop of ``hamming_topk`` per query (pinned in tests);
     ``arrowkit.batch_topk`` states the cut and the tie order.
     ``queries``: (query_id, query_vec); duplicate query ids are rejected
-    (the batched-serving contract, `sq8_batch_topk`)."""
+    (the batched-serving contract, `sq8_batch_topk`). ``qrows``: the query
+    rows a caller already read (`cascade_batch_topk`), checked the same
+    way and not read again."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     # limit BEFORE collect (ADVICE r11): an oversized query frame must trip
@@ -294,6 +297,7 @@ def hamming_batch_topk(
         duplicate="duplicate query_id in the batch — per-query top-k is "
         "ill-defined; de-duplicate the query frame first",
         empty="empty query frame",
+        rows=qrows,
     )
     qmat = np.vstack(
         [np.asarray(r["query_vec"], dtype=np.float64) for r in qrows]

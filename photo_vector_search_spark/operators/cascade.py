@@ -152,10 +152,10 @@ def cascade_batch_topk(
         f"cascade_batch_topk: >{max_queries} queries — split the query "
         "set or raise max_queries",
     )
-    # stage 1: shared-pass Hamming shortlist per query (dup ids rejected
-    # inside hamming_batch_topk)
+    # stage 1: shared-pass Hamming shortlist per query over the rows read
+    # above (dup ids and an empty frame rejected inside hamming_batch_topk)
     shortlist = hamming_batch_topk(
-        coded_bq, bq_model, queries, k=c1
+        coded_bq, bq_model, queries, k=c1, qrows=qrows
     ).select("query_id", "vec_id")
 
     # stage 2: SQ8 re-score of the per-query candidate rows

@@ -29,10 +29,22 @@ from __future__ import annotations
 from functools import reduce
 from typing import Sequence
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from photo_vector_search_spark.functions.arrowkit import bounded_rows, local_frame
+from photo_vector_search_spark.functions.arrowkit import (
+    bounded_rows,
+    local_frame,
+    spark_round6,
+)
 
 RRF_K = 60  # the paper's (and Elasticsearch's) default rank constant
 
@@ -48,10 +60,11 @@ def hybrid_text_search(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """One-call hybrid retrieval for a text query: the in-engine embedding
-    path (`pipelines/embed.stub_embedding_expr` → exact cosine top-``pool``
-    over ``embeddings``, the search_by_text rung) fused with BM25 top-``pool``
-    over ``docs`` by RRF — (id, rrf_score, rank), top ``k``.
+    """One-call hybrid retrieval for a text query: the stub text embedding
+    (`pipelines/embed.stub_embed_one`, equal to ``stub_embedding_expr`` to
+    the bit) → exact cosine top-``pool`` over ``embeddings``, the
+    search_by_text rung, fused with BM25 top-``pool`` over ``docs`` by
+    RRF — (id, rrf_score, rank), top ``k``.
 
     ``pool`` (default 3k) is each run's candidate depth — RRF can only
     surface what some run retrieved, so the pool rides deeper than k.
@@ -65,19 +78,15 @@ def hybrid_text_search(
 
     from photo_vector_search_spark.operators.bm25 import bm25_topk
     from photo_vector_search_spark.operators.knn import knn_topk
-    from photo_vector_search_spark.pipelines.embed import stub_embedding_expr
+    from photo_vector_search_spark.pipelines.embed import stub_embed_one
 
     if len(weights) != 2:
         raise ValueError(f"weights must be (vector, lexical), got {weights}")
     c = pool if pool is not None else 3 * k
     if c < k:
         raise ValueError(f"pool ({c}) must be >= k ({k})")
-    qv = [
-        float(v)
-        for v in docs.sparkSession.range(1)
-        .select(stub_embedding_expr(_F.lit(query)).alias("qv"))
-        .first()["qv"]
-    ]
+    # the Python twin of stub_embedding_expr, equal to it to the bit
+    qv = stub_embed_one(query)
     # knn_topk returns the ordered (vec_id, label, dist) without a rank
     # column; number its (<= pool)-row result — a tiny window, not corpus
     vec_run = (
@@ -117,54 +126,80 @@ def hybrid_store_search(
     """One-call hybrid retrieval served ENTIRELY from persisted indexes —
     no corpus frame touched: the dense run probes an IVF,SQ8 store
     (`sq.ivf_sq8_store_topk`, cluster-partition-pruned codes) with the
-    in-engine text embedding of ``query``; the lexical run reads the BM25
+    stub text embedding of ``query``; the lexical run reads the BM25
     postings store (`bm25_store.bm25_store_topk`, bucket-partition-pruned
-    postings); RRF fuses the two rank lists — (id, rrf_score, rank), top
-    ``k``. This is the production serving shape: at 100 TB neither the
+    postings); RRF fuses the two rank lists — (doc_id, rrf_score, rank),
+    top ``k``. This is the production serving shape: at 100 TB neither the
     text nor the float corpus is scanned — only probed clusters of 8×
     codes and ≤ q term buckets of postings.
 
     ``pool`` (default 3k) is each run's candidate depth; ``weights`` =
     (vector_weight, lexical_weight). The stores must index the same corpus
     under the same ids (vec_id == doc_id, the fixture convention).
-    Composition sugar over three audited rungs (ivf_sq8_store_topk,
-    bm25_store_topk, rrf_fuse) — ≡ fusing the two store runs by hand,
-    pinned in tests."""
-    from pyspark.sql import functions as _F
 
+    Each run's ≤ ``pool`` rows are collected — no Spark job when its read
+    is on the driver tier (``operators/store.py``), its Spark plan over
+    the bound — and fused on the driver by ``_rrf_local``, ``rrf_fuse``'s
+    arithmetic and order; the result is a local relation. ≡ fusing the two
+    store runs by hand with ``rrf_fuse``, pinned in tests."""
     from photo_vector_search_spark.operators.bm25_store import bm25_store_topk
     from photo_vector_search_spark.operators.sq import ivf_sq8_store_topk
-    from photo_vector_search_spark.pipelines.embed import stub_embedding_expr
+    from photo_vector_search_spark.pipelines.embed import stub_embed_one
 
     if len(weights) != 2:
         raise ValueError(f"weights must be (vector, lexical), got {weights}")
     c = pool if pool is not None else 3 * k
     if c < k:
         raise ValueError(f"pool ({c}) must be >= k ({k})")
-    # a one-row local relation: the embedding is evaluated on the driver,
-    # with no Spark job
-    qv = [
-        float(v)
-        for v in local_frame(spark, [(query,)], "q string")
-        .select(stub_embedding_expr(_F.col("q")).alias("qv"))
-        .first()["qv"]
-    ]
-    vec_run = ivf_sq8_store_topk(
-        spark, vec_path, qv, k=c, nprobe=nprobe
-    ).select(
-        _F.lit(0).alias("query_id"), _F.col("vec_id").alias("doc_id"), "rank"
+    # the Python twin of stub_embedding_expr, equal to it to the bit
+    qv = stub_embed_one(query)
+    vec_run = ivf_sq8_store_topk(spark, vec_path, qv, k=c, nprobe=nprobe)
+    lex_run = bm25_store_topk(spark, bm25_path, query, k=c)
+    rows = _rrf_local(
+        [
+            [(r["vec_id"], r["rank"]) for r in vec_run.collect()],
+            [(r["doc_id"], r["rank"]) for r in lex_run.collect()],
+        ],
+        rrf_k, weights, k,
     )
-    lex_run = bm25_store_topk(spark, bm25_path, query, k=c).select(
-        _F.lit(0).alias("query_id"), _F.col("doc_id"), "rank"
-    )
-    fused = rrf_fuse(
-        [vec_run, lex_run],
-        k=rrf_k,
-        weights=list(weights),
-        doc_col="doc_id",
-        top_n=k,
-    )
-    return fused.select("doc_id", "rrf_score", "rank")
+    return local_frame(spark, rows, _HYBRID_SCHEMA)
+
+
+# rrf_fuse's output schema over two long-id runs
+_HYBRID_SCHEMA = StructType([
+    StructField("doc_id", LongType(), True),
+    StructField("rrf_score", DoubleType(), True),
+    StructField("rank", IntegerType(), False),
+])
+
+
+def _rrf_local(runs, k, weights, top_n) -> list[tuple]:
+    """``rrf_fuse`` of one query's runs — lists of (doc, rank) — on the
+    driver, with its arithmetic and order: ranks below 1 dropped, each
+    run's best rank per doc, Σ w / (k + rank) over the runs in run order
+    (0.0 for a run without the doc), Spark's ``round(x, 6)``
+    (``spark_round6``), then score descending and doc ascending; the top
+    ``top_n`` as (doc, rrf_score, rank)."""
+    weights = _fuse_args(len(runs), k, weights, top_n)
+    best: dict = {}
+    for i, run in enumerate(runs):
+        for doc, rank in run:
+            if rank is None or rank < 1:
+                continue
+            ranks = best.setdefault(doc, [None] * len(runs))
+            if ranks[i] is None or rank < ranks[i]:
+                ranks[i] = rank
+    docs = list(best)
+    raw = []
+    for doc in docs:
+        total = None
+        for w, r in zip(weights, best[doc]):
+            c = 0.0 if r is None else float(w) / (float(k) + float(r))
+            total = c if total is None else total + c
+        raw.append(total)
+    score = spark_round6(np.array(raw, dtype=np.float64)).tolist()
+    order = sorted(range(len(docs)), key=lambda i: (-score[i], docs[i]))[:top_n]
+    return [(docs[i], score[i], n) for n, i in enumerate(order, 1)]
 
 
 def hybrid_batch_search(
@@ -260,6 +295,23 @@ def hybrid_batch_search(
     )
 
 
+def _fuse_args(n_runs: int, k, weights, top_n):
+    """The weights of an RRF fusion of ``n_runs`` runs (default all 1.0),
+    refusing an empty run list, ``k`` <= 0, a weight count that is not
+    the run count and ``top_n`` < 1."""
+    if not n_runs:
+        raise ValueError("need at least one run to fuse")
+    if k <= 0:
+        raise ValueError(f"k must be > 0, got {k}")
+    if weights is None:
+        weights = [1.0] * n_runs
+    if len(weights) != n_runs:
+        raise ValueError(f"got {n_runs} runs but {len(weights)} weights")
+    if top_n is not None and top_n < 1:
+        raise ValueError(f"top_n must be >= 1, got {top_n}")
+    return weights
+
+
 def rrf_fuse(
     runs: Sequence[DataFrame],
     k: int = RRF_K,
@@ -281,18 +333,7 @@ def rrf_fuse(
     Output: (query_col, doc_col, rrf_score rounded 6dp, rank) re-ranked per
     query, ties broken by ascending doc id so the ranking is deterministic
     and partitioning-invariant. ``top_n`` keeps the fused top n per query."""
-    if not runs:
-        raise ValueError("need at least one run to fuse")
-    if k <= 0:
-        raise ValueError(f"k must be > 0, got {k}")
-    if weights is None:
-        weights = [1.0] * len(runs)
-    if len(weights) != len(runs):
-        raise ValueError(
-            f"got {len(runs)} runs but {len(weights)} weights"
-        )
-    if top_n is not None and top_n < 1:
-        raise ValueError(f"top_n must be >= 1, got {top_n}")
+    weights = _fuse_args(len(runs), k, weights, top_n)
 
     # ONE keyed aggregation for the whole fusion (r12 — was one groupBy-min
     # PER RUN plus a second groupBy over their union, i.e. runs+1 exchanges

@@ -192,6 +192,7 @@ def maxsim_scores_fast(
     id_col: str = "doc_id",
     max_query_tokens: int = MAX_QUERY_TOKENS,
     dim: int = 64,
+    pairwise: bool = False,
 ) -> DataFrame:
     """Serving twin of ``maxsim_scores`` — same (id, maxsim) result modulo
     float summation order (parity-pinned in tests): per Arrow batch, ONE
@@ -202,7 +203,10 @@ def maxsim_scores_fast(
     ``F.round`` so both paths round identically. ``mapInArrow`` over the
     flat list buffers (r12, `functions.arrowkit`): the batch's stacked
     token matrix is one reshape, not a per-row vstack — same arithmetic,
-    bit-identical scores."""
+    bit-identical scores. ``pairwise``: score each doc from its own tokens
+    alone (``_maxsim_pairs``) instead of inside the batch's BLAS product,
+    so a doc's score does not depend on the batch it lands in — for a
+    bounded candidate set, as the store rescore is."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -234,13 +238,16 @@ def maxsim_scores_fast(
             )
             if flat is None:
                 continue
-            sims = qm @ flat.T  # (q, T) in one BLAS call
-            offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            best = np.maximum.reduceat(sims, offsets, axis=1)  # (q, docs)
-            # accumulate in query-token order — the expression fold's order
-            tot = np.zeros(best.shape[1], dtype=np.float64)
-            for j in range(qm.shape[0]):
-                tot = tot + best[j]
+            if pairwise:
+                tot = _maxsim_one(qm, flat, counts)
+            else:
+                sims = qm @ flat.T  # (q, T) in one BLAS call
+                offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
+                best = np.maximum.reduceat(sims, offsets, axis=1)  # (q, docs)
+                # sum in query-token order: the expression fold's order
+                tot = np.zeros(best.shape[1], dtype=np.float64)
+                for j in range(qm.shape[0]):
+                    tot = tot + best[j]
             ids_np = batch.column(cols[id_col]).to_numpy(
                 zero_copy_only=False
             )[keep]
@@ -271,8 +278,6 @@ def maxsim_topk(
     TakeOrderedAndProject (the knn ordering discipline). ``fast`` picks
     the Arrow-kernel scorer (serving default); ``fast=False`` keeps the
     DuckDB-replayable expression path."""
-    from pyspark.sql import Window
-
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     scorer = maxsim_scores_fast if fast else maxsim_scores
@@ -280,6 +285,14 @@ def maxsim_topk(
         doc_toks, query, id_col=id_col,
         max_query_tokens=max_query_tokens, dim=dim,
     )
+    return _ranked(scores, k, id_col)
+
+
+def _ranked(scores: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The top ``k`` of (id, maxsim) ``scores`` with their ``rank``: score
+    descending, then id ascending (TakeOrderedAndProject)."""
+    from pyspark.sql import Window
+
     top = scores.orderBy(F.col("maxsim").desc(), F.col(id_col).asc()).limit(k)
     return top.withColumn(
         "rank",
@@ -334,10 +347,7 @@ def pooled_cosine_candidates(
                     continue
                 offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
                 sums = np.add.reduceat(flat, offsets, axis=0)
-                pooled = sums / counts[:, None]
-                norms = np.linalg.norm(pooled, axis=1)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = (pooled @ qv) / norms
+                cos = _pooled_cosine(sums / counts[:, None], qv)
                 cos = np.where(np.isfinite(cos), cos, None)
                 yield pd.DataFrame(
                     {id_col: pdf[id_col].to_numpy()[keep], "_pool": cos}
@@ -446,10 +456,7 @@ def _pooled_candidates_from_docs(
                 continue
             offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
             sums = np.add.reduceat(flat, offsets, axis=0)
-            pooled = sums / counts[:, None]
-            norms = np.linalg.norm(pooled, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (pooled @ qv) / norms
+            cos = _pooled_cosine(sums / counts[:, None], qv)
             cos = np.where(np.isfinite(cos), cos, None)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy()[keep], "_pool": cos}
@@ -489,6 +496,33 @@ def _maxsim_pairs(allq, qoff, flat, counts):
         return out
 
     return exact
+
+
+def _maxsim_one(qmat, flat, counts):
+    """``_maxsim_pairs`` of every doc stacked in ``flat`` against the one
+    query ``qmat``."""
+    import numpy as np
+
+    zeros = np.zeros(len(counts), dtype=np.int64)
+    return _maxsim_pairs(qmat, zeros[:1], flat, counts)(
+        np.arange(len(counts)), zeros
+    )
+
+
+def _pooled_cosine(pooled, qmean):
+    """The prefilter's cosine of each pooled doc vector (a row of
+    ``pooled``) against the mean query vector, each from its own row
+    alone (``einsum``'s loop along the row, ``sq._sq8_topc``'s form, equal
+    to ``arrowkit.cosine_screen``'s pair-local cosine to the bit), so the
+    driver tier, the Spark tier and the batch path choose the same
+    candidates whatever the batch layout. Zero-norm rows give a
+    non-finite value, which never ranks ahead of a finite one."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.einsum("ij,j->i", pooled, qmean) / np.linalg.norm(
+            pooled, axis=1
+        )
 
 
 def _maxsim_screen(allq, qoff, flat, counts, keep):
@@ -743,14 +777,21 @@ def with_pooled_column(doc_toks: DataFrame, id_col: str = "doc_id") -> DataFrame
     return doc_toks.mapInPandas(_pool, schema=schema)
 
 
+def _open_maxsim(spark, path: str):
+    """``store.open_store`` of a `build_maxsim_store` store: the base is
+    signed by its ``.meta``; its rows carry no ``build_id``, so its
+    footers are kept for the driver tier but not build-checked."""
+    from photo_vector_search_spark.operators.store import open_store
+
+    return open_store(
+        spark, path, "MaxSim", "build_maxsim_store", meta=True, footer=False
+    )
+
+
 def load_maxsim_store(spark, path: str):
     """(token frame, meta row) for a `build_maxsim_store` store, opened by
     ``store.open_store`` (the base signed by its ``.meta``)."""
-    from photo_vector_search_spark.operators.store import open_store
-
-    opened = open_store(
-        spark, path, "MaxSim", "build_maxsim_store", meta=True, footer=False
-    )
+    opened = _open_maxsim(spark, path)
     return opened.tables[0], opened.meta
 
 
@@ -796,6 +837,16 @@ def maxsim_store_search(
     The candidate ids round-trip the driver (bounded by ``prefilter_n`` —
     the serving knob, the mmr_rerank discipline).
 
+    Driver tier (``operators/store.py`` states the rule): with
+    ``prefilter_n`` and ``fast``, no ``filter`` and the prefilter's
+    ``pooled`` read of the probed files within ``store.LOCAL_READ_ROWS``
+    row visits (one per 64 values), the prefilter runs on the driver with
+    pyarrow and numpy (``_local_candidates``); the rescore does too when
+    the candidates' row groups are within the bound as well
+    (``_local_rescore``), and the call then launches no Spark job. Both
+    tiers score each row by the same row-local kernels, so they return the
+    same rows.
+
     ``nprobe`` (clustered stores only): rank the build's pooled-vector
     centroids by cosine against the mean query vector DRIVER-side (k tiny
     rows) and restrict every scan to the top-nprobe clusters — whole
@@ -809,16 +860,17 @@ def maxsim_store_search(
     candidates are chosen among matching docs only (the filtered-search
     discipline; ≡ serving a store built from the filtered corpus, pinned
     in tests)."""
-    toks, meta = load_maxsim_store(spark, path)
+    opened = _open_maxsim(spark, path)
+    meta = opened.meta
     centroids = (
         _load_maxsim_centroids(spark, path, meta)
         if nprobe is not None and meta["n_clusters"] >= 1
         else None
     )
     return _serve_maxsim(
-        spark, toks, meta, query, k=k, prefilter_n=prefilter_n,
+        spark, opened.tables[0], meta, query, k=k, prefilter_n=prefilter_n,
         max_query_tokens=max_query_tokens, fast=fast, nprobe=nprobe,
-        centroids=centroids, filter=filter,
+        centroids=centroids, filter=filter, footers=opened.footers[""],
     )
 
 
@@ -841,11 +893,14 @@ def _pooled_flat_candidate_ids(
     id_col: str,
 ) -> list:
     """Top-``n`` candidate ids by pooled cosine over the FLAT ``pooled``
-    column — the column-pruned serving prefilter (64 doubles/doc; token
-    matrices never decoded corpus-wide). Bounded driver round-trip of n
-    ids (the mmr_rerank discipline). ``mapInArrow`` over the flat list
-    buffer (r12, `functions.arrowkit`): the batch's pooled matrix is one
-    reshape, not a per-row vstack — same arithmetic, identical scores."""
+    column — the Spark tier of the column-pruned serving prefilter (64
+    doubles/doc; token matrices never decoded corpus-wide): cosine
+    descending, docs without a finite cosine last, ties by id ascending.
+    Bounded driver round-trip of n ids (the mmr_rerank discipline).
+    ``mapInArrow`` over the flat list buffer (r12, `functions.arrowkit`):
+    the batch's pooled matrix is one reshape, not a per-row vstack. The
+    cosine is ``_pooled_cosine``, row-local, so ``_local_candidates`` (the
+    driver tier) picks the same ids."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -871,9 +926,7 @@ def _pooled_flat_candidate_ids(
             m, keep = fixed_matrix(batch.column(cols["pooled"]), dim)
             if m is None:
                 continue
-            norms = np.linalg.norm(m, axis=1)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = (m @ qv) / norms
+            cos = _pooled_cosine(m, qv)
             ids_np = batch.column(cols[id_col]).to_numpy(
                 zero_copy_only=False
             )[keep]
@@ -1073,15 +1126,24 @@ def _serve_maxsim(
     nprobe: int | None = None,
     centroids=None,
     filter=None,
+    footers: dict | None = None,
 ) -> DataFrame:
     """Shared serving tail for store-backed MaxSim (static store and live
     view): optional metadata filter (FIRST — the P2 discipline) → cluster
-    probe → pooled prefilter → rescore."""
+    probe → pooled prefilter → rescore. ``footers``: the parquet footers
+    of the store table ``toks`` reads unchanged (``OpenStore.footers``);
+    with them, a prefiltered read runs on the driver tier where its reads
+    are within the bound (`maxsim_store_search`)."""
     import numpy as np
 
     id_col, dim = meta["id_col"], meta["dim"]
+    qvecs = np.asarray(
+        _query_token_vecs(query, max_query_tokens, dim), dtype=np.float64
+    )
     if filter is not None:
         toks = toks.filter(filter)
+        footers = None
+    probes = None
     if nprobe is not None:
         if meta["n_clusters"] < 1:
             raise ValueError(
@@ -1090,31 +1152,129 @@ def _serve_maxsim(
             )
         if nprobe < 1:
             raise ValueError(f"nprobe must be >= 1, got {nprobe}")
-        qvecs = np.asarray(
-            _query_token_vecs(query, max_query_tokens, dim), dtype=np.float64
-        )
         probes = _probe_clusters(centroids, qvecs.mean(axis=0), nprobe)
         toks = toks.filter(F.col("cluster_id").isin(probes))
     if prefilter_n is not None and fast and "pooled" in toks.columns:
+        if k < 1:
+            raise ValueError(f"k must be >= 1, got {k}")
         if prefilter_n < k:
             raise ValueError(f"prefilter_n ({prefilter_n}) must be >= k ({k})")
-        qvecs = np.asarray(
-            _query_token_vecs(query, max_query_tokens, dim), dtype=np.float64
-        )
-        cand_ids = _pooled_flat_candidate_ids(
-            toks, qvecs.mean(axis=0), prefilter_n, id_col
-        )
+        qmean = qvecs.mean(axis=0)
+        cand_ids = None
+        if footers is not None:
+            cand_ids = _local_candidates(
+                footers, probes, qmean, prefilter_n, id_col, dim
+            )
+        if cand_ids is None:
+            cand_ids = _pooled_flat_candidate_ids(
+                toks, qmean, prefilter_n, id_col
+            )
+        else:
+            local = _local_rescore(
+                spark, footers, probes, qvecs, cand_ids, k,
+                toks.schema[id_col].dataType, meta,
+            )
+            if local is not None:
+                return local
         # IN filter pushes into the id-sorted store scan -> row-group pruning
         doc_toks = toks.filter(F.col(id_col).isin(cand_ids))
-        return maxsim_topk(
-            doc_toks, query, k=k, id_col=id_col,
-            max_query_tokens=max_query_tokens, dim=dim, fast=True,
+        return _ranked(
+            maxsim_scores_fast(
+                doc_toks, query, id_col=id_col,
+                max_query_tokens=max_query_tokens, dim=dim, pairwise=True,
+            ),
+            k, id_col,
         )
     return maxsim_search(
         None, query, k=k, prefilter_n=prefilter_n,
         id_col=id_col, max_tokens=meta["max_tokens"],
         max_query_tokens=max_query_tokens, dim=dim,
         fast=fast, doc_toks=toks,
+    )
+
+
+def _local_candidates(footers, probes, qmean, n: int, id_col: str, dim: int):
+    """The driver tier of the pooled prefilter (``operators/store.py``):
+    ``_pooled_flat_candidate_ids``'s ids — the top ``n`` by
+    ``_pooled_cosine`` over the ``pooled`` column of the probed files
+    (every file without ``probes``), docs without a finite cosine last,
+    ties by id ascending — read with pyarrow. None, reading nothing, when
+    the read is over ``store.LOCAL_READ_ROWS`` (a row visited once per 64
+    values)."""
+    import numpy as np
+
+    from ..functions.arrowkit import fixed_matrix
+    from .store import local_read
+
+    batches = local_read(
+        footers, None if probes is None else "cluster_id", probes or (),
+        (id_col, "pooled"), row_cost=dim / 64,
+    )
+    if batches is None:
+        return None
+    ids, cos = [], []
+    for batch in batches:
+        m, keep = fixed_matrix(batch.column("pooled"), dim)
+        if m is not None:
+            ids.append(batch.column(id_col).to_numpy(zero_copy_only=False)[keep])
+            cos.append(_pooled_cosine(m, qmean))
+    if not ids:
+        return []
+    ids, cos = np.concatenate(ids), np.concatenate(cos)
+    bad = ~np.isfinite(cos)
+    order = np.lexsort((ids, -np.where(bad, 0.0, cos), bad))
+    return ids[order[:n]].tolist()
+
+
+def _local_rescore(spark, footers, probes, qvecs, cand_ids, k, id_type, meta):
+    """The driver tier of the candidate rescore (``operators/store.py``):
+    the ``tok_embs`` of ``cand_ids`` from the row groups whose id min/max
+    covers one, each doc scored by ``_maxsim_pairs`` from its own tokens,
+    rounded as Spark rounds (``spark_round6``) and ranked by score
+    descending, then id ascending, as a local relation of (id, maxsim,
+    rank) — the Spark tier's rows and schema. None, reading nothing, when
+    those row groups are over ``store.LOCAL_READ_ROWS`` (a row visited
+    once per 64 values of its ``max_tokens`` token vectors): the caller
+    then rescores on Spark."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import (
+        DoubleType, IntegerType, StructField, StructType,
+    )
+
+    from ..functions.arrowkit import local_frame, nested_matrix, spark_round6
+    from .store import local_read
+
+    id_col, dim = meta["id_col"], meta["dim"]
+    batches = local_read(
+        footers, None if probes is None else "cluster_id", probes or (),
+        (id_col, "tok_embs"), id_col, dict.fromkeys(cand_ids, 1),
+        row_cost=meta["max_tokens"] * dim / 64,
+    )
+    if batches is None:
+        return None
+    ids, raw = [], []
+    for batch in batches:
+        wanted = pa.array(cand_ids, type=batch.schema.field(id_col).type)
+        batch = batch.filter(pc.is_in(batch.column(id_col), value_set=wanted))
+        flat, counts, keep = nested_matrix(batch.column("tok_embs"), dim)
+        if flat is not None:
+            ids.append(batch.column(id_col).to_numpy(zero_copy_only=False)[keep])
+            raw.append(_maxsim_one(qvecs, flat, counts))
+    schema = StructType([
+        StructField(id_col, id_type, True),
+        StructField("maxsim", DoubleType(), True),
+        StructField("rank", IntegerType(), False),
+    ])
+    if not ids:
+        return local_frame(spark, [], schema)
+    ids, score = np.concatenate(ids), spark_round6(np.concatenate(raw))
+    top = np.lexsort((ids, -score))[:k]
+    return local_frame(
+        spark,
+        list(zip(ids[top].tolist(), score[top].tolist(), range(1, len(top) + 1))),
+        schema,
     )
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from photo_vector_search_spark.operators.late_interaction import (
     _META_SCHEMA,
     _load_maxsim_centroids,
+    _open_maxsim,
     _serve_maxsim,
     doc_token_embeddings,
     load_maxsim_store,
@@ -170,8 +171,17 @@ def load_live_maxsim(spark, path: str):
     """(live token frame, meta): delta ∪ (base anti delta-ids) − tombstones,
     every side table build-checked. Cluster/pool filters push through the
     union, so the base scan keeps its partition pruning."""
-    base, meta = load_maxsim_store(spark, path)
-    return live_view(spark, path, base, meta["build_id"], meta["id_col"]), meta
+    return _open_live(spark, path)[:2]
+
+
+def _open_live(spark, path: str):
+    """(live view, meta, base footers or None): the footers only when no
+    side table exists, so the live view is the base itself and a small
+    read may run on the driver tier."""
+    opened = _open_maxsim(spark, path)
+    base, meta = opened.tables[0], opened.meta
+    live = live_view(spark, path, base, meta["build_id"], meta["id_col"])
+    return live, meta, opened.footers[""] if live is base else None
 
 
 def live_maxsim_search(
@@ -188,13 +198,14 @@ def live_maxsim_search(
     """`maxsim_store_search` over the LIVE view (base + delta − tombstones):
     the serving call for a store growing through upserts between
     compactions. ≡ composing the corpora in memory, pinned in tests.
+    Without side tables, a small read runs on the driver tier.
     ``filter`` (keep_cols stores): metadata predicate applied before the
     prefilter, pushed through the union to both the base and delta scans."""
     from photo_vector_search_spark.operators.late_interaction import (
         MAX_QUERY_TOKENS,
     )
 
-    live, meta = load_live_maxsim(spark, path)
+    live, meta, footers = _open_live(spark, path)
     centroids = (
         _load_maxsim_centroids(spark, path, meta)
         if nprobe is not None and meta["n_clusters"] >= 1
@@ -206,6 +217,7 @@ def live_maxsim_search(
             MAX_QUERY_TOKENS if max_query_tokens is None else max_query_tokens
         ),
         fast=fast, nprobe=nprobe, centroids=centroids, filter=filter,
+        footers=footers,
     )
 
 

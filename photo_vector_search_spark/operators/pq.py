@@ -370,22 +370,25 @@ def pq_batch_topk(
     cluster must not hide the copy in a probed one — so the per-batch cap
     over-fetches ``k*n_assign`` and the final window dedups, the
     ``ann.ivf_topk`` discipline. ``arrowkit.batch_topk`` states the cut
-    and the tie order."""
+    and the tie order. Duplicate query ids and an empty query frame are
+    refused, in the read and in handed-down ``qrows`` alike (the
+    batched-serving contract, `sq8_batch_topk`)."""
     too_many = (
         f"pq_batch_topk: >{max_queries} queries — the LUT broadcast is "
         "Q·m·k doubles; split the query set or raise max_queries"
     )
-    if qrows is None:
-        # ``qrows`` lets a caller that already collected the query set (the
-        # ivf_pq_batch_search probe pass) hand it down — re-collecting here
-        # would run a second driver job AND could disagree with the first
-        # collect on a nondeterministic source, leaving query_ids with an
-        # empty probe mask that silently return zero rows (review finding)
-        qrows = bounded_rows(
-            queries, ("query_id", "query_vec"), max_queries, too_many
-        )
-    elif len(qrows) > max_queries:
-        raise ValueError(too_many)
+    # ``qrows`` lets a caller that already collected the query set (the
+    # ivf_pq_batch_search probe pass) hand it down — re-collecting here
+    # would run a second driver job AND could disagree with the first
+    # collect on a nondeterministic source, leaving query_ids with an
+    # empty probe mask that silently return zero rows (review finding)
+    qrows = bounded_rows(
+        queries, ("query_id", "query_vec"), max_queries, too_many,
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
+        rows=qrows,
+    )
     if (allowed is None) != (cluster_col is None):
         raise ValueError(
             "pq_batch_topk: allowed and cluster_col must be given together"
@@ -677,6 +680,9 @@ def ivf_pq_batch_search(
         queries, ("query_id", "query_vec"), max_queries,
         f"ivf_pq_batch_search: >{max_queries} queries — split the "
         "query set or raise max_queries",
+        duplicate="duplicate query_id in the batch — per-query top-k is "
+        "ill-defined; de-duplicate the query frame first",
+        empty="empty query frame",
     )
     np_probe = min(nprobe, len(cents))
     allowed: dict[int, list[int]] = {}

@@ -43,23 +43,29 @@ reopens its one persistent index per call, photo_vector_search.py:16-20):
   (``read_table``), so Spark infers nothing; partition columns are still
   discovered from the paths. Side tables open the same way.
 
-Driver-local read tier. A serving read of the BM25 postings store or the
-IVF,SQ8 store is KB of data, and every Spark job behind it costs 65-400 ms
-on a 4-core host. The open already holds every base footer
-(``OpenStore.footers``), so the tier is chosen from them with no further
-read: ``local_read`` sums the row visits of the row groups the call would
-read — for BM25 the row groups in the query's ``term_bucket=`` directories
-whose ``_term`` min/max covers a query term, a row visited once per query
-of the batch that holds its term; for IVF,SQ8 the files in the probed
-``cluster_id=`` directories, a row visited once per 64 code values it
-decodes. Within ``LOCAL_READ_ROWS`` (2^19 visits) it reads exactly those
+Driver-local read tier. A serving read of the BM25 postings store, the
+IVF,SQ8 store or the MaxSim token store is KB of data, and every Spark job
+behind it costs 65-400 ms on a 4-core host. The open already holds every
+base footer (``OpenStore.footers``), so the tier is chosen from them with
+no further read: ``local_read`` sums the row visits of the row groups the
+call would read — for BM25 the row groups in the query's ``term_bucket=``
+directories whose ``_term`` min/max covers a query term, a row visited
+once per query of the batch that holds its term; for IVF,SQ8 the files in
+the probed ``cluster_id=`` directories, a row visited once per 64 code
+values it decodes; for MaxSim the ``pooled`` column of the probed files
+(every file of an unclustered store), a row visited once per 64 values,
+then the row groups whose ``doc_id`` min/max covers a prefilter
+candidate, a row visited once per 64 values of its ``max_tokens`` token
+vectors. Within ``LOCAL_READ_ROWS`` (2^19 visits) it reads exactly those
 row groups with pyarrow, ``LOCAL_BATCH_ROWS`` rows at a time, the caller
-scores them with numpy by the Spark tier's formulas and returns the
-result as a local relation (``arrowkit.local_frame``), whose collect runs
-no Spark job. Over the bound the caller runs its Spark plan unchanged, so
-a 100 TB store still reads on Spark. Only footer statistics choose the
-tier — no flag, argument or environment variable does. A live view with
-side tables, MaxSim and the batch IVF paths stay on Spark.
+scores them with numpy by the Spark tier's row-local kernels and returns
+the result as a local relation (``arrowkit.local_frame``), whose collect
+runs no Spark job. Over the bound the caller runs its Spark plan
+unchanged, so a 100 TB store still reads on Spark. Only footer statistics
+choose the tier — no flag, argument or environment variable does. A live
+view with side tables, a MaxSim read with ``filter=``, and the batch IVF
+paths stay on Spark. Hybrid search fuses its two runs on the driver
+whichever tier served them.
 
 The bound is where the tiers cross. Warm median wall, driver tier against
 Spark tier, 4-core host, one read of a whole synthetic store: IVF,SQ8 at
@@ -398,9 +404,9 @@ class OpenStore(NamedTuple):
     """``open_store``'s result: ``tables`` as lazy frames, in the order
     asked, the ``sidecar`` rows and the ``.meta`` row, read on the driver,
     the ``build_id`` every part was checked against, and the parquet
-    ``footers`` the build check read, ``{table suffix: {file: footer}}``
-    (empty when the store opens with ``footer=False``) — what the driver
-    tier sizes its reads from (module docstring)."""
+    ``footers`` of the tables, ``{table suffix: {file: footer}}`` — what
+    the build check reads and what the driver tier sizes its reads from
+    (module docstring)."""
 
     tables: list
     rows: list
@@ -430,8 +436,9 @@ def open_store(
     ``.meta`` whose ``build_id`` is the store's build and whose
     ``store_sig`` signs the base. Without it the build is ``build_id`` (a
     part opened after its store's meta), else the sidecar rows' own.
-    ``footer``: the tables' parquet footers carry that build too. ``kind``
-    and ``builder`` name the store in refusals."""
+    ``footer``: the tables' parquet footers carry that build too (the
+    footers are read either way). ``kind`` and ``builder`` name the store
+    in refusals."""
     parts = [*tables, *[p for p in (sidecar, meta and ".meta") if p]]
     for part in parts:
         recover_store(path + part)
@@ -444,10 +451,11 @@ def open_store(
     meta_row = read_meta(spark, path, f"{kind} store") if meta else None
     rows = read_rows(path + sidecar, order_by) if sidecar else []
     files = {t: _data_files(path + t) for t in tables}  # one walk per table
-    footers = {t: _footers(files[t]) for t in tables} if footer else {}
+    footers = {t: _footers(files[t]) for t in tables}
     builds = {
         t or "base": _file_build_ids(path + t, footers=f)
         for t, f in footers.items()
+        if footer
     }
     if sidecar:
         builds[sidecar] = {r["build_id"] for r in rows}
@@ -508,14 +516,15 @@ def _fanout(stats, keys: dict) -> int:
 
 
 def local_read(
-    footers: dict, partition: str, values, columns, column=None, keys=None,
-    row_cost=1,
+    footers: dict, partition: str | None, values, columns, column=None,
+    keys=None, row_cost=1,
 ):
-    """The driver tier's read of a hive-partitioned table: the row groups
-    of the files under ``partition=value`` directories for ``values`` —
-    only those whose ``column`` min/max covers one of ``keys``, when
-    ``column`` is given — as pyarrow record batches of ``columns`` of at
-    most ``LOCAL_BATCH_ROWS`` rows, in file order, read lazily.
+    """The driver tier's read of a table: the row groups of the files
+    under ``partition=value`` directories for ``values`` (every file, when
+    ``partition`` is None) — only those whose ``column`` min/max covers
+    one of ``keys``, when ``column`` is given — as pyarrow record batches
+    of ``columns`` of at most ``LOCAL_BATCH_ROWS`` rows, in file order,
+    read lazily.
 
     A row group costs its rows times the visits each row takes:
     ``row_cost`` times, when ``column`` is given, the largest fan-out
@@ -526,10 +535,10 @@ def local_read(
     plan."""
     import pyarrow.parquet as pq
 
-    dirs = {f"{partition}={v}" for v in values}
+    dirs = None if partition is None else {f"{partition}={v}" for v in values}
     picked, cost = [], 0
     for file in sorted(footers):
-        if os.path.basename(os.path.dirname(file)) not in dirs:
+        if dirs is not None and os.path.basename(os.path.dirname(file)) not in dirs:
             continue
         md = footers[file]
         idx = md.schema.names.index(column) if column is not None else None

@@ -177,6 +177,26 @@ def test_batch_cascade_equals_single_loop(ladder):
     assert list(map(tuple, got.values.tolist())) == want
 
 
+def test_batch_cascade_reads_the_query_frame_once(spark, ladder):
+    """Building the batch cascade reads a list-built query frame in one
+    Spark job: the Hamming stage is handed the rows the cascade read."""
+    from photo_vector_search_spark.operators.cascade import cascade_batch_topk
+    from tests.test_store_maintenance import _jobs
+
+    emb, bq_model, coded_bq, sq8_model, coded_sq8 = ladder
+    vecs = [
+        (r["vec_id"], [float(v) for v in r["embedding"]])
+        for r in emb.filter(F.col("vec_id") < 4).collect()
+    ]
+    queries = spark.createDataFrame(vecs, "query_id long, query_vec array<double>")
+    frame, jobs = _jobs(
+        spark, cascade_batch_topk, coded_bq, bq_model, coded_sq8, sq8_model,
+        emb, queries, 3, 20, 10,
+    )
+    assert jobs == 1
+    assert frame.count() == 4 * 3
+
+
 def test_batch_cascade_guards(ladder):
     from photo_vector_search_spark.operators.cascade import cascade_batch_topk
 

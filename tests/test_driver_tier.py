@@ -2,8 +2,9 @@
 every store read it serves returns exactly the Spark tier's rows — forced
 by setting `store.LOCAL_READ_ROWS` to 0 — and a single read runs no Spark
 job and plans as a bare `LocalTableScan`. The formula twins the tier
-scores with, Spark's `round(x, 6)` and the StrictMath idf, equal Spark's
-values, and choosing the tier reads no footer the open did not read."""
+scores with, Spark's `round(x, 6)`, the StrictMath idf and the driver's
+RRF fusion, equal Spark's values, and choosing the tier reads no footer
+the open did not read."""
 
 from __future__ import annotations
 
@@ -20,6 +21,12 @@ from tests.test_store_maintenance import WORDS, _jobs
 N_TEXT = 40
 TIES = (50, 51, 52)  # the same text and the same vector: exact score ties
 DIM = 64  # the stub text embedding's, so the hybrid call can probe the store
+# hand-written MaxSim rows: NULL tokens, no tokens beside a pooled vector
+# aimed at NEAR_QUERY, one zero token, and two docs whose raw MaxSim
+# against NEAR_QUERY is 2 - 4e-7 (id 73) and 2 - 1e-7 (id 74): the same
+# 6-dp score, so they rank by id
+NULL_TOKS, NO_TOKS, ZERO_TOK, NEAR_LOW, NEAR_HIGH = 70, 71, 72, 73, 74
+NEAR_QUERY = "zzqa zzqb"  # terms in no corpus text
 
 
 def _missing_bucket_term(path: str) -> str:
@@ -37,7 +44,9 @@ def _missing_bucket_term(path: str) -> str:
 def stores(spark, tmp_path_factory):
     """A BM25 and an IVF,SQ8 store over one small corpus — zero-token docs,
     a NULL-text doc and three tied duplicates included — plus a copy of
-    each with pending deltas and a copy compacted after the same upserts."""
+    each with pending deltas and a copy compacted after the same upserts,
+    and a MaxSim store over the corpus, unclustered and in 3 clusters,
+    each with the hand-written rows added."""
     from photo_vector_search_spark.operators.bm25_store import (
         build_bm25_store,
         compact_bm25_store,
@@ -46,6 +55,9 @@ def stores(spark, tmp_path_factory):
     from photo_vector_search_spark.operators.index_maintenance import (
         compact_ivf_sq8_store,
         upsert_ivf_sq8_store,
+    )
+    from photo_vector_search_spark.operators.late_interaction import (
+        build_maxsim_store,
     )
     from photo_vector_search_spark.operators.sq import build_ivf_sq8_store
 
@@ -86,10 +98,52 @@ def stores(spark, tmp_path_factory):
         upsert_ivf_sq8_store(spark, paths[f"ivf_{kind}"], vectors(new_vecs))
     compact_bm25_store(spark, paths["bm25_compacted"])
     compact_ivf_sq8_store(spark, paths["ivf_compacted"])
+    for name, n_clusters in (("maxsim", None), ("maxsim_clustered", 3)):
+        paths[name] = str(root / name)
+        build_maxsim_store(
+            docs(sorted(texts.items())), paths[name], n_clusters=n_clusters
+        )
+        _add_maxsim_rows(spark, paths[name])
     paths["nowhere"] = _missing_bucket_term(paths["bm25"])
     paths["vec"] = [float(x) for x in vecs[0]]
     paths["docs"] = docs(sorted(texts.items()))
     return paths
+
+
+def _add_maxsim_rows(spark, path: str) -> None:
+    """Append the hand-written rows to the MaxSim store at ``path`` (into
+    cluster 0 of a clustered one) and re-sign its ``.meta``."""
+    from photo_vector_search_spark.operators.late_interaction import (
+        _META_SCHEMA,
+        load_maxsim_store,
+    )
+    from photo_vector_search_spark.operators.store import write_meta
+    from photo_vector_search_spark.pipelines.embed import stub_embed_one
+
+    toks, meta = load_maxsim_store(spark, path)
+    q1, q2 = (np.array(stub_embed_one(t, DIM)) for t in NEAR_QUERY.split())
+    near = {
+        NEAR_LOW: [q1 * (1 - 4e-7), q2],
+        NEAR_HIGH: [q1 * (1 - 1e-7), q2],
+        ZERO_TOK: [np.zeros(DIM)],
+    }
+    rows = [(NULL_TOKS, None, None), (NO_TOKS, [], (q1 + q2).tolist())]
+    rows += [
+        (i, [t.tolist() for t in m], np.mean(m, axis=0).tolist())
+        for i, m in near.items()
+    ]
+    clustered = "cluster_id" in toks.columns
+    extra = spark.createDataFrame(
+        [r + (0,) if clustered else r for r in rows], toks.schema
+    )
+    writer = extra.coalesce(1).write.mode("append")
+    if clustered:
+        writer = writer.partitionBy("cluster_id")
+    writer.parquet(path)
+    write_meta(
+        spark, path, {**meta.asDict(), "n_docs": meta["n_docs"] + len(rows)},
+        _META_SCHEMA,
+    )
 
 
 def _queries(spark, texts):
@@ -104,6 +158,12 @@ def _cases():
     from photo_vector_search_spark.operators.fusion import hybrid_store_search
     from photo_vector_search_spark.operators.index_maintenance import (
         live_ivf_sq8_topk,
+    )
+    from photo_vector_search_spark.operators.late_interaction import (
+        maxsim_store_search as ms,
+    )
+    from photo_vector_search_spark.operators.maxsim_maintenance import (
+        live_maxsim_search,
     )
     from photo_vector_search_spark.operators.sq import ivf_sq8_store_topk
 
@@ -136,6 +196,11 @@ def _cases():
         "hybrid": lambda s, p: hybrid_store_search(
             s, p["bm25"], p["ivf"], "quick fox", k=5, nprobe=2
         ),
+        # every fused score 0.0: the cut at k falls inside one tie
+        "hybrid_ties_at_k": lambda s, p: hybrid_store_search(
+            s, p["bm25"], p["ivf"], "quick fox", k=3, pool=6, nprobe=2,
+            weights=(0.0, 0.0),
+        ),
         "ivf_topk": lambda s, p: ivf_sq8_store_topk(s, p["ivf"], p["vec"], k=3, nprobe=2),
         "ivf_all_clusters": lambda s, p: ivf_sq8_store_topk(
             s, p["ivf"], p["vec"], k=6, nprobe=4
@@ -152,6 +217,27 @@ def _cases():
         "ivf_live_deltas": lambda s, p: live_ivf_sq8_topk(
             s, p["ivf_deltas"], p["vec"], k=5, nprobe=2
         ),
+        "maxsim": lambda s, p: ms(s, p["maxsim"], "quick fox river", k=3, prefilter_n=8),
+        "maxsim_near_tie": lambda s, p: ms(s, p["maxsim"], NEAR_QUERY, k=1, prefilter_n=4),
+        "maxsim_prefilter_all": lambda s, p: ms(
+            s, p["maxsim"], NEAR_QUERY, k=6, prefilter_n=100
+        ),
+        "maxsim_probe": lambda s, p: ms(
+            s, p["maxsim_clustered"], "quick fox river", k=3, prefilter_n=8, nprobe=2
+        ),
+        "maxsim_all_clusters": lambda s, p: ms(
+            s, p["maxsim_clustered"], NEAR_QUERY, k=4, prefilter_n=100, nprobe=3
+        ),
+        "maxsim_live_no_sides": lambda s, p: live_maxsim_search(
+            s, p["maxsim"], "quick fox river", k=3, prefilter_n=8
+        ),
+        "maxsim_filter": lambda s, p: ms(
+            s, p["maxsim"], "quick fox river", k=3, prefilter_n=8,
+            filter=F.col("doc_id") < 30,
+        ),
+        "maxsim_expression": lambda s, p: ms(
+            s, p["maxsim"], "quick fox river", k=3, prefilter_n=8, fast=False
+        ),
     }
 
 
@@ -159,11 +245,19 @@ SINGLE = {
     "bm25_topk", "bm25_absent_term", "bm25_missing_bucket",
     "bm25_only_missing_bucket", "bm25_ties_at_k", "bm25_k_over_matches",
     "bm25_scores", "ivf_topk", "ivf_all_clusters", "bm25_live_compacted",
-    "ivf_live_compacted",
+    "ivf_live_compacted", "hybrid", "hybrid_ties_at_k", "maxsim",
+    "maxsim_near_tie", "maxsim_prefilter_all", "maxsim_probe",
+    "maxsim_all_clusters", "maxsim_live_no_sides",
 }
 # the driver tier serves their reads; other Spark work remains
-PARTLY = {"bm25_batch", "rm3_topk", "rm3_batch", "hybrid"}
-SPARK_ONLY = {"bm25_live_deltas", "ivf_live_deltas"}  # side tables present
+PARTLY = {"bm25_batch", "rm3_topk", "rm3_batch"}
+# side tables present, a filter over the store's columns, or the
+# expression scorer
+SPARK_ONLY = {
+    "bm25_live_deltas", "ivf_live_deltas", "maxsim_filter", "maxsim_expression",
+}
+# fused on the driver from the two collected runs on either tier
+FUSED = {"hybrid", "hybrid_ties_at_k"}
 
 
 def _plan(frame) -> list[str]:
@@ -185,11 +279,15 @@ def test_driver_tier_equals_spark_tier(spark, stores, monkeypatch, case):
 
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     assert got or case == "bm25_only_missing_bucket"
+    if case.startswith(("maxsim", "hybrid")):
+        assert frame.schema == spark_frame.schema
     if case in SINGLE:
         assert jobs == 0
         assert len(_plan(frame)) == 1 and _plan(frame)[0].startswith("LocalTableScan")
     if case in SINGLE - {"bm25_only_missing_bucket"}:
-        assert spark_jobs > 0 and len(_plan(spark_frame)) > 1
+        assert spark_jobs > 0
+    if case in SINGLE - {"bm25_only_missing_bucket"} - FUSED:
+        assert len(_plan(spark_frame)) > 1
     if case in PARTLY:
         assert 0 < jobs < spark_jobs
     if case in SPARK_ONLY:
@@ -248,7 +346,9 @@ def test_batch_fanout_over_the_bound_runs_on_spark(spark, stores, monkeypatch):
     assert want and sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
-@pytest.mark.parametrize("case", ["bm25_batch", "rm3_batch", "ivf_all_clusters"])
+@pytest.mark.parametrize(
+    "case", ["bm25_batch", "rm3_batch", "ivf_all_clusters", "maxsim_prefilter_all"]
+)
 def test_driver_tier_batching_keeps_rows(spark, stores, monkeypatch, case):
     """The driver tier reads and scores `store.LOCAL_BATCH_ROWS` rows at a
     time; splitting the read into 7-row batches changes no row."""
@@ -271,6 +371,64 @@ def test_tie_order(spark, stores):
     assert rows[0]["bm25"] == rows[1]["bm25"]
     rows = ivf_sq8_store_topk(spark, stores["ivf"], stores["vec"], k=3, nprobe=4).collect()
     assert [(r["vec_id"], r["rank"]) for r in rows] == [(0, 1), (50, 2), (51, 3)]
+
+
+def test_maxsim_tie_order(spark, stores):
+    """MaxSim ranks by the 6-dp score descending, then id ascending: the
+    two docs whose raw scores differ by 3e-7 tie at 2.0, and the lower id
+    — the lower raw score — ranks first on both tiers; the doc with no
+    tokens is a candidate by its pooled vector but never scores."""
+    from photo_vector_search_spark.operators.late_interaction import (
+        maxsim_store_search,
+    )
+
+    def top(k):
+        rows = maxsim_store_search(
+            spark, stores["maxsim"], NEAR_QUERY, k=k, prefilter_n=4
+        ).collect()
+        return [(r["doc_id"], r["maxsim"], r["rank"]) for r in rows]
+
+    assert top(1) == [(NEAR_LOW, 2.0, 1)]
+    assert top(2) == [(NEAR_LOW, 2.0, 1), (NEAR_HIGH, 2.0, 2)]
+    assert NO_TOKS not in [d for d, _, _ in top(4)]
+
+
+def test_rrf_local_equals_rrf_fuse(spark):
+    """`fusion._rrf_local`, the driver's fusion of one query's runs, equals
+    `rrf_fuse` row for row and in schema: equal fused scores across the
+    top_n cut (docs 5 and 9 at swapped ranks; doc 3 only in the first run
+    and doc 4 only in the second, both at rank 3), a doc twice in a run,
+    ranks below 1 and unequal weights."""
+    from photo_vector_search_spark.functions.arrowkit import local_frame
+    from photo_vector_search_spark.operators.fusion import (
+        _HYBRID_SCHEMA,
+        _rrf_local,
+        rrf_fuse,
+    )
+
+    runs = [
+        [(5, 1), (9, 2), (3, 3), (8, 4), (3, 7), (11, 0)],
+        [(9, 1), (5, 2), (4, 3), (8, 4), (6, 5), (12, -1)],
+    ]
+    frames = [
+        local_frame(
+            spark, [(0, d, r) for d, r in run],
+            "query_id int, doc_id long, rank int",
+        )
+        for run in runs
+    ]
+    for weights, top_n in (
+        ((1.0, 1.0), 1), ((1.0, 1.0), 4), ((0.7, 1.3), 5), ((1.0, 1.0), 20),
+    ):
+        fused = rrf_fuse(frames, k=60, weights=list(weights), top_n=top_n).select(
+            "doc_id", "rrf_score", "rank"
+        )
+        want = sorted(map(tuple, fused.collect()), key=lambda r: r[2])
+        assert _rrf_local(runs, 60, weights, top_n) == want, (weights, top_n)
+        assert fused.schema == _HYBRID_SCHEMA
+    assert [d for d, _, _ in _rrf_local(runs, 60, (1.0, 1.0), 5)] == [5, 9, 8, 3, 4]
+    with pytest.raises(ValueError, match="k must be > 0"):
+        _rrf_local(runs, 0, (1.0, 1.0), 5)
 
 
 def test_tier_choice_reads_only_the_open_footers(spark, stores, monkeypatch):

@@ -45,6 +45,36 @@ def test_stub_python_twin(spark):
     assert sum(x * x for x in got) == pytest.approx(1.0, abs=1e-9)
 
 
+def test_stub_python_twin_is_exact(spark):
+    """`stub_embed_one` equals `stub_embedding_expr` to the bit — the two
+    hybrid paths embed their query with it in place of the expression —
+    over seeded corpus-term queries, the empty string, non-ASCII text and
+    runs of spaces."""
+    import numpy as np
+
+    from photo_vector_search_spark.functions.arrowkit import local_frame
+    from tests.test_store_maintenance import WORDS
+
+    rng = np.random.default_rng(23)
+    texts = [
+        " ".join(rng.choice(WORDS, size=int(rng.integers(1, 6))))
+        for _ in range(300)
+    ]
+    texts += [
+        "", " ", "   quick   brown  fox ", "a\tb\nc", "naïve café",
+        "日本語のテキスト", "emoji 🦊 fox", "Ünïcödé  ÀÉÎ", "quick" * 50,
+    ]
+    got = (
+        local_frame(spark, list(enumerate(texts)), "i long, text string")
+        .select("i", stub_embedding_expr(F.col("text")).alias("e"))
+        .toArrow()
+        .sort_by("i")["e"]
+        .to_pylist()
+    )
+    for text, e in zip(texts, got):
+        assert e == stub_embed_one(text), repr(text)
+
+
 def _files_df(spark, names):
     rows = [(f"/photos/{n}.jpg", f"IMGBYTES:{n}".encode()) for n in names]
     return spark.createDataFrame(rows, "path string, content binary")

@@ -137,7 +137,8 @@ def test_hybrid_store_search_composes_the_store_runs(
 ):
     """All-store hybrid serving: dense from the IVF,SQ8 store + lexical
     from the BM25 postings store, fused by RRF — ≡ fusing the two store
-    runs by hand, with no corpus frame touched at serve time."""
+    runs by hand with `rrf_fuse`, row for row and in schema, with no
+    corpus frame touched at serve time."""
     from photo_vector_search_spark.operators.bm25_store import (
         bm25_store_topk,
         build_bm25_store,
@@ -157,12 +158,10 @@ def test_hybrid_store_search_composes_the_store_runs(
     build_ivf_sq8_store(emb, vec_path, n_clusters=8)
 
     query = "the quick brown fox"
-    got = [
-        tuple(r)
-        for r in hybrid_store_search(
-            spark, bm25_path, vec_path, query, k=5, pool=15, nprobe=4
-        ).collect()
-    ]
+    hybrid = hybrid_store_search(
+        spark, bm25_path, vec_path, query, k=5, pool=15, nprobe=4
+    )
+    got = [tuple(r) for r in hybrid.collect()]
     assert len(got) == 5
 
     qv = [
@@ -177,13 +176,11 @@ def test_hybrid_store_search_composes_the_store_runs(
     lex_run = bm25_store_topk(spark, bm25_path, query, k=15).select(
         F.lit(0).alias("query_id"), "doc_id", "rank"
     )
-    want = [
-        tuple(r)
-        for r in rrf_fuse([vec_run, lex_run], top_n=5)
-        .select("doc_id", "rrf_score", "rank")
-        .collect()
-    ]
-    assert got == want
+    fused = rrf_fuse([vec_run, lex_run], top_n=5).select(
+        "doc_id", "rrf_score", "rank"
+    )
+    assert got == [tuple(r) for r in fused.collect()]
+    assert hybrid.schema == fused.schema
 
     with pytest.raises(ValueError, match="pool"):
         hybrid_store_search(spark, bm25_path, vec_path, query, k=5, pool=3)

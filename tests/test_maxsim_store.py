@@ -83,13 +83,28 @@ def test_torn_pair_is_refused(spark, sf_dir, tmp_path):
         load_maxsim_store(spark, path2)
 
 
-def test_serving_never_rereads_documents(spark, sf_dir, tmp_path):
-    """The store's point: serving must not re-embed the corpus. The served
-    plan's file scans read ONLY store paths — the documents parquet appears
-    nowhere in the executed plan."""
+def test_serving_never_rereads_documents(spark, sf_dir, tmp_path, monkeypatch):
+    """The store's point: serving must not re-embed the corpus. On the
+    Spark tier the served plan's file scans read ONLY store paths — the
+    documents parquet appears nowhere in the executed plan; on the driver
+    tier the files pyarrow opens are store files, and the served frame
+    reads none."""
+    import pyarrow.parquet as pq
+
+    from photo_vector_search_spark.operators import store as store_mod
+
     docs = _docs(spark, sf_dir)
     path = str(tmp_path / "colbert_store")
     build_maxsim_store(docs, path)
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda f, *a, **kw: opened.append(f) or real(f, *a, **kw)
+    )
+    out = maxsim_store_search(spark, path, QUERY, k=5, prefilter_n=40)
+    assert out.collect() and not out.inputFiles()
+    assert opened and all(f.startswith(path) for f in opened), opened  # + sidecars
+    monkeypatch.setattr(store_mod, "LOCAL_READ_ROWS", 0)
     out = maxsim_store_search(spark, path, QUERY, k=5, prefilter_n=40)
     files = out.inputFiles()
     assert files, "plan reads no files?"

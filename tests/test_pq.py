@@ -636,6 +636,27 @@ def test_ivf_pq_batch_search_matches_per_query_loop(spark, tmp_path):
         assert len({v for v, _ in got_by_q[i]}) == 5  # deduped, k distinct
 
 
+def test_pq_batch_topk_refuses_duplicate_and_empty_queries(spark):
+    """A repeated query_id would rank each neighbour once per copy; it is
+    refused whether pq_batch_topk reads the query frame or is handed the
+    rows, as is an empty query frame."""
+    from photo_vector_search_spark.operators.pq import pq_batch_topk
+
+    x = _mog(n=60)
+    df = _df(spark, x)
+    books = train_pq(df, m=8, k=8, sample=60)
+    coded = encode_pq(df, books)
+    schema = "query_id long, query_vec array<double>"
+    dup = spark.createDataFrame([(7, x[0].tolist()), (7, x[0].tolist())], schema)
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        pq_batch_topk(coded, books, dup, k=3)
+    rows = [{"query_id": 7, "query_vec": x[0].tolist()}] * 2
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        pq_batch_topk(coded, books, dup, k=3, qrows=rows)
+    with pytest.raises(ValueError, match="empty query frame"):
+        pq_batch_topk(coded, books, spark.createDataFrame([], schema), k=3)
+
+
 def test_pq_batch_topk_mask_args_must_pair(spark):
     from photo_vector_search_spark.operators.pq import pq_batch_topk
 

@@ -467,19 +467,22 @@ def test_maxsim_heals_crashed_swaps(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# the serving job budget, on tiny BM25 and IVF,SQ8 stores over one corpus
+# the serving job budget, on tiny BM25, IVF,SQ8 and MaxSim stores over one
+# corpus
 
 # Spark jobs of one call plus the collect of its result. Store opens launch
-# none, and these KB-sized reads run on the driver tier, so a single read
-# launches none either. The batch calls read the caller's query frame in
-# one job; RM3's other jobs explode its feedback docs, and hybrid's fuse
-# the two local rank lists.
+# none, and these KB-sized reads run on the driver tier, so no single read
+# launches one: not BM25, IVF,SQ8 or MaxSim (prefilter and rescore), nor
+# hybrid, which collects its two runs as local relations and fuses them on
+# the driver. The batch calls read the caller's query frame in one job;
+# RM3's other jobs explode its feedback docs.
 SERVE_JOBS = {
     "bm25_store_topk": 0,
     "bm25_store_batch_topk": 1,
     "rm3_store_batch_topk": 6,
     "ivf_sq8_store_topk": 0,
-    "hybrid_store_search": 3,
+    "maxsim_store_search": 0,
+    "hybrid_store_search": 0,
     "knn_batch_fast": 3,
 }
 
@@ -493,6 +496,10 @@ def test_serving_job_budget(spark, tmp_path):
     )
     from photo_vector_search_spark.operators.fusion import hybrid_store_search
     from photo_vector_search_spark.operators.knn import knn_batch_fast
+    from photo_vector_search_spark.operators.late_interaction import (
+        build_maxsim_store,
+        maxsim_store_search,
+    )
     from photo_vector_search_spark.operators.sq import (
         build_ivf_sq8_store,
         ivf_sq8_store_topk,
@@ -515,6 +522,8 @@ def test_serving_job_budget(spark, tmp_path):
     ).write.parquet(vectors)
     emb = spark.read.parquet(vectors)
     build_ivf_sq8_store(emb, ivf, n_clusters=4)
+    maxsim = str(tmp_path / "maxsim")
+    build_maxsim_store(docs, maxsim)
     # list-built query frames: Python RDDs, scanned once per batch call
     queries = spark.createDataFrame(
         [(i, " ".join(WORDS[3 * i:3 * i + 3])) for i in range(4)],
@@ -535,6 +544,9 @@ def test_serving_job_budget(spark, tmp_path):
         ),
         "ivf_sq8_store_topk": lambda: ivf_sq8_store_topk(
             spark, ivf, vec, k=5, nprobe=2
+        ),
+        "maxsim_store_search": lambda: maxsim_store_search(
+            spark, maxsim, "quick fox", k=5, prefilter_n=16
         ),
         "hybrid_store_search": lambda: hybrid_store_search(
             spark, bm25, ivf, "quick fox", k=5, nprobe=2

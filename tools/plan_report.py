@@ -503,14 +503,19 @@ NOTES = {
         "tests/test_token_compression.py)."
     ),
     "hybrid_store_search": (
-        "NOTE: library operator (r12 all-store hybrid serving — the "
-        "production shape: the dense run probes the IVF,SQ8 store "
-        "(cluster-directory pruning over 8x codes), the lexical run reads "
-        "the BM25 postings store (<= q bucket directories), RRF fuses the "
-        "two <= pool-row rank lists; at serve time neither the text nor "
-        "the float corpus is scanned. Composition sugar over three "
-        "audited rungs; == hand-fusing the two store runs, pinned in "
-        "tests/test_fusion.py)."
+        "NOTE: library operator (all-store hybrid serving): the dense run "
+        "probes the IVF,SQ8 store (cluster-directory pruning over 8x "
+        "codes) with the query's stub embedding, computed in Python "
+        "(stub_embed_one, equal to stub_embedding_expr to the bit); the "
+        "lexical run reads the BM25 postings store (<= q bucket "
+        "directories). Both reads are under the driver tier's bound here, "
+        "so each run's <= pool rows are collected from a local relation "
+        "with no job, and RRF fuses them on the driver with rrf_fuse's "
+        "arithmetic and order: the plan is one LocalTableScan and the "
+        "call runs 0 Spark jobs. Over the bound each run's collect runs "
+        "its Spark plan and the fusion stays on the driver. == hand-"
+        "fusing the two store runs with rrf_fuse in tests/test_fusion.py; "
+        "driver tier == Spark tier in tests/test_driver_tier.py."
     ),
     "maxsim_filtered_search": (
         "NOTE: library operator (r12 filtered late-interaction serving — "
@@ -608,24 +613,24 @@ NOTES = {
         "+ fast==expression parity in tests/test_late_interaction.py."
     ),
     "maxsim_store_search": (
-        "NOTE: library operator (r12 persisted MaxSim token store — the "
-        "missing persistence rung: every other serving family persists "
-        "its representation; one-call maxsim_search re-embedded the "
-        "corpus per query, which DOMINATED its wall). build_maxsim_store "
-        "pays the embed pass once; the sidecar's build_id is the store "
-        "directory's content signature, so a torn store/sidecar pair is "
-        "refused at load (the shared crash-consistency contract). The "
-        "audited serving plan reads ONLY the store parquet (input-file "
-        "audit pins that the documents table is never re-read), and the "
-        "at-rest layout does the heavy lifting: build persists the mean-"
-        "pooled vector as its own FLAT column and sorts by id, so the "
-        "prefilter scans 64 doubles/doc via parquet COLUMN PRUNING (the "
-        "token matrices are never decoded corpus-wide) and the rescore "
-        "pushes the <= prefilter_n candidate ids as an IN filter that "
-        "prunes row groups. 1.2 s at sf0.1 AND 1.2 s at 10x (ratio 1.01 "
-        "— fixed overhead dominates) vs 7.6-8 s one-call. Roundtrip "
-        "identity, torn-pair refusal, and store-served == in-memory in "
-        "tests/test_maxsim_store.py."
+        "NOTE: library operator (persisted MaxSim token store). "
+        "build_maxsim_store pays the embed pass once and persists the "
+        "mean-pooled vector as its own FLAT column, sorted by id; the "
+        ".meta's store_sig signs the base, so a torn store/meta pair is "
+        "refused at open. At sf0.1 both reads fit the driver tier's "
+        "bound (operators/store.py), sized from the footers the open "
+        "read: the pooled prefilter reads 64 doubles/doc with pyarrow "
+        "and keeps the top prefilter_n by the row-local cosine "
+        "(_pooled_cosine), and the rescore reads the tok_embs of the row "
+        "groups whose doc_id min/max covers a candidate and scores each "
+        "candidate from its own tokens (_maxsim_pairs): the plan is one "
+        "LocalTableScan and the call runs 0 Spark jobs. Over the bound "
+        "the same two stages run on Spark (a column-pruned MapInArrow "
+        "into TakeOrdered, then an IN filter that prunes row groups into "
+        "a MapInArrow rescore), with the same per-row doubles. Store-"
+        "served == in-memory and the documents table never read in "
+        "tests/test_maxsim_store.py; driver tier == Spark tier in "
+        "tests/test_driver_tier.py."
     ),
     "knn_batch": (
         "NOTE: declared through knn_batch_fast. The query frame is read "
@@ -702,7 +707,9 @@ NOTES = {
         "clusters. nprobe == n_clusters is exactly the unclustered "
         "result (pinned); smaller trades recall for bytes. At 100 TB "
         "this is the knob that keeps the prefilter scan itself "
-        "sub-corpus."
+        "sub-corpus. At sf0.1 the probed reads fit the driver tier's "
+        "bound, so both stages run on the driver (see "
+        "maxsim_store_search) and the plan is one LocalTableScan."
     ),
     "maxsim_batch8": (
         "NOTE: library operator (r12 batched MaxSim — the batched-serving "
